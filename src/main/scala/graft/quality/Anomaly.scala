@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,25 +61,31 @@ object Anomaly {
   /** Driver-side view of one column's exact stats. */
   final case class ColStats(n: Long, mean: Double, stddev: Option[Double])
 
-  /** Exact sufficient statistics for SEVERAL columns in ONE pass — the
+  /** Exact sufficient statistics for SEVERAL columns as aggregate
+    * columns: the row count, then n, Σx, Σx² per column — the
     * orchestrator's fused form of `exactStats` (the reference runs one
-    * stats job per column; at 100 TB that's c full scans vs one). The
-    * double math replays `exactStats` exactly, so bounds are identical. */
-  def exactStatsMulti(df: DataFrame, columns: Seq[String],
-      scale: Int = 2): (Long, Map[String, ColStats]) = {
-    val aggs = count(lit(1)).as("__rows") +: columns.flatMap { c =>
+    * stats job per column; at 100 TB that's c full scans vs one). They
+    * ride in the caller's own aggregate; [[exactStatsFrom]] reads them
+    * back. */
+  def exactStatsAggs(columns: Seq[String], scale: Int = 2): Seq[Column] =
+    count(lit(1)) +: columns.flatMap { c =>
       val v = fixed(col(c), scale)
-      Seq(count(col(c)).as(s"${c}__n"),
-        sum(v).as(s"${c}__s1"), sum(v * v).as(s"${c}__s2"))
+      Seq(count(col(c)), sum(v), sum(v * v))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+
+  /** The row count and per-column stats from an aggregate row holding
+    * [[exactStatsAggs]] at `offset`. The double math replays `exactStats`
+    * exactly, so bounds are identical. */
+  def exactStatsFrom(row: Row, offset: Int, columns: Seq[String],
+      scale: Int = 2): (Long, Map[String, ColStats]) = {
     val denom = math.pow(10.0, scale)
     val stats = columns.zipWithIndex.map { case (c, i) =>
-      val n = row.getLong(3 * i + 1)
+      val at = offset + 3 * i
+      val n = row.getLong(at + 1)
       if (n == 0) c -> ColStats(0L, Double.NaN, None)
       else {
-        val s1 = row.getLong(3 * i + 2).toDouble
-        val s2 = row.getLong(3 * i + 3).toDouble
+        val s1 = row.getLong(at + 2).toDouble
+        val s2 = row.getLong(at + 3).toDouble
         val mean = s1 / n.toDouble / denom
         val stddev =
           if (n > 1) Some(math.sqrt((s2 - s1 * s1 / n.toDouble) / (n.toDouble - 1.0)) / denom)
@@ -87,7 +93,7 @@ object Anomaly {
         c -> ColStats(n, mean, stddev)
       }
     }.toMap
-    (row.getLong(0), stats)
+    (row.getLong(offset), stats)
   }
 
   /** Out-of-bounds counts for SEVERAL columns in ONE pass. */

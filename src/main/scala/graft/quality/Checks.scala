@@ -174,9 +174,7 @@ object Checks {
   def run(df: DataFrame, spec: QualitySpec): Seq[CheckResult] = {
     val aggs = checkAggs(df, spec)
     if (aggs.isEmpty) return Nil
-    val row: Row = df.agg(aggs.head._3.as("c0"),
-      aggs.tail.zipWithIndex.map { case ((_, _, a), i) => a.as(s"c${i + 1}") }: _*)
-      .head()
+    val row = aggregate(df, aggs.map(_._3)).head()
     aggs.zipWithIndex.map { case ((check, column, _), i) =>
       CheckResult(check, column, row.getLong(i))
     }
@@ -192,6 +190,25 @@ object Checks {
     * configured (ConfigLoader validates kinds at load for the YAML path). */
   def profile(df: DataFrame, spec: QualitySpec)
       : (Seq[CheckResult], Seq[ExpectationResult]) = {
+    val p = profilePlan(df, spec)
+    if (p.aggs.isEmpty) (Nil, Nil)
+    else p.read(aggregate(df, p.aggs).head())
+  }
+
+  /** `aggs` (non-empty) as ONE global aggregate, columns c0, c1, ... */
+  private[quality] def aggregate(df: DataFrame,
+      aggs: Seq[org.apache.spark.sql.Column]): DataFrame =
+    df.agg(aggs.head.as("c0"),
+      aggs.tail.zipWithIndex.map { case (a, i) => a.as(s"c${i + 1}") }: _*)
+
+  /** [[profile]]'s aggregate columns, and the reader of the row they
+    * lead, so a caller can append more aggregates to the same job.
+    * Building the plan runs no job; an unknown expectation kind throws
+    * here. */
+  final case class ProfilePlan(aggs: Seq[org.apache.spark.sql.Column],
+      read: Row => (Seq[CheckResult], Seq[ExpectationResult]))
+
+  def profilePlan(df: DataFrame, spec: QualitySpec): ProfilePlan = {
     val checks = checkAggs(df, spec)
     // (spec, first agg-column offset, #agg columns) per surviving expectation
     final case class Slot(e: ExpectationSpec, offset: Int, width: Int)
@@ -217,30 +234,27 @@ object Checks {
             s"${ExpectationSpec.Kinds.toSeq.sorted.mkString(", ")})")
       }
     }
-    val all = checks.map(_._3) ++ expCols.result()
-    if (all.isEmpty) return (Nil, Nil)
-    val row: Row = df.agg(all.head.as("c0"),
-      all.tail.zipWithIndex.map { case (a, i) => a.as(s"c${i + 1}") }: _*)
-      .head()
-    val checkResults = checks.zipWithIndex.map { case ((check, column, _), i) =>
-      CheckResult(check, column, row.getLong(i))
-    }
-    val expResults = slots.map { s =>
-      s.e.kind match {
-        case "mean_between" =>
-          val n = row.getDouble(s.offset + 1)
-          val m = if (row.isNullAt(s.offset) || n == 0) Double.NaN
-            else row.getDouble(s.offset) / n
-          // NaN >= lo is false, so an empty/all-null column fails closed
-          ExpectationResult("mean_between", s.e.column, m,
-            m >= s.e.lo && m <= s.e.hi)
-        case kind =>
-          val n = row.getDouble(s.offset)
-          val columnLabel = if (kind == "row_count_between") "*" else s.e.column
-          ExpectationResult(kind, columnLabel, n, n >= s.e.lo && n <= s.e.hi)
+    ProfilePlan(checks.map(_._3) ++ expCols.result(), row => {
+      val checkResults = checks.zipWithIndex.map { case ((check, column, _), i) =>
+        CheckResult(check, column, row.getLong(i))
       }
-    }
-    (checkResults, expResults)
+      val expResults = slots.map { s =>
+        s.e.kind match {
+          case "mean_between" =>
+            val n = row.getDouble(s.offset + 1)
+            val m = if (row.isNullAt(s.offset) || n == 0) Double.NaN
+              else row.getDouble(s.offset) / n
+            // NaN >= lo is false, so an empty/all-null column fails closed
+            ExpectationResult("mean_between", s.e.column, m,
+              m >= s.e.lo && m <= s.e.hi)
+          case kind =>
+            val n = row.getDouble(s.offset)
+            val columnLabel = if (kind == "row_count_between") "*" else s.e.column
+            ExpectationResult(kind, columnLabel, n, n >= s.e.lo && n <= s.e.hi)
+        }
+      }
+      (checkResults, expResults)
+    })
   }
 
   /** Functional-dependency audit: the `lhs` value combinations that do NOT

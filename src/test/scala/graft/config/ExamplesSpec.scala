@@ -16,7 +16,10 @@ class ExamplesSpec extends SparkSpec {
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8")
 
-  private def runExample(path: String): Pipeline.RunResult = {
+  /** An example config with its output redirected, and its bronze frame
+    * read the way the RunPipeline CLI reads it. */
+  private def loadExample(path: String)
+      : (ConfigLoader.PipelineConfig, org.apache.spark.sql.DataFrame) = {
     val out = java.nio.file.Files
       .createTempDirectory("graft_example_out").toString
     // GRAFT_SF_DIR falls to its documented sf0.001 default; only the
@@ -28,9 +31,15 @@ class ExamplesSpec extends SparkSpec {
     if (bronze.dropAllNullColumns) df = Ingest.dropAllNullColumns(df)
     if (bronze.addIngestionMetadata)
       df = Ingest.withIngestionMetadata(df, bronze.source.path)
+    (config, df)
+  }
+
+  private def runExample(path: String): Pipeline.RunResult = {
+    val (config, df) = loadExample(path)
+    val target = config.bronze.get.targetPath
     Pipeline.run(spark, config, df,
       goldSink = Some((name, mart) => mart.write.mode("overwrite")
-        .parquet(s"${bronze.targetPath}/gold/$name")))
+        .parquet(s"$target/gold/$name")))
   }
 
   test("examples/events_pipeline.yaml runs end-to-end") {
@@ -40,6 +49,44 @@ class ExamplesSpec extends SparkSpec {
     // a shipped example that FAILS its own quality block teaches the
     // config surface backwards
     result.qualityResults.filterNot(_.passed) shouldBe empty
+    // the whole report at sf0.001, every family in config order
+    result.quality shouldBe EventsReport
+  }
+
+  // the events example's quality report at sf0.001 (1000 silver rows)
+  private val EventsReport = {
+    import graft.quality.{Checks, Metrics, Orchestrator}
+    Orchestrator.QualityReport(
+      rows = 1000L,
+      checkResults = Seq(
+        "null_check" -> "event_id", "null_check" -> "user_id",
+        "null_check" -> "value", "range_check" -> "value",
+        "in_set" -> "event_type", "fd_check" -> "event_id->event_type",
+        "benford_check" -> "value",
+        "seasonal_check" -> "value%7 by event_type",
+        "correlation_check" -> "event_type/value",
+        "hhi_check" -> "user_id by event_type",
+        "pop_check" -> "event_type/value%1d",
+        "containment_check" -> "event_type in event_type/user_id@k256",
+        "ks_check" -> "event_type/value_e2@k256")
+        .map { case (check, label) => Checks.CheckResult(check, label, 0L) },
+      anomalyCounts = Map.empty,
+      anomalySamples = Nil,
+      scores = Metrics.DimensionScores(100.0, 100.0, 100.0, 100.0, 100.0),
+      overall = 100.00000000000001,
+      level = "EXCELLENT",
+      expectationResults = Nil)
+  }
+
+  test("the events example's quality pass reads silver once") {
+    val (config, bronze) = loadExample("examples/events_pipeline.yaml")
+    val silver = graft.silver.Transform(config.silver)(bronze)
+    val (report, jobs) = graft.JobLog(spark)(
+      graft.quality.Orchestrator.run(silver, config.quality))
+    report.get shouldBe EventsReport
+    // one fused global aggregate fills the cache, then the 8 grouped
+    // families read it; re-scanning silver per family took 47 jobs
+    jobs.size should be <= 42
   }
 
   test("examples/curation_pipeline.yaml runs end-to-end") {

@@ -1,7 +1,9 @@
 package graft.quality
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
 import graft.config._
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Mirrors the reference's integration contract
   * (tests/integration/test_data_quality_integration.py:28-66): dirty data →
@@ -75,5 +77,108 @@ class OrchestratorSpec extends SparkSpec {
     c.passed shouldBe true
     c.overall should be >= d.overall
     c.level shouldBe "EXCELLENT"
+  }
+
+  // grouped families on top of the rule checks: the pass caches its input
+  // and runs these on its thread pool
+  private val grouped = spec.copy(
+    fdChecks = Seq(FdCheck(Seq("fare"), "distance")),
+    hhiChecks = Seq(HhiCheck(Nil, "distance", 1000000L)))
+
+  test("rule checks, expectations and the row count share one aggregate") {
+    val rules = spec.copy(expectations =
+      Seq(ExpectationSpec("row_count_between", lo = 1, hi = 10)))
+    val (_, profileJobs) = JobLog(spark)(Checks.profile(dirty, rules))
+    val (r, passJobs) = JobLog(spark)(Orchestrator.run(dirty, rules))
+    r.get.rows shouldBe 5
+    r.get.expectationResults.map(_.observed) shouldBe Seq(5.0)
+    passJobs.size shouldBe profileJobs.size
+  }
+
+  test("a malformed block fails before any job runs") {
+    val malformed = Seq(
+      grouped.copy(fdChecks = grouped.fdChecks :+ FdCheck(Seq("fare"), "zone"))
+        -> "requirement failed: fd_check fare->zone: missing columns zone",
+      grouped.copy(quantileChecks = Seq(QuantileCheck(Nil, "fare", 10L)))
+        -> ("requirement failed: quantile_check fare@q500000: needs " +
+          "min_value and/or max_value"),
+      grouped.copy(distinctChecks = Seq(DistinctCheck(Nil, "distance")))
+        -> ("requirement failed: distinct_check distinct(distance)@k256: " +
+          "needs min_count and/or max_count"),
+      grouped.copy(growthChecks = Seq(GrowthCheck("fare", "distance")))
+        -> ("growth_check growth(distance)@k64 by fare: day_column must be " +
+          "integral (epoch-day), got double - silent-day synthesis needs " +
+          "day arithmetic"),
+      grouped.copy(expectations =
+        Seq(ExpectationSpec("median_between", "fare", 0.0, 1.0)))
+        -> ("unknown expectation kind 'median_between' (supported: " +
+          ExpectationSpec.Kinds.toSeq.sorted.mkString(", ") + ")"))
+    malformed.foreach { case (bad, message) =>
+      val df = dirty
+      val (r, jobs) = JobLog(spark)(
+        Orchestrator.run(df, bad, anomalyColumns = Seq("fare")))
+      r.failed.get shouldBe an[IllegalArgumentException]
+      r.failed.get.getMessage shouldBe message
+      jobs.size shouldBe 0
+      df.storageLevel shouldBe StorageLevel.NONE
+    }
+  }
+
+  test("a family failing mid-flight stops the pass and rethrows its error") {
+    // a day span past 1e6 passes the driver-side checks and is only
+    // caught after growth_check's first job, while its siblings run
+    val df = ((1 to 50).map(i => (0L, s"u$i", i.toDouble)) ++
+      (1 to 50).map(i => (2000000L, s"v$i", i.toDouble)))
+      .toDF("day", "user", "amount")
+    val failing = QualitySpec(
+      nullCheckColumns = Seq("user"),
+      fdChecks = Seq(FdCheck(Seq("user"), "day")),
+      benfordChecks = Seq(BenfordCheck("amount")),
+      hhiChecks = Seq(HhiCheck(Seq("day"), "user")),
+      growthChecks = Seq(GrowthCheck("day", "user")),
+      overlapChecks = Seq(OverlapCheck("day", "user", 64, 500000L)))
+    val e = the[IllegalArgumentException] thrownBy
+      Orchestrator.run(df, failing)
+    e.getMessage shouldBe "growth_check growth(user)@k64 by day: day span " +
+      "0..2000000 exceeds 1e6 days - day_column must be integral " +
+      "EPOCH-DAYS (datediff-style), not epoch seconds/millis"
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(Orchestrator.ThreadPrefix) &&
+        t.isAlive) shouldBe empty
+    spark.sparkContext.getJobTags()
+      .filter(_.startsWith(Orchestrator.ThreadPrefix)) shouldBe empty
+    df.storageLevel shouldBe StorageLevel.NONE
+  }
+
+  test("every job of the pass carries the caller's local properties") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("quality-caller", "caller's job group")
+    sc.setLocalProperty("graft.test.caller", "c1")
+    val (r, jobs) =
+      try JobLog(spark)(
+        Orchestrator.run(dirty, grouped, anomalyColumns = Seq("fare")))
+      finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("graft.test.caller", null)
+      }
+    r.get.checkResults.map(_.check) should contain allOf (
+      "fd_check", "hhi_check")
+    jobs should not be empty
+    jobs.map(_.getProperty("spark.jobGroup.id")).distinct shouldBe
+      Seq("quality-caller")
+    jobs.map(_.getProperty("graft.test.caller")).distinct shouldBe Seq("c1")
+  }
+
+  test("the pass leaves its input's storage level as it found it") {
+    val df = dirty
+    Orchestrator.run(df, grouped, anomalyColumns = Seq("fare")).rows shouldBe 5
+    df.storageLevel shouldBe StorageLevel.NONE
+    val cached = dirty.persist(StorageLevel.MEMORY_ONLY)
+    try {
+      cached.count()
+      Orchestrator.run(cached, grouped, anomalyColumns = Seq("fare"))
+        .rows shouldBe 5
+      cached.storageLevel shouldBe StorageLevel.MEMORY_ONLY
+    } finally cached.unpersist()
   }
 }
