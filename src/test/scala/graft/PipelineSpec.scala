@@ -43,11 +43,135 @@ class PipelineSpec extends SparkSpec {
     e.getMessage should include("positive_values")
   }
 
+  /** A sink's copy of its frame: the sink contract is that the sink runs
+    * the frame it is handed, so a spec that inspects a stage afterwards
+    * keeps the rows, not the lazy plan. */
+  private def materialized(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collectAsList(), df.schema)
+
+  // one stage of every kind, over one frame
+  private val allStagesYaml =
+    """version: "1.0"
+      |pipeline:
+      |  name: all
+      |gold:
+      |  - name: by_lang
+      |    group_by: [lang]
+      |    measures:
+      |      - {name: docs, expression: "count(1)"}
+      |sessions:
+      |  key_column: user_id
+      |  ts_us_column: ts_us
+      |  tie_column: doc_id
+      |  value_column: value
+      |  gap_sec: 30
+      |retrieval:
+      |  id_column: doc_id
+      |  text_column: text
+      |  queries_filter: "doc_id % 2 = 0"
+      |  k: 2
+      |features:
+      |  id_column: doc_id
+      |  hash_text: {text_column: text, n_buckets: 16}
+      |  target_encode: {category_column: lang, target_column: y, m: 10}
+      |split:
+      |  key_column: doc_id
+      |  weights:
+      |    train: 80
+      |    test: 20
+      |layout:
+      |  key_column: doc_id
+      |  n_shards: 4
+      |""".stripMargin
+
+  private def allStagesDocs = (0L until 40L).map(i =>
+      (i, s"tok${i % 7} tok${i % 5} common words", s"u${i % 6}",
+        i * 7000000L, i.toDouble, if (i % 3 == 0) "de" else "en", i % 4))
+    .toDF("doc_id", "text", "user_id", "ts_us", "value", "lang", "y")
+
   test("gold sink receives each mart exactly once") {
     var sunk = Map.empty[String, Long]
     Pipeline.run(spark, config, bronzeDf,
       goldSink = Some((name, df) => sunk += name -> df.count()))
     sunk shouldBe Map("by_vendor" -> 1L)
+
+    // every stage kind: with a sink, the sink's write is the stage's ONE
+    // SQL execution and its rows are the stage's rows; without a sink,
+    // one count per stage
+    val cfg = ConfigLoader.parse(allStagesYaml)
+    val docs = allStagesDocs
+    val sinks = Seq("by_lang" -> "gold.by_lang", "sessions" -> "gold.sessions",
+      "retrieval" -> "gold.retrieval", "features_hash" -> "gold.features_hash",
+      "features_target" -> "gold.features_target", "split" -> "split",
+      "layout_plan" -> "gold.layout_plan")
+    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val sc = spark.sparkContext
+    val StageTag = "graft.test.stage"
+    val (sinked, sinkedJobs) = JobLog(spark)(Pipeline.run(spark, cfg, docs,
+      goldSink = Some { (name, df) =>
+        sc.setLocalProperty(StageTag, name)
+        try df.write.mode("overwrite").parquet(s"$out/$name")
+        finally sc.setLocalProperty(StageTag, null)
+      }))
+    val (plain, plainJobs) = JobLog(spark)(Pipeline.run(spark, cfg, docs))
+    val (_, baseJobs) = JobLog(spark)(Pipeline.run(spark, cfg.copy(
+      gold = Nil, sessions = None, retrieval = None, features = None,
+      split = None, layout = None), docs))
+    // a job outside any SQL execution counts as an execution of its own
+    def executions(jobs: Seq[java.util.Properties]): Int =
+      jobs.zipWithIndex.map { case (p, i) =>
+        Option(p.getProperty("spark.sql.execution.root.id"))
+          .getOrElse(s"job $i") }.distinct.size
+    val byStage = sinkedJobs.groupBy(p => Option(p.getProperty(StageTag)))
+    byStage.keySet.flatten shouldBe sinks.map(_._1).toSet
+    sinks.foreach { case (name, _) =>
+      withClue(name)(executions(byStage(Some(name))) shouldBe 1) }
+    // no stage runs outside its sink: the rest of the sinked run is the
+    // stage-less run plus the retrieval index's build-time checkpoint...
+    executions(byStage(None)) shouldBe executions(baseJobs) + 1
+    // ...and without a sink each stage adds one count to the same
+    executions(plainJobs) shouldBe executions(baseJobs) + 1 + sinks.size
+    val rows = sinked.get.stages.map(s => s.name -> s.rows).toMap
+    sinks.foreach { case (name, stage) =>
+      withClue(name)(rows(stage) shouldBe
+        spark.read.parquet(s"$out/$name").count()) }
+    plain.get.stages shouldBe sinked.get.stages
+    sinks.map(s => rows(s._2)).foreach(_ should be > 0L)
+    // an empty stage observes zero rows
+    Pipeline.run(spark, config, bronzeDf.filter("fare < 0"),
+      goldSink = Some((_, df) => df.write.format("noop").mode("overwrite")
+        .save())).stages.last shouldBe Pipeline.StageResult("gold.by_vendor", 0L)
+    // a sink that never runs its frame has no rows to report: the run
+    // fails, naming the stage, instead of waiting forever
+    val e = the[IllegalStateException] thrownBy Pipeline.run(
+      spark, config, bronzeDf, goldSink = Some((_, _) => ()))
+    e.getMessage should include("gold.by_vendor")
+  }
+
+  test("cache_after_transform: same stage rows, caches released") {
+    val cfg = ConfigLoader.parse(allStagesYaml +
+      """curation:
+        |  dedup:
+        |    strategy: exact
+        |    id_column: doc_id
+        |    content_column: text
+        |""".stripMargin)
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val docs = allStagesDocs
+    val uncached = Pipeline.run(spark, cfg, docs)
+    val cached = Pipeline.run(spark, cfg.copy(cacheSilver = true), docs)
+    cached.stages shouldBe uncached.stages
+    cached.stages.map(_.name) should contain("curated")
+    cacheManager.isEmpty shouldBe true
+    // a failing quality gate releases them too
+    val gated = cfg.copy(cacheSilver = true,
+      quality = QualitySpec(positiveColumns = Seq("value"), failOnError = true))
+    val e = the[IllegalStateException] thrownBy Pipeline.run(spark, gated, docs)
+    e.getMessage should include("quality gate failed")
+    cacheManager.isEmpty shouldBe true
   }
 
   test("curation from YAML alone: ingest → gate → dedupe → mix → gold") {
@@ -509,7 +633,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
     var sunk2 = Map.empty[String, org.apache.spark.sql.DataFrame]
     Pipeline.run(spark, clusterCfg, twins,
-      goldSink = Some((name, df) => sunk2 += name -> df))
+      goldSink = Some((name, df) => sunk2 += name -> materialized(df)))
     val splits = sunk2("split").select("doc_id", "split")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     splits(1L) shouldBe splits(2L)
@@ -560,7 +684,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text", "vec")
     var sunk = Map.empty[String, DataFrame]
     val r = Pipeline.run(spark, cfg, docs,
-      goldSink = Some((name, df) => sunk += name -> df))
+      goldSink = Some((name, df) => sunk += name -> materialized(df)))
     // the stage must equal the hand-built q125 composition exactly
     val queries = docs.filter(expr("doc_id % 2 = 0"))
     val lex = graft.text.TextAnalysis.keywordSearchTopK(docs, queries,
@@ -593,7 +717,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
     var sunk = Map.empty[String, DataFrame]
     Pipeline.run(spark, ConfigLoader.parse(yaml), docs,
-      goldSink = Some((name, df) => sunk += name -> df))
+      goldSink = Some((name, df) => sunk += name -> materialized(df)))
     // doc 1 shares two terms with the query doc; doc 2 shares none
     val hits = sunk("retrieval").select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -1209,7 +1333,7 @@ class PipelineSpec extends SparkSpec {
     val docs = (0L until 300L).map(i => (i, s"d$i")).toDF("doc_id", "text")
     var sunk = Map.empty[String, org.apache.spark.sql.DataFrame]
     val r = graft.Pipeline.run(spark, cfg, docs,
-      goldSink = Some((name, df) => sunk += name -> df))
+      goldSink = Some((name, df) => sunk += name -> materialized(df)))
     // the config-driven plan equals the hand-built operator call
     val plan = sunk("layout_plan").orderBy("shard_from", "shard_to")
       .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2))
@@ -1226,7 +1350,7 @@ class PipelineSpec extends SparkSpec {
       "  previous_n_shards: 8\n", ""))
     var sunk2 = Map.empty[String, org.apache.spark.sql.DataFrame]
     graft.Pipeline.run(spark, cfg2, docs,
-      goldSink = Some((name, df) => sunk2 += name -> df))
+      goldSink = Some((name, df) => sunk2 += name -> materialized(df)))
     val bal = sunk2("layout_plan").collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     bal.keySet shouldBe (0L until 10L).toSet
@@ -1235,19 +1359,29 @@ class PipelineSpec extends SparkSpec {
     // 2 keys over 10 shards → at least 8 explicit zero rows
     var sunk3 = Map.empty[String, org.apache.spark.sql.DataFrame]
     graft.Pipeline.run(spark, cfg2, docs.limit(2),
-      goldSink = Some((name, df) => sunk3 += name -> df))
+      goldSink = Some((name, df) => sunk3 += name -> materialized(df)))
     val bal3 = sunk3("layout_plan").collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     bal3.keySet shouldBe (0L until 10L).toSet
     bal3.values.sum shouldBe 2L
     bal3.values.count(_ == 0L) should be >= 8
-    // degenerate configs fail at load; missing key fails loudly at run
+    // degenerate configs fail at load; missing key fails loudly at run,
+    // before any stage (here a gold mart ahead of layout) is sunk
     an[ConfigLoader.ConfigError] should be thrownBy ConfigLoader.parse(
       yaml.replace("previous_n_shards: 8", "previous_n_shards: 10"))
     an[ConfigLoader.ConfigError] should be thrownBy ConfigLoader.parse(
       yaml.replace("  n_shards: 10\n", ""))
     an[IllegalArgumentException] should be thrownBy graft.Pipeline.run(
       spark, cfg, docs.withColumnRenamed("doc_id", "other"), None)
+    val withGold = ConfigLoader.parse(yaml +
+      "gold:\n  - name: by_text\n    group_by: [text]\n" +
+      "    measures:\n      - {name: n, expression: \"count(1)\"}\n")
+    var sunkNames = Seq.empty[String]
+    val e = the[IllegalArgumentException] thrownBy graft.Pipeline.run(
+      spark, withGold, docs.withColumnRenamed("doc_id", "other"),
+      goldSink = Some((name, df) => { df.collect(); sunkNames :+= name }))
+    e.getMessage should include("layout: missing columns doc_id")
+    sunkNames shouldBe empty
   }
 
   test("features block: hash_text and target_encode drive from YAML") {
@@ -1272,7 +1406,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "score")
     var sunk = Map.empty[String, org.apache.spark.sql.DataFrame]
     val r = graft.Pipeline.run(spark, cfg, docs,
-      goldSink = Some((name, df) => sunk += name -> df))
+      goldSink = Some((name, df) => sunk += name -> materialized(df)))
     // the config-driven tables equal the hand-built operator calls
     val silver = docs.withColumn("y_e2",
       expr("cast(round(score * 100) as long)"))
@@ -1284,9 +1418,15 @@ class PipelineSpec extends SparkSpec {
         .orderBy("id").collect()
     r.stages.map(_.name) should contain allOf
       ("gold.features_hash", "gold.features_target")
-    // missing column fails loudly
+    // missing column fails loudly, before any feature table is sunk
     an[IllegalArgumentException] should be thrownBy
       graft.Pipeline.run(spark, cfg, docs.drop("lang"))
+    var sunkNames = Seq.empty[String]
+    val e = the[IllegalArgumentException] thrownBy graft.Pipeline.run(
+      spark, cfg, docs.drop("lang"),
+      goldSink = Some((name, df) => { df.collect(); sunkNames :+= name }))
+    e.getMessage should include("features.target_encode: missing columns lang")
+    sunkNames shouldBe empty
     // an empty features block is a config error
     an[IllegalArgumentException] should be thrownBy ConfigLoader.parse(
       "version: \"1.0\"\npipeline:\n  name: x\nfeatures:\n  id_column: a\n")

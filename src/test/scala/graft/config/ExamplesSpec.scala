@@ -44,7 +44,9 @@ class ExamplesSpec extends SparkSpec {
 
   test("examples/events_pipeline.yaml runs end-to-end") {
     val result = runExample("examples/events_pipeline.yaml")
-    result.stages.foreach(_.rows should be > 0L)
+    result.stages.map(s => s.name -> s.rows) shouldBe Seq("bronze" -> 1000L,
+      "silver" -> 1000L, "gold.hourly_activity" -> 120L,
+      "gold.user_totals" -> 15L)
     // the example documents its gates as a passing baseline dashboard —
     // a shipped example that FAILS its own quality block teaches the
     // config surface backwards
@@ -91,7 +93,9 @@ class ExamplesSpec extends SparkSpec {
 
   test("examples/curation_pipeline.yaml runs end-to-end") {
     val result = runExample("examples/curation_pipeline.yaml")
-    result.stages.foreach(_.rows should be > 0L)
+    result.stages.map(s => s.name -> s.rows) shouldBe Seq("bronze" -> 500L,
+      "silver" -> 500L, "curated" -> 476L, "gold.corpus_by_source" -> 20L,
+      "gold.corpus_levels" -> 120L)
     result.qualityResults.filterNot(_.passed) shouldBe empty
   }
 
