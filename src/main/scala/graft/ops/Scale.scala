@@ -30,7 +30,7 @@ object Scale {
     * made CONDITIONAL so it is the identity exactly when a real cluster
     * input makes it pointless. A single-file / single-row-group parquet
     * (or a gzip part) plans into fewer scan partitions than the session
-    * has cores, and every row-local stage stacked on it (shingling,
+    * has cores, and the row-local work stacked on it (shingling,
     * deletion-neighborhood explodes, winnow fingerprinting, media decode)
     * then runs on ONE task while the rest of the cluster idles. When the
     * planned partition count is below the session's default parallelism,
@@ -38,7 +38,15 @@ object Scale {
     * cheap next to the per-row compute it parallelizes, and deterministic:
     * Spark's sort-before-repartition contract); when the input is already
     * at least core-parallel — every healthy multi-file table at any
-    * scale — NO exchange is added and the plan is unchanged. */
+    * scale — NO exchange is added and the plan is unchanged.
+    *
+    * Projections and explodes written above the fan-out run wide; filters
+    * do not. Catalyst pushes every deterministic FILTER through the
+    * repartition, so a filter written above `fanOut` — and a not-null
+    * filter a later join infers — runs below the exchange, in the narrow
+    * scan stage (ScaleSpec pins this). To spread filter-heavy row-local
+    * work, materialize the input first (as `Curation.curate` does for its
+    * dedup input). */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df

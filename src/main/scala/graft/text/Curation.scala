@@ -691,13 +691,23 @@ object Curation {
     * (fingerprints see the text that ships); its `n_redactions` audit
     * column rides through to the output. The budget cut runs LAST — the
     * final size control over whatever survived every other filter (its
-    * `cum_tokens` audit column rides through too). */
+    * `cum_tokens` audit column rides through too).
+    *
+    * Whenever a dedup is configured, its input is materialized once (an
+    * eager `localCheckpoint`, one job). Every consumer of the curated frame
+    * — its count, each gold mart — reads the dedup's plan, and the pair
+    * strategies read their input again for candidates, verification and
+    * the removal anti-join; without the checkpoint each of those reads
+    * re-runs the row-local language/gate/model/PII prefix from the scan.
+    * The checkpoint's blocks are released once the frame is
+    * garbage-collected, so nothing is left for a caller to unpersist. */
   def curate(df: DataFrame, spec: CurationSpec): DataFrame = {
     val inLang = spec.language.fold(df)(applyLanguageFilter(df, _))
     val ruleGated = spec.gate.fold(inLang)(applyGate(inLang, _))
     val gated = spec.model.fold(ruleGated)(applyQualityModel(ruleGated, _))
     val scrubbed = if (spec.pii.isEmpty) gated else redactPii(gated, spec.pii)
-    val deduped = spec.dedup.fold(scrubbed)(applyDedup(scrubbed, _))
+    val deduped = spec.dedup.fold(scrubbed)(
+      applyDedup(scrubbed.localCheckpoint(eager = true), _))
     val mixed = spec.mixing.fold(deduped)(applyMixing(deduped, _))
     spec.budget.fold(mixed)(applyBudget(mixed, _))
   }

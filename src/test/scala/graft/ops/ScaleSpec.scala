@@ -149,5 +149,16 @@ class ScaleSpec extends SparkSpec {
     val wide = spark.range(0, 100, 1, numPartitions = par).toDF("id")
     val same = Scale.fanOut(wide)
     (same eq wide) shouldBe true
+    // a filter written ABOVE fanOut is planned BELOW its exchange (Catalyst
+    // pushes deterministic filters through Repartition): it runs in the
+    // narrow scan stage, not wide
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val filtered = fanned.filter(org.apache.spark.sql.functions.col("id") % 3 === 0)
+    val exchange = filtered.queryExecution.sparkPlan
+      .collectFirst { case e: ShuffleExchangeExec => e }
+    exchange shouldBe defined
+    exchange.get.child.collectFirst { case f: FilterExec => f } shouldBe defined
+    filtered.count() shouldBe 34L
   }
 }

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
+import graft.gold.AggregationEngine
 import graft.config.PiiRule
 
 class CurationSpec extends SparkSpec {
@@ -537,5 +538,97 @@ class CurationSpec extends SparkSpec {
       model = Some(m))
     Curation.curate(corpus, spec).collect().map(_.getLong(0)).toSeq shouldBe
       Seq(1L)
+  }
+
+  // Every dedup strategy acts on this corpus: an exact copy (2 of 1), a
+  // case/punctuation copy (3), a truncated copy (4 strictly prefixes 1),
+  // two docs equal only once their emails are redacted (5, 6), and
+  // same-direction embedding twins (1/2, 3/4, 5/6).
+  private val lang = graft.config.LanguageFilterSpec("text", Seq("en", "und"))
+  private val rules = Seq(PiiRule("text", Curation.PiiPatterns.Email, "[EMAIL]"))
+  private def nearDupCorpus = {
+    val fox = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val (a, b, c) = (Array(1f, 0f, 0f, 2f), Array(-1f, 3f, 0.5f, 0f),
+      Array(0f, 0f, 1f, 0f))
+    Seq(
+      (1L, fox, a, 5L, "web"),
+      (2L, fox, a.map(_ * 2f), 9L, "web"),
+      (3L, "The Quick Brown Fox jumps over the lazy dog, near the river " +
+        "bank today!", b, 7L, "wiki"),
+      (4L, fox.stripSuffix(" today"), b.map(_ * 3f), 1L, "web"),
+      (5L, s"$fox mail ann@example.org", c, 2L, "books"),
+      (6L, s"$fox mail bob@example.net", c.map(_ * 2f), 3L, "books"),
+      (7L, "an unrelated sentence about spark clusters reading parquet " +
+        "files in parallel", Array(0f, 1f, 0f, 0f), 4L, "wiki"),
+      (8L, "medallion lakehouse layers move raw bronze rows into curated " +
+        "silver tables", Array(0f, 0f, 0f, 1f), 6L, "web"))
+      .toDF("doc_id", "text", "emb", "score", "source")
+  }
+  private def nearDupSpec(strategy: String) = graft.config.NearDedupSpec(
+    strategy, "doc_id",
+    if (Set("embedding_lsh", "semantic")(strategy)) "emb" else "text",
+    dim = 4, kmeansK = 2, kmeansIters = 1, scoreColumn = Some("score"))
+
+  test("curate ≡ applyDedup over the lazy prefix, for every dedup strategy") {
+    import org.apache.spark.sql.DataFrame
+    val corpus = nearDupCorpus
+    val prefix = Curation.redactPii(Curation.applyLanguageFilter(corpus, lang),
+      rules)
+    def rows(df: DataFrame) = df.collect().sortBy(_.getAs[Long]("doc_id")).toSeq
+    val before = rows(prefix)
+    before.size shouldBe 8
+    for (s <- graft.config.NearDedupSpec.Strategies.toSeq.sorted) withClue(s"$s: ") {
+      val d = nearDupSpec(s)
+      val lazyOut = Curation.applyDedup(prefix, d)
+      val expected = rows(lazyOut)
+      expected should not equal before // the strategy removed or masked a dup
+      val curated = Curation.curate(corpus, graft.config.CurationSpec(
+        language = Some(lang), pii = rules, dedup = Some(d)))
+      curated.columns.toSeq shouldBe lazyOut.columns.toSeq
+      rows(curated) shouldBe expected
+    }
+  }
+
+  test("curate scans its dedup input once, in the checkpoint job") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.config.{GoldModel, Measure}
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_scan")
+      .resolve("docs").toString
+    nearDupCorpus.drop("emb").coalesce(1).write.parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    object Plans extends AdaptiveSparkPlanHelper {
+      def fileScans(df: DataFrame): Int = {
+        df.collect()
+        collectWithSubqueries(df.queryExecution.executedPlan) {
+          case s: FileSourceScanExec => s
+        }.size
+      }
+    }
+    def withJobs[T](body: => T): (T, Int) = {
+      val (result, started) = JobLog(spark)(body)
+      (result.get, started.size)
+    }
+    val gold = GoldModel("by_source", Seq("source"),
+      Seq(Measure("docs", "count(1)")))
+    // the checkpoint is the one added job and the only file scan: neither
+    // the curated frame nor a gold mart over it scans the corpus again
+    for (strategy <- Seq("minhash_lsh", "exact")) withClue(s"$strategy: ") {
+      val d = nearDupSpec(strategy)
+      val spec = graft.config.CurationSpec(language = Some(lang), pii = rules,
+        dedup = Some(d))
+      val prefix = Curation.redactPii(
+        Curation.applyLanguageFilter(corpus, lang), rules)
+      val (_, parentJobs) = withJobs(Curation.applyDedup(prefix, d).count())
+      val (curated, curateJobs) = withJobs {
+        val c = Curation.curate(corpus, spec)
+        c.count()
+        c
+      }
+      curateJobs shouldBe parentJobs + 1
+      Plans.fileScans(curated) shouldBe 0
+      Plans.fileScans(AggregationEngine.build(curated, gold)) shouldBe 0
+    }
   }
 }
