@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
   *
@@ -13,36 +11,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE minPartitionSize was A/B'd at 64k (more parallelism for the
-      // CPU-dense verify stages) and REJECTED: it won on single queries
-      // (q234 4.1 → 2.7 s) but cost more task/stage overhead than it
-      // bought across the suite (26-query subset: +8.5 s vs the 1 MB
-      // default, worst q140 4.5 → 7.1 s) — OPTIMIZATION_r21.md. The env
-      // knob remains for cluster profiles with their own CPU-per-byte
-      // measurements; unset = Spark's default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-bench")
     // one untimed warm-up pass over EVERY query, so JIT/codegen/file-footer
     // cold-start cost lands here instead of inside whichever query happens to
     // first touch a heavy operator (window exec, regex, decimal agg). Without
     // this, first-touch JIT drifts between rounds and poisons cross-round
     // comparisons.
-    // Local-iteration filter: comma-separated query-name substrings.
-    // Unset (the driver's posture) → every query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+      .filter { case (n, _) => SparkEntry.selected(n) }
     val warmT0 = System.nanoTime()
     names.foreach { case (_, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -110,7 +86,7 @@ object Bench {
       // id is reduced mod 1e9+7 BEFORE the Knuth multiply: at 5e9 rows
       // the raw product overflows BIGINT (ANSI aborts); the reduced
       // product peaks at ~2.7e18, safely inside
-      spark.range(0L, 5000000000L, 1L, cpus.toInt)
+      spark.range(0L, 5000000000L, 1L, spark.sparkContext.defaultParallelism)
         .selectExpr(
           "sum((((id % 1000000007) * 2654435761) ^ (id >> 7)) % 1000003) as s")
         .write.format("noop").mode("overwrite").save()

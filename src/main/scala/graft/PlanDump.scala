@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan capture: writes `.explain("formatted")` output for a list of
   * SparkEntry queries to `<outDir>/<query>_<tag>.txt` — one JVM for the
-  * whole list (Explain pays a session per query). The optimization-round
-  * evidence files under `plans/` are produced with this.
+  * whole list. The optimization-round evidence files under `plans/` are
+  * produced with this; one query is the plan-inspection loop for pushdown
+  * (`PushedFilters`), pruning (`ReadSchema`), join strategies and codegen
+  * coverage (`WholeStageCodegen` spans, `(fallback)` markers). Runs on 4
+  * cores whatever the host, so plans compare across hosts.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> <q1,q2,...|all> [sfDir]
   */
@@ -20,16 +21,7 @@ object PlanDump {
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-plandump", cpus = 4)
     try names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         throw new IllegalArgumentException(s"unknown query $name"))

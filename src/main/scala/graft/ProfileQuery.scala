@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level profiler for one SparkEntry query: runs the query under the
   * Bench posture (local[$SPARK_GRAFT_CPUS], noop sink, warm-up + settled
@@ -17,29 +16,17 @@ object ProfileQuery {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val fn = SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query $name"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // extra confs for A/B runs: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(
+      _.split(";").map(_.trim).filter(_.nonEmpty).map { kv =>
         require(kv.contains("="),
           s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
+        k -> v
       })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-profile", extraConf = extraConf)
 
     case class St(name: String, wallMs: Long, cpuMs: Long,
       runMs: Long, shufRead: Long, shufWrite: Long, tasks: Int)

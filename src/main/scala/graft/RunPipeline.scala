@@ -2,7 +2,6 @@ package graft
 
 import graft.bronze.Ingest
 import graft.config.ConfigLoader
-import org.apache.spark.sql.SparkSession
 
 /** CLI pipeline verb — the in-process equivalent of the reference's
   * orchestrated bronze→silver→gold→quality→lineage DAG
@@ -16,17 +15,7 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RunPipeline <config.yaml> [overlay.yaml]")
     val config = ConfigLoader.load(args(0), args.lift(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-pipeline-${config.name}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"graft-pipeline-${config.name}")
     try {
       val bronze = config.bronze.getOrElse(
         throw new IllegalArgumentException("config needs a bronze section"))

@@ -303,17 +303,7 @@ object ScaleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-scale-smoke")
 
     val sf1Dir = "/tmp/graft_scale_sf1"
     synthSf1(spark, "/root/testdata/sf0.1", sf1Dir)
@@ -367,19 +357,16 @@ object ScaleSmoke {
       "sf1~" -> sf1Dir)
     println("| query | sf | sec | shuffle_mb |")
     println("|---|---|---|---|")
-    // local-iteration filter (same contract as Bench/Verify):
-    // comma-separated name substrings; unset runs the full list
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     dirs.foreach { case (label, dir) =>
       val qs = (HeavyQueries
-        .filter(n => only.forall(_.exists(n.contains)))
+        .filter(SparkEntry.selected)
         .map(n => n -> SparkEntry.queries(n))) ++
         (if (label == "sf1~")
           Seq("q64_lsh_numPlanes8" -> lshScaled,
             "q111_semantic_k64" -> semScaled,
             "q205_bm25_fixedQ" -> bm25FixedQ,
             "q122_keyword_fixedQ" -> kwFixedQ)
-            .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+            .filter { case (n, _) => SparkEntry.selected(n) }
         else Nil)
       qs.foreach { case (name, fn) =>
         // two runs, min: run 1 doubles as JIT/codegen warm-up at this scale
@@ -410,7 +397,7 @@ object ScaleSmoke {
     println("|---|---|---|---|---|")
     Seq("balanced" -> "/root/testdata/sf0.1", "skew50x" -> skewDir)
       .foreach { case (label, dir) =>
-        SkewQueries.filter(n => only.forall(_.exists(n.contains)))
+        SkewQueries.filter(SparkEntry.selected)
           .foreach { name =>
           val fn = SparkEntry.queries(name)
           val (sec, mb, splits) = (1 to 2).map { _ =>

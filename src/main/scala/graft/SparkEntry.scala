@@ -86,6 +86,12 @@ object SparkEntry {
       when(id % 2 === 0, "#top").otherwise(""))
   }
 
+  /** Local-iteration filter shared by the mains that run the catalog:
+    * `SPARK_GRAFT_ONLY` holds comma-separated query-name substrings; unset
+    * (the driver's posture) selects every query. */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").forall(_.split(",").exists(name.contains))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A1/A5/P4 — TPC-H Q1-style pricing summary (hash agg, map-side partial)

@@ -1,29 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // events.ts normalizes to epoch-nanos long; the legacy conf only
-      // matters for TIMESTAMP(NANOS)-era files (see Tables.load)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (same contract as Bench): comma-separated
-    // query-name substrings. Unset — the driver's posture — runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+      .filter { case (n, _) => SparkEntry.selected(n) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

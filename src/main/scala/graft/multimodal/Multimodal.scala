@@ -192,10 +192,6 @@ object Multimodal {
     }
   }
 
-  /** Back-compat alias for the pre-decode builds. */
-  def resizeStub(ds: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] =
-    resize(ds, w, h)
-
   /** 64-bit difference hash (dHash) of an image payload — the standard
     * perceptual fingerprint for image near-dup detection: area-average the
     * REAL decoded pixels onto a 9×8 luminance grid, emit one bit per

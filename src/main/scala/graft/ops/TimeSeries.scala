@@ -366,40 +366,4 @@ object TimeSeries {
         (col("__e.x") * lit(1000000L) - (col("__prev.l") + col("__prev.b")))
           .as("resid_e6")): _*)
   }
-
-  /** Rolling exact MEDIAN + deviation per key — the robust twin of the
-    * moving-average anomaly ([[graft.quality.Anomaly.movingAnomaly]]):
-    * one outlier drags a 7-day mean for a week, but the median shrugs it
-    * off, so deviation-from-rolling-median flags the outlier itself
-    * without poisoning the next window. `window` must be ODD so the
-    * median of integers is an exact INTEGER (the middle order statistic
-    * — an even window averages two elements and lands on .5, which is
-    * where cross-engine float drift lives); windows shorter than
-    * `window` (each key's first rows) report null — a 3-row "7-day
-    * median" is a different, noisier statistic, and reporting it
-    * unlabeled is how warm-up rows poison alert thresholds.
-    *
-    * Scale shape: ONE keyed window pass (collect_list over the ROWS
-    * frame + row-local sort of ≤ `window` elements) — same exchange
-    * as the lag; no join, no global sort. */
-  def rollingMedian(daily: DataFrame, keyCols: Seq[String], dayCol: String,
-      valueCol: String, window: Int): DataFrame = {
-    require(window >= 3 && window % 2 == 1,
-      s"window must be odd and >= 3 (exact integer median), got $window")
-    val gcols = keyCols.map(col)
-    val w = Window.partitionBy(gcols: _*)
-      .orderBy(col(dayCol).cast("long"))
-      .rowsBetween(-(window - 1), Window.currentRow)
-    daily
-      .filter(col(valueCol).isNotNull)
-      .select(gcols :+ col(dayCol).cast("long").as(dayCol) :+
-        col(valueCol).cast("long").as(valueCol): _*)
-      .withColumn("__w", collect_list(col(valueCol)).over(w))
-      .withColumn("rolling_median",
-        when(size(col("__w")) === window,
-          element_at(array_sort(col("__w")), (window + 1) / 2)))
-      .withColumn("deviation",
-        col(valueCol) - col("rolling_median"))
-      .drop("__w")
-  }
 }

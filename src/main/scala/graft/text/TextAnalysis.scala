@@ -942,55 +942,4 @@ object TextAnalysis {
       .withColumn("avg_token_len_e6", e6(avgTokenLength(c)))
       .withColumn("quality_score_e6", e6(qualityScore(c)))
   }
-
-  /** Exact PHRASE search — documents containing the query tokens
-    * CONSECUTIVELY, in order ([[keywordSearchTopK]] and [[bm25TopK]]
-    * treat queries as bags of words; "new york" as a phrase is a
-    * different query than {new, york}). The classic positional-postings
-    * construction, join-shaped: every corpus token carries its position,
-    * every phrase token its offset, and a document matches at `anchor`
-    * iff ALL phrase offsets land — per (query, doc, anchor = pos − idx)
-    * group, the hit count equals the phrase length exactly when token
-    * anchor+i = phrase[i] for every i (each idx contributes at most one
-    * row per anchor, so the count cannot overshoot; repeated words in
-    * the phrase are handled for free). Occurrences may overlap ("a a a"
-    * matches "a a" at anchors 0 and 1) — position algebra, no string
-    * scan. Ranking: n_matches desc, doc id ties, top `k` per query.
-    *
-    * Scale shape: the corpus-token frame never shuffles raw — it streams
-    * through ONE broadcast join against the (tiny) phrase-term frame, so
-    * only actual term hits reach the anchor aggregate (the posting-list
-    * shape: cost is Σ df over phrase terms, not corpus size); then two
-    * grouped counts in hit space and a per-query top-k window over
-    * ≤ |queries|·|matched docs| rows. Queries must be small enough to
-    * broadcast — they are the PHRASES, not the corpus. */
-  def phraseSearchTopK(docs: DataFrame, queries: DataFrame,
-      idCol: String, textCol: String,
-      queryIdCol: String, queryPhraseCol: String,
-      k: Int, excludeSelf: Boolean = false): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val qterms = queries.select(
-      col(queryIdCol).cast("long").as("query_id"),
-      size(tokens(col(queryPhraseCol))).cast("long").as("__plen"),
-      posexplode(tokens(col(queryPhraseCol))).as(Seq("__idx", "term")))
-    val positions = docs.select(col(idCol),
-      posexplode(tokens(col(textCol))).as(Seq("__pos", "term")))
-    val hits = positions.join(broadcast(qterms), "term")
-      .withColumn("__anchor", col("__pos") - col("__idx"))
-      .filter(col("__anchor") >= 0)
-    val full = (if (excludeSelf)
-        hits.filter(col("query_id") =!= col(idCol)) else hits)
-      .groupBy(col("query_id"), col(idCol), col("__anchor"), col("__plen"))
-      .agg(count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") === col("__plen"))
-    val scored = full.groupBy(col("query_id"), col(idCol))
-      .agg(count(lit(1)).as("n_matches"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("n_matches").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).cast("long").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("n_matches"))
-  }
 }

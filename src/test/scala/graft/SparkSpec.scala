@@ -6,25 +6,15 @@ import org.scalatest.matchers.should.Matchers
 
 /** Shared test harness: one local session for the whole suite (the
   * reference uses a session-scoped local[2] fixture with tiny shuffle
-  * parallelism, tests/conftest.py:30-57). */
+  * parallelism, tests/conftest.py:30-57), built by [[GraftSession]] on a
+  * fixed 4 cores whatever the host, so plan and partition assertions hold
+  * everywhere. */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.catalyst.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.build("graft-test", cpus = 4,
+    extraConf = Seq("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
