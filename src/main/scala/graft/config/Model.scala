@@ -34,8 +34,8 @@ final case class Measure(name: String, expression: String)
 /** `rollup`/`cube` switch the groupBy to the multi-level grouping-set
   * form (every hierarchy level / the full 2^n lattice in ONE aggregate,
   * plus a `gid` grouping-set bitmask column — `ops/Grouping` semantics).
-  * Mutually exclusive; incompatible with incremental/streaming refresh,
-  * whose MERGE keys assume one grouping set. */
+  * Mutually exclusive; incompatible with incremental refresh, whose
+  * MERGE keys assume one grouping set. */
 final case class GoldModel(
     name: String,
     groupBy: Seq[String],
@@ -218,12 +218,7 @@ final case class GrowthCheck(dayColumn: String, itemColumn: String,
   * KS (`Kmv.weightedSampleKsReport`): each sampled row counts its mass
   * (token count, bytes — integral, determined by `idColumn` like the
   * value) instead of 1/k, so the alarm ranks drift by mass, not row
-  * count; the cap then applies to `wks_e6`. The streaming gate needs
-  * `kmvWeightedValuesStream` state for a weighted spec (its samples
-  * carry the mass alongside the value); the sketch streams stamp the
-  * columns/k they sketched onto the state as schema metadata and the
-  * merged gates verify the spec against that contract, raising loudly
-  * on any mismatch (weighted spec over unweighted state included). */
+  * count; the cap then applies to `wks_e6`. */
 final case class KsCheck(typeColumn: String, idColumn: String,
     valueColumn: String, k: Int = 256, maxKsE6: Long = 500000L,
     massColumn: Option[String] = None)
@@ -328,9 +323,7 @@ object NearDedupSpec {
   * strata absent from `rates` keep `defaultPct`. Alternatively set
   * `temperature` (α ∈ [0,1]) to DERIVE rates from corpus counts as
   * (c_min/c_d)^(1−α) (`Curation.temperatureSample` — the p^α flattening
-  * trick) instead of hand-picking them; exclusive with `rates`, and
-  * batch-only (the rate derivation is a corpus aggregate an unbounded
-  * stream cannot host). */
+  * trick) instead of hand-picking them; exclusive with `rates`. */
 final case class MixingSpec(
     keyColumn: String,
     domainColumn: String,
@@ -366,8 +359,7 @@ final case class LanguageFilterSpec(textColumn: String, keep: Seq[String])
   * buckets (Features.hashFeatures's md5-mod-`nBuckets` space, so weights
   * trained on q194 coordinates apply directly) to integer micro-unit
   * weights; rows keep iff bias + Σ_token w[bucket] ≥ `minScoreE6`.
-  * `score_e6`/`prob_e6` ride through as audit columns. Row-local — the
-  * identical stage runs under streaming curation. */
+  * `score_e6`/`prob_e6` ride through as audit columns. Row-local. */
 final case class QualityModelSpec(
     idColumn: String,
     textColumn: String,

@@ -185,9 +185,8 @@ object Dedup {
     * the corpus text scan twice (band pass + verification-set pass) and
     * repeats both on every call — for continuous ingest build the state
     * ONCE with [[corpusFuzzyState]], materialize it durably, and call
-    * [[fuzzyDedupePrepared]] per batch (the streaming curation sink does
-    * exactly this). The batch side's own two passes are over the arriving
-    * micro-batch only. `maxBucketSize` caps corpus-side bucket membership
+    * [[fuzzyDedupePrepared]] per batch. The batch side's own two passes
+    * are over the arriving batch only. `maxBucketSize` caps corpus-side bucket membership
     * (boilerplate guard) before the candidate explosion. */
   def fuzzyDedupeAgainstCorpus(
       newDf: DataFrame,
@@ -211,10 +210,10 @@ object Dedup {
     * ingest run, so build this once, materialize both frames, and reuse
     * them for every arriving batch — the corpus text is then scanned once
     * per RUN instead of twice per BATCH. For a bounded job a replicated
-    * `persist` suffices; for an UNBOUNDED query write them to durable
-    * storage and re-read (the streaming curation sink does — a
+    * `persist` suffices; for a long-running ingest write them to durable
+    * storage and re-read ([[persistCorpusFuzzyState]] — a
     * localCheckpoint's executor-resident blocks have truncated lineage, so
-    * one executor loss would fail every later micro-batch). */
+    * one executor loss would fail every later batch). */
   def corpusFuzzyState(
       corpus: DataFrame,
       idCol: String,

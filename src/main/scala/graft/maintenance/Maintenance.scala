@@ -48,41 +48,6 @@ object Maintenance {
       if (after == null) 0L else after.length.toLong)
   }
 
-  final case class PruneStats(
-      batchesBefore: Long, batchesDeleted: Long, bytesDeleted: Long)
-
-  /** Retention for per-batch state/report directories (`driftStream`,
-    * `topKStream`, the fuzzy curation sink): keep the newest `keepLast`
-    * `batch_id=N` partitions, delete the rest. Merged-on-read sketch
-    * state keeps its ANSWER only if consumers snapshotted/merged the
-    * pruned history first — this is a retention policy, not a compaction;
-    * for drift reports old partitions are simply expired alerts. Batch
-    * ids order NUMERICALLY (batch_id=10 is newer than batch_id=9 — a
-    * string sort would get this wrong). Non-partition files and foreign
-    * directories under `dir` are left untouched; a `keepLast` of at least
-    * 1 is required so the live head can never be deleted. */
-  def pruneBatchPartitions(spark: SparkSession, dir: String,
-      keepLast: Int): PruneStats = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val hPath = new Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Option(fs.globStatus(new Path(dir + "/batch_id=*")))
-      .getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val name = st.getPath.getName.stripPrefix("batch_id=")
-        scala.util.Try(name.toLong).toOption.map(_ -> st.getPath)
-      }
-      .sortBy(_._1)
-    val doomed = parts.dropRight(keepLast)
-    var bytes = 0L
-    doomed.foreach { case (_, p) =>
-      bytes += fs.getContentSummary(p).getLength
-      fs.delete(p, true)
-    }
-    PruneStats(parts.length.toLong, doomed.length.toLong, bytes)
-  }
-
   /** M2 — Iceberg-only (`expire_snapshots`); no catalog in this build. */
   def expireSnapshots(path: String, retainDays: Int): Nothing =
     throw new UnsupportedOperationException(

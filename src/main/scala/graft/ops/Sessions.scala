@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Gap-based sessionization of an event stream in batch form: a new session
   * starts when the inter-event gap within a key exceeds `gapSec`. The
-  * standard lag → running-sum construction; the batch twin of the streaming
-  * `mapGroupsWithState` session operator.
+  * standard lag → running-sum construction.
   *
   * Scale shape: ONE shuffle — both window passes (the lag and the running
   * sum) share the same (partition, order) spec, so they plan into a single

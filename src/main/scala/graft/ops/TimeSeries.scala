@@ -103,10 +103,8 @@ object TimeSeries {
     * the size/slide overlapping windows covering it, aggregated per
     * (window, key) — the smoothing view behind rate monitors and rolling
     * engagement metrics, where a tumbling grid under-counts activity that
-    * straddles a boundary. The same epoch-aligned grid Structured
-    * Streaming's `window()` uses, so a batch backfill of this aggregate
-    * and the live `Streaming.windowedCounts` stream land on identical
-    * window keys.
+    * straddles a boundary. Windows sit on the builtin `window()`'s
+    * epoch-aligned grid.
     *
     * Built on the builtin `window()` generator (codegen'd expand by
     * size/slide windows per row — ×(size/slide) row growth BEFORE the

@@ -295,11 +295,9 @@ object Anomaly {
       .otherwise(floor((c - lit(lo)) / lit(hi - lo) * lit(nBins.toDouble))
         .cast("long") + 1L)
 
-  /** Fixed-bin histogram counts (bucket, n) — the reusable side of the
-    * drift report. A static baseline computes this ONCE (persist or
-    * localCheckpoint the ≤ nBins+2-row result) and feeds
-    * [[histogramDriftFromCounts]] per batch. */
-  def histogramCounts(df: DataFrame, column: String,
+  /** Fixed-bin histogram counts (bucket, n) — one side of the drift
+    * report. */
+  private def histogramCounts(df: DataFrame, column: String,
       lo: Double, hi: Double, nBins: Int): DataFrame = {
     require(nBins >= 1 && hi > lo, s"bad histogram params [$lo, $hi) x $nBins")
     df.filter(col(column).isNotNull)
@@ -317,25 +315,9 @@ object Anomaly {
     * bin id — linear, no window, no join back to row data. Bins with no
     * rows on either side are omitted (outer-join semantics, zero-filled). */
   def histogramDrift(baseline: DataFrame, current: DataFrame, column: String,
-      lo: Double, hi: Double, nBins: Int): DataFrame =
-    histogramDriftFromCounts(
-      histogramCounts(baseline, column, lo, hi, nBins), current, column,
-      lo, hi, nBins)
-
-  /** Drift against PRECOMPUTED baseline counts (`histogramCounts` shape) —
-    * what a long-running monitor calls per batch so the static baseline is
-    * never re-scanned. CONTRACT: `baselineCounts` must have been produced
-    * by `histogramCounts` with the SAME (lo, hi, nBins) passed here —
-    * bucket ids are only comparable under identical binning, and a
-    * mismatch produces silently meaningless deltas (the schema is checked;
-    * the binning parameters cannot be, so they are the caller's
-    * responsibility). */
-  def histogramDriftFromCounts(baselineCounts: DataFrame, current: DataFrame,
-      column: String, lo: Double, hi: Double, nBins: Int): DataFrame = {
-    require(baselineCounts.columns.toSeq == Seq("bucket", "n"),
-      s"baselineCounts must be a histogramCounts frame (bucket, n), got " +
-        baselineCounts.columns.mkString("(", ", ", ")"))
-    val b = baselineCounts.withColumnRenamed("n", "n_base")
+      lo: Double, hi: Double, nBins: Int): DataFrame = {
+    val b = histogramCounts(baseline, column, lo, hi, nBins)
+      .withColumnRenamed("n", "n_base")
     val c = histogramCounts(current, column, lo, hi, nBins)
       .withColumnRenamed("n", "n_cur")
     // ≤ nBins+2 rows: materialize once so the totals aggregate below does

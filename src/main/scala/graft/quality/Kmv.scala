@@ -111,17 +111,8 @@ object Kmv {
     * answered from sketches alone. n_inter_k + n_only_a + n_only_b =
     * k_used by construction (every merged hash came from A or B). */
   def overlapReport(df: DataFrame, typeCol: String, itemCol: String,
-      k: Int): DataFrame =
-    overlapFromSketches(sketches(df, Seq(typeCol), itemCol, k), typeCol, k)
-
-  /** [[overlapReport]] over an EXISTING per-group sketch frame
-    * (`typeCol`, `kmv`) — the entry point for persisted or streamed
-    * sketch state (`Streaming.mergedKmvOverlap` reads the kmvStream
-    * batch partitions through this): because KMV fold is exact, the
-    * report over folded state ≡ the batch report over every row the
-    * state ever saw. Same theta math, same bit-for-bit replay. */
-  def overlapFromSketches(sk: DataFrame, typeCol: String,
       k: Int): DataFrame = {
+    val sk = sketches(df, Seq(typeCol), itemCol, k)
     val a = sk.select(col(typeCol).as("type_a"), col("kmv").as("sk_a"))
     val b = sk.select(col(typeCol).as("type_b"), col("kmv").as("sk_b"))
     overlapFromSketchPairs(a.join(b, col("type_a") < col("type_b")), k)
@@ -164,20 +155,11 @@ object Kmv {
     * ·10⁶ product once k_used < ~11). */
   def containmentReport(dfA: DataFrame, typeColA: String,
       itemColA: String, dfB: DataFrame, typeColB: String,
-      itemColB: String, k: Int): DataFrame =
-    containmentFromSketches(
-      sketches(dfA, Seq(typeColA), itemColA, k), typeColA,
-      sketches(dfB, Seq(typeColB), itemColB, k), typeColB, k)
-
-  /** [[containmentReport]] over EXISTING per-group sketch frames
-    * (`typeCol`, `kmv`) — the persisted/streamed-state entry point
-    * (`Streaming.mergedKmvContainment`): fold exactness makes the
-    * report over folded state ≡ the batch report over all streamed
-    * rows. */
-  def containmentFromSketches(skA: DataFrame, typeColA: String,
-      skB: DataFrame, typeColB: String, k: Int): DataFrame = {
-    val a = skA.select(col(typeColA).as("type_a"), col("kmv").as("sk_a"))
-    val b = skB.select(col(typeColB).as("type_b"), col("kmv").as("sk_b"))
+      itemColB: String, k: Int): DataFrame = {
+    val a = sketches(dfA, Seq(typeColA), itemColA, k)
+      .select(col(typeColA).as("type_a"), col("kmv").as("sk_a"))
+    val b = sketches(dfB, Seq(typeColB), itemColB, k)
+      .select(col(typeColB).as("type_b"), col("kmv").as("sk_b"))
     // clamp BEFORE the split: num ≤ denom·1000 ≤ 10¹⁷, quotient ≤ 1000
     // → ·10⁶ ≤ 10⁹, remainder < denom ≤ 10¹⁴ → ·10³ ≤ 10¹⁷ — every
     // intermediate BIGINT-safe regardless of k (ADVICE r18).
@@ -226,25 +208,7 @@ object Kmv {
           s"(epoch-day), got ${other.simpleString} - cast dates to " +
           "epoch-days upstream; a lossy cast would silently emit no pairs")
     }
-    consecutiveOverlapFromSketches(sketches(df, Seq(dayCol), itemCol, k),
-      dayCol, k)
-  }
-
-  /** [[consecutiveOverlap]] over an EXISTING per-day sketch frame
-    * (`dayCol` integral, `kmv`) — the persisted/streamed-state entry
-    * point (`Streaming.mergedKmvChurn`): the DAU churn dashboard running
-    * continuously off folded kmvStream state. Guards the integral-day
-    * contract itself, so the streamed path can't re-admit the silent
-    * zero-pairs hazard the raw-row entry point rejects. */
-  def consecutiveOverlapFromSketches(daily: DataFrame, dayCol: String,
-      k: Int): DataFrame = {
-    daily.schema(dayCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => ()
-      case other => throw new IllegalArgumentException(
-        s"consecutiveOverlapFromSketches: dayCol '$dayCol' must be " +
-          s"integral (epoch-day), got ${other.simpleString} - a lossy " +
-          "cast would silently emit no pairs")
-    }
+    val daily = sketches(df, Seq(dayCol), itemCol, k)
     val a = daily.select(col(dayCol).cast("long").as("type_a"),
       col("kmv").as("sk_a"))
     val b = daily.select((col(dayCol).cast("long") - 1L).as("__prev"),
@@ -307,17 +271,8 @@ object Kmv {
     * trailing-window mode stays bounded at days × windowDays pairs. */
   def rollingDistinctBy(df: DataFrame, groupCols: Seq[String],
       dayCol: String, itemCol: String, k: Int,
-      windowDays: Int = 0): DataFrame =
-    rollingFromDailySketches(sketches(df, groupCols :+ dayCol, itemCol, k),
-      groupCols, dayCol, k, windowDays)
-
-  /** [[rollingDistinctBy]] starting from an EXISTING per-(group, day)
-    * sketch frame (`groupCols :+ dayCol`, `kmv`) — the streamed-state
-    * entry point (`Streaming.foldedKmvSketches` keyed by day): bottom-k
-    * of a union of bottom-ks IS the union's bottom-k, so the curve off
-    * folded state ≡ the batch curve over every row ever streamed. */
-  def rollingFromDailySketches(daily: DataFrame, groupCols: Seq[String],
-      dayCol: String, k: Int, windowDays: Int = 0): DataFrame = {
+      windowDays: Int = 0): DataFrame = {
+    val daily = sketches(df, groupCols :+ dayCol, itemCol, k)
     val days = daily.select(col(dayCol).as("__d")).distinct()
     val cond =
       if (windowDays > 0)
@@ -457,9 +412,9 @@ object Kmv {
       valueSketches(df, Seq(typeCol), idCol, valueCol, k), typeCol)
 
   /** [[sampleKsReport]] over an EXISTING per-type value-sketch frame
-    * (`typeCol`, `kmvv`) — the persisted/streamed-state entry point
-    * (`Streaming.mergedKmvKs`): fold exactness makes the statistic over
-    * folded state ≡ the batch report over all streamed rows. */
+    * (`typeCol`, `kmvv`) — the entry point for persisted sketch state:
+    * fold exactness makes the statistic over folded state ≡ the report
+    * over every row the state saw. */
   def sampleKsFromSketches(sk: DataFrame, typeCol: String): DataFrame = {
     val a = sk.select(col(typeCol).as("type_a"), col("kmvv").as("ska"))
     val b = sk.select(col(typeCol).as("type_b"), col("kmvv").as("skb"))
@@ -621,31 +576,19 @@ object Kmv {
               "to fixed-point first (round(x * 100) the e2 convention)")
         }
     }
-    weightedSketchesFromHashStream(
-      df.filter(col(idCol).isNotNull && col(valueCol).isNotNull &&
-        col(massCol).isNotNull),
-      groupCols, hash60(col(idCol)), col(valueCol).cast("long"),
-      col(massCol).cast("long"), k)
-  }
-
-  /** The two-aligned-`kmv_values` tail over an ALREADY-HASHED
-    * (h, v, m) stream — shared by [[weightedValueSketches]] (fresh rows,
-    * h = hash60(id)) and the streaming weighted fold (persisted state,
-    * h from the state itself), so the (h, v, m) struct layout lives in
-    * exactly one expression and fold ≡ batch can't drift apart by a
-    * one-sided edit. Both aggregates keep the bottom-k DISTINCT hashes
-    * of the same stream → identical hash sets → the positional zip is
-    * exact alignment, not a join. */
-  private[graft] def weightedSketchesFromHashStream(df: DataFrame,
-      groupCols: Seq[String], hCol: Column, vCol: Column, mCol: Column,
-      k: Int): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
+    val h = hash60(col(idCol))
+    df.filter(col(idCol).isNotNull && col(valueCol).isNotNull &&
+        col(massCol).isNotNull)
+      .groupBy(groupCols.map(col): _*)
       .agg(
-        call_function("kmv_values", hCol, vCol, lit(k)).as("__kv"),
-        call_function("kmv_values", hCol, mCol, lit(k)).as("__km"))
+        call_function("kmv_values", h, col(valueCol).cast("long"), lit(k))
+          .as("__kv"),
+        call_function("kmv_values", h, col(massCol).cast("long"), lit(k))
+          .as("__km"))
       .select(groupCols.map(col) :+
         expr("zip_with(__kv, __km, (x, y) -> " +
           "named_struct('h', x.h, 'v', x.v, 'm', y.v))").as("kmvv"): _*)
+  }
 
   /** Pairwise MASS-weighted two-sample KS: D_w = max over the union of
     * sample values of |wecdf_a − wecdf_b| where each sampled row counts
@@ -663,7 +606,7 @@ object Kmv {
       typeCol)
 
   /** [[weightedSampleKsReport]] over an EXISTING (`typeCol`, `kmvv`)
-    * weighted-sketch frame — the persisted/streamed-state entry point
+    * weighted-sketch frame — the persisted-state entry point
     * (fold exactness: the statistic over folded state ≡ the batch
     * report over all rows). */
   def weightedKsFromSketches(sk: DataFrame, typeCol: String): DataFrame = {
@@ -717,17 +660,20 @@ object Kmv {
       .select(col("type_a"), col("type_b"), col("k_a"), col("k_b"),
         col("mass_a"), col("mass_b"), col("wks_e6"), col("ks_e6"))
 
-  /** MASS-weighted quantiles off a [[weightedValueSketches]] frame: for
-    * each qE6, the smallest sampled value whose cumulative sample MASS
-    * crosses q of the total — the median token now sits where half the
-    * token MASS sits, not where half the docs sit. The crossing test is
+  /** Per-group MASS-weighted quantile estimates off a
+    * [[weightedValueSketches]] frame: for each qE6, the smallest sampled
+    * value whose cumulative sample MASS crosses q of the total — the
+    * median token now sits where half the token MASS sits, not where
+    * half the docs sit. The crossing test is
     * one fixed integer comparison (prefix-mass ·10⁶ ≥ q · total mass —
     * both BIGINT products inside the documented mass envelope), the
     * prefix sums run over the sample sorted by (v, m) — a total order
     * both engines share — so every cell replays bit-for-bit. Emits
     * `k_used`, `mass_total`, one `q_<qE6>` per requested quantile. */
-  def weightedQuantilesFromSketches(sk: DataFrame, groupCols: Seq[String],
+  def weightedQuantileReport(df: DataFrame, groupCols: Seq[String],
+      idCol: String, valueCol: String, massCol: String, k: Int,
       qE6s: Seq[Long]): DataFrame = {
+    val sk = weightedValueSketches(df, groupCols, idCol, valueCol, massCol, k)
     require(qE6s.nonEmpty && qE6s.forall(q => q >= 1L && q <= 1000000L),
       s"quantiles must be in [1, 1000000] micro-units, got $qE6s")
     require(qE6s.distinct.size == qE6s.size,
@@ -753,15 +699,6 @@ object Kmv {
     withQs.select(groupCols.map(col) ++ (Seq(col("k_used"),
       col("mass_total")) ++ qE6s.map(q => col(s"q_$q"))): _*)
   }
-
-  /** Per-group mass-weighted quantile estimates in one call:
-    * [[weightedValueSketches]] → [[weightedQuantilesFromSketches]]. */
-  def weightedQuantileReport(df: DataFrame, groupCols: Seq[String],
-      idCol: String, valueCol: String, massCol: String, k: Int,
-      qE6s: Seq[Long]): DataFrame =
-    weightedQuantilesFromSketches(
-      weightedValueSketches(df, groupCols, idCol, valueCol, massCol, k),
-      groupCols, qE6s)
 
   /** Rolling / cumulative per-day QUANTILES from daily value sketches —
     * the [[rollingDistinct]] posture for order statistics: the raw data

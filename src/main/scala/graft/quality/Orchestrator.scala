@@ -333,8 +333,8 @@ object Orchestrator {
       }
       // novelty-collapse alarm: days past the warmup whose estimated NEW
       // uniques (lag diff of the q257 cumulative curve) fall below the
-      // floor — curve construction here, lattice/lag math in the shared
-      // [[growthFailuresFromCurve]] (also the streaming gate's spine).
+      // floor — curve construction here, lattice/lag math in
+      // [[growthFailuresFromCurve]].
       val cum = Kmv.rollingDistinct(
         df.select(col(gc.dayColumn), col(gc.itemColumn)),
         gc.dayColumn, gc.itemColumn, gc.k, windowDays = 0)
@@ -420,11 +420,7 @@ object Orchestrator {
     * cumulative estimates — an absent day reads est_new = 0 and fires
     * the floor instead of vanishing (r19 self-review finding). All
     * windows run over the DAYS-sized lattice, never row data; a curve
-    * with no days at all is the row-count check's job, not this one's.
-    *
-    * Shared by the batch gate ([[run]]) and the streaming gate
-    * (`Streaming.mergedGrowthCheck` feeds the curve off folded
-    * `kmvStream` state) so merged ≡ batch is structural. */
+    * with no days at all is the row-count check's job, not this one's. */
   def growthFailuresFromCurve(cum: DataFrame, dayCol: String,
       gc: graft.config.GrowthCheck, label: String): Long = {
     import org.apache.spark.sql.expressions.Window

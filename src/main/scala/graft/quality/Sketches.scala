@@ -99,49 +99,23 @@ object Sketches {
           lit(tolE6) * greatest(col("n_a"), col("n_b"))).as("est_ok"))
   }
 
-  // ---- mergeable frequent-items (heavy hitters) state ------------------
-  //
-  // The frequency sibling of the HLL loop: per-batch per-group
-  // `approx_top_k_accumulate` state (DataSketches frequent-items under
-  // Spark's approx_top_k trio) that merges across batches without
-  // rescanning history — the "who are the heaviest users/domains/tokens so
-  // far" tracker. While the tracked-item map never fills
-  // (`maxItemsTracked` ≥ live distinct items), counts are EXACT and
-  // merge-of-parts ≡ one-shot (spec-asserted); past that the sketch purges
-  // and estimates carry deterministic (not probabilistic) error bounds.
-  // Size the map from `keySkewProfile`'s n_keys before trusting estimates.
-
-  /** Per-group frequent-items state of `itemCol` — the per-batch
-    * accumulate side. State is a few KB per group at default map sizes. */
-  def topKSketches(df: DataFrame, groupCols: Seq[String], itemCol: String,
-      maxItemsTracked: Int = 10000): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("approx_top_k_accumulate",
-        col(itemCol), lit(maxItemsTracked)).as("topk_state"))
-
-  /** Merge persisted per-batch states down to one per group. All inputs
-    * must share an item type; `maxItemsTracked` caps the merged map. */
-  def mergeTopKSketches(df: DataFrame, groupCols: Seq[String],
-      stateCol: String = "topk_state",
-      maxItemsTracked: Int = 10000): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("approx_top_k_combine",
-        col(stateCol), lit(maxItemsTracked)).as("topk_state"))
-
-  /** Top-k (item, est) rows from a state column. In-sketch tie order is
-    * engine-local — re-rank on (est DESC, item) before comparing. */
-  def topKEstimate(state: Column, k: Int): Column =
-    call_function("approx_top_k_estimate", state, lit(k))
+  // ---- frequent-items (heavy hitters) audit ---------------------------
 
   /** Audit: the EXACT top-k heavy items per group (total order on count
-    * DESC, item — replayable on any engine) joined against the merged
-    * sketch's estimates: `est_exact` is true while the sketch never
-    * purged. The sketch is probed `estDepth` deep, NOT k deep — the
-    * sketch's own tie order at the k boundary is engine-local, so the
-    * probe must be deeper than any tie run crossing rank k (defaulting to
-    * the whole tracked map keeps the audit tie-proof; the explode is
-    * bounded by |groups|·maxItemsTracked, audit-pass sized). One grouped
-    * count in item space + one |groups·k| join. */
+    * DESC, item — replayable on any engine) joined against the estimates
+    * of a per-group `approx_top_k_accumulate` state (DataSketches
+    * frequent-items under Spark's approx_top_k trio, a few KB per group
+    * at default map sizes): `est_exact` is true while the sketch never
+    * purged. While the tracked-item map never fills (`maxItemsTracked` ≥
+    * live distinct items) its counts are EXACT; past that the sketch
+    * purges and estimates carry deterministic (not probabilistic) error
+    * bounds — size the map from `keySkewProfile`'s n_keys. The sketch is
+    * probed `estDepth` deep, NOT k deep — the sketch's own tie order at
+    * the k boundary is engine-local, so the probe must be deeper than any
+    * tie run crossing rank k (defaulting to the whole tracked map keeps
+    * the audit tie-proof; the explode is bounded by
+    * |groups|·maxItemsTracked, audit-pass sized). One grouped count in
+    * item space + one |groups·k| join. */
   def frequencyAudit(df: DataFrame, groupCols: Seq[String], itemCol: String,
       k: Int, maxItemsTracked: Int = 10000, estDepth: Int = 0): DataFrame = {
     val depth = if (estDepth > 0) estDepth else maxItemsTracked
@@ -153,8 +127,11 @@ object Sketches {
           .partitionBy(gcols: _*)
           .orderBy(col("cnt").desc, col("item"))).cast("long"))
       .filter(col("rnk") <= k)
-    val est = topKSketches(df, groupCols, itemCol, maxItemsTracked)
-      .select(gcols :+ explode(topKEstimate(col("topk_state"), depth)).as("e"): _*)
+    val est = df.groupBy(gcols: _*)
+      .agg(call_function("approx_top_k_accumulate",
+        col(itemCol), lit(maxItemsTracked)).as("topk_state"))
+      .select(gcols :+ explode(call_function("approx_top_k_estimate",
+        col("topk_state"), lit(depth))).as("e"): _*)
       .select(gcols :+ col("e.item").as("item") :+ col("e.count").as("est"): _*)
     exact.join(est, groupCols :+ "item", "left")
       .withColumn("est_exact", coalesce(col("est") === col("cnt"), lit(false)))

@@ -202,8 +202,7 @@ object Curation {
     * count·w, so this IS the sparse dot product over the hashed bag of
     * words — computed ROW-LOCALLY as a fold over the token array against
     * a broadcast map literal: zero shuffle, zero join, no fitted
-    * vocabulary to ship, and the identical plan runs under Structured
-    * Streaming (the batch/stream parity the curation stage contracts).
+    * vocabulary to ship.
     *
     * `prob_e6` squashes the score through the rational "fast sigmoid"
     * σ̃(s) = 1/2 + s/(2·(1+|s|)) in exact integer arithmetic (Elliott's
@@ -533,8 +532,7 @@ object Curation {
   /** The learned model as a corpus FILTER: keeps rows whose
     * [[scoreLinearModel]] score clears the configured threshold, with
     * every original column intact and `score_e6`/`prob_e6` riding
-    * through as audit columns (the n_redactions pattern). Row-local —
-    * streams unchanged. */
+    * through as audit columns (the n_redactions pattern). Row-local. */
   def applyQualityModel(df: DataFrame, m: QualityModelSpec): DataFrame =
     scoreLinearModel(df, m.idColumn, m.textColumn, m.weightsE6, m.biasE6,
       m.nBuckets)

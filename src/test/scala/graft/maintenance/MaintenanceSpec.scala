@@ -24,26 +24,4 @@ class MaintenanceSpec extends SparkSpec {
     (the[UnsupportedOperationException] thrownBy
       Maintenance.removeOrphans("/x", 72)).getMessage should include("Iceberg")
   }
-
-  test("pruneBatchPartitions keeps the numerically-newest batches and foreign files") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
-    // batches 0..11 — a string sort would rank batch_id=9 above =10/=11
-    (0L to 11L).foreach { b =>
-      Seq((b, "x")).toDF("v", "s").write.mode("overwrite")
-        .parquet(s"$dir/batch_id=$b")
-    }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "README.txt"), "not a partition")
-    val stats = Maintenance.pruneBatchPartitions(spark, dir, keepLast = 3)
-    stats.batchesBefore shouldBe 12L
-    stats.batchesDeleted shouldBe 9L
-    stats.bytesDeleted should be > 0L
-    new java.io.File(dir).list().sorted.toSeq shouldBe
-      Seq("README.txt", "batch_id=10", "batch_id=11", "batch_id=9")
-    // idempotent: nothing left to delete at the same retention
-    Maintenance.pruneBatchPartitions(spark, dir, 3).batchesDeleted shouldBe 0L
-    an[IllegalArgumentException] should be thrownBy
-      Maintenance.pruneBatchPartitions(spark, dir, 0)
-  }
 }

@@ -102,6 +102,19 @@ class KmvQuantileSpec extends SparkSpec {
       x.getAs[Long]("wks_e6") shouldBe x.getAs[Long]("ks_e6"))
   }
 
+  test("sample and weighted KS reports: disjoint value ranges read D = 1") {
+    // every lo value sits below every hi value, so both ECDF gaps reach
+    // 1 at lo's maximum, in either weighting
+    val df = ((1 to 40).map(i => ("lo", s"a$i", (i % 20).toLong, 10L)) ++
+      (1 to 30).map(i => ("hi", s"b$i", 1000L + i % 20, 10L)))
+      .toDF("g", "id", "v", "m")
+    Kmv.sampleKsReport(df, "g", "id", "v", k = 64).head()
+      .getAs[Long]("ks_e6") shouldBe 1000000L
+    val w = Kmv.weightedSampleKsReport(df, "g", "id", "v", "m", k = 64).head()
+    w.getAs[Long]("wks_e6") shouldBe 1000000L
+    w.getAs[Long]("ks_e6") shouldBe 1000000L
+  }
+
   test("native weighted_ks ≡ the builtin-HOF twin on corpus pairs and edges") {
     import org.apache.spark.sql.functions.call_function
     // corpus pairs, SATURATED (k=16 < per-source docs) so the sweep

@@ -181,4 +181,60 @@ class OrchestratorSpec extends SparkSpec {
       cached.storageLevel shouldBe StorageLevel.MEMORY_ONLY
     } finally cached.unpersist()
   }
+
+  test("sketch-space gate families over one frame: hand-derived counts") {
+    // six sketch families from one YAML block, every sketch sized to hold
+    // its set whole so each count is derivable by hand
+    val cfg = ConfigLoader.parse(
+      """version: "1.0"
+        |pipeline:
+        |  name: sketch_gates
+        |quality:
+        |  ks_checks:
+        |    - {type_column: g, id_column: id, value_column: v,
+        |       k: 32, max_ks_e6: 400000}
+        |  growth_checks:
+        |    - {day_column: day, item_column: id, k: 64,
+        |       min_new_per_day: 3, warmup_days: 1}
+        |  containment_checks:
+        |    - {a_type_column: g, b_type_column: g, item_column: id,
+        |       k: 64, max_containment_e6: 500000}
+        |  quantile_checks:
+        |    - {group_by: [g], value_column: v, bin_width: 100,
+        |       q_e6: 500000, max_value: 500}
+        |  distinct_checks:
+        |    - {group_by: [g], item_column: id, k: 64, min_count: 12}
+        |  overlap_checks:
+        |    - {type_column: g, item_column: id, k: 64,
+        |       max_jaccard_e6: 300000}
+        |""".stripMargin)
+    // a and b share a value multiset (D = 0); c's values are disjoint
+    // (D = 1.0 vs both). In id space a is 8/10 inside c (containment
+    // 800000 fails the 500000 cap); every other ordered pair is low.
+    // Day curve: d10 bootstrap, d11 +10 new, d12 +1, d13 silent, d14 +2
+    // → 3 growth failures past the 1-day warmup at floor 3. Group z has
+    // only null ids: its empty sketch estimates 0.
+    val df = ((1 to 8).map(i => ("a", s"u$i", (i % 5).toLong, 10L)) ++
+      Seq(("a", "ax1", 3L, 10L), ("a", "ax2", 4L, 10L)) ++
+      (1 to 8).map(i => ("b", s"b$i", (i % 5).toLong, 10L)) ++
+      Seq(("b", "bx1", 3L, 10L), ("b", "bx2", 4L, 10L)) ++
+      (1 to 8).map(i => ("c", s"u$i", 1000L + i, 10L)) ++
+      (1 to 2).map(j => ("c", s"c$j", 1008L + j, 10L)) ++
+      (3 to 12).map(j => ("c", s"c$j", 1008L + j, 11L)) ++
+      Seq(("c", "c13", 1021L, 12L), ("a", "u1", 1L, 12L),
+        ("c", "c14", 1022L, 14L), ("c", "c15", 1023L, 14L),
+        ("z", null.asInstanceOf[String], 5L, 14L)))
+      .toDF("g", "id", "v", "day")
+    val counts = Orchestrator.run(df, cfg.quality).checkResults
+      .filter(_.check.matches("(ks|growth|containment|quantile|distinct|overlap)_check"))
+      .map(r => r.check -> r.failedCount)
+    counts.toMap shouldBe Map(
+      "ks_check" -> 2L,          // (a, c) and (b, c)
+      "growth_check" -> 3L,      // d12 +1, silent d13, d14 +2
+      "containment_check" -> 1L, // a inside c
+      "quantile_check" -> 1L,    // c's median bin starts at 1000 > 500
+      "distinct_check" -> 3L,    // a 10, b 10, z 0 under 12; c 23 passes
+      "overlap_check" -> 1L)     // (a, c) jaccard 8/25 = 320000
+    counts should have size 6
+  }
 }

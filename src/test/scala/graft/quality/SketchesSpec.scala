@@ -56,25 +56,14 @@ class SketchesSpec extends SparkSpec {
     err.getMessage.toLowerCase should include("lgconfigk")
   }
 
-  test("topK sketches: merged per-part ≡ one-shot; frequencyAudit exact in no-purge mode incl. boundary ties") {
+  test("frequencyAudit exact in no-purge mode incl. boundary ties") {
     // 4 items with counts 5,5,3,1 in group g0 — a tie ACROSS the k=1
     // boundary, the case where the sketch's own top-1 pick is
     // engine-local but the audit's deep probe stays deterministic
     val rows = Seq.fill(5)(("g0", 10L)) ++ Seq.fill(5)(("g0", 11L)) ++
       Seq.fill(3)(("g0", 12L)) ++ Seq(("g0", 13L)) ++
       Seq.fill(4)(("g1", 20L))
-    val df = rows.toDF("grp", "item").withColumn("part", col("item") % 2)
-    val perPart = Sketches.topKSketches(df, Seq("grp", "part"), "item")
-    val merged = Sketches.mergeTopKSketches(perPart, Seq("grp"))
-      .select(col("grp"),
-        explode(Sketches.topKEstimate(col("topk_state"), 10)).as("e"))
-      .select(col("grp"), col("e.item").as("item"), col("e.count").as("est"))
-    val oneShot = Sketches.topKSketches(df, Seq("grp"), "item")
-      .select(col("grp"),
-        explode(Sketches.topKEstimate(col("topk_state"), 10)).as("e"))
-      .select(col("grp"), col("e.item").as("item"), col("e.count").as("est"))
-    merged.orderBy("grp", "item").collect().toSeq shouldBe
-      oneShot.orderBy("grp", "item").collect().toSeq
+    val df = rows.toDF("grp", "item")
     val audit = Sketches.frequencyAudit(df, Seq("grp"), "item", k = 2)
       .orderBy("grp", "rnk").collect()
     // exact ranking is total: (cnt DESC, item) → 10 then 11 in g0
@@ -83,25 +72,6 @@ class SketchesSpec extends SparkSpec {
       ("g0", 1L, 10L, 5L), ("g0", 2L, 11L, 5L),
       ("g1", 1L, 20L, 4L))
     all(audit.map(_.getAs[Boolean]("est_exact"))) shouldBe true
-  }
-
-  test("topK sketch state survives a parquet round-trip (the persisted-batch loop)") {
-    val df = (0 until 300).map(i => (i.toLong % 5, i.toLong % 23))
-      .toDF("grp", "item")
-    val dir = java.nio.file.Files.createTempDirectory("topk").toString
-    Sketches.topKSketches(df, Seq("grp"), "item")
-      .write.mode("overwrite").parquet(dir)
-    val merged = Sketches.mergeTopKSketches(
-      spark.read.parquet(dir), Seq("grp"))
-      .select(col("grp"),
-        explode(Sketches.topKEstimate(col("topk_state"), 30)).as("e"))
-      .select(col("grp"), col("e.item").as("item"), col("e.count").as("est"))
-    val direct = Sketches.topKSketches(df, Seq("grp"), "item")
-      .select(col("grp"),
-        explode(Sketches.topKEstimate(col("topk_state"), 30)).as("e"))
-      .select(col("grp"), col("e.item").as("item"), col("e.count").as("est"))
-    merged.orderBy("grp", "item").collect().toSeq shouldBe
-      direct.orderBy("grp", "item").collect().toSeq
   }
 
   test("audienceOverlap: exact pair counts/Jaccard, estimates inside the gate") {
