@@ -70,7 +70,7 @@ object ScaleSmoke {
     // (explode ×(len+1) + keyed self-join — the blocking claim measured),
     // the skyline staircase (per-x reduce + value-domain window), and the
     // global-sort ntile profile (the documented single-partition window —
-    // its cost curve is exactly what equiDepthProfileByBounds avoids)
+    // its cost curve is exactly what quantile-boundary bucketing avoids)
     "q157_fuzzy_names", "q155_pareto_docs", "q158_decile_profile",
     // fourth-tranche r13 additions: the graph family over the basket
     // edges (oriented wedges, 5-round integer PageRank, 8-round 3-core

@@ -1,13 +1,13 @@
 package graft.bronze
 
-import graft.config.ConfigLoader.{BronzeSpec, SourceSpec}
+import graft.config.ConfigLoader.SourceSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S1-S7 — the bronze ingestion surface
   * (reference: bronze/ingestors/ingest_to_iceberg.py:239-515):
   * source resolution, all-null column drop, ingestion-metadata columns,
-  * partition-column injection, partitioned append/overwrite sink.
+  * partitioned append/overwrite sink.
   *
   * Intentional non-goal (SURVEY §2.1 S7): the reference's 50k-row chunked
   * writes exist because pandas holds the table in one process; Spark's
@@ -22,9 +22,7 @@ object Ingest {
 
   /** Resolve a source to a DataFrame. http/file parquet+csv are supported;
     * the rest raise exactly like the reference (ingest_to_iceberg.py:300-308
-    * raises NotImplementedError for s3/postgres/api). URL patterns like
-    * `{base}/yellow_tripdata_{year}-{month:02d}.parquet` are rendered by
-    * `renderPattern` before calling this. */
+    * raises NotImplementedError for s3/postgres/api). */
   def readSource(spark: SparkSession, source: SourceSpec): DataFrame =
     source.sourceType match {
       case "http" | "file" =>
@@ -48,14 +46,6 @@ object Ingest {
           s"source type '$other' is declared but not implemented (reference parity)")
     }
 
-  /** `{year}` / `{month:02d}` URL templating
-    * (ingest_to_iceberg.py:251-258, config lakehouse_config.yaml:31-33). */
-  def renderPattern(pattern: String, year: Int, month: Int): String =
-    pattern
-      .replace("{year}", year.toString)
-      .replace("{month:02d}", f"$month%02d")
-      .replace("{month}", month.toString)
-
   /** S3 — drop columns whose values are 100% NULL, in ONE pass (the Arrow
     * null-type workaround, ingest_to_iceberg.py:276-279). */
   def dropAllNullColumns(df: DataFrame): DataFrame = {
@@ -75,88 +65,11 @@ object Ingest {
     df.withColumn("_ingestion_timestamp", current_timestamp())
       .withColumn("_source_file", lit(sourceFile))
 
-  /** S5 — literal partition columns (ingest_to_iceberg.py:287-290). */
-  def withPartitionColumns(df: DataFrame, year: Int, month: Int): DataFrame =
-    df.withColumn("year", lit(year)).withColumn("month", lit(month))
-
   /** S6/S9 — partitioned parquet sink, append/overwrite. */
   def write(df: DataFrame, path: String, mode: String,
       partitionBy: Seq[String]): Unit = {
     require(mode == "append" || mode == "overwrite", s"bad write mode: $mode")
     val w = df.write.mode(mode)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  /** S7 — append/overwrite sink with bounded write units. The reference
-    * chunks ≥50k-row frames into fixed-size appends to bound single-process
-    * memory and pins one master schema across chunks
-    * (ingest_to_iceberg.py:451-515). Under Spark the memory bound is per
-    * EXECUTOR TASK, so the idiomatic equivalent is `maxRecordsPerFile` —
-    * every output file is capped at `chunkRows` regardless of partition
-    * sizes (a task writing more rolls over to a new file); schema
-    * consistency is free (one plan, one schema — chunked pandas inference
-    * drift can't happen). One distributed job, one commit, no driver loop. */
-  def writeChunked(df: DataFrame, path: String, mode: String,
-      chunkRows: Long = 50000L, partitionBy: Seq[String] = Nil): Unit = {
-    require(mode == "append" || mode == "overwrite", s"bad write mode: $mode")
-    require(chunkRows > 0, s"chunkRows must be positive: $chunkRows")
-    val w = df.write.mode(mode).option("maxRecordsPerFile", chunkRows)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  /** S12 — JDBC sink passthrough (reference legacy path: pandas `to_sql`
-    * into Postgres with `if_exists`, src/config_loader.py:86-93 and
-    * config.examples/legacy_postgres_ingestion.yaml:27-42). The pandas
-    * `if_exists` vocabulary maps onto Spark save modes; `options` passes
-    * driver/batchsize/isolation through to the JDBC writer. Unlike the
-    * reference's single-process chunked write, executors write partitions
-    * concurrently — `numPartitions` in options caps connection count. */
-  def writeJdbc(df: DataFrame, url: String, table: String,
-      ifExists: String = "fail",
-      options: Map[String, String] = Map.empty): Unit = {
-    val mode = ifExists match {
-      case "append" => "append"
-      case "replace" => "overwrite"
-      case "fail" => "errorifexists"
-      case other =>
-        throw new IllegalArgumentException(
-          s"if_exists must be append|replace|fail, got '$other'")
-    }
-    df.write.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .options(options).mode(mode).save()
-  }
-
-  /** JDBC source passthrough — the read side of the legacy path. Pass
-    * `partitionColumn`/`lowerBound`/`upperBound`/`numPartitions` in options
-    * for a parallel read; without them the scan is a single task. */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-      options: Map[String, String] = Map.empty): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .options(options).load()
-
-  /** SET2 — multi-month batch ingest: months concatenate via unionByName
-    * (the reference appends each month separately, src/config_loader.py:
-    * 114-133; a single unioned write gives one job and one commit). */
-  def readMonths(spark: SparkSession, spec: BronzeSpec,
-      months: Seq[(Int, Int)]): DataFrame = {
-    require(months.nonEmpty, "at least one (year, month)")
-    months.map { case (y, m) =>
-      withPartitionColumns(
-        readSource(spark, spec.source.copy(
-          path = renderPattern(spec.source.path, y, m))), y, m)
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Full bronze ingest for one (year, month) batch. */
-  def ingest(spark: SparkSession, spec: BronzeSpec, year: Int, month: Int): DataFrame = {
-    val path = renderPattern(spec.source.path, year, month)
-    var df = readSource(spark, spec.source.copy(path = path))
-    if (spec.dropAllNullColumns) df = dropAllNullColumns(df)
-    if (spec.addIngestionMetadata) df = withIngestionMetadata(df, path)
-    if (spec.partitionBy.contains("year")) df = withPartitionColumns(df, year, month)
-    write(df, spec.targetPath, spec.mode, spec.partitionBy)
-    df
   }
 }

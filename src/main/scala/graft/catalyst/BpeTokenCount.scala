@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `bpe_token_count(text)` — the number of BPE-style pre-tokenization
-  * matches of `TextAnalysis.bpePattern`
+  * matches of the pattern
   * (`'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+`)
   * as ONE compiled character scan, replacing `regexp_count` on the hot
   * token-budgeting path (q48): the alternation is regular enough that a

@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * duplicate an earlier n-gram, in micro-units: the Gopher/MassiveText
   * repetition signal, one compiled pass per row.
   *
-  * Exactly equivalent to the builtin-HOF form
-  * (`TextAnalysis.repetitionProfileBuiltin`): tokens = `split(trim(text),
+  * Exactly equivalent to the builtin-HOF form (the spec's
+  * `repetitionProfileBuiltin`): tokens = `split(trim(text),
   * ' ')` semantics (single-space separator, empty tokens preserved, trim
   * strips ' ' only, empty trimmed text → one empty token), grams joined with
   * a single space, `round((1 - distinct/total) * 1e6)` as a long, and 0 when

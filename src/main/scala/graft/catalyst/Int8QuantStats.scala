@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * struct(scale, code_sum, code_min, code_max, max_err) where max_err =
   * max|x_i − code_i·scale|.
   *
-  * Why a custom Expression: the composable form
-  * (`Similarity.quantizeInt8` + array aggregates) traverses the vector ~6
+  * Why a custom Expression: the composable form (a HOF quantize +
+  * array aggregates, kept as the spec's reference) traverses the vector ~6
   * times through interpreted higher-order lambdas — it dominated the bench
   * query the moment it shipped. Same math, same floor(x+0.5) half-way
   * rule, spec-asserted equal to the builtin form. Empty/null → null. */

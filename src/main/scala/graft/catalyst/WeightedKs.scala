@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * sort-merge sweep, returning
   * `struct<k_a, k_b, mass_a, mass_b, wks_e6, ks_e6>`.
   *
-  * Replaces the interpreted HOF chain (`Kmv.
-  * weightedKsFromSamplePairsBuiltin`, kept as the spec twin): that form
+  * Replaces the interpreted HOF chain (`weightedKsFromSamplePairsBuiltin`,
+  * kept as the spec twin): that form
   * evaluates `jumps × (filter + aggregate)` lambdas per pair — ~130k
   * interpreted closure calls per k=128 pair, ~50M for a 20-type corpus
   * (190 pairs × 2 statistics) — where this sweep is two O(k log k)

@@ -45,18 +45,6 @@ object ConfigLoader {
       features: Option[FeaturesSpec] = None,
       layout: Option[LayoutSpec] = None)
 
-  /** §1.5 — one entry of the multi-dataset registry
-    * (config/datasets/datasets.yaml:6-76: per-dataset source, target,
-    * priority, criticality, schedule; disabled datasets are skipped). */
-  final case class DatasetSpec(
-      name: String,
-      enabled: Boolean,
-      sourcePath: String,
-      format: String,
-      targetTable: String,
-      priority: Int,
-      frequency: String)
-
   val allowedSourceTypes: Set[String] =
     Set("http", "file", "s3", "postgres", "mysql", "api", "kafka")
 
@@ -114,43 +102,6 @@ object ConfigLoader {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
     parse(read(path), overlayPath.map(read))
   }
-
-  /** Parse a dataset-registry YAML (`datasets:` list + optional
-    * `environments.<env>` defaults deep-merged under each dataset —
-    * datasets.yaml:79-91). Returns enabled datasets by priority. */
-  def parseDatasets(yaml: String, environment: Option[String] = None,
-      env: Map[String, String] = sys.env): Seq[DatasetSpec] = {
-    val y = new Yaml()
-    val root = asMap(y.load[Any](expandVars(yaml, env)), "<root>")
-    val envDefaults: Map[String, Any] = (for {
-      e <- environment
-      envs <- root.get("environments")
-      m = asMap(envs, "environments")
-      d <- m.get(e)
-    } yield asMap(d, s"environments.$e")).getOrElse(Map.empty)
-    asList(root.getOrElse("datasets", null)).map { d =>
-      val base = asMap(d, "datasets[]")
-      val dm = base ++ envDefaults.filterNot { case (k, _) => base.contains(k) }
-      DatasetSpec(
-        name = str(dm, "name", "datasets[]"),
-        enabled = dm.get("enabled").forall(_.asInstanceOf[Boolean]),
-        sourcePath = str(dm, "source_path", s"dataset ${dm.getOrElse("name", "?")}"),
-        format = optStr(dm, "format").getOrElse("parquet"),
-        targetTable = str(dm, "target_table", s"dataset ${dm.getOrElse("name", "?")}"),
-        priority = dm.get("priority").map(_.toString.toInt).getOrElse(100),
-        frequency = optStr(dm, "frequency").getOrElse("monthly"))
-    }.filter(_.enabled).sortBy(_.priority)
-  }
-
-  /** Apply a dataset's overrides onto the master config — the reference's
-    * dataset-override rewrite (ingest_to_iceberg.py:72-134): the bronze
-    * source path/format and target are replaced, everything else kept. */
-  def applyDataset(config: PipelineConfig, ds: DatasetSpec): PipelineConfig =
-    config.copy(
-      name = ds.name,
-      bronze = config.bronze.map(b => b.copy(
-        source = b.source.copy(path = ds.sourcePath, format = ds.format),
-        targetPath = s"${b.targetPath}/${ds.targetTable}")))
 
   // ---- tree → case classes ---------------------------------------------
 
@@ -796,7 +747,6 @@ object ConfigLoader {
         adaptiveExecution = pm.get("adaptive_execution").map(_.asInstanceOf[Boolean]),
         broadcastThresholdMb = pm.get("broadcast_threshold_mb").map(_.toString.toInt),
         costBasedOptimization = pm.get("cost_based_optimization").map(_.asInstanceOf[Boolean]),
-        collectHistograms = pm.get("collect_histograms").exists(_.asInstanceOf[Boolean]),
         cacheLevel = optStr(pm, "cache_level").getOrElse("MEMORY_AND_DISK")),
         pm.get("cache_after_transform").exists(_.asInstanceOf[Boolean]))
     }.getOrElse((PerformanceSpec(), false))

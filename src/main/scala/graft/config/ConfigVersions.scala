@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 
 /** Config versioning + migration
   * (reference: src/config_version_manager.py:15-171): supported-version
-  * registry, needs-migration check (semver compare), a migration-function
-  * registry keyed `"<from>_to_<to>"`, and the reference's fallback — when no
-  * migration function is registered, bump the version field only (a
-  * backward-compatible change) with a warning.
+  * registry, a migration-function registry keyed `"<from>_to_<to>"`, and
+  * the reference's fallback — when no migration function is registered,
+  * bump the version field only (a backward-compatible change) with a
+  * warning.
   *
   * Operates on the RAW parsed YAML tree (the same snakeyaml maps
   * `ConfigLoader` consumes), so migrations can reshape keys before the
@@ -36,25 +36,6 @@ object ConfigVersions {
 
   def isSupported(v: String): Boolean = supportedVersions.contains(v)
 
-  def isCurrent(v: String): Boolean = v == currentVersion
-
-  /** Lenient numeric parse of `v<major>.<minor>` for ordering. */
-  private[config] def parseVersion(v: String): (Int, Int) = {
-    val parts = v.stripPrefix("v").split("\\.", -1)
-    def num(s: String) = s.takeWhile(_.isDigit) match {
-      case "" => 0
-      case d => d.toInt
-    }
-    (num(parts.headOption.getOrElse("0")), num(parts.lift(1).getOrElse("0")))
-  }
-
-  /** Supported AND older than current (config_version_manager.py:66-77):
-    * unsupported versions return false — they can't be migrated at all. */
-  def needsMigration(v: String): Boolean = {
-    implicit val ord: Ordering[(Int, Int)] = Ordering.Tuple2(Ordering.Int, Ordering.Int)
-    isSupported(v) && ord.lt(parseVersion(v), parseVersion(currentVersion))
-  }
-
   /** Migrate a config tree to `target` (default current). Same version →
     * unchanged; unsupported source or target → error; registered migration
     * runs, otherwise only the version field updates (the reference's
@@ -76,20 +57,6 @@ object ConfigVersions {
         log.warn(s"no migration function for $key, updating version only")
         tree.updated("version", target)
     }
-  }
-
-  /** (isCompatible, message) — config_version_manager.py:139-163. */
-  def validateCompatibility(tree: Map[String, Any]): (Boolean, String) = {
-    val v = versionOf(tree)
-    if (!isSupported(v))
-      (false, s"Unsupported configuration version: $v. " +
-        s"Supported versions: ${supportedVersions.mkString(", ")}")
-    else if (needsMigration(v))
-      (true, s"Configuration can be migrated from $v to $currentVersion")
-    else if (isCurrent(v))
-      (true, s"Configuration is at current version: $v")
-    else
-      (true, s"Configuration version $v is compatible")
   }
 
   /** Java-map tree (as snakeyaml loads it) → scala map, one level. */

@@ -144,8 +144,8 @@ final case class QuantileCheck(groupBy: Seq[String], valueColumn: String,
     maxValue: Option[Long] = None)
 
 /** Approximate unique-count-between contract (the scale form of the
-  * exact unique-count check, Checks.uniqueCountBetween, which pays a
-  * full countDistinct shuffle): failedCount = groups whose KMV-sketch
+  * exact `unique_count_between` expectation, which pays a full
+  * countDistinct shuffle): failedCount = groups whose KMV-sketch
   * distinct ESTIMATE (quality.Kmv — replayable md5 bottom-k, ≤ `k`
   * longs of state per group) falls outside [minCount, maxCount].
   * Bounds are on the estimate, whose relative error is ~1/√k — size

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's `performance:` config block translated to Spark session
-  * confs + caching + statistics — the engine's whole "optimizer surface"
+  * confs + caching — the engine's whole "optimizer surface"
   * (SURVEY §4): everything else (pushdown, pruning, join selection, AQE
   * re-planning, codegen) is Catalyst's job and is deliberately NOT
   * reimplemented.
@@ -14,7 +14,6 @@ import org.apache.spark.storage.StorageLevel
   *  - adaptive_execution: true     → spark.sql.adaptive.enabled     (:170,340-342)
   *  - broadcast_threshold_mb: 100  → spark.sql.autoBroadcastJoinThreshold (:172,346)
   *  - cost_based_optimization      → spark.sql.cbo.enabled          (:357-364)
-  *  - collect_column_stats/histograms → ANALYZE TABLE ... FOR COLUMNS
   *  - cache_after_read/transform + cache_level MEMORY|MEMORY_AND_DISK
   *    (:163-166,349-355; bronze_to_silver.py:223-241)
   */
@@ -23,7 +22,6 @@ final case class PerformanceSpec(
     adaptiveExecution: Option[Boolean] = None,
     broadcastThresholdMb: Option[Int] = None,
     costBasedOptimization: Option[Boolean] = None,
-    collectHistograms: Boolean = false,
     cacheLevel: String = "MEMORY_AND_DISK")
 
 object PerfConf {
@@ -57,18 +55,5 @@ object PerfConf {
   def cacheEager(df: DataFrame, spec: PerformanceSpec): Long = {
     df.persist(storageLevel(spec.cacheLevel))
     df.count()
-  }
-
-  /** Statistics collection for CBO (`collect_statistics`,
-    * lakehouse_config.yaml:79,173): ANALYZE a registered table, optionally
-    * per-column (histograms need the conf flag at analysis time). */
-  def analyzeTable(spark: SparkSession, table: String,
-      columns: Seq[String] = Nil, spec: PerformanceSpec = PerformanceSpec()): Unit = {
-    if (spec.collectHistograms)
-      spark.conf.set("spark.sql.statistics.histogram.enabled", "true")
-    if (columns.isEmpty)
-      spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
-    else
-      spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS FOR COLUMNS ${columns.mkString(", ")}")
   }
 }

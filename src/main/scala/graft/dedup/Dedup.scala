@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,35 +21,7 @@ import org.apache.spark.sql.functions._
   *  - Jaccard self-join explodes distinct shingles; frequency-capping drops
   *    stop-shingles that would otherwise produce O(df²) candidate pairs.
   */
-/** The MinHash signing parameters a persisted fuzzy-dedup corpus state was
-  * built with. Band buckets only collide for arrivals signed with the SAME
-  * (shingleN, numHashes, numBands) — a mismatch yields near-zero collisions
-  * and silently misses near-duplicates, so the parameters travel with the
-  * state as table properties instead of being re-supplied from memory. */
-final case class FuzzySigningParams(
-    shingleN: Int,
-    numHashes: Int,
-    numBands: Int,
-    maxBucketSize: Int)
-
 object Dedup {
-
-  /** n-gram shingles over whitespace tokens, distinct, order-preserving
-    * construction (slice windows). n=1 → token set. */
-  def shingles(c: Column, n: Int): Column = {
-    require(n >= 1, "shingle size must be >= 1")
-    val toks = TextAnalysis.tokens(c)
-    if (n == 1) array_distinct(toks)
-    else
-      // guard: sequence(1, x) DESCENDS for x<1 (it never returns empty), so
-      // docs shorter than n shingle to [] explicitly.
-      array_distinct(
-        when(size(toks) >= n,
-          transform(
-            sequence(lit(1), size(toks) - lit(n - 1)),
-            i => concat_ws(" ", slice(toks, i, lit(n)))))
-          .otherwise(typedLit(Seq.empty[String])))
-  }
 
   /** Exact duplicate groups: fingerprint → count>1 (hash-groupBy dedup). */
   def exactDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -180,14 +152,13 @@ object Dedup {
     * agreeing on no band slips through); every DROP is exact-verified.
     *
     * Scale shape: one signature pass per side, the candidate join keyed on
-    * (band, bucket) — linear shuffles in |batch| + |corpus|. This
-    * convenience form derives the corpus state per call, which evaluates
-    * the corpus text scan twice (band pass + verification-set pass) and
-    * repeats both on every call — for continuous ingest build the state
-    * ONCE with [[corpusFuzzyState]], materialize it durably, and call
-    * [[fuzzyDedupePrepared]] per batch. The batch side's own two passes
-    * are over the arriving batch only. `maxBucketSize` caps corpus-side bucket membership
-    * (boilerplate guard) before the candidate explosion. */
+    * (band, bucket) — linear shuffles in |batch| + |corpus|. The corpus
+    * state is derived per call: the capped LSH band buckets
+    * `(band_idx, bucket, ids)` and the shingle-hash verification sets
+    * `(corpus_id, _sh_c)`, which evaluates the corpus text scan twice (band
+    * pass + verification-set pass). The batch side's own two passes are
+    * over the arriving batch only. `maxBucketSize` caps corpus-side bucket
+    * membership (boilerplate guard) before the candidate explosion. */
   def fuzzyDedupeAgainstCorpus(
       newDf: DataFrame,
       corpus: DataFrame,
@@ -198,133 +169,15 @@ object Dedup {
       numHashes: Int = 8,
       numBands: Int = 4,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val (buckets, sets) = corpusFuzzyState(corpus, idCol, textCol, shingleN,
-      numHashes, numBands, maxBucketSize)
-    fuzzyDedupePrepared(newDf, buckets, sets, idCol, textCol, shingleN,
-      threshold, numHashes, numBands)
-  }
-
-  /** Corpus-side state for [[fuzzyDedupePrepared]]: the capped LSH band
-    * buckets `(band_idx, bucket, ids)` and the shingle-hash verification
-    * sets `(corpus_id, _sh_c)`. The historical corpus is static across an
-    * ingest run, so build this once, materialize both frames, and reuse
-    * them for every arriving batch — the corpus text is then scanned once
-    * per RUN instead of twice per BATCH. For a bounded job a replicated
-    * `persist` suffices; for a long-running ingest write them to durable
-    * storage and re-read ([[persistCorpusFuzzyState]] — a
-    * localCheckpoint's executor-resident blocks have truncated lineage, so
-    * one executor loss would fail every later batch). */
-  def corpusFuzzyState(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      numHashes: Int = 8,
-      numBands: Int = 4,
-      maxBucketSize: Int = Int.MaxValue): (DataFrame, DataFrame) = {
     val buckets = minhashBands(corpus, idCol, textCol, numHashes, numBands,
         shingleN)
       .groupBy("band_idx", "bucket")
       .agg(collect_list(col("doc_id")).as("ids"))
-    val capped =
+    val corpusBuckets =
       if (maxBucketSize == Int.MaxValue) buckets
       else buckets.filter(size(col("ids")) <= maxBucketSize)
-    val sets = corpus.select(col(idCol).as("corpus_id"),
+    val corpusSets = corpus.select(col(idCol).as("corpus_id"),
       call_function("shingle_hashes", col(textCol), lit(shingleN)).as("_sh_c"))
-    (capped, sets)
-  }
-
-  /** [[corpusFuzzyState]] persisted DURABLY as bucketed catalog tables —
-    * the batch re-ingest story: the band buckets land bucketed by their
-    * join keys `(band_idx, bucket)` and the verification sets by
-    * `corpus_id`, so every later [[fuzzyDedupePrepared]] call plans its
-    * corpus-side joins WITHOUT an Exchange (the shuffle was paid once at
-    * this write; only the arriving batch shuffles, into the corpus's
-    * bucket layout). At 100 TB the corpus state dwarfs every batch —
-    * re-shuffling it per ingest run would be the dominant cost, and a
-    * cached/checkpointed copy dies with the app; a bucketed table
-    * survives restarts AND carries its partitioning into the plan. */
-  def persistCorpusFuzzyState(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      tablePrefix: String,
-      buckets: Int,
-      numHashes: Int = 8,
-      numBands: Int = 4,
-      maxBucketSize: Int = Int.MaxValue): Unit = {
-    val (b, s) = corpusFuzzyState(corpus, idCol, textCol, shingleN,
-      numHashes, numBands, maxBucketSize)
-    graft.ops.Scale.writeBucketed(b, s"${tablePrefix}_buckets", buckets,
-      Seq("band_idx", "bucket"))
-    graft.ops.Scale.writeBucketed(s, s"${tablePrefix}_sets", buckets,
-      Seq("corpus_id"))
-    // The signing parameters ARE part of the state: a later ingest that
-    // re-signs arrivals with different numHashes/numBands/shingleN gets
-    // near-zero band collisions against these buckets and silently misses
-    // near-duplicates. Stamp them on the table so the read side can hand
-    // them back (or fail loudly) instead of trusting the caller to agree.
-    corpus.sparkSession.sql(
-      s"ALTER TABLE ${tablePrefix}_buckets SET TBLPROPERTIES (" +
-        s"'graft.fuzzy.shingle_n'='$shingleN'," +
-        s"'graft.fuzzy.num_hashes'='$numHashes'," +
-        s"'graft.fuzzy.num_bands'='$numBands'," +
-        s"'graft.fuzzy.max_bucket_size'='$maxBucketSize')")
-  }
-
-  /** The read side of [[persistCorpusFuzzyState]]: catalog-backed frames
-    * whose bucket layout feeds [[fuzzyDedupePrepared]] shuffle-free on the
-    * corpus side, PLUS the signing parameters the state was built with —
-    * sign arrivals with exactly these (or call
-    * [[fuzzyDedupeAgainstPersisted]], which cannot disagree). Fails loudly
-    * on state missing the parameter stamp (persisted by hand or by a
-    * pre-stamp version) rather than letting a silent parameter mismatch
-    * turn the dedup into a no-op. */
-  def loadCorpusFuzzyState(spark: SparkSession,
-      tablePrefix: String): (DataFrame, DataFrame, FuzzySigningParams) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${tablePrefix}_buckets")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    def p(key: String): Int = props.getOrElse(s"graft.fuzzy.$key",
-      throw new IllegalStateException(
-        s"${tablePrefix}_buckets lacks table property graft.fuzzy.$key — " +
-          "this corpus state predates parameter stamping (or was written " +
-          "by hand); re-run persistCorpusFuzzyState so later ingests " +
-          "cannot silently sign with mismatched parameters")).toInt
-    val params = FuzzySigningParams(p("shingle_n"), p("num_hashes"),
-      p("num_bands"), p("max_bucket_size"))
-    (spark.table(s"${tablePrefix}_buckets"),
-      spark.table(s"${tablePrefix}_sets"), params)
-  }
-
-  /** [[fuzzyDedupePrepared]] against a persisted corpus state, signing the
-    * arriving batch with the parameters STORED alongside that state — the
-    * misconfiguration-proof continuous-ingest entry point. */
-  def fuzzyDedupeAgainstPersisted(
-      newDf: DataFrame,
-      spark: SparkSession,
-      tablePrefix: String,
-      idCol: String,
-      textCol: String,
-      threshold: Double): DataFrame = {
-    val (cb, cs, p) = loadCorpusFuzzyState(spark, tablePrefix)
-    fuzzyDedupePrepared(newDf, cb, cs, idCol, textCol, p.shingleN, threshold,
-      p.numHashes, p.numBands)
-  }
-
-  /** [[fuzzyDedupeAgainstCorpus]] against precomputed corpus state from
-    * [[corpusFuzzyState]] — the continuous-ingest form: only the arriving
-    * batch is signed/shingled here. */
-  def fuzzyDedupePrepared(
-      newDf: DataFrame,
-      corpusBuckets: DataFrame,
-      corpusSets: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      threshold: Double,
-      numHashes: Int = 8,
-      numBands: Int = 4): DataFrame = {
     val newBands = minhashBands(newDf, idCol, textCol, numHashes, numBands,
       shingleN)
     val cands = newBands.join(corpusBuckets, Seq("band_idx", "bucket"))
@@ -335,10 +188,7 @@ object Dedup {
     // docs with >= 1 shingle, so the union denominator is never 0. Both
     // sides sort ONCE per doc (below the join, so a corpus set appearing in
     // many candidate pairs sorts once) and pairs verify with the count-only
-    // sorted-merge kernel — no per-pair hash set / result array. The
-    // corpus-side sort is a projection on top of whatever state the caller
-    // passes (derived or persisted), so persisted pre-r22 state needs no
-    // rewrite and the bucket layout (keyed on corpus_id) is untouched.
+    // sorted-merge kernel — no per-pair hash set / result array.
     val newSets = newDf.select(col(idCol).as("new_id"),
       sort_array(call_function("shingle_hashes", col(textCol), lit(shingleN)))
         .as("_sh_n"))
@@ -356,20 +206,6 @@ object Dedup {
     newDf.join(dropped, Seq(idCol), "left_anti")
   }
 
-  /** Exact pairwise n-gram Jaccard over candidate pairs that share at least
-    * one shingle. Returns (id_a, id_b, inter, size_a, size_b, jaccard) with
-    * id_a < id_b. `maxShingleFreq` drops shingles appearing in more than
-    * that many docs before pairing (skew guard; pass Int.MaxValue for exact
-    * semantics on small corpora). */
-  /** Expand sorted per-bucket member lists into (a < b) pairs — the
-    * inverted-index pair-generation shape shared by Jaccard and LSH:
-    * ONE scan builds the index, ONE shuffle groups it, pairs explode inside
-    * each bucket. A self-join would recompute the (interpreted,
-    * non-exchange-reused) shingle/signature pass once per side.
-    *
-    * Two chained explodes (posexplode + slice + explode) rather than a
-    * nested `transform(...struct...)` lambda: explode/slice whole-stage-
-    * codegen, higher-order lambdas don't. */
   /** Per-group exact-duplicate IMPACT report — the dedup observability
     * row a curation dashboard tracks per source/language/batch: how many
     * docs the group contributes, how many exact dedup would REMOVE under
@@ -499,7 +335,7 @@ object Dedup {
       s"maxSpanFreq ($maxSpanFreq) must be >= minCopies ($minCopies)")
     val toks = TextAnalysis.tokens(col(textCol))
     // short docs are filtered BEFORE the window transform: sequence(1, x)
-    // descends for x < 1 (same guard as shingles())
+    // descends for x < 1
     val occ = df
       .select(col(idCol).as("_id"), toks.as("_toks"))
       .filter(size(col("_toks")) >= k)
@@ -573,6 +409,15 @@ object Dedup {
       .drop("_mlist")
   }
 
+  /** Expand sorted per-bucket member lists into (a < b) pairs — the
+    * inverted-index pair-generation shape shared by Jaccard and LSH:
+    * ONE scan builds the index, ONE shuffle groups it, pairs explode inside
+    * each bucket. A self-join would recompute the (interpreted,
+    * non-exchange-reused) shingle/signature pass once per side.
+    *
+    * Two chained explodes (posexplode + slice + explode) rather than a
+    * nested `transform(...struct...)` lambda: explode/slice whole-stage-
+    * codegen, higher-order lambdas don't. */
   private def bucketPairs(buckets: DataFrame, memberCol: String): DataFrame =
     buckets.select(col(memberCol).as("_ids"))
       .select(col("_ids"), posexplode(col("_ids")))
@@ -581,6 +426,11 @@ object Dedup {
       .select(col("id_a"),
         explode(slice(col("_ids"), col("_i") + lit(2), size(col("_ids")))).as("id_b"))
 
+  /** Exact pairwise n-gram Jaccard over candidate pairs that share at least
+    * one shingle. Returns (id_a, id_b, inter, size_a, size_b, jaccard) with
+    * id_a < id_b. `maxShingleFreq` drops shingles appearing in more than
+    * that many docs before pairing (skew guard; pass Int.MaxValue for exact
+    * semantics on small corpora). */
   def jaccardPairs(
       df: DataFrame,
       idCol: String,
@@ -646,30 +496,6 @@ object Dedup {
       .filter(greatest(col("containment_a_e6"), col("containment_b_e6"))
         >= thresholdE6)
       .drop("jaccard")
-
-  /** Universal-hash MinHash family: ONE 32-bit md5 base hash per shingle,
-    * then k cheap integer permutations h ↦ (aⱼ·h + bⱼ) mod p. This is the
-    * standard scheme (one expensive hash, k O(1) permutations) — 8× fewer
-    * md5 evaluations than hashing per seed, and pure integer math that every
-    * engine reproduces exactly. aⱼ < 2³⁰ and h < 2³² keep aⱼ·h+bⱼ < 2⁶²:
-    * no signed-64 overflow anywhere (DuckDB would error, Spark would wrap). */
-  private[dedup] val minhashP = graft.catalyst.MinHashFamily.P
-  private[dedup] val minhashA = graft.catalyst.MinHashFamily.A.toSeq
-
-  /** 32-bit base hash per shingle (first 8 md5 hex digits). */
-  def shingleBaseHashes(shingleArr: Column): Column =
-    transform(shingleArr,
-      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
-
-  /** One MinHash value over the base-hash array for permutation `seed` —
-    * the pure-builtin form (k interpreted HOF traversals); hot paths use
-    * the native `minhash_sigs` expression instead (withMinHash). Empty
-    * array → null (array_min), filtered by callers. */
-  def minHashValue(baseHashArr: Column, seed: Int): Column = {
-    require(seed < minhashA.length, s"at most ${minhashA.length} hash permutations")
-    array_min(transform(baseHashArr,
-      h => (lit(minhashA(seed)) * h + lit(seed.toLong)) % lit(minhashP)))
-  }
 
   /** MinHash signature columns mh0..mh{k-1} appended to df. Row-local, no
     * shuffle; empty shingle sets get null signatures (filtered upstream).
@@ -751,24 +577,6 @@ object Dedup {
   def tokenHashes(c: Column): Column =
     transform(TextAnalysis.tokens(c),
       t => conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
-
-  /** 32-bit SimHash from a token-hash ARRAY: per bit, sum ±1 over tokens,
-    * bit set iff the sum is positive. The hash array must be materialized
-    * once upstream — inlining tokenHashes here would run the md5 pass 32
-    * times (interpreted HOFs are not CSE'd); the 32 folds over longs are
-    * cheap. Near-dups = small hamming distance. */
-  def simHashFromHashes(hashArr: Column): Column = {
-    val bits = (0 until 32).map { b =>
-      val bitSum = aggregate(hashArr, lit(0L),
-        (acc, h) => acc + shiftright(h, b) % lit(2L) * lit(2L) - lit(1L))
-      when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Convenience single-expression simhash — fine on small data / tests;
-    * hot paths should materialize tokenHashes first (see simHashPairs). */
-  def simHash(c: Column): Column = simHashFromHashes(tokenHashes(c))
 
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -960,8 +768,7 @@ object Dedup {
     * verbatim token run of ≥ w+n−1 with any eval doc (the long-quote
     * leakage that actually moves benchmark numbers), at ~1/w the gram
     * surface of the full n-gram overlap scan. Returns
-    * (id, n_shared_fps, n_fps, shared_frac_e6) for FLAGGED docs only;
-    * [[removeContaminatedByRuns]] is the drop action.
+    * (id, n_shared_fps, n_fps, shared_frac_e6) for FLAGGED docs only.
     *
     * Scale shape: the eval fingerprint set is distinct'd and BROADCAST
     * (eval sets are tiny next to a training corpus), so the only shuffle
@@ -990,16 +797,6 @@ object Dedup {
         expr("n_shared_fps * 1000000L div n_fps"))
       .select("id", "n_shared_fps", "n_fps", "shared_frac_e6")
   }
-
-  /** The decontamination ACTION: drop every doc [[winnowContamination]]
-    * flags; docs too short to fingerprint are kept (nothing to match). */
-  def removeContaminatedByRuns(docs: DataFrame, idCol: String,
-      textCol: String, evalDf: DataFrame, evalTextCol: String,
-      n: Int, w: Int, minShared: Long = 1L): DataFrame =
-    docs.join(
-      winnowContamination(docs, idCol, textCol, evalDf, evalTextCol,
-        n, w, minShared).select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
 
   /** INCREMENTAL cluster maintenance: fold a batch of newly-discovered
     * near-dup pairs into an existing (id, label) clustering without
@@ -1195,20 +992,11 @@ object Dedup {
   }
 
   /** (id, sig) table of 32-bit simhashes via the native expression. */
-  private def simHashSigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[dedup] def simHashSigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.withColumn("_th", tokenHashes(col(textCol)))
       .select(col(idCol).as("id"),
         call_function("simhash32", col("_th")).as("sig"))
 
-  /** SimHash near-dup pairs: all (a < b) with hamming ≤ maxHamming, found by
-    * bit-BANDING (Manku et al., the standard simhash blocking trick) — never
-    * an all-pairs scan. The 32 signature bits split into maxHamming+1
-    * contiguous bands; by pigeonhole, two sigs within maxHamming differing
-    * bits must agree EXACTLY on at least one band, so bucketing each sig by
-    * its (band index, band bits) and pairing only within buckets finds every
-    * qualifying pair — identical output to the quadratic scan (spec-asserted),
-    * shuffle keyed on (band, bits) instead of a cartesian join. Sigs ride in
-    * the posting structs so the hamming filter needs no join-back. */
   /** Band-blocked hamming pairs over a (id, sig) table with `sigBits`-bit
     * signatures: maxHamming+1 contiguous bit bands, bucket-join on
     * (band index, band bits), exact hamming filter. The pigeonhole core
@@ -1239,6 +1027,15 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
+  /** SimHash near-dup pairs: all (a < b) with hamming ≤ maxHamming, found by
+    * bit-BANDING (Manku et al., the standard simhash blocking trick) — never
+    * an all-pairs scan. The 32 signature bits split into maxHamming+1
+    * contiguous bands; by pigeonhole, two sigs within maxHamming differing
+    * bits must agree EXACTLY on at least one band, so bucketing each sig by
+    * its (band index, band bits) and pairing only within buckets finds every
+    * qualifying pair — identical output to the quadratic scan (spec-asserted),
+    * shuffle keyed on (band, bits) instead of a cartesian join. Sigs ride in
+    * the posting structs so the hamming filter needs no join-back. */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame =
     bandedHammingPairs(simHashSigs(df, idCol, textCol), 32, maxHamming)
@@ -1254,22 +1051,5 @@ object Dedup {
         call_function("simhash64", col(textCol)).as("sig"))
       .filter(col("sig").isNotNull)
     bandedHammingPairs(sigs, 64, maxHamming)
-  }
-
-  /** The quadratic all-pairs form — the correctness baseline the banded path
-    * is spec-asserted against. Never use beyond test corpora. */
-  def simHashPairsBrute(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, bits: Int = 32): DataFrame = {
-    val sigs =
-      if (bits == 32) simHashSigs(df, idCol, textCol)
-      else df.select(col(idCol).as("id"),
-          call_function("simhash64", col(textCol)).as("sig"))
-        .filter(col("sig").isNotNull)
-    val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming(col("sig_a"), col("sig_b")).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
   }
 }

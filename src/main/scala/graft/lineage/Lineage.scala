@@ -151,11 +151,6 @@ object Lineage {
         .partitionBy("partition_day", "layer").parquet(path)
   }
 
-  /** SQL query surface over a persisted lineage table (lineage.py:498-551). */
-  def eventsFor(spark: SparkSession, path: String, table: String): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("source_table") === table || col("target_table") === table)
-
   /** L3 at DATASET scale: the full transitive-reachability pair set over a
     * lineage edge frame — `(node, upstream)` for every table `upstream`
     * that `node` transitively depends on. The Tracker's driver BFS answers

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * the same file, so min/max file statistics prune scans filtered on
   * either column (a plain sort on (x, y) prunes only x). No table-format
   * jar is needed for the core idea: the curve value is pure integer
-  * arithmetic, the rewrite is a range-repartition + within-partition sort,
-  * and parquet row-group stats do the skipping.
+  * arithmetic, and parquet row-group stats do the skipping.
   *
   * Everything here is exact integer bit algebra (shift/and/or — the
   * classic magic-mask bit spreading), fully codegen'd, and replayable in
@@ -44,21 +43,6 @@ object Layout {
           v.cast("string"))))
         .otherwise(v.cast("long"))
     spread(checked(x)).bitwiseOR(shiftleft(spread(checked(y)), 1))
-  }
-
-  /** Rewrite a frame into z-order: range-partition on the z-value of
-    * (xCol, yCol) into `numFiles` output slices, each sorted by z within
-    * — the exact shape `maxRecordsPerFile`-style sinks want. One range
-    * exchange (sampled bounds) + a local sort; no global sort, no window.
-    * Downstream parquet row-group min/max stats on BOTH xCol and yCol
-    * are then tight per file, which is the entire point. */
-  def zOrderBy(df: DataFrame, xCol: String, yCol: String,
-      numFiles: Int): DataFrame = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    df.withColumn("__z", zValue(col(xCol), col(yCol)))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
   }
 
   /** Locality report: rows grouped by their z-curve CELL (the z-value

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing for training-data pipelines: media payloads
   * travel as opaque `binary` columns with typed metadata; decode /
-  * feature-extract / resize / frame-sample run as typed `mapPartitions`
-  * stages (the JVM analogue of Pandas-UDF batch processing — one decoder
-  * context per partition, streaming iterator, no per-row setup).
+  * feature-extract run as typed `mapPartitions` stages (the JVM analogue
+  * of Pandas-UDF batch processing — one decoder context per partition,
+  * streaming iterator, no per-row setup).
   *
-  * IMAGES are REALLY decoded and resized via `javax.imageio` (PNG/JPEG/GIF/
-  * BMP ship with the JDK). AUDIO metadata is REALLY parsed via
+  * IMAGES are REALLY decoded via `javax.imageio` (PNG/JPEG/GIF/BMP ship
+  * with the JDK). AUDIO metadata is REALLY parsed via
   * `javax.sound.sampled` (WAV/AIFF/AU headers ship with the JDK — no codec
   * needed). VIDEO container metadata is REALLY parsed via a minimal
   * ISO-BMFF (MP4/MOV) box walk (`mp4Meta` — byte-level, JDK-only). Only
@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   * same schema, encoders, partition sizing, and batch iteration as the real
   * path — swapping in a JNI/ffmpeg decoder changes one function.
   *
-  * Scale notes: binary payloads dominate row size, so `repartitionBySize`
-  * targets a byte budget per task (not a row count) to keep executor memory
-  * flat; metadata-only transforms `select` around the binary column so the
-  * payload bytes are never shuffled unless the payload itself moves.
+  * Scale note: binary payloads dominate row size, so metadata-only
+  * transforms `select` around the binary column and the payload bytes are
+  * never shuffled unless the payload itself moves.
   */
 object Multimodal {
 
@@ -116,8 +115,7 @@ object Multimodal {
 
   /** REAL video container metadata: MP4/MOV box-tree parse (`mp4Meta`).
     * Codec/pixel work stays stubbed (no ffmpeg in this build), but
-    * dimensions and frame counts — all `frameSamplePlan` needs — come from
-    * the actual container. Non-MP4 payloads fall back to the stub. */
+    * dimensions and frame counts come from the actual container. Non-MP4 payloads fall back to the stub. */
   private def decodeVideo(r: MediaRecord): MediaFeatures =
     (try mp4Meta(r.payload) catch { case scala.util.control.NonFatal(_) => None }) match {
       case Some((w, h, frames)) =>
@@ -155,40 +153,6 @@ object Multimodal {
       // codec contexts (ImageIO readers) are JVM-static; a pooled decoder
       // would open here and close after the iterator drains
       it.map(decode)
-    }
-  }
-
-  /** Resize — REAL for images (decode → Graphics2D bilinear scale →
-    * re-encode PNG, per partition); audio/video keep the stub payload
-    * truncation (no JDK codec) so the partition-level plumbing — payload in,
-    * payload out — is exercised for every kind. */
-  def resize(ds: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] = {
-    import ds.sparkSession.implicits._
-    require(w > 0 && h > 0, "target dimensions must be positive")
-    ds.mapPartitions { it =>
-      it.map { r =>
-        val decoded =
-          if (r.kind != "image") null
-          else
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-            catch { case scala.util.control.NonFatal(_) => null } // CMMException etc., see decode
-        if (decoded == null) { // stub path: truncate to the pixel budget
-          val budget = math.max(16, math.min(r.payload.length, w * h / 64))
-          r.copy(payload = java.util.Arrays.copyOf(r.payload, budget))
-        } else {
-          val scaled = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = scaled.createGraphics()
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(decoded, 0, 0, w, h, null)
-          g.dispose()
-          val out = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(scaled, "png", out)
-          r.copy(payload = out.toByteArray, format = "png")
-        }
-      }
     }
   }
 
@@ -336,36 +300,6 @@ object Multimodal {
         .toDF("media_id", "dhash"),
       maxHamming)
   }
-
-  /** Deterministic frame sampling plan for video rows: every `stride`-th
-    * frame index. Metadata-only — the binary column is not touched. */
-  def frameSamplePlan(features: Dataset[MediaFeatures], stride: Int): DataFrame = {
-    import features.sparkSession.implicits._
-    features.filter(_.kind == "video")
-      .select(col("media_id"), col("n_frames"))
-      .withColumn("frame_idx",
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))))
-  }
-
-  /** Partition the payload table by a byte budget per task: binary rows are
-    * wildly skewed in size, so row-count partitioning under/overshoots
-    * executor memory. One pass computes total bytes; the repartition count
-    * targets `bytesPerPartition`. */
-  def repartitionBySize(df: DataFrame, payloadCol: String,
-      bytesPerPartition: Long): DataFrame = {
-    val total = df.agg(sum(length(col(payloadCol)).cast("long"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    val parts = math.max(1, math.ceil(total.toDouble / bytesPerPartition).toInt)
-    df.repartition(parts)
-  }
-
-  /** Attach typed metadata (a struct column) without moving payload bytes. */
-  def withMetadata(df: DataFrame, payloadCol: String): DataFrame =
-    df.withColumn("media_meta", struct(
-      length(col(payloadCol)).cast("long").as("size_bytes"),
-      md5(col(payloadCol)).as("content_hash")))
 
   /** A deterministic real PNG: seeded pseudo-random RGB pixels at (w, h). */
   def syntheticPng(seed: Long, w: Int, h: Int): Array[Byte] = {

@@ -109,7 +109,8 @@ object Features {
     *
     * Scale: ntile's global sort is the documented q158 trade — right for
     * score-table-sized frames; at 100 TB use quantile BOUNDS for the
-    * bins (equiDepthProfileByBounds' form) and the same count rollup.
+    * bins (bucketing against exact-quantile boundaries) and the same
+    * count rollup.
     * The exact integer lift product needs cum_pos·tot_n·1e6 to fit a
     * long — fine to ~3·10⁶ scored rows; past that compute lift
     * downstream from the emitted exact counts. */

@@ -25,10 +25,8 @@ import org.apache.spark.sql.functions._
   * repo, hot keys are the failure mode — `maxBlockSize` drops pathological
   * blocks (e.g. the ""-key block of all 1-char strings) WHOLE. The drop is
   * silent in the join plan itself (an anti-join; forcing a count there
-  * would bolt an extra action onto every call) — [[droppedBlocks]] /
-  * [[droppedBlocksBetween]] are the audit surface: run them with the same
-  * arguments and alert on nonzero rows, because a dropped block can hide
-  * true pairs. `maxBlockSize <= 0` disables the cap entirely.
+  * would bolt an extra action onto every call), and a dropped block can
+  * hide true pairs. `maxBlockSize <= 0` disables the cap entirely.
   */
 object Fuzzy {
 
@@ -110,8 +108,7 @@ object Fuzzy {
     *
     * Costs ~len/2× more exploded keys and a denser candidate set than
     * the ed≤1 form — the price of the wider radius, still nowhere near
-    * quadratic. Same silent in-plan hot-block cap; audit with
-    * [[droppedBlocks2]]. */
+    * quadratic. Same silent in-plan hot-block cap. */
   def editDistance2Join(df: DataFrame, idCol: String, strCol: String,
       maxBlockSize: Int = 1000): DataFrame = {
     // same three-consumer lazy checkpoint as editDistance1Join — the
@@ -139,18 +136,6 @@ object Fuzzy {
       .distinct()
   }
 
-  /** [[droppedBlocks]] at ed≤2 depth: the ≤2-deletion blocks
-    * [[editDistance2Join]] drops at this `maxBlockSize`. */
-  def droppedBlocks2(df: DataFrame, idCol: String, strCol: String,
-      maxBlockSize: Int = 1000): DataFrame = {
-    require(maxBlockSize > 0,
-      s"maxBlockSize must be > 0 to drop anything, got $maxBlockSize")
-    delKeys2(df, idCol, strCol)
-      .groupBy("k").agg(count(lit(1)).as("n_members"))
-      .filter(col("n_members") > maxBlockSize)
-      .orderBy(col("n_members").desc, col("k"))
-  }
-
   /** Cross-TABLE record linkage: (left_id, right_id, dist) for every pair
     * within Levenshtein distance 1 — match a dirty fact-side string column
     * (scraped names, typo'd titles) against a canonical dimension without
@@ -159,33 +144,6 @@ object Fuzzy {
     * substitution/indel/equality cases never relied on self-joining); the
     * hot-block cap applies to the COMBINED per-key frequency — a key hot
     * on either side floods the join the same way. */
-  /** The deletion-neighborhood blocks [[editDistance1Join]] drops at this
-    * `maxBlockSize` — (k, n_members), largest first. Empty = the cap was
-    * never hit and the join's completeness guarantee is unconditional. */
-  def droppedBlocks(df: DataFrame, idCol: String, strCol: String,
-      maxBlockSize: Int = 1000): DataFrame = {
-    require(maxBlockSize > 0,
-      s"maxBlockSize must be > 0 to drop anything, got $maxBlockSize")
-    delKeys(df, idCol, strCol)
-      .groupBy("k").agg(count(lit(1)).as("n_members"))
-      .filter(col("n_members") > maxBlockSize)
-      .orderBy(col("n_members").desc, col("k"))
-  }
-
-  /** [[droppedBlocks]] for [[editDistance1JoinBetween]]: the cap there
-    * applies to the COMBINED per-key frequency across both tables. */
-  def droppedBlocksBetween(left: DataFrame, leftId: String, leftStr: String,
-      right: DataFrame, rightId: String, rightStr: String,
-      maxBlockSize: Int = 1000): DataFrame = {
-    require(maxBlockSize > 0,
-      s"maxBlockSize must be > 0 to drop anything, got $maxBlockSize")
-    delKeys(left, leftId, leftStr).select("k")
-      .unionAll(delKeys(right, rightId, rightStr).select("k"))
-      .groupBy("k").agg(count(lit(1)).as("n_members"))
-      .filter(col("n_members") > maxBlockSize)
-      .orderBy(col("n_members").desc, col("k"))
-  }
-
   def editDistance1JoinBetween(left: DataFrame, leftId: String,
       leftStr: String, right: DataFrame, rightId: String, rightStr: String,
       maxBlockSize: Int = 1000): DataFrame = {

@@ -42,14 +42,6 @@ object Grouping {
     df.cube(dims.map(col): _*)
       .agg(grouping_id().cast("long").as("gid"), measures: _*)
 
-  /** SHARE-OF-PARENT: sum `valueCol` (an exact integer measure) at the
-    * (parent ++ child) grain and report each child's integer-e6 share of
-    * its parent's total — the "percent of category" OLAP idiom (share of
-    * a type's mass per day, of a domain's tokens per language, …) in one
-    * grouped aggregate plus one window over the AGGREGATED frame (parent
-    * totals never re-touch row data). share_e6 = child·1e6 div parent —
-    * exact integer, no IEEE anywhere. Parents whose total is 0 report
-    * null share (a 0/0 share is undefined, not 0). */
   /** PIVOT mart with a PINNED category list — the wide dashboard table
     * (one row per key, one column pair per category: `<cat>_n` count and
     * `<cat>_sum` integer-sum). The categories are an explicit argument,
@@ -82,6 +74,14 @@ object Grouping {
       .agg(aggs.head, aggs.tail: _*)
   }
 
+  /** SHARE-OF-PARENT: sum `valueCol` (an exact integer measure) at the
+    * (parent ++ child) grain and report each child's integer-e6 share of
+    * its parent's total — the "percent of category" OLAP idiom (share of
+    * a type's mass per day, of a domain's tokens per language, …) in one
+    * grouped aggregate plus one window over the AGGREGATED frame (parent
+    * totals never re-touch row data). share_e6 = child·1e6 div parent —
+    * exact integer, no IEEE anywhere. Parents whose total is 0 report
+    * null share (a 0/0 share is undefined, not 0). */
   def shareOfParent(df: DataFrame, parentCols: Seq[String],
       childCols: Seq[String], valueCol: String): DataFrame = {
     require(parentCols.nonEmpty && childCols.nonEmpty,

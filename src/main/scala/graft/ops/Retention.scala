@@ -159,23 +159,6 @@ object Retention {
       .select("day", "dau_est", "wau_est")
   }
 
-  /** RFM segmentation — the classic customer-value scoring: per entity,
-    * Recency (days since last order, measured against the CORPUS max
-    * date so the report is reproducible — wall-clock "today" would make
-    * every run differ), Frequency (order count) and Monetary (exact
-    * integer cents), each quintile-scored 1–5 with 5 best:
-    *
-    *   r_score = 6 − ntile(5) over (recency_days asc, entity)
-    *   f_score =     ntile(5) over (frequency asc,    entity)
-    *   m_score =     ntile(5) over (monetary asc,     entity)
-    *   rfm_code = r·100 + f·10 + m      (555 = champions, 111 = lost)
-    *
-    * Entity-id tiebreaks make every ntile deterministic cross-engine.
-    * The three ntiles are global sorts over the ENTITY frame (one row
-    * per customer — the q158 trade at its safest: the frame is already
-    * aggregated 10⁴–10⁶× down from the fact table); the fact scan itself
-    * is one grouped aggregate. Null amounts count 0; the corpus max date
-    * is a broadcast 1-row frame, never a driver action. */
   /** Kaplan–Meier survival curve — time-to-event with right censoring
     * (time-to-churn, time-to-first-purchase, job-survival): subjects
     * carry a duration and an event flag (1 = the event was OBSERVED at
@@ -296,6 +279,23 @@ object Retention {
           .as("ltv_per_member_cents"))
   }
 
+  /** RFM segmentation — the classic customer-value scoring: per entity,
+    * Recency (days since last order, measured against the CORPUS max
+    * date so the report is reproducible — wall-clock "today" would make
+    * every run differ), Frequency (order count) and Monetary (exact
+    * integer cents), each quintile-scored 1–5 with 5 best:
+    *
+    *   r_score = 6 − ntile(5) over (recency_days asc, entity)
+    *   f_score =     ntile(5) over (frequency asc,    entity)
+    *   m_score =     ntile(5) over (monetary asc,     entity)
+    *   rfm_code = r·100 + f·10 + m      (555 = champions, 111 = lost)
+    *
+    * Entity-id tiebreaks make every ntile deterministic cross-engine.
+    * The three ntiles are global sorts over the ENTITY frame (one row
+    * per customer — the q158 trade at its safest: the frame is already
+    * aggregated 10⁴–10⁶× down from the fact table); the fact scan itself
+    * is one grouped aggregate. Null amounts count 0; the corpus max date
+    * is a broadcast 1-row frame, never a driver action. */
   def rfmScores(orders: DataFrame, entityCol: String, dateCol: String,
       amountCol: String): DataFrame = {
     val per = orders

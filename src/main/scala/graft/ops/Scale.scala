@@ -1,28 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The two shuffle-elimination mechanisms the 100 TB posture calls for
-  * beyond broadcast hints: bucketed co-located joins (no exchange at join
-  * time — the shuffle is paid once at write) and salted joins for skewed
-  * keys (hot keys split across `saltFactor` tasks instead of one straggler).
+/** Scale operators beyond broadcast hints: salted joins for skewed keys
+  * (hot keys split across `saltFactor` tasks instead of one straggler),
+  * conditional fan-out of low-parallelism inputs, and z-order / data-skipping
+  * layout reports.
   */
 object Scale {
-
-  /** Write a table bucketed (and sorted) by the join keys. Joins between
-    * tables bucketed the same way on the same keys plan WITHOUT a shuffle —
-    * the exchange cost is paid once here instead of per query. Bucketing
-    * requires the catalog (`saveAsTable`), matching Spark's contract. */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String], mode: String = "overwrite"): Unit = {
-    require(keys.nonEmpty, "bucketing needs at least one key")
-    df.write.mode(mode)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-  }
 
   /** Scale-adaptive FAN-OUT for CPU-dense row-local pipelines that follow
     * a low-parallelism scan — the guide's "input skew: one huge
@@ -175,14 +161,6 @@ object Scale {
         min(col(xCol)).as("x_min"), max(col(xCol)).as("x_max"),
         min(col(yCol)).as("y_min"), max(col(yCol)).as("y_max"),
         min(col("zkey")).as("z_min"), max(col("zkey")).as("z_max"))
-
-  /** Convenience: register a DataFrame as a bucketed table and return the
-    * catalog-backed frame (the co-located read side). */
-  def asBucketedTable(spark: SparkSession, df: DataFrame, table: String,
-      buckets: Int, keys: Seq[String]): DataFrame = {
-    writeBucketed(df, table, buckets, keys)
-    spark.table(table)
-  }
 
   /** Data-skipping report — QUANTIFIES how well a physical layout prunes:
     * group rows by the layout unit (`unitCol` — a partition key, a z-order

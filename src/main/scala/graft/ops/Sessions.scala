@@ -177,48 +177,6 @@ object Sessions {
       .filter(col("rank") <= k)
   }
 
-  /** [[topPaths]]'s bounded twin for HIGH-CARDINALITY type vocabularies:
-    * the exact form counts in |types|^n path space, which nothing caps if
-    * a caller feeds raw URLs or product ids as types. Here the path
-    * stream flows into a DataSketches frequent-items state
-    * (`approx_top_k_accumulate`) whose memory is fixed at
-    * `maxPathsTracked` entries regardless of how many distinct paths
-    * exist — the q123 heavy-hitters posture. While the tracked map never
-    * fills, counts are EXACT and this ≡ [[topPaths]] row for row
-    * (spec-pinned); past that, purged paths carry deterministic
-    * underestimates and the guaranteed-heavy survivors remain. Ranking
-    * re-sorts on (count desc, path) — in-sketch tie order is
-    * engine-local. Same per-key lead window as the exact form; the
-    * aggregation shuffles |partitions| sketch blobs, never path rows. */
-  def topPathsApprox(events: DataFrame, keyCol: String, tsUsCol: String,
-      tieCol: String, typeCol: String, n: Int, k: Int,
-      maxPathsTracked: Int = 10000): DataFrame = {
-    require(n >= 2 && k >= 1, s"need n >= 2 and k >= 1, got n=$n k=$k")
-    require(maxPathsTracked >= k,
-      s"maxPathsTracked ($maxPathsTracked) must be >= k ($k)")
-    val wKey = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsUsCol), col(tieCol))
-    val steps = col(typeCol) +:
-      (1 until n).map(i => lead(col(typeCol), i).over(wKey))
-    val paths = events
-      .select(concat_ws(">", steps: _*).as("path"),
-        steps.last.isNotNull.as("__complete"))
-      .filter(col("__complete"))
-    paths
-      .agg(call_function("approx_top_k_accumulate",
-        col("path"), lit(maxPathsTracked)).as("__state"))
-      // probe the whole tracked map, then re-rank deterministically (the
-      // frequencyAudit depth rule: the sketch's own k-boundary tie order
-      // is engine-local)
-      .select(explode(call_function("approx_top_k_estimate",
-        col("__state"), lit(maxPathsTracked))).as("e"))
-      .select(col("e.item").as("path"),
-        col("e.count").cast("long").as("n_occurrences"))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_occurrences").desc, col("path"))).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
   /** LAST-TOUCH attribution: each conversion event credited to the most
     * recent strictly-earlier touch event (type ∈ `touchTypes`) of the
     * same key within `windowUs` — the standard marketing/conversion
@@ -341,23 +299,6 @@ object Sessions {
         sum(col("_e") - col("_s")).as("covered"))
   }
 
-  /** K-step ORDERED funnel — [[funnel]]'s 2-step entry→conversion
-    * generalized to an arbitrary step sequence: a key completes stage i
-    * iff it has a step-i event STRICTLY after its earliest completion of
-    * stage i−1 (earliest-completion semantics, the standard funnel
-    * definition; "strictly after" is on the (ts, tie) total order, so
-    * same-timestamp step chains resolve deterministically).
-    *
-    * Output, one row per stage: (stage, step, n_keys, conv_from_prev_e6)
-    * — counts of keys reaching each stage and the exact-integer
-    * stage-over-stage conversion. Stage 1's conversion is vs itself (1.0).
-    *
-    * Scale shape: stage i is one filtered scan of the step-i events
-    * joined to the (keys-completed-so-far)-sized frontier on the key,
-    * then a keyed min — k bounded rounds, no per-key sequence
-    * materialization, no window over row data. The frontier only
-    * shrinks, so later stages cost less, and each round's join is
-    * broadcast-able once the funnel narrows. */
   /** Funnel STAGE LATENCY: for each stage transition of the q176-style
     * progressive-min frontier, exact integer stats of the time between
     * the previous stage's earliest completion and this one's — "how long
@@ -404,6 +345,23 @@ object Sessions {
           expr("sum_latency_us div n_converted")))
   }
 
+  /** K-step ORDERED funnel — [[funnel]]'s 2-step entry→conversion
+    * generalized to an arbitrary step sequence: a key completes stage i
+    * iff it has a step-i event STRICTLY after its earliest completion of
+    * stage i−1 (earliest-completion semantics, the standard funnel
+    * definition; "strictly after" is on the (ts, tie) total order, so
+    * same-timestamp step chains resolve deterministically).
+    *
+    * Output, one row per stage: (stage, step, n_keys, conv_from_prev_e6)
+    * — counts of keys reaching each stage and the exact-integer
+    * stage-over-stage conversion. Stage 1's conversion is vs itself (1.0).
+    *
+    * Scale shape: stage i is one filtered scan of the step-i events
+    * joined to the (keys-completed-so-far)-sized frontier on the key,
+    * then a keyed min — k bounded rounds, no per-key sequence
+    * materialization, no window over row data. The frontier only
+    * shrinks, so later stages cost less, and each round's join is
+    * broadcast-able once the funnel narrows. */
   def funnelSteps(events: DataFrame, keyCol: String, tsUsCol: String,
       tieCol: String, typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnelSteps needs at least one step")
@@ -581,114 +539,5 @@ object Sessions {
       .withColumn("__sum", sum(col("__raw")).over(wConv))
       .withColumn("weight_e6", expr("__raw * 1000000L div __sum"))
       .drop("__raw", "__sum")
-  }
-
-  /** Event DEBOUNCE: collapse each burst of same-(key, type) events into
-    * its first event — the retry-storm / double-click / duplicate-webhook
-    * cleaner that runs BEFORE funnels, attribution and billing counts
-    * (every one of which silently inflates on bursts). A burst is a
-    * gap-chain exactly like [[sessionize]]'s sessions, scoped per
-    * (key, type): an event within `gapUs` of its PREDECESSOR (kept or
-    * not) extends the burst — the chain form, so a steady drizzle of
-    * sub-gap retries collapses to one event no matter how long it drags
-    * (the fixed-window form would re-admit it every window).
-    *
-    * Output: the kept (first-per-burst) events with every input column,
-    * plus `n_suppressed` (burst size − 1 — the audit column: how much
-    * duplication the stream actually carried).
-    *
-    * Scale shape: ONE keyed window (lag + running boundary sum share the
-    * (key, type) × (ts, tie) sort, a single exchange) + one
-    * burst-grained aggregate joined back onto the kept rows — everything
-    * linear, no self-join, partition count = shuffle partitions. */
-  def debounce(events: DataFrame, keyCol: String, tsUsCol: String,
-      tieCol: String, typeCol: String, gapUs: Long): DataFrame = {
-    require(gapUs > 0L, s"gapUs must be > 0, got $gapUs")
-    val w = Window.partitionBy(col(keyCol), col(typeCol))
-      .orderBy(col(tsUsCol), col(tieCol))
-    val burst = events
-      .withColumn("__prev", lag(col(tsUsCol).cast("long"), 1).over(w))
-      .withColumn("__new",
-        when(col("__prev").isNull ||
-          col(tsUsCol).cast("long") - col("__prev") > gapUs, 1L)
-          .otherwise(0L))
-      .withColumn("__burst", sum(col("__new")).over(w))
-    burst
-      .withColumn("__n",
-        count(lit(1)).over(Window.partitionBy(col(keyCol), col(typeCol),
-          col("__burst"))))
-      .filter(col("__new") === 1L)
-      .withColumn("n_suppressed", col("__n") - 1L)
-      .drop("__prev", "__new", "__burst", "__n")
-  }
-
-  /** Long-run occupancy of the event-type Markov chain — the power
-    * iteration over [[transitionMatrix]]'s own `p_e6` rows ("where do
-    * users SETTLE", the steady-state complement of the matrix's one-step
-    * view). The synthetic '^' start state is excluded (it has no inflow
-    * — its mass is a transient); occupancy starts uniform over the
-    * observed types — including a type seen ONLY as some journey's sole
-    * event, whose single transition is '^'→T: it joins the node set via
-    * the unfiltered matrix's to_types and is handled as a dangling
-    * (zero-outflow) node — and runs `iters` fixed rounds of
-    * π'(v) = Σ_u π(u)·p_e6(u,v) div 10⁶ + dangling_mass div |types|,
-    * where types with NO outgoing transitions (pure terminal states)
-    * redistribute uniformly — the directed-PageRank dangling treatment,
-    * without which total mass leaks to 0. All integer: π in e9 units,
-    * floor divisions in a fixed order, so the oracle unrolls the
-    * recurrence round for round (fixed rounds, not convergence — a
-    * periodic chain oscillates, and a fixed-round contract keeps the
-    * output well-defined and replayable). Mass shed by the p_e6 and
-    * share floors simply vanishes (≤ |types|·iters micro-units —
-    * diagnostic-irrelevant, and both engines shed identically).
-    *
-    * Overflow: π ≤ 10⁹ and p_e6 ≤ 10⁶, so every product ≤ 10¹⁵ at ANY
-    * corpus size — the e6-probability form, not rank·count (whose
-    * product overflows once transition counts pass ~10⁹).
-    *
-    * Scale shape per round: one keyed join of the |types|-sized π frame
-    * onto the |types|²-bounded matrix + one grouped sum + one broadcast
-    * 1-row dangling frame — summary space throughout; the corpus is
-    * touched once, by transitionMatrix's single window pass. */
-  def markovSteadyState(events: DataFrame, keyCol: String, tsUsCol: String,
-      tieCol: String, typeCol: String, iters: Int = 10): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    // Node set comes from the UNFILTERED matrix: a type observed only as
-    // a journey's sole event has '^'->T as its one transition, so
-    // filtering '^' rows first would drop T from the chain entirely (no
-    // output row, none of the uniform seed mass) — T must instead
-    // participate as a dangling node, per the documented treatment. '^'
-    // itself (never a to_type, excluded as a from_type) stays out.
-    val tmAll = transitionMatrix(events, keyCol, tsUsCol, tieCol, typeCol)
-      .select(col("from_type"), col("to_type"), col("p_e6"))
-      .localCheckpoint()
-    val tm = tmAll.filter(col("from_type") =!= "^")
-    val nodes = tm.select(col("from_type").as("type"))
-      .unionAll(tmAll.select(col("to_type").as("type")))
-      .distinct().localCheckpoint()
-    val n = nodes.count()
-    if (n == 0)
-      return nodes.select(col("type"), lit(0L).as("occupancy_e9"))
-    val sources = tm.select(col("from_type").as("type")).distinct()
-      .withColumn("__has_out", lit(true)).localCheckpoint()
-    var pi = nodes.select(col("type"), lit(1000000000L / n).as("occupancy_e9"))
-    (1 to iters).foreach { _ =>
-      val inflow = tm
-        .join(pi.withColumnRenamed("type", "from_type"), "from_type")
-        .select(col("to_type").as("type"),
-          expr("occupancy_e9 * p_e6 div 1000000L").as("__share"))
-        .groupBy("type").agg(sum(col("__share")).as("__in"))
-      val dang = pi.join(sources, Seq("type"), "left")
-        .filter(col("__has_out").isNull)
-        .agg(coalesce(sum("occupancy_e9"), lit(0L)).as("__dmass"))
-      pi = nodes
-        .join(inflow, Seq("type"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("type"),
-          (coalesce(col("__in"), lit(0L)) +
-            expr(s"__dmass div ${n}L")).as("occupancy_e9"))
-        .localCheckpoint(eager = false)
-    }
-    pi
   }
 }

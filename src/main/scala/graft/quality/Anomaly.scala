@@ -136,38 +136,11 @@ object Anomaly {
       .drop("mean", "stddev", "lo", "hi")
   }
 
-  /** Q9 — IQR anomaly bounds via approxQuantile (Greenwald–Khanna, the same
-    * sketch the reference uses). Approximate by design → no cross-engine
-    * oracle; exact quantiles are in `exactQuantiles`. */
-  def iqrBounds(df: DataFrame, column: String, mult: Double = 1.5,
-      relErr: Double = 0.01): (Double, Double) = {
-    val Array(q1, q3) = df.stat.approxQuantile(column, Array(0.25, 0.75), relErr)
-    val iqr = q3 - q1
-    (q1 - mult * iqr, q3 + mult * iqr)
-  }
-
-  /** Q9 — IQR-anomalous rows with distance-based severity: distance from
-    * the NEARER bound in IQR units (anomaly_detection.py:176-199; iqr <= 0
-    * → distance 0 → LOW, like the reference). */
-  def iqrAnomalies(df: DataFrame, column: String, mult: Double = 1.5,
-      relErr: Double = 0.01): DataFrame = {
-    val Array(q1, q3) = df.stat.approxQuantile(column, Array(0.25, 0.75), relErr)
-    val iqr = q3 - q1
-    val (lo, hi) = (q1 - mult * iqr, q3 + mult * iqr)
-    val dist =
-      if (iqr > 0)
-        least(abs(col(column) - lit(lo)), abs(col(column) - lit(hi))) / lit(iqr)
-      else lit(0.0)
-    df.filter(col(column) < lo || col(column) > hi)
-      .withColumn("iqr_distance", dist)
-      .withColumn("severity", iqrSeverity(col("iqr_distance")))
-  }
-
-  /** Q9 (oracle form) — IQR-anomalous rows with distance severity from
-    * EXACT interpolated quantiles, fully engine-side via a broadcast
-    * stats join (anomaly_detection.py:139-205). The approx variant above
-    * is the 100-TB path (GK sketch, no exact global sort); this one is
-    * cross-engine deterministic, so the severity tiers are oracle-gated. */
+  /** Q9 — IQR-anomalous rows with distance-based severity (distance from
+    * the NEARER bound in IQR units; iqr <= 0 → distance 0 → LOW, like the
+    * reference) from EXACT interpolated quantiles, fully engine-side via a
+    * broadcast stats join (anomaly_detection.py:139-205). Cross-engine
+    * deterministic, so the severity tiers are oracle-gated. */
   def iqrAnomaliesExact(df: DataFrame, column: String, mult: Double = 1.5): DataFrame = {
     val bounds = exactQuantiles(df, column, Seq(0.25, 0.75))
       .select(
@@ -189,27 +162,10 @@ object Anomaly {
     * (Q8, mean/σ both corrupted by the outliers they hunt) and IQR (Q9)
     * detectors: flag rows whose robust z-score 0.6745·|x−median|/MAD
     * exceeds `tau` (0.6745 normalizes MAD to σ under normality; τ=3.5 is
-    * the Iglewicz–Hoaglin convention). The 100-TB path: both medians from
-    * Greenwald–Khanna sketches (`approxQuantile` — no global sort, same
-    * posture as `iqrBounds`), flagging row-local. Approximate medians →
-    * no cross-engine oracle; the exact twin below is oracle-gated.
-    * MAD = 0 (≥half the values identical) flags nothing — the detector
-    * has no scale to normalize by, matching iqr<=0's LOW posture. */
-  def madAnomalies(df: DataFrame, column: String, tau: Double = 3.5,
-      relErr: Double = 0.01): DataFrame = {
-    val Array(med) = df.stat.approxQuantile(column, Array(0.5), relErr)
-    val devCol = abs(col(column) - lit(med))
-    val Array(mad) = df.withColumn("_absdev", devCol)
-      .stat.approxQuantile("_absdev", Array(0.5), relErr)
-    if (mad <= 0) df.withColumn("robust_z", lit(0.0)).filter(lit(false))
-    else df.withColumn("robust_z", lit(0.6745) * devCol / lit(mad))
-      .filter(col("robust_z") > lit(tau))
-  }
-
-  /** MAD anomalies from EXACT interpolated medians — the cross-engine-
-    * deterministic twin of [[madAnomalies]] (same split as
-    * iqrAnomalies/iqrAnomaliesExact): two global `percentile` aggregates
-    * broadcast back onto the rows, flagging row-local. `robust_z_e6`
+    * the Iglewicz–Hoaglin convention). Medians are EXACT interpolated
+    * ones: two global `percentile` aggregates broadcast back onto the
+    * rows, flagging row-local. MAD = 0 (≥half the values identical) flags
+    * nothing — the detector has no scale to normalize by. `robust_z_e6`
     * micro-units round away last-ulp interpolation drift between engines
     * (the q52 lesson). */
   def madAnomaliesExact(df: DataFrame, column: String, tau: Double = 3.5): DataFrame = {
@@ -250,8 +206,8 @@ object Anomaly {
       .drop("_med", "_absdev", "_mad")
   }
 
-  /** Exact interpolated quantiles (SQL `percentile`) — the deterministic
-    * counterpart of iqrBounds, used by the correctness oracle. */
+  /** Exact interpolated quantiles (SQL `percentile`) — deterministic
+    * across engines, used by the correctness oracle. */
   def exactQuantiles(df: DataFrame, column: String, ps: Seq[Double]): DataFrame = {
     val arr = ps.map(p => lit(p))
     df.agg(expr(
@@ -351,20 +307,6 @@ object Anomaly {
         (col("cnt").cast("double") / col("total").cast("double")).as("freq"),
         (col("cnt").cast("double") / col("total").cast("double") < lit(minFreq))
           .as("is_rare"))
-  }
-
-  /** Q11 — null-rate spike vs a historical rate: current_rate >
-    * historical_rate × threshold. One aggregate. */
-  def nullSpike(df: DataFrame, column: String, historicalRate: Double,
-      threshold: Double = 2.0): DataFrame = {
-    df.agg(
-      count(lit(1)).as("total"),
-      count(when(col(column).isNull, 1)).as("nulls"))
-      .select(
-        col("total"), col("nulls"),
-        (col("nulls").cast("double") / col("total").cast("double")).as("null_rate"),
-        (col("nulls").cast("double") / col("total").cast("double") >
-          lit(historicalRate * threshold)).as("is_spike"))
   }
 
   /** Q12 — moving-average anomaly over a row frame (reference: pandas
@@ -591,7 +533,8 @@ object Anomaly {
     * per-group profiles), and the 100 TB path is the same report from
     * `exactQuantiles`/`approxQuantile` BOUNDARIES with row-local bucket
     * assignment — same buckets except around boundary ties, no global sort.
-    * Both are here; EquiDepthSpec pins their agreement on a tie-free frame.
+    * EquiDepthSpec pins that boundary form's agreement with this one on a
+    * tie-free frame.
     */
   def equiDepthProfile(df: DataFrame, valueCol: String, tieCol: String,
       n: Int): DataFrame =
@@ -608,34 +551,6 @@ object Anomaly {
         max(e6(col(valueCol))).as("max_e6"),
         sum(e6(col(valueCol))).as("sum_e6"))
       .orderBy("bucket")
-
-  /** The scale path: same per-bucket report, but buckets assigned row-
-    * locally against broadcast quantile boundaries (no global sort). Bucket
-    * b = #{boundaries < x} + 1 over the (n-1) interior exact quantiles;
-    * boundary-tied rows all land in the lower bucket, so counts are only
-    * approximately equal under heavy ties — the documented trade. */
-  def equiDepthProfileByBounds(df: DataFrame, valueCol: String,
-      n: Int): DataFrame = {
-    val dfNN = df.filter(col(valueCol).isNotNull) // same null contract
-    val probs = (1 until n).map(_.toDouble / n)
-    // exactQuantiles names columns p${(p*100).toInt} — match exactly
-    // (rounding instead truncating diverges at e.g. 2/3 → p67 vs p66)
-    val bounds = exactQuantiles(dfNN, valueCol, probs)
-      .select(array(probs.indices.map(i => col(s"p${(probs(i) * 100).toInt}")): _*)
-        .as("__bs"))
-    dfNN.crossJoin(broadcast(bounds))
-      .withColumn("bucket",
-        (aggregate(col("__bs"), lit(0L),
-          (acc, b) => acc + when(col(valueCol) > b, 1L).otherwise(0L)) + 1L)
-          .as("bucket"))
-      .groupBy("bucket")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        min(e6(col(valueCol))).as("min_e6"),
-        max(e6(col(valueCol))).as("max_e6"),
-        sum(e6(col(valueCol))).as("sum_e6"))
-      .orderBy("bucket")
-  }
 
   /** CONCENTRATION report: per group, the Gini coefficient and the mass
     * share of the top decile of rows over a NON-NEGATIVE exact-integer
@@ -768,7 +683,7 @@ object Anomaly {
           .as("eff_cats_e6")): _*)
   }
 
-  private def e6(c: Column): Column =
+  private[quality] def e6(c: Column): Column =
     round(c * lit(1e6)).cast("long")
 
   /** Metric co-movement matrix: pairwise Pearson correlation between the

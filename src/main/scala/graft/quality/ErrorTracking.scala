@@ -52,35 +52,6 @@ object ErrorTracking {
     perRule.reduce(_.unionByName(_))
   }
 
-  /** `capture` plus the data-context columns of the reference's RowError
-    * (error_tracking.py:40-44): the failing column's value as a string, the
-    * rule's expected value, its check name, and a JSON `row_data` snapshot
-    * of key + failing columns. Same deterministic per-rule top-k. */
-  def captureDetailed(
-      df: DataFrame,
-      rules: Seq[ErrorRule],
-      keyCols: Seq[String],
-      maxPerRule: Int = 100): DataFrame = {
-    require(rules.nonEmpty, "at least one ErrorRule required")
-    val perRule = rules.map { r =>
-      val ctxCols = (keyCols :+ r.columnName).distinct
-      df.filter(r.predicate)
-        .select(keyCols.map(col)
-          :+ col(r.columnName).cast("string").as("actual_value")
-          :+ to_json(struct(ctxCols.map(col): _*)).as("row_data"): _*)
-        .orderBy(keyCols.map(col): _*)
-        .limit(maxPerRule)
-        .withColumn("column_name", lit(r.columnName))
-        .withColumn("error_type", lit(r.errorType))
-        .withColumn("severity", lit(r.severity))
-        .withColumn("error_message", lit(r.message))
-        .withColumn("expected_value",
-          if (r.expected.isEmpty) lit(null).cast("string") else lit(r.expected))
-        .withColumn("check_name", lit(r.checkName))
-    }
-    perRule.reduce(_.unionByName(_))
-  }
-
   /** The persisted row_errors layout — the reference's 14 Iceberg fields in
     * declaration order (error_tracking.py:247-264). */
   val RowErrorFields: Seq[String] = Seq(
@@ -102,8 +73,9 @@ object ErrorTracking {
     *    assert on it;
     *  - everything stays distributed: no driver-side pandas hop.
     *
-    * Accepts frames from `captureDetailed` (full context) or plain
-    * `capture` (context fields null-filled). `keyCols` builds `row_id`;
+    * Accepts `capture` frames; the context fields (`actual_value`,
+    * `expected_value`, `row_data`, `check_name`) are kept when the frame
+    * carries them and null-filled otherwise. `keyCols` builds `row_id`;
     * they are folded into the layout and dropped as top-level columns. */
   def persist(
       errors: DataFrame,

@@ -407,15 +407,8 @@ object Kmv {
     * pays a full shuffle for, at sketch cost; sampling error ~√(2/k) on
     * D (k=64 ≈ ±0.18, k=256 ≈ ±0.09) — size thresholds accordingly. */
   def sampleKsReport(df: DataFrame, typeCol: String, idCol: String,
-      valueCol: String, k: Int): DataFrame =
-    sampleKsFromSketches(
-      valueSketches(df, Seq(typeCol), idCol, valueCol, k), typeCol)
-
-  /** [[sampleKsReport]] over an EXISTING per-type value-sketch frame
-    * (`typeCol`, `kmvv`) — the entry point for persisted sketch state:
-    * fold exactness makes the statistic over folded state ≡ the report
-    * over every row the state saw. */
-  def sampleKsFromSketches(sk: DataFrame, typeCol: String): DataFrame = {
+      valueCol: String, k: Int): DataFrame = {
+    val sk = valueSketches(df, Seq(typeCol), idCol, valueCol, k)
     val a = sk.select(col(typeCol).as("type_a"), col("kmvv").as("ska"))
     val b = sk.select(col(typeCol).as("type_b"), col("kmvv").as("skb"))
     ksFromSamplePairs(a.join(b, col("type_a") < col("type_b")))
@@ -447,9 +440,9 @@ object Kmv {
   /** The shared KS math over (type_a, ska, type_b, skb) sample pairs —
     * the compiled `weighted_ks` sweep under UNIT masses (its count-based
     * ks_e6 field is the two-sample KS regardless of masses, so the unit
-    * wrap just satisfies the input shape). The interpreted-HOF twin
-    * below is the spec cross-check; at |types|² pairs × k² lambda calls
-    * the HOF form is the same hot chain the weighted report retired. */
+    * wrap just satisfies the input shape). The spec pins it against an
+    * interpreted-HOF twin; at |types|² pairs × k² lambda calls the HOF
+    * form is the same hot chain the weighted report retired. */
   private def ksFromSamplePairs(pairs: DataFrame): DataFrame = {
     def unit(side: String): Column = expr(
       s"transform($side, x -> named_struct('v', x.v, " +
@@ -461,23 +454,6 @@ object Kmv {
         col("__r.k_a").as("k_a"), col("__r.k_b").as("k_b"),
         col("__r.ks_e6").as("ks_e6"))
   }
-
-  /** [[ksFromSamplePairs]] in pure builtin HOFs — the spec twin (and
-    * the same math the DuckDB oracles replay for q275/q276). */
-  def ksFromSamplePairsBuiltin(pairs: DataFrame): DataFrame =
-    pairs
-      .withColumn("__va", expr("transform(ska, x -> x.v)"))
-      .withColumn("__vb", expr("transform(skb, x -> x.v)"))
-      .withColumn("k_a", size(col("__va")).cast("long"))
-      .withColumn("k_b", size(col("__vb")).cast("long"))
-      .withColumn("ks_e6", expr(
-        "array_max(transform(array_distinct(concat(__va, __vb)), x -> " +
-          "abs(CAST(size(filter(__va, v -> v <= x)) AS BIGINT)" +
-          " * 1000000 div k_a - " +
-          "CAST(size(filter(__vb, v -> v <= x)) AS BIGINT)" +
-          " * 1000000 div k_b)))"))
-      .select(col("type_a"), col("type_b"), col("k_a"), col("k_b"),
-        col("ks_e6"))
 
   // ---- replayable approximate quantiles (value-carrying sample) ------
 
@@ -600,16 +576,9 @@ object Kmv {
     * contract), so both replay bit-for-bit. Work is groups² pairs × k²
     * HOF steps on ≤ k-row samples — never row data. */
   def weightedSampleKsReport(df: DataFrame, typeCol: String, idCol: String,
-      valueCol: String, massCol: String, k: Int): DataFrame =
-    weightedKsFromSketches(
-      weightedValueSketches(df, Seq(typeCol), idCol, valueCol, massCol, k),
-      typeCol)
-
-  /** [[weightedSampleKsReport]] over an EXISTING (`typeCol`, `kmvv`)
-    * weighted-sketch frame — the persisted-state entry point
-    * (fold exactness: the statistic over folded state ≡ the batch
-    * report over all rows). */
-  def weightedKsFromSketches(sk: DataFrame, typeCol: String): DataFrame = {
+      valueCol: String, massCol: String, k: Int): DataFrame = {
+    val sk = weightedValueSketches(df, Seq(typeCol), idCol, valueCol,
+      massCol, k)
     val a = sk.select(col(typeCol).as("type_a"), col("kmvv").as("ska"))
     val b = sk.select(col(typeCol).as("type_b"), col("kmvv").as("skb"))
     weightedKsFromSamplePairs(a.join(b, col("type_a") < col("type_b")))
@@ -617,8 +586,8 @@ object Kmv {
 
   /** The shared weighted-KS math over (type_a, ska, type_b, skb) pairs
     * of (h, v, m) samples — the compiled `weighted_ks` sort-merge sweep
-    * (one O(k log k) pass per pair). The interpreted-HOF twin below is
-    * the spec cross-check; at 20 types × k=128 the HOF form burned ~50M
+    * (one O(k log k) pass per pair). The spec pins it against an
+    * interpreted-HOF twin; at 20 types × k=128 the HOF form burned ~50M
     * interpreted lambda calls (190 pairs × 2 statistics × jumps ×
     * filter+aggregate) and dominated q280's wall. */
   def weightedKsFromSamplePairs(pairs: DataFrame): DataFrame =
@@ -629,36 +598,6 @@ object Kmv {
         col("__r.k_a").as("k_a"), col("__r.k_b").as("k_b"),
         col("__r.mass_a").as("mass_a"), col("__r.mass_b").as("mass_b"),
         col("__r.wks_e6").as("wks_e6"), col("__r.ks_e6").as("ks_e6"))
-
-  /** [[weightedKsFromSamplePairs]] in pure builtin HOFs — the
-    * independently-derived twin the spec pins `weighted_ks` against
-    * cell-for-cell (the `repetitionProfileBuiltin` pattern), and the
-    * executable statement of the math the compiled sweep implements. */
-  def weightedKsFromSamplePairsBuiltin(pairs: DataFrame): DataFrame =
-    pairs
-      .withColumn("k_a", size(col("ska")).cast("long"))
-      .withColumn("k_b", size(col("skb")).cast("long"))
-      .withColumn("mass_a", expr(
-        "aggregate(ska, CAST(0 AS BIGINT), (acc, x) -> acc + x.m)"))
-      .withColumn("mass_b", expr(
-        "aggregate(skb, CAST(0 AS BIGINT), (acc, x) -> acc + x.m)"))
-      .withColumn("__jumps", expr(
-        "array_distinct(concat(transform(ska, x -> x.v), " +
-          "transform(skb, x -> x.v)))"))
-      .withColumn("wks_e6", expr(
-        "array_max(transform(__jumps, t -> abs(" +
-          "aggregate(filter(ska, x -> x.v <= t), CAST(0 AS BIGINT), " +
-          "(acc, x) -> acc + x.m) * 1000000 div greatest(mass_a, 1) - " +
-          "aggregate(filter(skb, x -> x.v <= t), CAST(0 AS BIGINT), " +
-          "(acc, x) -> acc + x.m) * 1000000 div greatest(mass_b, 1))))"))
-      .withColumn("ks_e6", expr(
-        "array_max(transform(__jumps, t -> abs(" +
-          "CAST(size(filter(ska, x -> x.v <= t)) AS BIGINT)" +
-          " * 1000000 div k_a - " +
-          "CAST(size(filter(skb, x -> x.v <= t)) AS BIGINT)" +
-          " * 1000000 div k_b)))"))
-      .select(col("type_a"), col("type_b"), col("k_a"), col("k_b"),
-        col("mass_a"), col("mass_b"), col("wks_e6"), col("ks_e6"))
 
   /** Per-group MASS-weighted quantile estimates off a
     * [[weightedValueSketches]] frame: for each qE6, the smallest sampled

@@ -246,7 +246,7 @@ object Orchestrator {
       require(dc.minCount.nonEmpty || dc.maxCount.nonEmpty,
         s"distinct_check $label: needs min_count and/or max_count")
       // the bound is on the KMV ESTIMATE — ≤ k longs of state per group, no
-      // exact distinct shuffle, the 100 TB form of uniqueCountBetween.
+      // exact distinct shuffle, the 100 TB form of unique_count_between.
       // The aggregate runs WITHOUT a null pre-filter so a group whose
       // items are all NULL yields an EMPTY sketch → estimate 0 → a
       // min_count violation instead of a silently-vanished group; and a
@@ -420,19 +420,13 @@ object Orchestrator {
     * cumulative estimates — an absent day reads est_new = 0 and fires
     * the floor instead of vanishing (r19 self-review finding). All
     * windows run over the DAYS-sized lattice, never row data; a curve
-    * with no days at all is the row-count check's job, not this one's. */
-  def growthFailuresFromCurve(cum: DataFrame, dayCol: String,
+    * with no days at all is the row-count check's job, not this one's.
+    * The curve's day column is the input column the growth family has
+    * already checked is integral. */
+  private def growthFailuresFromCurve(cum: DataFrame, dayCol: String,
       gc: graft.config.GrowthCheck, label: String): Long = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{coalesce, col, lag, last, lit, row_number, max => fmax, min => fmin}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    cum.schema(dayCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => ()
-      case other => throw new IllegalArgumentException(
-        s"growth_check $label: day column must be integral " +
-          s"(epoch-day), got ${other.simpleString} - silent-day " +
-          "synthesis needs day arithmetic")
-    }
     val span = cum.agg(fmin(col(dayCol)).cast("long"),
       fmax(col(dayCol)).cast("long")).head()
     // span sanity cap: the day lattice is range(min, max+1), so an

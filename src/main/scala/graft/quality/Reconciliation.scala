@@ -5,8 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Q15-Q18 — cross-layer reconciliation
-  * (reference: src/data_quality/reconciliation.py:69-398) plus the gold
-  * invariants (build_gold_layer.py:190-269).
+  * (reference: src/data_quality/reconciliation.py:69-398).
   *
   * Every check reduces both sides to scalar aggregates first (counts /
   * exact decimal sums), so the comparison shuffles nothing but single rows;
@@ -22,51 +21,6 @@ object Reconciliation {
       tgtValue: Double,
       diffPct: Double,
       withinTolerance: Boolean)
-
-  private def pctDiff(src: Double, tgt: Double): Double =
-    if (src == 0.0) { if (tgt == 0.0) 0.0 else 100.0 }
-    else math.abs(src - tgt) / math.abs(src) * 100.0
-
-  /** Q15 — row-count reconciliation with optional per-side filters. */
-  def rowCount(src: DataFrame, tgt: DataFrame, tolerancePct: Double,
-      srcFilter: Option[String] = None, tgtFilter: Option[String] = None): ReconResult = {
-    val s = srcFilter.fold(src)(src.filter).count().toDouble
-    val t = tgtFilter.fold(tgt)(tgt.filter).count().toDouble
-    val d = pctDiff(s, t)
-    ReconResult("row_count", s, t, d, d <= tolerancePct)
-  }
-
-  /** Q16 — aggregate reconciliation (sum/avg/min/max/count of a column on
-    * both sides). Sums/avgs go through exact decimal(18,2) accumulation so
-    * the comparison is reproducible. */
-  def aggregation(src: DataFrame, tgt: DataFrame, column: String, fn: String,
-      tolerancePct: Double): ReconResult = {
-    def scalar(df: DataFrame): Double = {
-      val c = fn.toLowerCase match {
-        case "sum" => sum(col(column).cast("decimal(18,2)")).cast("double")
-        case "avg" => (sum(col(column).cast("decimal(18,2)")).cast("double")
-          / count(col(column)).cast("double"))
-        case "min" => min(col(column)).cast("double")
-        case "max" => max(col(column)).cast("double")
-        case "count" => count(col(column)).cast("double")
-        case other => throw new IllegalArgumentException(s"unsupported agg: $other")
-      }
-      val r = df.agg(c.as("v")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    val s = scalar(src)
-    val t = scalar(tgt)
-    val d = pctDiff(s, t)
-    ReconResult(s"agg_$fn($column)", s, t, d, d <= tolerancePct)
-  }
-
-  /** Q17 — key integrity: distinct source keys missing from the target,
-    * with a deterministic sample (sorted by the keys, not limit()). */
-  def keyIntegrity(src: DataFrame, tgt: DataFrame, keys: Seq[String],
-      sampleN: Int = 10): (Long, DataFrame) = {
-    val missing = Joins.missingKeys(src, tgt, keys)
-    (missing.count(), missing.orderBy(keys.map(col): _*).limit(sampleN))
-  }
 
   /** Q18 — per-column completeness (non-null %) diff between layers. */
   def completeness(src: DataFrame, tgt: DataFrame, columns: Seq[String],
@@ -92,32 +46,10 @@ object Reconciliation {
     }
   }
 
-  /** Q19 — the reference's gold invariants: Σ mart count == silver count
-    * (exact) and Σ mart revenue ≈ Σ silver revenue (relative tolerance). */
-  def goldInvariants(silver: DataFrame, mart: DataFrame, countCol: String,
-      silverAmountCol: String, martAmountCol: String,
-      tolerancePct: Double = 0.1): Seq[ReconResult] = {
-    val silverCount = silver.count().toDouble
-    val martCount = {
-      val r = mart.agg(sum(col(countCol)).cast("double")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    def dsum(df: DataFrame, c: String): Double = {
-      val r = df.agg(sum(col(c).cast("decimal(18,2)")).cast("double")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    val sAmt = dsum(silver, silverAmountCol)
-    val mAmt = dsum(mart, martAmountCol)
-    val dAmt = pctDiff(sAmt, mAmt)
-    Seq(
-      ReconResult("gold_count_equality", silverCount, martCount,
-        pctDiff(silverCount, martCount), silverCount == martCount),
-      ReconResult("gold_revenue_tolerance", sAmt, mAmt, dAmt, dAmt <= tolerancePct))
-  }
-
-  /** DataFrame-shaped reconciliation report (for SQL-oracle comparison and
-    * persistence): all metrics computed IN the engine, one row per check —
-    * no driver-side collect in the plan. */
+  /** Q15-Q17 as one DataFrame-shaped report (for SQL-oracle comparison and
+    * persistence): row count, exact decimal sum of `sumCol`, and source
+    * keys missing from the target, all computed IN the engine, one row per
+    * check — no driver-side collect in the plan. */
   def reportDF(src: DataFrame, tgt: DataFrame, sumCol: String,
       keyCol: String, tolerancePct: Double): DataFrame = {
     val s = src.agg(
@@ -149,9 +81,9 @@ object Reconciliation {
       .withColumn("within_tolerance", d <= lit(tolerancePct))
   }
 
-  /** Distinct-count reconciliation from KMV SKETCHES (the scale form of
-    * [[aggregation]] with fn=count-distinct, which needs an exact
-    * distinct pass per side): both layers reduce to a bottom-k sketch
+  /** Distinct-count reconciliation from KMV SKETCHES (the scale form of an
+    * exact count-distinct comparison, which needs an exact distinct pass
+    * per side): both layers reduce to a bottom-k sketch
     * (≤ k longs each, one aggregate, no row-grain shuffle), estimates
     * compared in integer micro-units against `toleranceE6`. Because the
     * sketch is a pure function of the input set over a documented hash
@@ -277,30 +209,6 @@ object Reconciliation {
     prev.select(outCols: _*)
       .join(dels, keyCols, "left_anti")
       .unionByName(ups)
-  }
-
-  /** Schema drift between two DataFrames — one row per column present in
-    * either schema: (column, prev_type, next_type, status in
-    * added/removed/retyped/unchanged). Pure metadata (driver-side schema
-    * objects, zero jobs) — the data never moves, so this is free at any
-    * scale and safe to run before every incremental load as a contract
-    * gate. Type names are Spark SQL's `simpleString` (e.g. "decimal(12,2)"). */
-  def schemaDiff(prev: DataFrame, next: DataFrame): DataFrame = {
-    val spark = prev.sparkSession
-    import spark.implicits._
-    val pt = prev.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    val nt = next.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    // preserve prev's column order, then next-only columns in next's order
-    val cols = prev.schema.fieldNames ++ next.schema.fieldNames.filterNot(pt.contains)
-    cols.toSeq.map { c =>
-      val (pv, nv) = (pt.get(c), nt.get(c))
-      val status =
-        if (pv.isEmpty) "added"
-        else if (nv.isEmpty) "removed"
-        else if (pv != nv) "retyped"
-        else "unchanged"
-      (c, pv.getOrElse(""), nv.getOrElse(""), status)
-    }.toDF("column", "prev_type", "next_type", "status")
   }
 
   /** SCD Type-2 history from a change/event stream: one validity interval

@@ -44,8 +44,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Exact top-k cosine neighbors for each query vector.
     * Output: (query_id, neighbor_id, rank, sim_e6) — similarity in
     * micro-units (integer) for cross-engine-stable comparison; ranking on
@@ -255,39 +253,11 @@ object Similarity {
         round(col("sim") * 1e6).cast("long").as("sim_e6"))
   }
 
-  /** Symmetric int8 quantization of an embedding column — the 4× storage
-    * reduction that makes a 100 TB embedding corpus scannable: per-vector
-    * scale = max|x|/127, code_i = round-half-up(x_i/scale). Rounding is
-    * `floor(x + 0.5)` explicitly (identical in every engine; `round()`
-    * half-way semantics differ between engines on doubles). Zero vectors
-    * quantize to all-zero codes with scale 0. Returns
-    * struct(scale double, codes array<int>). */
-  def quantizeInt8(vecCol: Column): Column = {
-    val v = transform(vecCol, x => x.cast("double"))
-    val rawScale = array_max(transform(v, x => abs(x))) / lit(127.0)
-    val safe = when(rawScale === 0.0, lit(1.0)).otherwise(rawScale)
-    struct(
-      rawScale.as("scale"),
-      transform(v, x => floor(x / safe + lit(0.5)).cast("int")).as("codes"))
-  }
-
-  /** Reconstruction of a quantized vector: code_i × scale. */
-  def dequantizeInt8(quantCol: Column): Column =
-    transform(quantCol.getField("codes"),
-      c => c.cast("double") * quantCol.getField("scale"))
-
-  /** Deterministic pseudo-random hyperplane coefficient for (plane, dim):
-    * first 4 md5 hex digits of "plane:dim" mapped to [-0.5, 0.5). Constant-
-    * folded by Catalyst. */
-  private def planeCoef(plane: Int, dim: Int): Column =
-    (conv(substring(md5(lit(s"$plane:$dim")), 1, 4), 16, 10).cast("double")
-      / lit(65536.0)) - lit(0.5)
-
   /** Sign-hash bucket key: one bit per hyperplane (sign of vec·plane).
     * Native `vec_lsh_bucket` (graft.catalyst.VecLshBucket): ONE codegen'd
     * double loop per row with the plane matrix held as expression state.
-    * The Column-composed form below (`lshBucketBuiltin`) is a numPlanes×dim
-    * `element_at` tree — at production dims (768–1536 × 16 planes) that
+    * The Column-composed form (the spec's `lshBucketBuiltin`) is a
+    * numPlanes×dim `element_at` tree — at production dims (768–1536 × 16 planes) that
     * plan is tens of thousands of nodes and trips codegen's 64KB method
     * limit into interpreted fallback; the native form is O(1) plan nodes at
     * any dim (spec-asserted bit-identical at dim 64, constructible and
@@ -295,26 +265,13 @@ object Similarity {
   def lshBucket(vecCol: Column, numPlanes: Int, dim: Int): Column =
     call_function("vec_lsh_bucket", vecCol, lit(numPlanes), lit(dim))
 
-  /** Pure-builtin fold form of `lshBucket` — same planes, same bit order,
-    * bit-identical output (spec-asserted); usable without GraftExtensions
-    * but only at toy dims (plan size ∝ numPlanes×dim). */
-  def lshBucketBuiltin(vecCol: Column, numPlanes: Int, dim: Int): Column = {
-    val bits = (0 until numPlanes).map { p =>
-      val d = (0 until dim).map(i =>
-        element_at(vecCol, i + 1).cast("double") * planeCoef(p, i))
-        .reduce(_ + _)
-      when(d >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   // ---- IVF (inverted-file) coarse quantization --------------------------
 
   /** Deterministic centroid sample: the k lowest-id vectors, L2-normalized
     * driver-side (normalized centroids make argmax(dot) ≡ argmax(cosine),
     * since the query's own norm is constant across centroids). This is the
-    * SEED for `kMeansCentroids`, and usable alone when training cost matters
-    * more than bucket balance. */
+    * SEED for `kMeansCentroidsExact`, and usable alone when training cost
+    * matters more than bucket balance. */
   def sampleCentroids(df: DataFrame, idCol: String, vecCol: String,
       k: Int): Seq[Array[Float]] =
     df.orderBy(col(idCol)).limit(k).select(col(vecCol)).collect().map { r =>
@@ -331,16 +288,7 @@ object Similarity {
     * never row data — so each round is one scan + one keyed shuffle at any
     * corpus size. Empty buckets keep their previous centroid.
     *
-    * Bucket means are DOUBLE sums: fastest, but the reduction order (and
-    * so the last ulp of every centroid) depends on partitioning — use
-    * [[kMeansCentroidsExact]] when training must be reproducible. */
-  def kMeansCentroids(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): Seq[Array[Float]] =
-    lloyd(df, idCol, vecCol, k, iters,
-      sumExpr = sum(col("x").cast("double")).as("s"),
-      meanOf = r => r.getDouble(2) / r.getLong(3))
-
-  /** [[kMeansCentroids]] in FIXED-POINT: per-bucket component sums
+    * FIXED-POINT: per-bucket component sums
     * accumulate as e6 micro-unit BIGINTs (each Float component rounds once
     * to round(x·1e6)), means are truncating integer divisions (≡ Spark
     * `div` ≡ DuckDB `//` — all toward zero; floorDiv would sit 1 below
@@ -352,19 +300,18 @@ object Similarity {
     * The micro-unit quantization perturbs each mean by < 1e-6 per
     * component — noise far below Lloyd's own seed sensitivity — and buys
     * an end-to-end replayable training loop: q40's oracle unrolls these
-    * exact iterations in SQL. Same scale shape as the double variant. */
+    * exact iterations in SQL. */
   def kMeansCentroidsExact(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): Seq[Array[Float]] =
     lloyd(df, idCol, vecCol, k, iters,
       sumExpr = sum(round(col("x").cast("double") * 1e6).cast("long")).as("s_e6"),
       meanOf = r => (r.getLong(2) / r.getLong(3)).toDouble / 1e6)
 
-  /** The shared Lloyd driver: one scan + one keyed shuffle per round,
+  /** The Lloyd driver: one scan + one keyed shuffle per round,
     * parameterized by the bucket-sum aggregate and the mean extraction —
-    * the ONLY two points where the double and fixed-point variants differ
-    * (assignment, empty-bucket policy, and renormalization stay in one
-    * place). */
-  private def lloyd(df: DataFrame, idCol: String, vecCol: String,
+    * the ONLY two points where the fixed-point form and the spec's
+    * double-sum twin differ. */
+  private[similarity] def lloyd(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, sumExpr: Column,
       meanOf: org.apache.spark.sql.Row => Double): Seq[Array[Float]] = {
     var cents = sampleCentroids(df, idCol, vecCol, k)
@@ -403,27 +350,13 @@ object Similarity {
   private def centroidLit(centroids: Seq[Array[Float]]): Column =
     typedlit(centroids.map(_.toSeq))
 
-  /** Scores against every centroid as (score, centroidIdx) structs.
-    * array_min over structs compares fields in order → min(-dot) = argmax
-    * dot, ties to the lowest centroid index. All row-local vec_dot loops. */
-  private def centroidStructs(vecCol: Column, centroids: Seq[Array[Float]]): Column =
-    array(centroids.zipWithIndex.map { case (c, i) =>
-      struct((-dot(vecCol, typedlit(c.toSeq))).as("d"), lit(i).as("c"))
-    }: _*)
-
   /** IVF assignment: each vector's nearest centroid id. Native
     * `vec_nearest_centroid` (graft.catalyst.VecNearestCentroid): one
     * codegen'd k×dim loop against a flat float[] reference object — O(1)
-    * plan nodes at any k (spec-asserted equal to `ivfBucketBuiltin`,
+    * plan nodes at any k (spec-asserted equal to the struct-composed form,
     * constructible and codegen'd at k=256). */
   def ivfBucket(vecCol: Column, centroids: Seq[Array[Float]]): Column =
     call_function("vec_nearest_centroid", vecCol, centroidLit(centroids))
-
-  /** Struct-composed form of `ivfBucket` — same argmax(dot) with ties to
-    * the lowest index (spec-asserted equal); plan size ∝ k×dim, so toy k
-    * only. */
-  def ivfBucketBuiltin(vecCol: Column, centroids: Seq[Array[Float]]): Column =
-    array_min(centroidStructs(vecCol, centroids)).getField("c")
 
   /** The nProbe nearest centroid indices for a query vector (descending
     * dot, ties → lower index). Native `vec_top_centroids` — one codegen'd
@@ -432,12 +365,6 @@ object Similarity {
       nProbe: Int): Column =
     call_function("vec_top_centroids", vecCol, centroidLit(centroids),
       lit(nProbe))
-
-  /** Struct-composed form of `topCentroids` (spec-asserted equal). */
-  def topCentroidsBuiltin(vecCol: Column, centroids: Seq[Array[Float]],
-      nProbe: Int): Column =
-    transform(slice(array_sort(centroidStructs(vecCol, centroids)), 1, nProbe),
-      s => s.getField("c"))
 
   /** Cosine of every vector to its assigned (nearest) centroid — the
     * embedding-space QUALITY signal: vectors far from every cluster are

@@ -322,15 +322,7 @@ object Chunking {
     * `salt` for an independent re-draw.
     *
     * Scale shape: ONE window per stratum over row data — the dedupe
-    * row_number posture, skew-bounded by the largest stratum. For a
-    * stratum too large to sort in one task, pre-thin with
-    * [[fixedSamplePrethin]] (the SAME salted hash, thresholded) at a rate
-    * safely above n/|stratum| and draw the exact n from the survivors:
-    * the threshold keeps a DOWN-SET of the draw order, so whenever it
-    * keeps ≥ n rows in a stratum the two-pass draw equals the direct one
-    * bit-for-bit (spec-asserted). An INDEPENDENT hash predicate (e.g.
-    * `stratifiedHashSample`, different salt) does NOT have this property
-    * — it can thin away top-n rows while keeping plenty of others. */
+    * row_number posture, skew-bounded by the largest stratum. */
   def stratifiedFixedSample(df: DataFrame, strataCol: Column, keyCol: Column,
       n: Int, salt: String = "sample"): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
@@ -338,22 +330,6 @@ object Chunking {
     val w = Window.partitionBy(strataCol).orderBy(h, keyCol)
     df.withColumn("sample_rank", row_number().over(w).cast("long"))
       .filter(col("sample_rank") <= n)
-  }
-
-  /** Pushable pre-thin ALIGNED with [[stratifiedFixedSample]]'s draw
-    * order: keeps rows whose salted sample hash's leading byte is below
-    * `max256` (rate ≈ max256/256). Because the predicate is a monotone
-    * THRESHOLD on the same sort key, the kept set is a down-set of the
-    * draw order — if ≥ n rows of a stratum survive, they include that
-    * stratum's true top n, so the exact draw over the survivors equals
-    * the direct draw. Use when a stratum is too large to sort in one
-    * window task. */
-  def fixedSamplePrethin(keyCol: Column, max256: Int,
-      salt: String = "sample"): Column = {
-    require(max256 >= 1 && max256 <= 256,
-      s"max256 must be in [1,256], got $max256")
-    val h = md5(concat_ws(":", lit(salt), keyCol.cast("string")))
-    conv(substring(h, 1, 2), 16, 10).cast("long") < lit(max256.toLong)
   }
 
   /** Deterministic epoch shuffle + shard assignment — the training-order

@@ -157,11 +157,6 @@ object Curation {
           .cast("long"))
   }
 
-  /** Gopher-style hard quality gate: token-count band, mean-word-length
-    * band, type-token-ratio floor, duplicate-bigram ceiling. Emits the
-    * signal columns, the verdict, and the FIRST failing rule's name (fixed
-    * evaluation order, '' when passed) — the form a curation pipeline logs
-    * for filter-rate audits. Row-local, zero shuffle. */
   /** The four signal columns in one fixed order, paired with the gate
     * rules below through the Signals holder — a positional swap cannot
     * silently cross the same-typed thresholds. */
@@ -248,6 +243,11 @@ object Curation {
           "ELSE -((-score_e6 * 500000L) div (1000000L - score_e6)) END)"))
   }
 
+  /** Gopher-style hard quality gate: token-count band, mean-word-length
+    * band, type-token-ratio floor, duplicate-bigram ceiling. Emits the
+    * signal columns, the verdict, and the FIRST failing rule's name (fixed
+    * evaluation order, '' when passed) — the form a curation pipeline logs
+    * for filter-rate audits. Row-local, zero shuffle. */
   def qualityFilter(df: DataFrame, idCol: String, textCol: String,
       minTokens: Long = 20L, maxTokens: Long = 90L,
       minAvgTokenLenE6: Long = 3000000L, maxAvgTokenLenE6: Long = 8000000L,

@@ -74,29 +74,16 @@ object TextAnalysis {
     }
   }
 
-  /** BPE-style pre-tokenization (the GPT-2 pre-tokenizer family, simplified
-    * to an engine-portable regex — no lookahead so RE2 engines agree with
-    * Java, ASCII classes so unicode-table versions can't diverge):
-    * contraction suffixes, space-prefixed letter runs, digit runs, and
-    * punctuation runs. The practical "how many tokens will the tokenizer
-    * emit" estimator a data pipeline budgets with — whitespace counts
-    * undershoot by 20-40% on punctuated text. */
-  val bpePattern: String = "'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
-
-  def bpeTokens(c: Column): Column =
-    regexp_extract_all(c, lit(bpePattern), lit(0))
-
-  /** Native `bpe_token_count` (graft.catalyst.BpeTokenCount): the pattern's
+  /** BPE-style pre-token COUNT (the GPT-2 pre-tokenizer family, simplified
+    * to an engine-portable regex: contraction suffixes, space-prefixed
+    * letter runs, digit runs, and punctuation runs). The practical "how
+    * many tokens will the tokenizer emit" estimator a data pipeline budgets
+    * with — whitespace counts undershoot by 20-40% on punctuated text.
+    * Native `bpe_token_count` (graft.catalyst.BpeTokenCount): the pattern's
     * match count as one compiled character scan — no regex engine on the
     * hot path, no token array materialized. Spec-asserted equal to the
     * builtin regex forms. */
   def bpeTokenCount(c: Column): Column = call_function("bpe_token_count", c)
-
-  /** `regexp_count` form — same Java-regex match count, usable without
-    * GraftExtensions; still avoids materializing the token array that
-    * `size(regexp_extract_all(...))` would (a document's worth of short
-    * strings per row, pure GC pressure). */
-  def bpeTokenCountBuiltin(c: Column): Column = regexp_count(c, lit(bpePattern))
 
   /** Content fingerprint: md5 of the normalized text — identical hex in every
     * engine; the exact-dedup key. */
@@ -737,7 +724,7 @@ object TextAnalysis {
   /** Word n-grams of a token-array column, space-joined. Callers guard
     * `size(toksCol) >= n`; below that the greatest() floor yields one
     * partial gram that the guard discards. */
-  private def gramsOf(toksCol: String, n: Int): Column =
+  private[text] def gramsOf(toksCol: String, n: Int): Column =
     expr(s"transform(sequence(1, greatest(size($toksCol) - ${n - 1}, 1)), " +
       s"i -> concat_ws(' ', slice($toksCol, i, $n)))")
 
@@ -747,8 +734,8 @@ object TextAnalysis {
     * Heavily repeated boilerplate/spam scores high; documents shorter than
     * n tokens score 0. Row-local — zero shuffle at any corpus size.
     * Computed by the native `dup_gram_frac_e6` Expression (one pass, no
-    * gram-string materialization); `repetitionProfileBuiltin` is the
-    * builtin-HOF reference form it is spec-asserted identical to. */
+    * gram-string materialization), spec-asserted identical to a
+    * builtin-HOF reference form. */
   def repetitionProfile(df: DataFrame, textCol: String,
       ns: Seq[Int] = Seq(2, 3)): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram sizes: $ns")
@@ -756,23 +743,6 @@ object TextAnalysis {
       acc.withColumn(s"dup_${n}gram_frac_e6",
         call_function("dup_gram_frac_e6", col(textCol), lit(n)))
     }
-  }
-
-  /** The interpreted-HOF reference form of [[repetitionProfile]] — the
-    * correctness baseline for the native expression's spec. */
-  def repetitionProfileBuiltin(df: DataFrame, textCol: String,
-      ns: Seq[Int] = Seq(2, 3)): DataFrame = {
-    require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram sizes: $ns")
-    val out = ns.foldLeft(df.withColumn("_toks", tokens(col(textCol)))) {
-      (acc, n) =>
-        val grams = gramsOf("_toks", n)
-        acc.withColumn(s"dup_${n}gram_frac_e6",
-          when(size(col("_toks")) < n, lit(0L)).otherwise(
-            round((lit(1.0) -
-              size(array_distinct(grams)).cast("double") /
-                size(grams).cast("double")) * 1e6).cast("long")))
-    }
-    out.drop("_toks")
   }
 
   /** Benchmark-contamination score — the decontamination signal of

@@ -755,96 +755,6 @@ class PipelineSpec extends SparkSpec {
     e4.getMessage should include("queries_filter")
   }
 
-  test("persisted-corpus continuous ingest: corpus side joins with NO Exchange") {
-    import graft.dedup.Dedup
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    // the historical corpus: boilerplate variants + unique docs
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "an entirely different historical document with its own words"),
-      (3L, "yet another unique corpus entry written some time ago"))
-      .toDF("doc_id", "text")
-    // an arriving batch: 11 near-dups the corpus already has, 12 is fresh
-    val batch = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (12L, "completely novel arrival that matches nothing in history"))
-      .toDF("doc_id", "text")
-
-    val bcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    // force real shuffle planning (tiny frames broadcast otherwise — which
-    // SHIPS the corpus, the opposite of the bucketed contract) and a plain
-    // plan tree for the traversal
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // ingest run 0: build + persist the corpus state ONCE, durably
-      Dedup.persistCorpusFuzzyState(corpus, "doc_id", "text", shingleN = 3,
-        tablePrefix = "corpus_fuzzy", buckets = 4)
-      // a later run (fresh lineage, catalog only): re-ingest a batch. The
-      // signing parameters ride with the state — a run that "remembered"
-      // different numHashes/numBands would get near-zero band collisions
-      // and silently miss dups, so load hands back the stored truth.
-      val (cb, cs, params) = Dedup.loadCorpusFuzzyState(spark, "corpus_fuzzy")
-      params shouldBe graft.dedup.FuzzySigningParams(
-        shingleN = 3, numHashes = 8, numBands = 4,
-        maxBucketSize = Int.MaxValue)
-      val out = Dedup.fuzzyDedupePrepared(batch, cb, cs, "doc_id", "text",
-        params.shingleN, threshold = 0.5, params.numHashes, params.numBands)
-      out.select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(12L)
-      // same answer as the derive-per-call convenience form
-      Dedup.fuzzyDedupeAgainstCorpus(batch, corpus, "doc_id", "text",
-          shingleN = 3, threshold = 0.5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(12L)
-      // ...and as the misconfiguration-proof persisted entry point
-      Dedup.fuzzyDedupeAgainstPersisted(batch, spark, "corpus_fuzzy",
-          "doc_id", "text", threshold = 0.5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(12L)
-      // hand-written state without the stamp must fail loudly, not sign
-      // with whatever defaults happen to be in scope
-      spark.sql("ALTER TABLE corpus_fuzzy_buckets UNSET TBLPROPERTIES " +
-        "('graft.fuzzy.num_bands')")
-      val err = intercept[IllegalStateException] {
-        Dedup.loadCorpusFuzzyState(spark, "corpus_fuzzy")
-      }
-      err.getMessage should include("graft.fuzzy.num_bands")
-      spark.sql("ALTER TABLE corpus_fuzzy_buckets SET TBLPROPERTIES " +
-        "('graft.fuzzy.num_bands'='4')")
-
-      val plan = out.queryExecution.executedPlan
-      // the corpus state must be read as bucketed scans...
-      plan.toString should include("SelectedBucketsCount")
-      // ...and no Exchange may sit BETWEEN a corpus-state scan and the
-      // join that consumes it — the batch side shuffles into the corpus's
-      // bucket layout, never the reverse. (An exchange ABOVE a join is a
-      // different frame: the candidate set derived from that join — its
-      // subtree mentions the corpus scan but doesn't move the corpus.)
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.joins.BaseJoinExec
-      def corpusScanNotBehindJoin(p: SparkPlan): Boolean = p match {
-        case _: BaseJoinExec => false // crossed into a pre-join frame
-        case s: FileSourceScanExec =>
-          s.toString.contains("corpus_fuzzy")
-        case other => other.children.exists(corpusScanNotBehindJoin)
-      }
-      val exchanges = plan.collect {
-        case e: ShuffleExchangeExec => e
-        case e: BroadcastExchangeExec => e
-      }
-      exchanges should not be empty // the batch side DOES shuffle
-      exchanges.foreach { e =>
-        withClue(s"corpus state re-shuffled by:\n$e") {
-          corpusScanNotBehindJoin(e.children.head) shouldBe false
-        }
-      }
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastBefore)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.sql("DROP TABLE IF EXISTS corpus_fuzzy_buckets")
-      spark.sql("DROP TABLE IF EXISTS corpus_fuzzy_sets")
-    }
-  }
-
   test("prefix dedup drives from YAML; its knobs are rejected elsewhere") {
     val yaml =
       """version: "1.0"

@@ -44,11 +44,6 @@ class IngestSpec extends SparkSpec {
       Ingest.readSource(spark, SourceSpec("postgres", "jdbc:...", "parquet"))
   }
 
-  test("renderPattern fills {year} and {month:02d}") {
-    Ingest.renderPattern("{base}/yellow_{year}-{month:02d}.parquet", 2024, 3) shouldBe
-      "{base}/yellow_2024-03.parquet"
-  }
-
   test("dropAllNullColumns drops only 100%-null columns, one pass") {
     val df = Seq((1, Option.empty[String], Some(1.0)),
       (2, Option.empty[String], None)).toDF("id", "all_null", "some_null")
@@ -56,64 +51,10 @@ class IngestSpec extends SparkSpec {
     out.columns.toSeq shouldBe Seq("id", "some_null")
   }
 
-  test("metadata and partition columns are appended") {
-    val df = Ingest.withPartitionColumns(
-      Ingest.withIngestionMetadata(Seq(1, 2).toDF("v"), "s3://x/f.parquet"),
-      2024, 3)
-    df.columns should contain allOf ("_ingestion_timestamp", "_source_file", "year", "month")
+  test("ingestion metadata columns are appended") {
+    val df = Ingest.withIngestionMetadata(Seq(1, 2).toDF("v"), "s3://x/f.parquet")
+    df.columns should contain allOf ("_ingestion_timestamp", "_source_file")
     df.select("_source_file").distinct().head().getString(0) shouldBe "s3://x/f.parquet"
-  }
-
-  test("multi-month ingest unions months with partition columns") {
-    val dir = Files.createTempDirectory("graft_months")
-    Seq(1, 2).toDF("v").write.parquet(dir.resolve("m_2024-01.parquet").toString)
-    Seq(3).toDF("v").write.parquet(dir.resolve("m_2024-02.parquet").toString)
-    val spec = graft.config.ConfigLoader.BronzeSpec(
-      source = SourceSpec("file", s"$dir/m_{year}-{month:02d}.parquet", "parquet"),
-      targetPath = "/unused")
-    val df = Ingest.readMonths(spark, spec, Seq((2024, 1), (2024, 2)))
-    df.count() shouldBe 3
-    df.where("month = 2").count() shouldBe 1
-  }
-
-  test("jdbc sink/source round-trips through Derby with if_exists modes") {
-    val url = "jdbc:derby:memory:graftjdbc;create=true"
-    val opts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    val df = Seq((1L, "a", 10.5), (2L, "b", 20.0)).toDF("id", "name", "amount")
-    Ingest.writeJdbc(df, url, "trips", ifExists = "fail", opts)
-    // fail on existing table, exactly like pandas if_exists='fail'
-    a[Throwable] should be thrownBy
-      Ingest.writeJdbc(df, url, "trips", ifExists = "fail", opts)
-    // append doubles the rows
-    Ingest.writeJdbc(df, url, "trips", ifExists = "append", opts)
-    Ingest.readJdbc(spark, url, "trips", opts).count() shouldBe 4
-    // replace resets the table
-    Ingest.writeJdbc(df, url, "trips", ifExists = "replace", opts)
-    val back = Ingest.readJdbc(spark, url, "trips", opts)
-    back.count() shouldBe 2
-    back.orderBy("id").collect().map(_.getString(1)).toSeq shouldBe Seq("a", "b")
-    an[IllegalArgumentException] should be thrownBy
-      Ingest.writeJdbc(df, url, "trips", ifExists = "upsert", opts)
-  }
-
-  test("chunked write caps rows per output file and rolls over within a task") {
-    val dir = Files.createTempDirectory("graft_chunked").toString
-    // ONE input partition of 1000 rows: only maxRecordsPerFile rollover can
-    // split it into multiple files (task count can't)
-    val df = spark.range(1000).toDF("id").repartition(1)
-    Ingest.writeChunked(df, dir, "overwrite", chunkRows = 300L)
-    val files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.toString).toSeq
-    files.size shouldBe 4 // 300+300+300+100
-    files.foreach { f =>
-      spark.read.parquet(f).count() should be <= 300L
-    }
-    spark.read.parquet(dir).count() shouldBe 1000
-    // append mode adds files, never rewrites
-    Ingest.writeChunked(spark.range(100).toDF("id"), dir, "append", 300L)
-    spark.read.parquet(dir).count() shouldBe 1100
-    an[IllegalArgumentException] should be thrownBy
-      Ingest.writeChunked(df, dir, "errorifexists", 300L)
   }
 
   test("partitioned write enables partition pruning on read") {

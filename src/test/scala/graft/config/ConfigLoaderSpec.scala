@@ -53,6 +53,9 @@ class ConfigLoaderSpec extends AnyFunSuite with Matchers {
     c.quality.expectations shouldBe Seq(
       ExpectationSpec("mean_between", "fare_amount", 0.0, 100.0),
       ExpectationSpec("row_count_between", "*", 1000.0, Double.PositiveInfinity))
+    // a key no run reads still loads: unknown keys pass through
+    ConfigLoader.parse(baseYaml + "performance:\n  collect_histograms: true\n",
+      env = Map.empty).performance shouldBe PerformanceSpec()
   }
 
   test("${VAR} expansion uses the environment and errors when unset") {

@@ -11,18 +11,10 @@ class ConfigVersionsSpec extends AnyFunSuite with Matchers {
     ConfigVersions.versionOf(Map.empty) shouldBe "v1.0"
   }
 
-  test("support / current / needs-migration checks") {
+  test("supported-version registry") {
     ConfigVersions.isSupported("v1.0") shouldBe true
     ConfigVersions.isSupported("v1.1") shouldBe true
     ConfigVersions.isSupported("v2.0") shouldBe false
-    ConfigVersions.isCurrent("v1.0") shouldBe true
-    // unsupported versions can't migrate; v1.0 is already current;
-    // v1.1 > current is forward-compatible, not a migration
-    ConfigVersions.needsMigration("v2.0") shouldBe false
-    ConfigVersions.needsMigration("v1.0") shouldBe false
-    ConfigVersions.needsMigration("v1.1") shouldBe false
-    ConfigVersions.parseVersion("v1.1") shouldBe ((1, 1))
-    ConfigVersions.parseVersion("2.0-beta") shouldBe ((2, 0))
   }
 
   test("migrate: same version unchanged, fallback bumps version only") {
@@ -38,15 +30,6 @@ class ConfigVersionsSpec extends AnyFunSuite with Matchers {
       ConfigVersions.migrate(Map("version" -> "v0.9"), "v1.0")
     a[ConfigLoader.ConfigError] should be thrownBy
       ConfigVersions.migrate(Map("version" -> "v1.0"), "v9.9")
-  }
-
-  test("validateCompatibility messages match the reference states") {
-    ConfigVersions.validateCompatibility(Map("version" -> "v1.0")) shouldBe
-      ((true, "Configuration is at current version: v1.0"))
-    ConfigVersions.validateCompatibility(Map("version" -> "v1.1"))._1 shouldBe true
-    val (ok, msg) = ConfigVersions.validateCompatibility(Map("version" -> "v3.0"))
-    ok shouldBe false
-    msg should include("Unsupported configuration version")
   }
 
   test("ConfigLoader.parse migrates the raw tree before mapping") {

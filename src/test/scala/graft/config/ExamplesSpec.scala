@@ -98,22 +98,4 @@ class ExamplesSpec extends SparkSpec {
       "gold.corpus_levels" -> 120L)
     result.qualityResults.filterNot(_.passed) shouldBe empty
   }
-
-  test("examples/datasets.yaml parses with its documented overlay semantics") {
-    val yaml = read("examples/datasets.yaml")
-    val dev = ConfigLoader.parseDatasets(yaml,
-      environment = Some("dev"), env = Map.empty)
-    // enabled datasets only (fhv is enabled: false), in priority order
-    // (taxi_zones ships priority 0 — ahead of the monthly feeds)
-    dev.map(_.name) shouldBe
-      Seq("taxi_zones", "yellow_taxi", "green_taxi")
-    // the dev environment's frequency default overlays every dataset
-    // that does not set its own... and every shipped dataset that sets
-    // one keeps it (per-dataset keys win over environment defaults)
-    dev.find(_.name == "taxi_zones").get.frequency shouldBe "yearly"
-    dev.find(_.name == "yellow_taxi").get.frequency shouldBe "monthly"
-    // the CSV feed carries its format through; parquet is the default
-    dev.find(_.name == "taxi_zones").get.format shouldBe "csv"
-    dev.find(_.name == "green_taxi").get.format shouldBe "parquet"
-  }
 }

@@ -28,40 +28,4 @@ class PerfConfSpec extends SparkSpec {
     } finally df.unpersist()
     an[IllegalArgumentException] should be thrownBy PerfConf.storageLevel("TAPE")
   }
-
-  test("analyzeTable computes CBO statistics for a registered table") {
-    (1 to 50).toDF("v").write.mode("overwrite").saveAsTable("perfconf_t")
-    try {
-      PerfConf.analyzeTable(spark, "perfconf_t", Seq("v"))
-      val stats = spark.table("perfconf_t").queryExecution.optimizedPlan.stats
-      stats.rowCount shouldBe Some(BigInt(50))
-    } finally spark.sql("DROP TABLE perfconf_t")
-  }
-
-  test("dataset registry: env defaults, enabled filter, priority order, overrides") {
-    val yaml =
-      """datasets:
-        |  - {name: yellow, source_path: /d/yellow.parquet, target_table: yellow_raw, priority: 2}
-        |  - {name: green, source_path: /d/green.parquet, target_table: green_raw, priority: 1}
-        |  - {name: fhv, enabled: false, source_path: /d/fhv.parquet, target_table: fhv_raw}
-        |environments:
-        |  dev:
-        |    frequency: daily
-        |""".stripMargin
-    val ds = ConfigLoader.parseDatasets(yaml, environment = Some("dev"), env = Map.empty)
-    ds.map(_.name) shouldBe Seq("green", "yellow") // priority order, fhv dropped
-    ds.head.frequency shouldBe "daily" // env default applied
-
-    val base = ConfigLoader.parse(
-      """version: "1.0"
-        |pipeline: {name: master}
-        |bronze:
-        |  source: {type: file, path: /orig.parquet}
-        |  target_path: /lake/bronze
-        |""".stripMargin, env = Map.empty)
-    val applied = ConfigLoader.applyDataset(base, ds.head)
-    applied.name shouldBe "green"
-    applied.bronze.get.source.path shouldBe "/d/green.parquet"
-    applied.bronze.get.targetPath shouldBe "/lake/bronze/green_raw"
-  }
 }

@@ -15,7 +15,7 @@ class DedupSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("shingles: n-grams, distinct, empty for too-short docs") {
-    val sh = docs.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
+    val sh = docs.select(col("doc_id"), DedupTwins.shingles(col("text"), 3).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     sh(1L) should contain("alpha beta gamma")
     sh(1L).length shouldBe 4 // 6 tokens → 4 trigrams
@@ -133,12 +133,12 @@ class DedupSpec extends SparkSpec {
   test("native minhash_sigs/simhash32 equal the builtin HOF forms") {
     import org.apache.spark.sql.functions.{call_function, lit}
     val hs = docs.select(col("doc_id"),
-        Dedup.shingleBaseHashes(Dedup.shingles(col("text"), 3)).as("hs"))
+        DedupTwins.shingleBaseHashes(DedupTwins.shingles(col("text"), 3)).as("hs"))
       .filter(org.apache.spark.sql.functions.size(col("hs")) > 0)
     val cmp = hs.select(col("doc_id"),
       call_function("minhash_sigs", col("hs"), lit(4)).as("sigs"),
-      Dedup.minHashValue(col("hs"), 0).as("m0"),
-      Dedup.minHashValue(col("hs"), 3).as("m3"))
+      DedupTwins.minHashValue(col("hs"), 0).as("m0"),
+      DedupTwins.minHashValue(col("hs"), 3).as("m3"))
     cmp.collect().foreach { r =>
       val sigs = r.getSeq[Long](1)
       sigs(0) shouldBe r.getLong(2)
@@ -146,13 +146,13 @@ class DedupSpec extends SparkSpec {
     }
     val th = docs.select(col("doc_id"), Dedup.tokenHashes(col("text")).as("th"))
     th.select(call_function("simhash32", col("th")).as("a"),
-        Dedup.simHashFromHashes(col("th")).as("b"))
+        DedupTwins.simHashFromHashes(col("th")).as("b"))
       .collect().foreach(r => r.getLong(0) shouldBe r.getLong(1))
 
     // shingle_hashes ≡ builtin shingles→md5 pipeline, element for element
     docs.select(
         call_function("shingle_hashes", col("text"), lit(3)).as("a"),
-        Dedup.shingleBaseHashes(Dedup.shingles(col("text"), 3)).as("b"))
+        DedupTwins.shingleBaseHashes(DedupTwins.shingles(col("text"), 3)).as("b"))
       .collect().foreach(r => r.getSeq[Long](0) shouldBe r.getSeq[Long](1))
   }
 
@@ -305,7 +305,7 @@ class DedupSpec extends SparkSpec {
     for (maxH <- Seq(0, 3, 6, 12)) {
       val banded = Dedup.simHashPairs(corpus, "doc_id", "text", maxH)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-      val brute = Dedup.simHashPairsBrute(corpus, "doc_id", "text", maxH)
+      val brute = DedupTwins.simHashPairsBrute(corpus, "doc_id", "text", maxH)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
       banded shouldBe brute
     }
@@ -313,7 +313,7 @@ class DedupSpec extends SparkSpec {
     for (maxH <- Seq(3, 6, 10)) {
       val banded64 = Dedup.simHashPairs64(corpus, "doc_id", "text", maxH)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-      val brute64 = Dedup.simHashPairsBrute(corpus, "doc_id", "text", maxH, bits = 64)
+      val brute64 = DedupTwins.simHashPairsBrute(corpus, "doc_id", "text", maxH, bits = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
       banded64 shouldBe brute64
     }
@@ -333,7 +333,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical → hamming 0, disjoint → large distance") {
-    val h = docs.select(col("doc_id"), Dedup.simHash(col("text")).as("h"))
+    val h = docs.select(col("doc_id"), DedupTwins.simHash(col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     h(1L) shouldBe h(4L)
     val d = java.lang.Long.bitCount(h(1L) ^ h(3L))
@@ -668,9 +668,6 @@ class DedupSpec extends SparkSpec {
     flagged.keySet shouldBe Set(1L)
     flagged(1L)._1 should be >= 1L // at least the guaranteed shared fp
     flagged(1L)._2 should be > flagged(1L)._1 // doc has non-shared fps too
-    Dedup.removeContaminatedByRuns(docs, "doc_id", "text",
-        evalDf, "etext", n = 3, w = 4)
-      .select("doc_id").as[Long].collect().sorted shouldBe Array(2L, 3L)
     an[IllegalArgumentException] should be thrownBy
       Dedup.winnowContamination(docs, "doc_id", "text", evalDf, "etext",
         3, 4, minShared = 0L)

@@ -51,24 +51,6 @@ class LayoutSpec extends SparkSpec {
       .agg(sum("n")).collect()(0).getLong(0) shouldBe 1L
   }
 
-  test("zOrderBy: range exchange on z, rows preserved, y stays local") {
-    val grid = (for { x <- 0 until 64; y <- 0 until 64 }
-      yield (x.toLong, y.toLong)).toDF("x", "y").repartition(8)
-    val z = Layout.zOrderBy(grid, "x", "y", numFiles = 16)
-    z.queryExecution.executedPlan.toString should include("rangepartitioning")
-    z.count() shouldBe 4096L
-    // per-partition y-spans: the z layout keeps BOTH dims bounded in
-    // most slices; an x-only sort pins span_y at the full 63 everywhere
-    def meanSpanY(df: org.apache.spark.sql.DataFrame): Double =
-      df.withColumn("pid", spark_partition_id())
-        .groupBy("pid").agg((max("y") - min("y")).as("span"))
-        .agg(avg("span")).collect()(0).getDouble(0)
-    val zSpan = meanSpanY(z)
-    val xSorted = grid.repartitionByRange(16, col("x"), col("y"))
-    meanSpanY(xSorted) shouldBe 63.0 // every x-slice sees all of y
-    zSpan should be < 40.0
-  }
-
   test("rendezvousShard: in range, deterministic, n=1 degenerate") {
     val keys = (0L until 200L).toDF("k")
     val a = keys.select(Layout.rendezvousShard(col("k"), 8).as("s"))

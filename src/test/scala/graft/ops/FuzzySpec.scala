@@ -49,25 +49,6 @@ class FuzzySpec extends SparkSpec {
     uncapped.filter("dist > 0").count() should be > 0L
   }
 
-  test("droppedBlocks audits exactly what the capped join silently lost") {
-    import spark.implicits._
-    // 30 one-char strings: all share the "" deletion key → one hot block
-    val tiny = (1L to 30L).map(i => (i, ('a' + (i % 26).toInt).toChar.toString))
-      .toDF("id", "s")
-    val dropped = Fuzzy.droppedBlocks(tiny, "id", "s", maxBlockSize = 10)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    dropped.map(_._1) should contain ("")
-    dropped.foreach { case (_, n) => n should be > 10L }
-    // generous cap: nothing dropped, guarantee unconditional
-    Fuzzy.droppedBlocks(tiny, "id", "s", maxBlockSize = 1000)
-      .count() shouldBe 0L
-    // the cross-table audit counts combined frequency
-    Fuzzy.droppedBlocksBetween(tiny, "id", "s", tiny, "id", "s",
-      maxBlockSize = 35).collect().map(_.getString(0)) should contain ("")
-    an[IllegalArgumentException] should be thrownBy
-      Fuzzy.droppedBlocks(tiny, "id", "s", maxBlockSize = 0)
-  }
-
   test("editDistance2Join: exactly the ed<=2 pairs, brute-force checked") {
     // double substitution, transposition (= 2 edits), sub+del, double
     // insert, and a distance-3 pair that must NOT appear

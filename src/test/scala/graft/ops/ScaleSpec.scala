@@ -5,30 +5,6 @@ import graft.SparkSpec
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
-  test("co-bucketed tables join without a shuffle") {
-    val left = (1 to 1000).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
-    val right = (1 to 1000).map(i => (i.toLong, s"r$i")).toDF("k", "rv")
-    val bcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // force the shuffle-join path: tiny test tables would auto-broadcast,
-    // which disables bucketed reads entirely
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val lt = Scale.asBucketedTable(spark, left, "bucketed_l", 4, Seq("k"))
-      val rt = Scale.asBucketedTable(spark, right, "bucketed_r", 4, Seq("k"))
-      val joined = lt.join(rt, "k")
-      joined.count() shouldBe 1000
-      val plan = joined.queryExecution.executedPlan.toString
-      // the join itself must not shuffle — bucket layout provides the
-      // co-location (only broadcast would also avoid it; forbid that too)
-      plan should not include "Exchange hashpartitioning"
-      plan should not include "BroadcastHashJoin"
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastBefore)
-      spark.sql("DROP TABLE IF EXISTS bucketed_l")
-      spark.sql("DROP TABLE IF EXISTS bucketed_r")
-    }
-  }
-
   test("keySkewProfile: counts, shares, ratio, salt factor, tie order") {
     val rows = (
       (1 to 6).map(_ => Some(7L)) ++   // hot key: 6 rows

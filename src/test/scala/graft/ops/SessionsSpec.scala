@@ -255,32 +255,6 @@ class SessionsSpec extends SparkSpec {
       ("c>b>c", 1L, 3L))
   }
 
-  test("topPathsApprox == topPaths while the tracked map never fills") {
-    import spark.implicits._
-    // richer stream: 60 users, mixed-length type walks — dozens of
-    // distinct 3-paths, all comfortably inside the tracked map
-    val ev = (1L to 60L).flatMap { u =>
-      (0L until (3L + u % 5)).map { i =>
-        (u, i + 1L, u * 100L + i,
-          Seq("a", "b", "c", "d", "e")(((u + i * i) % 5L).toInt))
-      }
-    }.toDF("user_id", "ts_us", "event_id", "event_type")
-    val exact = graft.ops.Sessions.topPaths(ev, "user_id", "ts_us",
-      "event_id", "event_type", n = 3, k = 8).orderBy("rank").collect()
-    val approx = graft.ops.Sessions.topPathsApprox(ev, "user_id", "ts_us",
-      "event_id", "event_type", n = 3, k = 8,
-      maxPathsTracked = 1000).orderBy("rank").collect()
-    approx shouldBe exact
-    exact.length shouldBe 8
-    // non-vacuous: the corpus has MORE distinct paths than k
-    graft.ops.Sessions.topPaths(ev, "user_id", "ts_us",
-      "event_id", "event_type", n = 3, k = 1000).count() should be > 8L
-    // the bound is honored loudly, not truncated silently
-    an[IllegalArgumentException] should be thrownBy
-      graft.ops.Sessions.topPathsApprox(ev, "user_id", "ts_us",
-        "event_id", "event_type", n = 3, k = 8, maxPathsTracked = 4)
-  }
-
   test("lastTouchAttribution: latest in-window touch wins, else direct") {
     import spark.implicits._
     val ev = Seq(
@@ -401,97 +375,5 @@ class SessionsSpec extends SparkSpec {
     an[Exception] should be thrownBy
       graft.ops.Sessions.funnelStepsBy(bad, "user_id", "ts_us",
         "event_id", "event_type", Seq("view"), "seg")
-  }
-
-  test("debounce: chain semantics collapse a steady drizzle to one event") {
-    import spark.implicits._
-    val ev = Seq(
-      // key 1 / click: 0, 5, 9 chain (each within 10 of its PREDECESSOR
-      // — 9 is 9 from the head, still one burst); 20 starts a new burst
-      (1L, 0L, 1L, "click"), (1L, 5L, 2L, "click"), (1L, 9L, 3L, "click"),
-      (1L, 20L, 4L, "click"),
-      // same key, different type: independent chain, kept
-      (1L, 1L, 5L, "view"),
-      // different key: independent
-      (2L, 2L, 6L, "click"))
-      .toDF("user_id", "ts_us", "event_id", "event_type")
-    val out = graft.ops.Sessions.debounce(ev, "user_id", "ts_us",
-        "event_id", "event_type", gapUs = 10L)
-      .orderBy("user_id", "event_type", "ts_us").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("ts_us"),
-        r.getAs[String]("event_type"), r.getAs[Long]("n_suppressed")))
-    out.toSeq shouldBe Seq(
-      (1L, 0L, "click", 2L), (1L, 20L, "click", 0L),
-      (1L, 1L, "view", 0L), (2L, 2L, "click", 0L))
-    // every input column survives on kept rows
-    graft.ops.Sessions.debounce(ev, "user_id", "ts_us", "event_id",
-        "event_type", 10L).columns.toSet shouldBe
-      Set("user_id", "ts_us", "event_id", "event_type", "n_suppressed")
-    an[IllegalArgumentException] should be thrownBy
-      graft.ops.Sessions.debounce(ev, "user_id", "ts_us", "event_id",
-        "event_type", 0L)
-  }
-
-  test("markovSteadyState: hand-traced rounds, dangling redistribution") {
-    import spark.implicits._
-    // user 1: A B B  → transitions A→B, B→B
-    // user 2: A C    → transitions A→C; C is TERMINAL (dangling)
-    val ev = Seq(
-      (1L, 10L, 1L, "A"), (1L, 20L, 2L, "B"), (1L, 30L, 3L, "B"),
-      (2L, 10L, 4L, "A"), (2L, 20L, 5L, "C"))
-      .toDF("user_id", "ts_us", "event_id", "event_type")
-    // matrix (from ≠ ^): A→B p=500000, A→C p=500000, B→B p=1000000
-    // n = 3 types; π₀ = 333333333 each.
-    // round 1: inflow(B) = ⌊πA·5e5/1e6⌋ + ⌊πB·1e6/1e6⌋ = 166666666 +
-    //   333333333 = 499999999; inflow(C) = 166666666; dmass = πC =
-    //   333333333 → each gets ⌊dmass/3⌋ = 111111111.
-    //   π₁ = (A: 111111111, B: 611111110, C: 277777777)
-    val out1 = graft.ops.Sessions.markovSteadyState(ev, "user_id",
-        "ts_us", "event_id", "event_type", iters = 1)
-      .orderBy("type").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    out1.toSeq shouldBe Seq(
-      ("A", 111111111L), ("B", 611111110L), ("C", 277777777L))
-    // round 2 from π₁: inflow(B) = ⌊111111111/2⌋ + 611111110 =
-    //   666666665; inflow(C) = 55555555; dmass = 277777777 → 92592592
-    //   π₂ = (A: 92592592, B: 759259257, C: 148148147)
-    val out2 = graft.ops.Sessions.markovSteadyState(ev, "user_id",
-        "ts_us", "event_id", "event_type", iters = 2)
-      .orderBy("type").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    out2.toSeq shouldBe Seq(
-      ("A", 92592592L), ("B", 759259257L), ("C", 148148147L))
-    // mass settles on the absorbing B; A (no inflow) holds only its
-    // dangling share — and the result is partition-order independent
-    val many = graft.ops.Sessions.markovSteadyState(
-      ev.repartition(7), "user_id", "ts_us", "event_id", "event_type",
-      iters = 12).orderBy("type").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    many shouldBe graft.ops.Sessions.markovSteadyState(
-      ev.coalesce(1), "user_id", "ts_us", "event_id", "event_type",
-      iters = 12).orderBy("type").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    many.find(_._1 == "B").get._2 should be > 900000000L
-  }
-
-  test("markovSteadyState: sole-event types join the chain as dangling") {
-    import spark.implicits._
-    // user 3's journey is the single event D — its ONLY transition is
-    // '^'→D, so a node set built after the '^' filter would drop D
-    // entirely (no row, no seed mass). D must appear, seeded uniformly,
-    // and behave as a dangling node (no outflow → mass redistributes).
-    val ev = Seq(
-      (1L, 10L, 1L, "A"), (1L, 20L, 2L, "B"),
-      (3L, 10L, 6L, "D"))
-      .toDF("user_id", "ts_us", "event_id", "event_type")
-    // types = {A, B, D}, n = 3, π₀ = 333333333 each; matrix: A→B p=1e6.
-    // round 1: inflow(B) = πA = 333333333; dmass = πB + πD =
-    // 666666666 → each +⌊dmass/3⌋ = 222222222.
-    val out = graft.ops.Sessions.markovSteadyState(ev, "user_id",
-        "ts_us", "event_id", "event_type", iters = 1)
-      .orderBy("type").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    out.toSeq shouldBe Seq(
-      ("A", 222222222L), ("B", 555555555L), ("D", 222222222L))
   }
 }

@@ -35,13 +35,6 @@ class AnomalySpec extends SparkSpec {
     out("rare1") shouldBe true
   }
 
-  test("nullSpike compares current null rate to historical") {
-    val df = (Seq.fill(8)(Some(1.0)) ++ Seq(None, None)).toDF("v")
-    val r = Anomaly.nullSpike(df, "v", historicalRate = 0.05).head()
-    r.getAs[Double]("null_rate") shouldBe 0.2 +- 1e-12
-    r.getAs[Boolean]("is_spike") shouldBe true // 0.2 > 0.05*2
-  }
-
   test("exactQuantiles interpolates like the SQL percentile contract") {
     val df = (1 to 5).map(_.toDouble).toDF("v")
     val r = Anomaly.exactQuantiles(df, "v", Seq(0.25, 0.5)).head()
@@ -49,19 +42,11 @@ class AnomalySpec extends SparkSpec {
     r.getAs[Double]("p50") shouldBe 3.0
   }
 
-  test("iqrAnomalies flags outliers via approxQuantile bounds") {
-    val df = ((1 to 99).map(_.toDouble) :+ 10000.0).toDF("v")
-    Anomaly.iqrAnomalies(df, "v").count() shouldBe 1
-  }
-
-  test("madAnomalies: median/MAD survive the outlier; exact twin agrees") {
+  test("madAnomaliesExact: median/MAD survive the outlier") {
     // 1..99 + one huge outlier (100 values): interpolated median 50.5,
     // MAD 25 (both essentially UNMOVED by the outlier — the point of
     // robust stats), robust z of 10000 ≈ 268
     val df = ((1 to 99).map(_.toDouble) :+ 10000.0).toDF("v")
-    val approx = Anomaly.madAnomalies(df, "v", tau = 3.5)
-    approx.count() shouldBe 1
-    approx.head().getAs[Double]("v") shouldBe 10000.0
     val exact = Anomaly.madAnomaliesExact(df, "v", tau = 3.5).head()
     exact.getAs[Double]("v") shouldBe 10000.0
     // 0.6745 * |10000-50.5| / 25 * 1e6, rounded
@@ -84,9 +69,8 @@ class AnomalySpec extends SparkSpec {
     out.toSeq shouldBe Seq(("a", 100.0)) // only vs a's own tight scale
   }
 
-  test("madAnomalies: MAD=0 (constant majority) flags nothing, not everything") {
+  test("madAnomaliesExact: MAD=0 (constant majority) flags nothing, not everything") {
     val df = (Seq.fill(10)(5.0) :+ 9999.0).toDF("v")
-    Anomaly.madAnomalies(df, "v").count() shouldBe 0
     Anomaly.madAnomaliesExact(df, "v").count() shouldBe 0
   }
 
@@ -103,17 +87,6 @@ class AnomalySpec extends SparkSpec {
     out(4.5) shouldBe "HIGH"
     out(6.0) shouldBe "CRITICAL"
     out.keySet should not contain 1.0
-  }
-
-  test("iqrAnomalies tiers severity by distance from bounds in IQR units") {
-    // values 1..100: q1=25.x, q3=75.x, iqr≈50, bounds ≈ [-50, 151]
-    val df = ((1 to 100).map(_.toDouble) ++ Seq(270.0, 330.0, 460.0)).toDF("v")
-    val out = Anomaly.iqrAnomalies(df, "v")
-      .collect().map(r => r.getAs[Double]("v") ->
-        (r.getAs[Double]("iqr_distance"), r.getAs[String]("severity"))).toMap
-    out(270.0)._2 shouldBe "MEDIUM" // ~2.4 IQRs past the upper bound
-    out(330.0)._2 shouldBe "HIGH" // ~3.6 IQRs
-    out(460.0)._2 shouldBe "CRITICAL" // ~6.2 IQRs
   }
 
   test("winsorize clamps tails to per-group exact quantiles, keeps the body") {

@@ -79,11 +79,11 @@ class ChecksSpec extends SparkSpec {
   }
 
   test("aggregate expectations: mean/row-count/unique-count between bounds") {
-    Checks.meanBetween(dirty, "qty", 0.0, 10.0).passed shouldBe true
-    Checks.meanBetween(dirty, "qty", 100.0, 200.0).passed shouldBe false
-    Checks.rowCountBetween(dirty, 1, 10).passed shouldBe true
-    Checks.rowCountBetween(dirty, 100, 200).passed shouldBe false
-    val u = Checks.uniqueCountBetween(dirty, "etype", 1, 2)
+    ChecksTwins.meanBetween(dirty, "qty", 0.0, 10.0).passed shouldBe true
+    ChecksTwins.meanBetween(dirty, "qty", 100.0, 200.0).passed shouldBe false
+    ChecksTwins.rowCountBetween(dirty, 1, 10).passed shouldBe true
+    ChecksTwins.rowCountBetween(dirty, 100, 200).passed shouldBe false
+    val u = ChecksTwins.uniqueCountBetween(dirty, "etype", 1, 2)
     u.observed shouldBe 3.0 // click, view, bogus (null not counted)
     u.passed shouldBe false
   }
@@ -103,9 +103,9 @@ class ChecksSpec extends SparkSpec {
     checks shouldBe Checks.run(dirty, spec)
     // expectation results identical to the standalone Q5-Q7 functions
     exps should have length 3
-    exps(0) shouldBe Checks.meanBetween(dirty, "qty", 0.0, 10.0)
-    exps(1) shouldBe Checks.rowCountBetween(dirty, 1, 10)
-    exps(2) shouldBe Checks.uniqueCountBetween(dirty, "etype", 1, 2)
+    exps(0) shouldBe ChecksTwins.meanBetween(dirty, "qty", 0.0, 10.0)
+    exps(1) shouldBe ChecksTwins.rowCountBetween(dirty, 1, 10)
+    exps(2) shouldBe ChecksTwins.uniqueCountBetween(dirty, "etype", 1, 2)
   }
 
   test("profile throws on an unknown expectation kind instead of skipping it") {

@@ -21,7 +21,7 @@ class EquiDepthSpec extends SparkSpec {
     val df = (1L to 40L).map(i => (i, i * 1.5)).toDF("id", "v")
     val byNtile = Anomaly.equiDepthProfile(df, "v", "id", 4)
       .select("bucket", "n_rows", "min_e6", "max_e6", "sum_e6")
-    val byBounds = Anomaly.equiDepthProfileByBounds(df, "v", 4)
+    val byBounds = AnomalyTwins.equiDepthProfileByBounds(df, "v", 4)
       .select("bucket", "n_rows", "min_e6", "max_e6", "sum_e6")
     byNtile.collect() shouldBe byBounds.collect()
   }
@@ -31,7 +31,7 @@ class EquiDepthSpec extends SparkSpec {
     // 2/3 -> p66 by truncation; a .round-based lookup would ask for p67
     // and crash. Bucket masses must still be exactly equal on this
     // tie-free frame.
-    val out = Anomaly.equiDepthProfileByBounds(df, "v", 3)
+    val out = AnomalyTwins.equiDepthProfileByBounds(df, "v", 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     out shouldBe Map(1L -> 10L, 2L -> 10L, 3L -> 10L)
   }
@@ -45,7 +45,7 @@ class EquiDepthSpec extends SparkSpec {
         .toDF("id", "v"))
     Anomaly.equiDepthProfile(dirty, "v", "id", 4).collect() shouldBe
       Anomaly.equiDepthProfile(clean, "v", "id", 4).collect()
-    Anomaly.equiDepthProfileByBounds(dirty, "v", 4).collect() shouldBe
-      Anomaly.equiDepthProfileByBounds(clean, "v", 4).collect()
+    AnomalyTwins.equiDepthProfileByBounds(dirty, "v", 4).collect() shouldBe
+      AnomalyTwins.equiDepthProfileByBounds(clean, "v", 4).collect()
   }
 }

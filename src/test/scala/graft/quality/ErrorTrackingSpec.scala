@@ -2,6 +2,8 @@ package graft.quality
 
 import graft.SparkSpec
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, struct, to_json}
 
 class ErrorTrackingSpec extends SparkSpec {
   import spark.implicits._
@@ -9,6 +11,29 @@ class ErrorTrackingSpec extends SparkSpec {
   private def rows = Seq(
     (1L, 5.0), (2L, -1.0), (3L, -2.0), (4L, 900.0), (5L, -3.0))
     .toDF("id", "v")
+
+  /** `capture` plus the data-context columns of the reference's RowError
+    * (error_tracking.py:40-44): the failing column's value as a string, the
+    * rule's expected value, its check name, and a JSON `row_data` snapshot
+    * of key + failing columns — the full-context input `persist` lays out. */
+  private def captureDetailed(
+      df: DataFrame,
+      rules: Seq[ErrorTracking.ErrorRule],
+      keyCols: Seq[String]): DataFrame =
+    rules.map { r =>
+      val ctxCols = (keyCols :+ r.columnName).distinct
+      df.filter(r.predicate)
+        .select(keyCols.map(col)
+          :+ col(r.columnName).cast("string").as("actual_value")
+          :+ to_json(struct(ctxCols.map(col): _*)).as("row_data"): _*)
+        .withColumn("column_name", lit(r.columnName))
+        .withColumn("error_type", lit(r.errorType))
+        .withColumn("severity", lit(r.severity))
+        .withColumn("error_message", lit(r.message))
+        .withColumn("expected_value",
+          if (r.expected.isEmpty) lit(null).cast("string") else lit(r.expected))
+        .withColumn("check_name", lit(r.checkName))
+    }.reduce(_.unionByName(_))
 
   private val rules = Seq(
     ErrorTracking.ErrorRule("v < 0", "v", "negative", "HIGH"),
@@ -40,7 +65,7 @@ class ErrorTrackingSpec extends SparkSpec {
       ErrorTracking.ErrorRule("v < 0", "v", "RANGE_VIOLATION", "ERROR",
         message = "v must be non-negative", expected = ">= 0",
         checkName = "positive_values"))
-    val errs = ErrorTracking.captureDetailed(rows, detailed, Seq("id"))
+    val errs = captureDetailed(rows, detailed, Seq("id"))
     ErrorTracking.persist(errs, dir, layer = "silver", tableName = "rows_t",
       pipelineRunId = "run_001", keyCols = Seq("id"), csvMirror = Some(csv))
 

@@ -121,16 +121,17 @@ class KmvQuantileSpec extends SparkSpec {
     // crosses duplicate values and real mass spread
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("source"), col("doc_id"), col("n_chars"),
+        call_function("ws_token_count", col("text")).as("m"))
     val sk = Kmv.weightedValueSketches(
-      docs.select(col("source"), col("doc_id"), col("n_chars"),
-        call_function("ws_token_count", col("text")).as("m")),
-      Seq("source"), "doc_id", "n_chars", "m", k = 16)
+      docs, Seq("source"), "doc_id", "n_chars", "m", k = 16)
     val pairs = sk.select(col("source").as("type_a"), col("kmvv").as("ska"))
       .join(sk.select(col("source").as("type_b"), col("kmvv").as("skb")),
         col("type_a") < col("type_b"))
-    val native = Kmv.weightedKsFromSketches(sk, "source")
+    val native = Kmv.weightedSampleKsReport(
+        docs, "source", "doc_id", "n_chars", "m", k = 16)
       .orderBy("type_a", "type_b").collect().map(_.toSeq)
-    val builtin = Kmv.weightedKsFromSamplePairsBuiltin(pairs)
+    val builtin = KmvTwins.weightedKsFromSamplePairsBuiltin(pairs)
       .orderBy("type_a", "type_b").collect().map(_.toSeq)
     native.nonEmpty shouldBe true
     native shouldBe builtin
@@ -151,7 +152,7 @@ class KmvQuantileSpec extends SparkSpec {
         | AS t(type_a, type_b, ska, skb)""".stripMargin)
     val ne = Kmv.weightedKsFromSamplePairs(edge)
       .orderBy("type_a").collect().map(_.toSeq)
-    val be = Kmv.weightedKsFromSamplePairsBuiltin(edge)
+    val be = KmvTwins.weightedKsFromSamplePairsBuiltin(edge)
       .orderBy("type_a").collect().map(_.toSeq)
     ne shouldBe be
     ne(0)(6) shouldBe 1000000L // e2: 0-mass a ecdf flat 0 vs b at 1.0
@@ -175,9 +176,9 @@ class KmvQuantileSpec extends SparkSpec {
     val kp = vsk.select(col("g").as("type_a"), col("kmvv").as("ska"))
       .join(vsk.select(col("g").as("type_b"), col("kmvv").as("skb")),
         col("type_a") < col("type_b"))
-    Kmv.sampleKsFromSketches(vsk, "g")
+    Kmv.sampleKsReport(ev, "g", "id", "v", k = 32)
       .orderBy("type_a", "type_b").collect().map(_.toSeq) shouldBe
-      Kmv.ksFromSamplePairsBuiltin(kp)
+      KmvTwins.ksFromSamplePairsBuiltin(kp)
         .orderBy("type_a", "type_b").collect().map(_.toSeq)
     er.getLong(2) shouldBe 0L // k_a
     er.getLong(4) shouldBe 0L // mass_a

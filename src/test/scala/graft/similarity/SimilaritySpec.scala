@@ -15,16 +15,6 @@ class SimilaritySpec extends SparkSpec {
     (4L, Array(1.0f, 1.0f, 0.0f)))
     .toDF("vec_id", "embedding")
 
-  test("cosine: parallel=1, orthogonal=0, opposite=-1") {
-    val sims = vecs.as("a").crossJoin(vecs.as("b"))
-      .select(col("a.vec_id").as("ia"), col("b.vec_id").as("ib"),
-        Similarity.cosine(col("a.embedding"), col("b.embedding")).as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    sims((0L, 1L)) shouldBe 1.0 +- 1e-12
-    sims((0L, 2L)) shouldBe 0.0 +- 1e-12
-    sims((0L, 3L)) shouldBe -1.0 +- 1e-12
-  }
-
   test("bruteForceTopK ranks by similarity, excludes self") {
     val top = Similarity.bruteForceTopK(vecs, vecs.where("vec_id = 0"),
       "vec_id", "embedding", k = 2).collect()
@@ -72,7 +62,7 @@ class SimilaritySpec extends SparkSpec {
     a.zip(b).foreach { case (ca, cb) => ca.toSeq shouldBe cb.toSeq }
     // quantization noise stays < 1e-6 per mean component: the trained
     // centroids track the double variant closely
-    val dbl = Similarity.kMeansCentroids(emb, "vec_id", "embedding",
+    val dbl = SimilarityTwins.kMeansCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 2)
     a.zip(dbl).foreach { case (ca, cd) =>
       ca.zip(cd).foreach { case (x, y) =>
@@ -85,7 +75,7 @@ class SimilaritySpec extends SparkSpec {
   test("kMeans centroids: unit-norm, objective non-decreasing, full probe still exact") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val seed = Similarity.sampleCentroids(emb, "vec_id", "embedding", 8)
-    val refined = Similarity.kMeansCentroids(emb, "vec_id", "embedding",
+    val refined = SimilarityTwins.kMeansCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 2)
     refined should have length 8
     all(refined.map(c =>
@@ -111,13 +101,13 @@ class SimilaritySpec extends SparkSpec {
     val withZero = vecs.union(Seq((9L, Array(0.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding"))
     val out = withZero
-      .withColumn("q", Similarity.quantizeInt8(col("embedding")))
+      .withColumn("q", SimilarityTwins.quantizeInt8(col("embedding")))
       .select(col("vec_id"), col("q.scale").as("scale"), col("q.codes").as("codes"),
         org.apache.spark.sql.functions.array_max(
           org.apache.spark.sql.functions.zip_with(
             org.apache.spark.sql.functions.transform(col("embedding"),
               x => x.cast("double")),
-            Similarity.dequantizeInt8(col("q")),
+            SimilarityTwins.dequantizeInt8(col("q")),
             (x, d) => org.apache.spark.sql.functions.abs(x - d))).as("max_err"))
       .collect().map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Double]("scale"), r.getSeq[Int](2).toList,
@@ -136,7 +126,7 @@ class SimilaritySpec extends SparkSpec {
       call_function, lit, transform, zip_with}
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cmp = emb
-      .withColumn("q", Similarity.quantizeInt8(col("embedding")))
+      .withColumn("q", SimilarityTwins.quantizeInt8(col("embedding")))
       .withColumn("nq", call_function("quantize_stats", col("embedding")))
       .select(
         col("q.scale"), col("nq.scale"),
@@ -145,7 +135,7 @@ class SimilaritySpec extends SparkSpec {
         array_max(col("q.codes")).cast("long"), col("nq.code_max"),
         array_max(zip_with(
           transform(col("embedding"), x => x.cast("double")),
-          Similarity.dequantizeInt8(col("q")),
+          SimilarityTwins.dequantizeInt8(col("q")),
           (x, d) => abs(x - d))), col("nq.max_err"))
       .collect()
     cmp.foreach { r =>
@@ -162,11 +152,11 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.sampleCentroids(emb, "vec_id", "embedding", 8)
     val cmp = emb.select(
       Similarity.lshBucket(col("embedding"), 4, 64).as("n_lsh"),
-      Similarity.lshBucketBuiltin(col("embedding"), 4, 64).as("b_lsh"),
+      SimilarityTwins.lshBucketBuiltin(col("embedding"), 4, 64).as("b_lsh"),
       Similarity.ivfBucket(col("embedding"), cents).as("n_ivf"),
-      Similarity.ivfBucketBuiltin(col("embedding"), cents).as("b_ivf"),
+      SimilarityTwins.ivfBucketBuiltin(col("embedding"), cents).as("b_ivf"),
       Similarity.topCentroids(col("embedding"), cents, 3).as("n_top"),
-      Similarity.topCentroidsBuiltin(col("embedding"), cents, 3).as("b_top"))
+      SimilarityTwins.topCentroidsBuiltin(col("embedding"), cents, 3).as("b_top"))
       .collect()
     cmp should not be empty
     cmp.foreach { r =>
@@ -191,11 +181,11 @@ class SimilaritySpec extends SparkSpec {
       Array(0f, 0f, -1f, 0f))
     val cmp = edge.select(
       Similarity.lshBucket(col("embedding"), 4, dim).as("n_lsh"),
-      Similarity.lshBucketBuiltin(col("embedding"), 4, dim).as("b_lsh"),
+      SimilarityTwins.lshBucketBuiltin(col("embedding"), 4, dim).as("b_lsh"),
       Similarity.ivfBucket(col("embedding"), cents).as("n_ivf"),
-      Similarity.ivfBucketBuiltin(col("embedding"), cents).as("b_ivf"),
+      SimilarityTwins.ivfBucketBuiltin(col("embedding"), cents).as("b_ivf"),
       Similarity.topCentroids(col("embedding"), cents, 3).as("n_top"),
-      Similarity.topCentroidsBuiltin(col("embedding"), cents, 3).as("b_top"))
+      SimilarityTwins.topCentroidsBuiltin(col("embedding"), cents, 3).as("b_top"))
       .collect()
     cmp.foreach { r =>
       r.getLong(0) shouldBe r.getLong(1)

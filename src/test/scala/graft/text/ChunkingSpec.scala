@@ -289,28 +289,6 @@ class ChunkingSpec extends SparkSpec {
     all(windows.map(_.partitionSpec)) should not be empty
   }
 
-  test("stratifiedFixedSample: aligned pre-thin equals the direct draw; independent thin does not") {
-    val df = (1L to 400L).map(i => (i, if (i % 2 == 0) "a" else "b"))
-      .toDF("id", "s")
-    val direct = Chunking.stratifiedFixedSample(df, col("s"), col("id"), n = 5)
-    // the SAME-hash threshold pre-thin is a down-set of the draw order:
-    // with >= n survivors per stratum the two-pass draw is bit-identical
-    val thinned = df.filter(Chunking.fixedSamplePrethin(col("id"), 96))
-    thinned.groupBy("s").count().collect()
-      .foreach(r => r.getLong(1) should be >= 5L) // precondition holds
-    Chunking.stratifiedFixedSample(thinned, col("s"), col("id"), n = 5)
-      .except(direct).count() shouldBe 0L
-    // an INDEPENDENT hash predicate (different salt family) breaks the
-    // equality even when it keeps plenty of rows — the documented hazard
-    val wrongThin = df.filter(Chunking.hashSample(col("id"), 40))
-    wrongThin.groupBy("s").count().collect()
-      .foreach(r => r.getLong(1) should be >= 5L)
-    Chunking.stratifiedFixedSample(wrongThin, col("s"), col("id"), n = 5)
-      .except(direct).count() should be > 0L
-    an[IllegalArgumentException] should be thrownBy
-      Chunking.fixedSamplePrethin(col("id"), 0)
-  }
-
   test("sentenceSplit: boundaries consumed, empties dropped, 1-based index") {
     val docs = Seq(
       (1L, "first sentence here. second one! third?and fourth"),

@@ -22,7 +22,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("BPE-style pre-tokenization splits contractions, digits, punctuation") {
     val d = Seq((1L, "I can't stop, it's 42 miles!")).toDF("doc_id", "text")
     val r = d.select(
-      TextAnalysis.bpeTokens(col("text")).as("toks"),
+      TextAnalysisTwins.bpeTokens(col("text")).as("toks"),
       TextAnalysis.bpeTokenCount(col("text")).as("n"),
       TextAnalysis.tokenCount(col("text")).as("ws")).head()
     // I | " can" | 't | " stop" | , | " it" | 's | " 42" | " miles" | !
@@ -124,7 +124,7 @@ class TextAnalysisSpec extends SparkSpec {
     val ns = Seq(1, 2, 3, 5)
     val native = TextAnalysis.repetitionProfile(corpus, "text", ns)
       .orderBy("doc_id").collect()
-    val builtin = TextAnalysis.repetitionProfileBuiltin(corpus, "text", ns)
+    val builtin = TextAnalysisTwins.repetitionProfileBuiltin(corpus, "text", ns)
       .orderBy("doc_id").collect()
     native.map(_.toSeq) shouldBe builtin.map(_.toSeq)
   }
@@ -294,9 +294,9 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val both = corpus.select(
       TextAnalysis.bpeTokenCount(col("text")).as("fast"),
-      TextAnalysis.bpeTokenCountBuiltin(col("text")).as("regex"),
+      TextAnalysisTwins.bpeTokenCountBuiltin(col("text")).as("regex"),
       org.apache.spark.sql.functions.size(
-        TextAnalysis.bpeTokens(col("text"))).as("ref")).collect()
+        TextAnalysisTwins.bpeTokens(col("text"))).as("ref")).collect()
     both.foreach { r =>
       r.getAs[Int]("fast") shouldBe r.getAs[Int]("regex")
       r.getAs[Int]("fast") shouldBe r.getAs[Int]("ref")
@@ -305,7 +305,7 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val diff = docs.select(
         TextAnalysis.bpeTokenCount(col("text")).as("fast"),
-        TextAnalysis.bpeTokenCountBuiltin(col("text")).as("regex"))
+        TextAnalysisTwins.bpeTokenCountBuiltin(col("text")).as("regex"))
       .filter(col("fast") =!= col("regex")).count()
     diff shouldBe 0L
   }
