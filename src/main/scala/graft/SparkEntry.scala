@@ -444,7 +444,8 @@ object SparkEntry {
       val docs = Tables.load(s, dir, "documents")
       val doubled = docs.unionByName(
         docs.withColumn("doc_id", col("doc_id") + lit(10000L)))
-      Dedup.dedupeExact(doubled, "doc_id", "text")
+      Dedup.dedupeByKey(doubled, "doc_id",
+        TextAnalysis.fingerprint(col("text")))
         .select(col("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fingerprint"))
         .orderBy("doc_id")
@@ -1037,7 +1038,7 @@ object SparkEntry {
 
     // Canonical-form dedup: the corpus plus deterministically-reformatted
     // copies of every 10th doc (upcased, triple-spaced, wrapped in
-    // punctuation) — canonicalDupGroups collapses each variant onto its
+    // punctuation) — canonical dup groups collapse each variant onto its
     // original (plus any pre-existing exact dup groups). The oracle
     // replays the normalization (lower + non-alnum runs → space + trim)
     // and the md5 group-by symbol-for-symbol.
@@ -1047,7 +1048,8 @@ object SparkEntry {
         .select((col("doc_id") + lit(10000000L)).as("doc_id"),
           concat(lit("  "), upper(regexp_replace(col("text"), " ", "   ")),
             lit(" !!")).as("text"))
-      Dedup.canonicalDupGroups(docs.unionByName(variants), "doc_id", "text")
+      Dedup.dupGroups(docs.unionByName(variants), "doc_id",
+        md5(Dedup.canonicalForm(col("text"))))
         .select("fingerprint", "keep_id", "copies")
         .orderBy("keep_id")
     }),
@@ -1650,8 +1652,8 @@ object SparkEntry {
     // by Morton-curve cell (10 low bits dropped = 32×32 quadtree cells),
     // per-cell counts + bounding boxes. The bit-interleave is exact
     // integer algebra replayed mask-for-mask by the oracle; the bounded
-    // span_x/span_y columns are the file-skipping evidence the zOrderBy
-    // rewrite exists to produce.
+    // span_x/span_y columns show how well a z-order layout would let a
+    // reader skip files.
     "q209_zorder_cells" -> ((s, dir) =>
       graft.maintenance.Layout.zCellStats(
         Tables.load(s, dir, "lineitem"), "l_partkey", "l_suppkey",
@@ -3195,8 +3197,8 @@ object SparkEntry {
         concat(col("text"), lit(" Caf\u00e9 N\u00f6is")).as("text"))
       val v2 = tenth.select((col("doc_id") + lit(20000000L)).as("doc_id"),
         concat(col("text"), lit("  cafe\u0301   NO\u0308IS !!")).as("text"))
-      Dedup.canonicalDupGroupsUnicode(
-        docs.unionByName(v1).unionByName(v2), "doc_id", "text")
+      Dedup.dupGroups(docs.unionByName(v1).unionByName(v2), "doc_id",
+        md5(Dedup.canonicalFormUnicode(col("text"))))
         .select("fingerprint", "keep_id", "copies")
         .orderBy("keep_id")
     }),
@@ -4231,13 +4233,6 @@ object SparkEntry {
       |sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM e
       |  UNION ALL SELECT b, a FROM e)""".stripMargin
 
-  /** q171 oracle: the integer-PageRank recurrence unrolled `iters` times —
-    * identical floor divisions, identical exact integer sums. */
-  /** q186 oracle: the BPE merge rounds unrolled as materialized CTEs.
-    * Same representation as the operator — boundary-wrapped segs with a
-    * DOUBLE chr(31) separator, merges as literal `replace` (leftmost,
-    * non-overlapping, boundary-sharing), pair counts over parallel-unnest
-    * slices, argmax under (cnt desc, l, r). */
   /** Shared CTE chain for the BPE oracles (q186/q188): w0 (char segs of
     * the distinct-word frequency table) and `rounds` of p/m/w CTEs. */
   private def bpeRoundsCTE(rounds: Int): String = {
@@ -4269,6 +4264,11 @@ object SparkEntry {
        |$rs""".stripMargin
   }
 
+  /** q186 oracle: the BPE merge rounds unrolled as materialized CTEs.
+    * Same representation as the operator — boundary-wrapped segs with a
+    * DOUBLE chr(31) separator, merges as literal `replace` (leftmost,
+    * non-overlapping, boundary-sharing), pair counts over parallel-unnest
+    * slices, argmax under (cnt desc, l, r). */
   private def bpeOracle(rounds: Int): String = {
     val sel = (1 to rounds).map(i =>
       s"SELECT $i AS merge_round, l AS left_sym, r AS right_sym, " +
@@ -4330,6 +4330,8 @@ object SparkEntry {
        |ORDER BY n.node""".stripMargin
   }
 
+  /** q171 oracle: the integer-PageRank recurrence unrolled `iters` times —
+    * identical floor divisions, identical exact integer sums. */
   private def pagerankOracle(iters: Int): String = {
     val rounds = (1 to iters).map { i =>
       val prev = if (i == 1) "r0" else s"r${i - 1}"
@@ -4599,10 +4601,6 @@ object SparkEntry {
       |labels AS (SELECT src AS id, least(src, min(dst)) AS label
       |  FROM reach GROUP BY src)""".stripMargin
 
-  /** Shared q232/q238 oracle core: the synthetic-URL CASE chain + the
-    * full normalization replay (scheme/host lower, userinfo/port/www,
-    * slash trim, tracking filter, PSL-lite eTLD+1), no ORDER BY — q232
-    * appends one, q238 wraps it in a dedup rollup. */
   /** The KMV estimator as a DuckDB CASE over a BIGINT-list column — ONE
     * shared fragment (mirrors `Kmv.estimate` exactly: exact below k,
     * (k−1)·2⁶⁰ / h₍ₖ₎ with the h₍ₖ₎≥1 guard and the 10¹⁴ ceiling) so
@@ -4615,6 +4613,10 @@ object SparkEntry {
       s"CAST(greatest($kmv[$k], 1) AS DOUBLE)), 100000000000000.0) " +
       "AS BIGINT) END"
 
+  /** Shared q232/q238 oracle core: the synthetic-URL CASE chain + the
+    * full normalization replay (scheme/host lower, userinfo/port/www,
+    * slash trim, tracking filter, PSL-lite eTLD+1), no ORDER BY — q232
+    * appends one, q238 wraps it in a dedup rollup. */
   private val urlNormalizeSqlCore: String =
     """WITH u AS (SELECT doc_id,
       |  (CASE doc_id % 3 WHEN 0 THEN 'HTTPS' WHEN 1 THEN 'http'

@@ -124,6 +124,15 @@ object ConfigLoader {
       case None => throw new ConfigError(s"$where: required key '$k' is missing")
     }
 
+  /** `m(k)` as a YAML boolean, if set. A quoted (`"true"`) or numeric
+    * value fails naming `where.k`, not with a bare ClassCastException. */
+  private def bool(m: Map[String, Any], k: String, where: String): Option[Boolean] =
+    m.get(k).map {
+      case b: java.lang.Boolean => b.booleanValue
+      case other =>
+        throw new ConfigError(s"$where.$k: expected true or false, got '$other'")
+    }
+
   private def optStr(m: Map[String, Any], k: String): Option[String] =
     m.get(k).collect { case s: String => s }
 
@@ -151,10 +160,10 @@ object ConfigLoader {
         targetPath = str(bm, "target_path", "bronze"),
         mode = optStr(bm, "mode").getOrElse("overwrite"),
         partitionBy = strList(bm, "partition_by"),
-        dropAllNullColumns = bm.get("drop_all_null_columns")
-          .forall(_.asInstanceOf[Boolean]),
-        addIngestionMetadata = bm.get("add_ingestion_metadata")
-          .forall(_.asInstanceOf[Boolean]))
+        dropAllNullColumns =
+          bool(bm, "drop_all_null_columns", "bronze").getOrElse(true),
+        addIngestionMetadata =
+          bool(bm, "add_ingestion_metadata", "bronze").getOrElse(true))
     }
 
     val silver = root.get("silver").map { s =>
@@ -189,8 +198,8 @@ object ConfigLoader {
         filters = strList(gm, "filters"),
         orderBy = strList(gm, "order_by"),
         limit = gm.get("limit").map(_.toString.toInt),
-        rollup = gm.get("rollup").exists(_.asInstanceOf[Boolean]),
-        cube = gm.get("cube").exists(_.asInstanceOf[Boolean]))
+        rollup = bool(gm, "rollup", "gold[]").getOrElse(false),
+        cube = bool(gm, "cube", "gold[]").getOrElse(false))
     }
 
     val quality = root.get("quality").map { q =>
@@ -411,7 +420,7 @@ object ConfigLoader {
             hi = em.get("hi").map(_.toString.toDouble)
               .getOrElse(Double.PositiveInfinity))
         },
-        failOnError = qm.get("fail_on_error").exists(_.asInstanceOf[Boolean]))
+        failOnError = bool(qm, "fail_on_error", "quality").getOrElse(false))
     }.getOrElse(QualitySpec())
 
     val curation = root.get("curation").map { c =>
@@ -680,8 +689,7 @@ object ConfigLoader {
         embeddingColumn = optStr(rm, "embedding_column"),
         fuseK = rm.get("fuse_k").map(_.toString.toInt),
         rrfK = rm.get("rrf_k").map(_.toString.toLong),
-        excludeSelf =
-          rm.get("exclude_self").forall(_.asInstanceOf[Boolean]))
+        excludeSelf = bool(rm, "exclude_self", "retrieval").getOrElse(true))
       if (spec.k < 1)
         throw new ConfigError(s"retrieval.k must be >= 1, got ${spec.k}")
       if (spec.maxDf != Long.MaxValue && spec.maxDfFracE6 > 0L)
@@ -744,11 +752,11 @@ object ConfigLoader {
       val pm = asMap(p, "performance")
       (PerformanceSpec(
         shufflePartitions = pm.get("shuffle_partitions").map(_.toString.toInt),
-        adaptiveExecution = pm.get("adaptive_execution").map(_.asInstanceOf[Boolean]),
+        adaptiveExecution = bool(pm, "adaptive_execution", "performance"),
         broadcastThresholdMb = pm.get("broadcast_threshold_mb").map(_.toString.toInt),
-        costBasedOptimization = pm.get("cost_based_optimization").map(_.asInstanceOf[Boolean]),
+        costBasedOptimization = bool(pm, "cost_based_optimization", "performance"),
         cacheLevel = optStr(pm, "cache_level").getOrElse("MEMORY_AND_DISK")),
-        pm.get("cache_after_transform").exists(_.asInstanceOf[Boolean]))
+        bool(pm, "cache_after_transform", "performance").getOrElse(false))
     }.getOrElse((PerformanceSpec(), false))
 
     val features = root.get("features").map { f =>

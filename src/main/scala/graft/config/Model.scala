@@ -85,7 +85,7 @@ final case class ExpectationSpec(
     hi: Double = Double.PositiveInfinity)
 
 object ExpectationSpec {
-  /** The supported kinds — validated at config load AND in Checks.profile,
+  /** The supported kinds — validated at config load AND in Checks.profilePlan,
     * so a typo'd kind fails loudly instead of silently disabling a gate. */
   val Kinds: Set[String] =
     Set("mean_between", "row_count_between", "unique_count_between")

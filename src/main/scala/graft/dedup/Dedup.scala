@@ -23,11 +23,23 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact duplicate groups: fingerprint → count>1 (hash-groupBy dedup). */
-  def exactDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
+  /** Duplicate groups under the content key `key`: one row per key value
+    * with >1 member — the value (`fingerprint`), its `copies` and the min
+    * id (`keep_id`). One balanced shuffle on the key. The keys in use:
+    * `TextAnalysis.fingerprint(text)` (exact), `md5(canonicalForm(text))`
+    * and `md5(canonicalFormUnicode(text))`. */
+  def dupGroups(df: DataFrame, idCol: String, key: Column): DataFrame =
+    df.groupBy(key.as("fingerprint"))
       .agg(count(lit(1)).as("copies"), min(col(idCol)).as("keep_id"))
       .filter(col("copies") > 1)
+
+  /** Dedup on the content key `key` ([[dupGroups]]'s keys): keep the min-id
+    * row per key value. One window over the key (high-cardinality,
+    * balanced). */
+  def dedupeByKey(df: DataFrame, idCol: String, key: Column): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(col(idCol))
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+  }
 
   /** Canonical content form: lowercase, every non-[a-z0-9] run collapsed to
     * one space, trimmed — a case/whitespace/punctuation-insensitive content
@@ -39,24 +51,6 @@ object Dedup {
     * any SQL engine's RE2 agree symbol-for-symbol. */
   def canonicalForm(c: Column): Column =
     trim(regexp_replace(lower(c), "[^a-z0-9]+", " "))
-
-  /** Canonical duplicate groups: one row per normalized-content group with
-    * >1 member — exact dups PLUS case/whitespace/punct variants. Same
-    * single balanced shuffle as [[exactDupGroups]], keyed on
-    * md5(canonicalForm). */
-  def canonicalDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(canonicalForm(col(textCol))).as("fingerprint"))
-      .agg(count(lit(1)).as("copies"), min(col(idCol)).as("keep_id"))
-      .filter(col("copies") > 1)
-
-  /** Canonical dedup: keep the min-id row per NORMALIZED content
-    * fingerprint — [[dedupeExact]]'s shuffle shape (one window over a
-    * high-cardinality balanced key), with the key canonicalized first. */
-  def dedupeCanonical(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = Window.partitionBy(md5(canonicalForm(col(textCol))))
-      .orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
 
   /** Unicode canonical content form: NFC-compose (the native
     * `nfc_normalize` expression — byte-distinct, codepoint-equivalent
@@ -71,34 +65,6 @@ object Dedup {
   def canonicalFormUnicode(c: Column): Column =
     trim(regexp_replace(lower(call_function("nfc_normalize", c)),
       "[^\\p{L}\\p{Nd}]+", " "))
-
-  /** Unicode canonical duplicate groups: one row per NFC-normalized
-    * content group with >1 member — [[canonicalDupGroups]] with the
-    * unicode form. Same single balanced md5-keyed shuffle. */
-  def canonicalDupGroupsUnicode(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    df.groupBy(md5(canonicalFormUnicode(col(textCol))).as("fingerprint"))
-      .agg(count(lit(1)).as("copies"), min(col(idCol)).as("keep_id"))
-      .filter(col("copies") > 1)
-
-  /** Unicode canonical dedup: keep the min-id row per NFC-normalized
-    * content fingerprint — [[dedupeCanonical]]'s shuffle shape with the
-    * unicode form keying the window. */
-  def dedupeCanonicalUnicode(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val w = Window.partitionBy(md5(canonicalFormUnicode(col(textCol))))
-      .orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .drop("_rn")
-  }
-
-  /** Exact dedup: keep the min-id row per content fingerprint. One shuffle on
-    * the fingerprint (high-cardinality, balanced). */
-  def dedupeExact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = Window.partitionBy(TextAnalysis.fingerprint(col(textCol)))
-      .orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
 
   /** Incremental exact dedup for CONTINUOUS INGEST: drop new docs whose
     * content fingerprint already exists in the historical corpus, without
@@ -217,7 +183,7 @@ object Dedup {
     * re-crawling itself; one near 0 everywhere else's overlap is the
     * canonical holder.
     *
-    * Scale shape: one fingerprint groupBy (the dedupeExact shuffle), one
+    * Scale shape: one fingerprint groupBy (the dedupeByKey shuffle), one
     * fingerprint-keyed join back, one grouped rollup — no row-data
     * windows, no pair expansion.
     *

@@ -269,179 +269,4 @@ object Features {
         expr("__sum_s * 10000L div n").as("mean_score_e6"),
         expr("n_pos * 1000000L div n").as("pos_rate_e6"))
   }
-
-  /** Sample-ratio-mismatch (SRM) check — the experiment-health gate that
-    * runs BEFORE anyone reads [[experimentReport]]'s lift: if the
-    * realized per-variant entity counts don't match the intended split,
-    * the assignment/logging path is broken and every downstream metric
-    * is biased (the classic silent A/B killer). Assignment is the same
-    * md5-mod function as experimentReport, so the check audits the REAL
-    * assignment path. Per variant: observed entities, the exact expected
-    * count under `weights` (default equal), expected_e6 = N·w·10⁶ div W,
-    * and the χ² contribution (obs − exp)²/exp as ONE row-local IEEE dag
-    * over the exact integers (round·10⁶ at the end — the pooled-z
-    * posture; χ² totals against d.o.f. = variants − 1 are the caller's
-    * threshold to apply). Variants with ZERO entities still get a row —
-    * missing mass is precisely what SRM exists to catch — via a
-    * |variants|-sized grid outer-joined onto the counts.
-    *
-    * Overflow: expected_e6 = N·w·10⁶ is a three-factor Long product, so
-    * weights are first reduced by their gcd (floor(N·gw'·10⁶/gW') ≡
-    * floor(N·w'·10⁶/W') — ratios and floors are gcd-invariant, headroom
-    * is not) and the entity total is then gated in-plan: N ≤
-    * 2⁶³/(10⁶·max w') or a descriptive raise says to coarsen the
-    * weights — the raise_error posture of the sibling gates (acfReport,
-    * holtSmooth), not an opaque ANSI overflow mid-expression.
-    *
-    * Scale shape: one entity-distinct aggregate (row-local assignment),
-    * one |variants|-key rollup, one broadcast of the 1-row total frame —
-    * summary space after the first aggregate. */
-  def srmCheck(df: DataFrame, entityCol: String, nVariants: Int,
-      weights: Seq[Long] = Nil): DataFrame = {
-    require(nVariants >= 2, s"nVariants must be >= 2, got $nVariants")
-    val w0 = if (weights.isEmpty) Seq.fill(nVariants)(1L) else weights
-    require(w0.length == nVariants,
-      s"weights must have $nVariants entries, got ${w0.length}")
-    require(w0.forall(_ > 0L), s"weights must all be > 0, got $w0")
-    @annotation.tailrec
-    def gcd(a: Long, b: Long): Long = if (b == 0L) a else gcd(b, a % b)
-    val g = w0.reduce(gcd)
-    val w = w0.map(_ / g)
-    val wTot = w.sum
-    // N·maxW·10⁶ < 2⁶³ keeps the expected_e6 product exact; data past the
-    // cap raises in-plan with the remedy instead of wrapping/ANSI-throwing
-    val totCap = Long.MaxValue / 1000000L / w.max
-    val spark = df.sparkSession
-    import spark.implicits._
-    val counts = df
-      .select(col(entityCol).cast("string").as("__id")).distinct()
-      .select((conv(substring(md5(col("__id")), 1, 8), 16, 10)
-        .cast("long") % nVariants).as("variant"))
-      .groupBy("variant").agg(count(lit(1)).as("n_entities"))
-    val grid = w.zipWithIndex
-      .map { case (wt, i) => (i.toLong, wt) }.toDF("variant", "__w")
-    val total = counts.agg(coalesce(sum("n_entities"), lit(0L)).as("__tot"))
-    grid.join(counts, Seq("variant"), "left")
-      .na.fill(0L, Seq("n_entities"))
-      .crossJoin(broadcast(total))
-      .withColumn("__tot",
-        when(col("__tot") <= totCap, col("__tot"))
-          .otherwise(raise_error(lit(
-            s"srmCheck: entity count exceeds 2^63/(1e6*maxWeight) = " +
-              s"$totCap so expected_e6 would overflow; coarsen the " +
-              "weights (they are already gcd-reduced)"))))
-      .select(col("variant"), col("n_entities"),
-        expr(s"__tot * __w * 1000000L div ${wTot}L").as("expected_e6"),
-        when(col("__tot") > 0L,
-          round((col("n_entities").cast("double") -
-            col("__tot").cast("double") * col("__w").cast("double") /
-              lit(wTot.toDouble)) *
-            (col("n_entities").cast("double") -
-              col("__tot").cast("double") * col("__w").cast("double") /
-                lit(wTot.toDouble)) /
-            (col("__tot").cast("double") * col("__w").cast("double") /
-              lit(wTot.toDouble)) * lit(1e6)).cast("long"))
-          .as("chi2_contrib_e6"))
-  }
-
-  /** CUPED variance-reduced experiment readout (Deng et al. 2013) — the
-    * industry-standard sensitivity booster: each entity's pre-experiment
-    * covariate x absorbs its share of outcome variance, so the adjusted
-    * means Ȳ_v − θ·(X̄_v − X̄) separate with the same data a raw
-    * comparison would call noise. θ = cov(x, y)/var(x) from EXACT
-    * integer sufficient statistics (n, Σx, Σy, Σx², Σy², Σxy over
-    * entity-level integer metrics — pass e2/µ-unit columns; exact sums
-    * commute, so the stats are partition-order-free), then θ, the
-    * adjusted means and the variance-reduction factor ρ² =
-    * cov²/(var_x·var_y) each as ONE fixed IEEE dag over those longs,
-    * round·10⁶ at the end (the q220 z posture — the oracle replays the
-    * dag operand for operand). Assignment is the md5-mod convention.
-    * Degenerate var(x) = 0 (constant covariate) reports θ = null and
-    * adjusted ≡ raw means; groups keep exact integer n/sums alongside.
-    *
-    * Overflow: the exact sums need n·max(x², y², |x·y|) < 2⁶³ — with
-    * per-entity metrics bounded by 10⁶ integer units that is n ≤ 9·10⁶
-    * entities; coarsen the unit for larger cohorts (the acfReport
-    * posture — exactness is the contract, the unit is the knob). The
-    * bound is ENFORCED in-plan, not just documented: a first summary
-    * pass aggregates (n, max|x|, max|y|) and raises a descriptive
-    * "coarsen the unit" error when n·max(max_x², max_y², max_x·max_y)
-    * threatens 2⁶³ (compared in double against 9·10¹⁸ — conservative by
-    * the double-rounding slack), BEFORE the sum-of-squares aggregates
-    * run; the gate rides the broadcast that feeds them, so a violating
-    * cohort never reaches the silent-wrap/mid-aggregate-ANSI path.
-    *
-    * Scale shape: one bounds pass + one entity-grain aggregate, one
-    * |variants|-key rollup, one broadcast 1-row global-stats frame. */
-  def cupedReport(df: DataFrame, entityCol: String, preCol: String,
-      postCol: String, nVariants: Int = 2): DataFrame = {
-    require(nVariants >= 2, s"nVariants must be >= 2, got $nVariants")
-    val perEntity = df
-      .select(col(entityCol).cast("string").as("__id"),
-        col(preCol).cast("long").as("__x"),
-        col(postCol).cast("long").as("__y"))
-      .groupBy("__id")
-      .agg(sum("__x").as("__x"), sum("__y").as("__y"))
-      .withColumn("variant",
-        (conv(substring(md5(col("__id")), 1, 8), 16, 10).cast("long") %
-          nVariants))
-    // in-plan enforcement of the documented exactness bound: the 1-row
-    // gate raises while its broadcast materializes — before the
-    // sum-of-squares aggregates below can overflow mid-aggregate.
-    // Multiplying the (always-1L) gate into __x/__y keeps Catalyst from
-    // pruning it out of the consuming plans.
-    val okGate = perEntity.agg(count(lit(1)).as("__n0"),
-        coalesce(max(abs(col("__x"))), lit(0L)).as("__mx0"),
-        coalesce(max(abs(col("__y"))), lit(0L)).as("__my0"))
-      .select(when(col("__n0").cast("double") * greatest(
-          col("__mx0").cast("double") * col("__mx0").cast("double"),
-          col("__my0").cast("double") * col("__my0").cast("double"),
-          col("__mx0").cast("double") * col("__my0").cast("double")) <
-            lit(9.0e18), lit(1L))
-        .otherwise(raise_error(lit(
-          "cupedReport: n*max(x^2, y^2, |x*y|) threatens 2^63 and the " +
-            "exact sufficient statistics would overflow; coarsen the " +
-            "metric unit")))
-        .as("__ok"))
-    val gated = perEntity.crossJoin(broadcast(okGate))
-      .select(col("__id"), (col("__x") * col("__ok")).as("__x"),
-        (col("__y") * col("__ok")).as("__y"), col("variant"))
-    val g = gated.agg(count(lit(1)).as("__n"),
-      sum("__x").as("__sx"), sum("__y").as("__sy"),
-      sum(col("__x") * col("__x")).as("__sxx"),
-      sum(col("__y") * col("__y")).as("__syy"),
-      sum(col("__x") * col("__y")).as("__sxy"))
-    // every statistic below is a fixed dag over the seven exact longs —
-    // n·Sxy − Sx·Sy etc. are computed in DOUBLE (the products can pass
-    // 2⁶³ as integers; IEEE multiply/subtract of exactly-represented
-    // longs is deterministic and mirrored operand-for-operand in the
-    // oracle)
-    val covN = col("__n").cast("double") * col("__sxy").cast("double") -
-      col("__sx").cast("double") * col("__sy").cast("double")
-    val varXN = col("__n").cast("double") * col("__sxx").cast("double") -
-      col("__sx").cast("double") * col("__sx").cast("double")
-    val varYN = col("__n").cast("double") * col("__syy").cast("double") -
-      col("__sy").cast("double") * col("__sy").cast("double")
-    gated.groupBy("variant")
-      .agg(count(lit(1)).as("n"), sum("__x").as("sum_pre"),
-        sum("__y").as("sum_post"))
-      .crossJoin(broadcast(g))
-      .select(col("variant"), col("n"), col("sum_pre"), col("sum_post"),
-        round(col("sum_post").cast("double") / col("n").cast("double") *
-          lit(1e6)).cast("long").as("mean_post_e6"),
-        when(varXN > 0.0, round(covN / varXN * lit(1e6)).cast("long"))
-          .as("theta_e6"),
-        when(varXN > 0.0,
-          round((col("sum_post").cast("double") / col("n").cast("double") -
-            (covN / varXN) *
-              (col("sum_pre").cast("double") / col("n").cast("double") -
-                col("__sx").cast("double") / col("__n").cast("double"))) *
-            lit(1e6)).cast("long"))
-          .otherwise(round(col("sum_post").cast("double") /
-            col("n").cast("double") * lit(1e6)).cast("long"))
-          .as("mean_adj_e6"),
-        when(varXN > 0.0 && varYN > 0.0,
-          round(covN / varXN * covN / varYN * lit(1e6)).cast("long"))
-          .as("rho2_e6"))
-  }
 }

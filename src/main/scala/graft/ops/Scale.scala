@@ -3,10 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale operators beyond broadcast hints: salted joins for skewed keys
-  * (hot keys split across `saltFactor` tasks instead of one straggler),
-  * conditional fan-out of low-parallelism inputs, and z-order / data-skipping
-  * layout reports.
+/** Scale operators beyond broadcast hints: conditional fan-out of
+  * low-parallelism inputs, the key-skew profile that sizes a salted join
+  * ([[Joins.saltedJoin]]), and z-order / data-skipping layout reports.
   */
 object Scale {
 
@@ -38,30 +37,11 @@ object Scale {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Salted equi-join for a skewed fact side: the fact's hot keys spread
-    * across `saltFactor` partitions (salt = hash of the whole fact row —
-    * deterministic, no rand()), and the other side replicates ×saltFactor.
-    * Semantics are exactly the plain inner join; use when one key holds a
-    * partition-sized share of rows and AQE skew-split isn't enough (e.g.
-    * the skew is inside a single file split).
-    *
-    * `rightDf` is replicated — keep it the smaller side (dimension-ish but
-    * too big or too skew-prone to broadcast). */
-  def saltedJoin(fact: DataFrame, right: DataFrame, key: String,
-      saltFactor: Int): DataFrame = {
-    require(saltFactor >= 1, "saltFactor must be >= 1")
-    val saltedFact = fact.withColumn("_salt",
-      pmod(hash(fact.columns.map(col): _*), lit(saltFactor)))
-    val replicated = right.withColumn("_salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    saltedFact.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
-
   /** Key-skew profiler — the measurement that decides between a plain
-    * shuffle join, AQE skew-split, and [[saltedJoin]] (and sizes the salt):
-    * the top-`topK` heaviest keys of a prospective join/groupBy key, each
-    * with its exact row count, micro-unit share of the table, the global
-    * max-over-avg skew ratio, and the salt factor that would cap the
+    * shuffle join, AQE skew-split, and [[Joins.saltedJoin]] (and sizes
+    * the salt): the top-`topK` heaviest keys of a prospective join/groupBy
+    * key, each with its exact row count, micro-unit share of the table, the
+    * global max-over-avg skew ratio, and the salt factor that would cap the
     * hottest key at `targetPartitionRows` rows per task. Run it on a
     * sample or the full table BEFORE committing a 100 TB job to a key
     * that holds a partition-sized share of the rows.

@@ -277,91 +277,4 @@ object TimeSeries {
           .otherwise(signum(col("__num")).cast("long") *
             (col("__q1") * lit(1000L) + col("__q2"))).as("r_e6")): _*)
   }
-
-  /** Holt double-exponential smoothing per key — level AND trend, the
-    * one-step-ahead forecaster for trending series that a plain EWMA
-    * ([[graft.quality.Anomaly.ewmaChart]]) systematically lags:
-    *   l_t = ⌊(α·x_t·10⁶ + (10⁶−α)·(l_{t−1}+b_{t−1})) / 10⁶⌋
-    *   b_t = ⌊(β·(l_t − l_{t−1}) + (10⁶−β)·b_{t−1}) / 10⁶⌋
-    * seeded l₁ = x₁·10⁶, b₁ = 0, with every step floored in e6 integer
-    * units — the EWMA/Kaplan–Meier per-step-floor posture, but the trend
-    * is SIGNED, so the floor is the sign-safe CASE form (operands of the
-    * raw `div` stay non-negative; Spark truncates where DuckDB floors —
-    * the q216 lesson — and a declining series hits that divergence on
-    * every step). `resid_e6 = x_t·10⁶ − (l_{t−1}+b_{t−1})` is the
-    * one-step forecast error, the anomaly/changepoint signal; null on
-    * each key's first observation (no forecast existed).
-    *
-    * Overflow: |x| ≤ 2·10⁶ raw units enforced in-plan, PLUS a per-step
-    * state guard |l_t|+|b_t| ≤ 6·10¹² that raises in-plan ("coarsen the
-    * unit") the moment the smoothed state leaves the exactly-computable
-    * region. The induction the guard licenses is data-independent: at
-    * step entry |l|+|b| ≤ B = 6·10¹² (seed: |x₁|·10⁶ ≤ 2·10¹²), so
-    * l' = convex(x·10⁶, l+b) has numerator ≤ 10⁶·max(2·10¹², B) =
-    * 6·10¹⁸ and |l'| ≤ B; l'−l = convex(x·10⁶−l, b) is ≤ 2·10¹²+B =
-    * 8·10¹², so b' = convex(l'−l, b) has numerator ≤ 10⁶·8·10¹² =
-    * 8·10¹⁸ < 2⁶³; the guard on the step OUTPUT re-establishes the
-    * invariant. No claim about the Holt recursion's transient gain is
-    * needed — and none would hold: the gain is NOT uniformly bounded
-    * over (α, β] (an underdamped α ≈ 0.01, β = 1 chain pumped by
-    * resonant ±max|x| input passes 3× max|x|·10⁶ within 100 steps), so
-    * the guard, not a convexity-in-l argument, is what keeps every
-    * product exact. Coarser units are the knob, as everywhere.
-    *
-    * Scale shape: one grouped collect of each key's day-level series
-    * (summary space), then per-row prefix folds over ≤ |periods|
-    * elements — row-local, no second shuffle (the ewmaChart plan). */
-  def holtSmooth(daily: DataFrame, keyCols: Seq[String], dayCol: String,
-      valueCol: String, alphaE6: Long, betaE6: Long): DataFrame = {
-    require(alphaE6 > 0 && alphaE6 <= 1000000L,
-      s"alphaE6 must be in (0, 1e6], got $alphaE6")
-    require(betaE6 >= 0 && betaE6 <= 1000000L,
-      s"betaE6 must be in [0, 1e6], got $betaE6")
-    val gcols = keyCols.map(col)
-    val guarded = when(abs(col(valueCol).cast("long")) <= 2000000L,
-      col(valueCol).cast("long"))
-      .otherwise(raise_error(concat(lit("holtSmooth: |value| > 2e6 at "),
-        col(dayCol).cast("string"), lit(" overflows the exact fold"))))
-    val steps = daily
-      .filter(col(valueCol).isNotNull)
-      .select(gcols :+ col(dayCol).cast("long").as("__d") :+
-        guarded.as("__x"): _*)
-      .groupBy(gcols: _*)
-      .agg(array_sort(collect_list(struct(col("__d").as("d"),
-        col("__x").as("x")))).as("__s"))
-    // sign-safe floor of v/10⁶: both engines divide non-negative longs
-    def fd(v: String) =
-      s"(CASE WHEN ($v) >= 0 THEN ($v) div 1000000L " +
-        s"ELSE -((-($v) + 999999L) div 1000000L) END)"
-    val a = alphaE6; val b = betaE6
-    // fold state: named_struct(l, b) carried through the prefix; lNew/bNew
-    // are written out repeatedly (pure expressions) because the lambda
-    // can't bind intermediates. The CASE on the 'l' field is the per-step
-    // state guard: it fires on the step OUTPUT, so every step ENTERS with
-    // |l|+|b| ≤ 6e12 and all four products that step stay under 2⁶³
-    // (see the scaladoc induction) — raised, never wrapped.
-    val lNew = fd(s"${a}L * s.x * 1000000L + ${1000000L - a}L * (acc.l + acc.b)")
-    val bNew = fd(s"${b}L * ($lNew - acc.l) + ${1000000L - b}L * acc.b")
-    def fold(len: String) =
-      s"aggregate(slice(__s, 2, $len - 1), " +
-        s"named_struct('l', element_at(__s, 1).x * 1000000L, 'b', 0L), " +
-        s"(acc, s) -> named_struct(" +
-        s"'l', CASE WHEN abs($lNew) + abs($bNew) <= 6000000000000L " +
-        s"THEN $lNew ELSE CAST(raise_error('holtSmooth: smoothed state " +
-        s"passed 6e12 micro-units and the exact fold would overflow; " +
-        s"coarsen the value unit') AS BIGINT) END, " +
-        s"'b', $bNew))"
-    steps
-      .select((gcols :+ col("__s")) :+
-        posexplode(col("__s")).as(Seq("__i", "__e")): _*)
-      .withColumn("__st", expr(fold("__i + 1")))
-      .withColumn("__prev",
-        when(col("__i") === 0,
-          lit(null).cast("struct<l:bigint,b:bigint>"))
-          .otherwise(expr(fold("__i"))))
-      .select(gcols ++ Seq(col("__e.d").as(dayCol), col("__e.x").as(valueCol),
-        col("__st.l").as("level_e6"), col("__st.b").as("trend_e6"),
-        (col("__e.x") * lit(1000000L) - (col("__prev.l") + col("__prev.b")))
-          .as("resid_e6")): _*)
-  }
 }

@@ -146,43 +146,22 @@ object Checks {
       ("regex_match", c.column,
         count(when(col(c.column).isNotNull && !col(c.column).rlike(c.pattern), 1))))
 
-  /** Run a spec's count-style checks (Q1-Q4) in ONE job: all checks become
-    * columns of a single aggregate row, then split driver-side. Specs with
-    * expectations too should call `profile` — still one job for everything. */
-  def run(df: DataFrame, spec: QualitySpec): Seq[CheckResult] = {
-    val aggs = checkAggs(df, spec)
-    if (aggs.isEmpty) return Nil
-    val row = aggregate(df, aggs.map(_._3)).head()
-    aggs.zipWithIndex.map { case ((check, column, _), i) =>
-      CheckResult(check, column, row.getLong(i))
-    }
-  }
-
-  /** The FULL quality profile — Q1-Q4 count checks AND Q5-Q7 aggregate
-    * expectations — in ONE job: every check and every expectation becomes a
-    * column of a single aggregate row. `countDistinct` expectations plan as
-    * an Expand over the same scan, not extra scans; at 100 TB this replaces
-    * (3 + #checks) separate jobs with one pass. Missing columns are skipped
-    * gracefully (reference semantics, quality_checks.py:49-51); an UNKNOWN
-    * kind throws — silently skipping it would disable a gate the caller
-    * configured (ConfigLoader validates kinds at load for the YAML path). */
-  def profile(df: DataFrame, spec: QualitySpec)
-      : (Seq[CheckResult], Seq[ExpectationResult]) = {
-    val p = profilePlan(df, spec)
-    if (p.aggs.isEmpty) (Nil, Nil)
-    else p.read(aggregate(df, p.aggs).head())
-  }
-
   /** `aggs` (non-empty) as ONE global aggregate, columns c0, c1, ... */
   private[quality] def aggregate(df: DataFrame,
       aggs: Seq[org.apache.spark.sql.Column]): DataFrame =
     df.agg(aggs.head.as("c0"),
       aggs.tail.zipWithIndex.map { case (a, i) => a.as(s"c${i + 1}") }: _*)
 
-  /** [[profile]]'s aggregate columns, and the reader of the row they
-    * lead, so a caller can append more aggregates to the same job.
-    * Building the plan runs no job; an unknown expectation kind throws
-    * here. */
+  /** The FULL quality profile — Q1-Q4 count checks AND Q5-Q7 aggregate
+    * expectations — as the columns of ONE aggregate row, and the reader of
+    * the row they lead, so a caller can append more aggregates to the same
+    * job (`Orchestrator.run` does). `countDistinct` expectations plan as an
+    * Expand over the same scan, not extra scans; at 100 TB this replaces
+    * (3 + #checks) separate jobs with one pass. Missing columns are skipped
+    * gracefully (reference semantics, quality_checks.py:49-51); an UNKNOWN
+    * kind throws — silently skipping it would disable a gate the caller
+    * configured (ConfigLoader validates kinds at load for the YAML path).
+    * Building the plan runs no job. */
   final case class ProfilePlan(aggs: Seq[org.apache.spark.sql.Column],
       read: Row => (Seq[CheckResult], Seq[ExpectationResult]))
 

@@ -4,7 +4,7 @@ import graft.ops.Joins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Q15-Q18 — cross-layer reconciliation
+/** Q15-Q17 — cross-layer reconciliation
   * (reference: src/data_quality/reconciliation.py:69-398).
   *
   * Every check reduces both sides to scalar aggregates first (counts /
@@ -14,37 +14,6 @@ import org.apache.spark.sql.functions._
   * (lakehouse_config.yaml:541-582).
   */
 object Reconciliation {
-
-  final case class ReconResult(
-      check: String,
-      srcValue: Double,
-      tgtValue: Double,
-      diffPct: Double,
-      withinTolerance: Boolean)
-
-  /** Q18 — per-column completeness (non-null %) diff between layers. */
-  def completeness(src: DataFrame, tgt: DataFrame, columns: Seq[String],
-      tolerancePct: Double): Seq[ReconResult] = {
-    def rates(df: DataFrame): Map[String, Double] = {
-      val present = columns.filter(df.columns.contains)
-      if (present.isEmpty) return Map.empty
-      val aggs = count(lit(1)).as("_total") +:
-        present.map(c => count(col(c)).as(c))
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      val total = row.getLong(0).toDouble
-      present.zipWithIndex.map { case (c, i) =>
-        c -> (if (total == 0) 100.0 else row.getLong(i + 1) / total * 100.0)
-      }.toMap
-    }
-    val s = rates(src)
-    val t = rates(tgt)
-    columns.flatMap { c =>
-      for (sv <- s.get(c); tv <- t.get(c)) yield {
-        val d = math.abs(sv - tv)
-        ReconResult(s"completeness($c)", sv, tv, d, d <= tolerancePct)
-      }
-    }
-  }
 
   /** Q15-Q17 as one DataFrame-shaped report (for SQL-oracle comparison and
     * persistence): row count, exact decimal sum of `sumCol`, and source

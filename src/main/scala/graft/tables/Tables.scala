@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   * collect here; materialization decisions belong to the caller.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
 
   /** The `events` table's `ts` column has shipped in two physical forms:
     * parquet TIMESTAMP(NANOS) (which Spark's reader only accepts as a plain

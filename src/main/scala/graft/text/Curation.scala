@@ -112,7 +112,8 @@ object Curation {
       "passed_docs" -> col("passed_docs"),
       "pass_rate_e6" -> col("pass_rate_e6"))
       .map(cs => qual.select(cs: _*)).reduce(_.unionByName(_))
-    val dups = graft.dedup.Dedup.exactDupGroups(df, idCol, textCol)
+    val dups = Dedup
+      .dupGroups(df, idCol, TextAnalysis.fingerprint(col(textCol)))
       .agg(count(lit(1)).as("dup_groups"),
         coalesce(sum(col("copies") - 1), lit(0L)).as("dup_docs"))
     val dupRows = rows("dedup", lit("*"),
@@ -543,14 +544,17 @@ object Curation {
     * generators (inverted index / banded / LSH-bucketed — never all-pairs). */
   def applyDedup(df: DataFrame, d: NearDedupSpec): DataFrame = d.strategy match {
     case "exact" =>
-      Dedup.dedupeExact(df, d.idColumn, d.contentColumn)
+      Dedup.dedupeByKey(df, d.idColumn,
+        TextAnalysis.fingerprint(col(d.contentColumn)))
     case "canonical" =>
       // exact dedup on the case/whitespace/punct-normalized content
-      Dedup.dedupeCanonical(df, d.idColumn, d.contentColumn)
+      Dedup.dedupeByKey(df, d.idColumn,
+        md5(Dedup.canonicalForm(col(d.contentColumn))))
     case "canonical_unicode" =>
       // exact dedup on the NFC-composed, unicode-folded content — the
       // multilingual-crawl variant of `canonical`
-      Dedup.dedupeCanonicalUnicode(df, d.idColumn, d.contentColumn)
+      Dedup.dedupeByKey(df, d.idColumn,
+        md5(Dedup.canonicalFormUnicode(col(d.contentColumn))))
     case "ngram_jaccard" =>
       val pairs = Dedup.jaccardPairs(df, d.idColumn, d.contentColumn,
           d.ngram, d.maxShingleFreq)

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import org.apache.spark.network.util.JavaUtils
-import scala.jdk.CollectionConverters._
+import SourceScan.{code, scalaFiles}
 
 /** The posture [[GraftSession]] gives every entry point. AQE and its
   * coalesce minimum are Spark defaults the session does not write out, so
@@ -25,13 +25,8 @@ class GraftSessionSpec extends SparkSpec {
 
   test("only GraftSession builds a Spark session") {
     val builderCall = raw"SparkSession\s*\.\s*builder".r
-    def scalaFiles(root: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(root))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
     val sites = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
-      .filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
+      .filter(p => builderCall.findFirstIn(code(Files.readString(p))).isDefined)
       .map(_.toString)
     sites shouldBe Seq("src/main/scala/graft/GraftSession.scala")
   }

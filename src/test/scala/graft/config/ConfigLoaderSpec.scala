@@ -93,4 +93,15 @@ class ConfigLoaderSpec extends AnyFunSuite with Matchers {
     (the[ConfigLoader.ConfigError] thrownBy ConfigLoader.parse(badKind, env = Map.empty))
       .getMessage should include("mean_betwen")
   }
+
+  test("a quoted or numeric boolean fails naming its key") {
+    def error(yaml: String) = (the[ConfigLoader.ConfigError] thrownBy
+      ConfigLoader.parse(yaml, env = Map.empty)).getMessage
+    error(baseYaml.replace("fail_on_error: true", "fail_on_error: \"true\"")) shouldBe
+      "quality.fail_on_error: expected true or false, got 'true'"
+    error(baseYaml.replace("group_by: [year]", "group_by: [year]\n    rollup: 1")) shouldBe
+      "gold[].rollup: expected true or false, got '1'"
+    error(baseYaml + "performance:\n  cache_after_transform: yes please\n") should
+      include("performance.cache_after_transform")
+  }
 }

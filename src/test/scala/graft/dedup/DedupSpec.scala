@@ -1,10 +1,16 @@
 package graft.dedup
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import graft.text.TextAnalysis
+import org.apache.spark.sql.functions.{col, md5}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+
+  // the content keys of the exact, canonical and canonical_unicode strategies
+  private val exactKey = TextAnalysis.fingerprint(col("text"))
+  private val canonicalKey = md5(Dedup.canonicalForm(col("text")))
+  private val unicodeKey = md5(Dedup.canonicalFormUnicode(col("text")))
 
   private def docs = Seq(
     (1L, "alpha beta gamma delta epsilon zeta"),
@@ -23,13 +29,13 @@ class DedupSpec extends SparkSpec {
   }
 
   test("exact dedup keeps min-id row per content") {
-    val out = Dedup.dedupeExact(docs, "doc_id", "text")
+    val out = Dedup.dedupeByKey(docs, "doc_id", exactKey)
     out.count() shouldBe 4
     out.select("doc_id").as[Long].collect() should not contain 4L
   }
 
   test("exactDupGroups finds the duplicated content") {
-    val g = Dedup.exactDupGroups(docs, "doc_id", "text").collect()
+    val g = Dedup.dupGroups(docs, "doc_id", exactKey).collect()
     g.length shouldBe 1
     g.head.getAs[Long]("copies") shouldBe 2L
   }
@@ -43,10 +49,10 @@ class DedupSpec extends SparkSpec {
     variants.filter(col("doc_id") === 6L)
       .select(Dedup.canonicalForm(col("text"))).as[String].head() shouldBe
       "alpha beta gamma delta epsilon zeta"
-    val kept = Dedup.dedupeCanonical(variants, "doc_id", "text")
+    val kept = Dedup.dedupeByKey(variants, "doc_id", canonicalKey)
       .select("doc_id").as[Long].collect().sorted
     kept shouldBe Array(1L, 2L, 3L, 5L, 8L) // 4,6 fold into 1; 7 into 3
-    val groups = Dedup.canonicalDupGroups(variants, "doc_id", "text")
+    val groups = Dedup.dupGroups(variants, "doc_id", canonicalKey)
       .orderBy("keep_id")
       .select("keep_id", "copies").as[(Long, Long)].collect()
     groups shouldBe Array((1L, 3L), (3L, 2L))
@@ -65,10 +71,10 @@ class DedupSpec extends SparkSpec {
     rows.filter(col("doc_id") === 2L)
       .select(Dedup.canonicalFormUnicode(col("text"))).as[String]
       .head() shouldBe "caf\u00e9 con cr\u00e8me \u00e0 z\u00fcrich"
-    val kept = Dedup.dedupeCanonicalUnicode(rows, "doc_id", "text")
+    val kept = Dedup.dedupeByKey(rows, "doc_id", unicodeKey)
       .select("doc_id").as[Long].collect().sorted
     kept shouldBe Array(1L, 5L) // 2,3,4 fold into 1; bare-ASCII 5 distinct
-    val groups = Dedup.canonicalDupGroupsUnicode(rows, "doc_id", "text")
+    val groups = Dedup.dupGroups(rows, "doc_id", unicodeKey)
       .select("keep_id", "copies").as[(Long, Long)].collect()
     groups shouldBe Array((1L, 4L))
     // the ASCII canonicalForm would have shredded every accented word to
@@ -569,7 +575,7 @@ class DedupSpec extends SparkSpec {
     rep("mirror") shouldBe ((3L, 2L, 2L, 666666L))
     // total removed matches the global exact dedup
     val globalRemoved = docs.count() -
-      Dedup.dedupeExact(docs, "doc_id", "text").count()
+      Dedup.dedupeByKey(docs, "doc_id", exactKey).count()
     rep.values.map(_._2).sum shouldBe globalRemoved
     an[IllegalArgumentException] should be thrownBy
       Dedup.dedupImpactReport(docs, "doc_id", "text", Seq.empty)

@@ -176,133 +176,4 @@ class FeaturesSpec extends SparkSpec {
     out(0).isNullAt(out(0).fieldIndex("lift_e6")) shouldBe true
     out(0).isNullAt(out(0).fieldIndex("z_e6")) shouldBe true
   }
-
-  test("srmCheck: independent md5 replay, zero-count variants get rows") {
-    val ids = (1L to 60L)
-    val rows = ids.map(i => (i, i)).toDF("id", "x")
-    def bucket(id: Long, m: Int): Long = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-      java.lang.Long.parseLong(d.take(4).map("%02x".format(_)).mkString, 16) % m
-    }
-    val out = Features.srmCheck(rows, "id", nVariants = 3)
-      .orderBy("variant").collect()
-    out.length shouldBe 3
-    (0 until 3).foreach { v =>
-      val obs = ids.count(bucket(_, 3) == v).toLong
-      out(v).getAs[Long]("n_entities") shouldBe obs
-      out(v).getAs[Long]("expected_e6") shouldBe 60L * 1000000L / 3L
-      // the chi² contribution dag, identical operand order
-      val exp = 60.0 * 1.0 / 3.0
-      out(v).getAs[Long]("chi2_contrib_e6") shouldBe
-        math.round((obs.toDouble - exp) * (obs.toDouble - exp) / exp * 1e6)
-    }
-    // a 10/1 weighted split: variant 1 expects 1/11 of mass
-    val wout = Features.srmCheck(rows, "id", nVariants = 2,
-      weights = Seq(10L, 1L)).orderBy("variant").collect()
-    wout(1).getAs[Long]("expected_e6") shouldBe 60L * 1L * 1000000L / 11L
-    // entities are DISTINCT — duplicating every row changes nothing
-    Features.srmCheck(rows.unionAll(rows), "id", 3)
-      .orderBy("variant").collect().map(_.getAs[Long]("n_entities"))
-      .toSeq shouldBe out.map(_.getAs[Long]("n_entities")).toSeq
-    // variants nobody hashed to still get a row (n = 0): nVariants far
-    // above the entity count guarantees empties exist
-    val sparse = Features.srmCheck(Seq(("a", 1L)).toDF("id", "x"), "id", 4)
-      .collect()
-    sparse.length shouldBe 4
-    sparse.count(_.getAs[Long]("n_entities") == 0L) shouldBe 3
-    an[IllegalArgumentException] should be thrownBy
-      Features.srmCheck(rows, "id", 2, weights = Seq(1L))
-    an[IllegalArgumentException] should be thrownBy
-      Features.srmCheck(rows, "id", 2, weights = Seq(1L, 0L))
-    // gcd reduction is value-neutral: (20, 2) ≡ (10, 1) — same ratios,
-    // same floors — while restoring the overflow headroom big raw
-    // weights would burn
-    Features.srmCheck(rows, "id", 2, weights = Seq(20L, 2L))
-      .orderBy("variant").collect()
-      .map(r => (r.getAs[Long]("expected_e6"),
-        r.getAs[Long]("chi2_contrib_e6"))).toSeq shouldBe
-      wout.map(r => (r.getAs[Long]("expected_e6"),
-        r.getAs[Long]("chi2_contrib_e6"))).toSeq
-    // overflow gate: a gcd-irreducible 4e12 weight caps the entity total
-    // at 2^63/(1e6·4e12) = 2 — three entities must raise in-plan with
-    // the descriptive message, not an opaque ANSI overflow
-    val three = Seq(("a", 1L), ("b", 1L), ("c", 1L)).toDF("id", "x")
-    val ex = intercept[Exception] {
-      Features.srmCheck(three, "id", 2,
-        weights = Seq(1L, 4000000000000L)).collect()
-    }
-    ex.getMessage should include("coarsen the weights")
-    // ...while two entities under the same weights still compute
-    Features.srmCheck(three.limit(2), "id", 2,
-      weights = Seq(1L, 4000000000000L)).count() shouldBe 2L
-  }
-
-  test("cupedReport: dag replay; constant covariate degrades to raw means") {
-    // pre = entity id (deterministic covariate), post correlated with pre
-    // plus a variant effect — CUPED must recover exact dags
-    val ids = (1L to 50L)
-    def bucket(id: Long): Long = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-      java.lang.Long.parseLong(d.take(4).map("%02x".format(_)).mkString, 16) % 2
-    }
-    val rows = ids.map(i => (i, i * 10L, i * 10L + 7L + bucket(i) * 3L))
-      .toDF("id", "pre", "post")
-    val out = Features.cupedReport(rows, "id", "pre", "post", 2)
-      .orderBy("variant").collect()
-    // local replica of the sufficient stats + the exact same dags
-    val xs = ids.map(_ * 10L); val ys = ids.map(i => i * 10L + 7L + bucket(i) * 3L)
-    val n = ids.size.toLong
-    val (sx, sy) = (xs.sum, ys.sum)
-    val (sxx, syy) = (xs.map(x => x * x).sum, ys.map(y => y * y).sum)
-    val sxy = ids.map(i => (i * 10L) * (i * 10L + 7L + bucket(i) * 3L)).sum
-    val covN = n.toDouble * sxy.toDouble - sx.toDouble * sy.toDouble
-    val varXN = n.toDouble * sxx.toDouble - sx.toDouble * sx.toDouble
-    val varYN = n.toDouble * syy.toDouble - sy.toDouble * sy.toDouble
-    val theta = covN / varXN
-    (0 to 1).foreach { v =>
-      val mine = ids.filter(bucket(_) == v.toLong)
-      val nv = mine.size.toLong
-      val (sxv, syv) = (mine.map(_ * 10L).sum,
-        mine.map(i => i * 10L + 7L + bucket(i) * 3L).sum)
-      val row = out(v)
-      row.getAs[Long]("n") shouldBe nv
-      row.getAs[Long]("sum_pre") shouldBe sxv
-      row.getAs[Long]("sum_post") shouldBe syv
-      row.getAs[Long]("theta_e6") shouldBe math.round(theta * 1e6)
-      row.getAs[Long]("mean_adj_e6") shouldBe math.round(
-        (syv.toDouble / nv.toDouble - theta *
-          (sxv.toDouble / nv.toDouble - sx.toDouble / n.toDouble)) * 1e6)
-      row.getAs[Long]("rho2_e6") shouldBe
-        math.round(covN / varXN * covN / varYN * 1e6)
-    }
-    // strong pre/post correlation → CUPED pulls both variants toward a
-    // common adjusted baseline: adjusted gap < raw gap
-    val rawGap = math.abs(out(1).getAs[Long]("mean_post_e6") -
-      out(0).getAs[Long]("mean_post_e6"))
-    val adjGap = math.abs(out(1).getAs[Long]("mean_adj_e6") -
-      out(0).getAs[Long]("mean_adj_e6"))
-    adjGap should be < rawGap
-    // constant covariate: var(x) = 0 → theta null, adjusted ≡ raw
-    val flat = ids.map(i => (i, 5L, i)).toDF("id", "pre", "post")
-    val fout = Features.cupedReport(flat, "id", "pre", "post", 2).collect()
-    fout.foreach { r =>
-      r.isNullAt(r.fieldIndex("theta_e6")) shouldBe true
-      r.getAs[Long]("mean_adj_e6") shouldBe r.getAs[Long]("mean_post_e6")
-    }
-    // the documented exactness bound is now ENFORCED: one entity with
-    // pre = 4e9 puts n·max(x²) = 1.6e19 past 2^63 — descriptive in-plan
-    // raise, not a silent wrap / mid-aggregate ANSI error
-    val hot = Seq(("a", 4000000000L, 1L)).toDF("id", "pre", "post")
-    val ex = intercept[Exception] {
-      Features.cupedReport(hot, "id", "pre", "post", 2).collect()
-    }
-    ex.getMessage should include("coarsen the metric unit")
-    // ...and a cohort inside the bound (n = 1, 2.9e9² ≈ 8.4e18 < 9e18)
-    // computes
-    val warm = Seq(("a", 2900000000L, 1L)).toDF("id", "pre", "post")
-    Features.cupedReport(warm, "id", "pre", "post", 2)
-      .collect().map(_.getAs[Long]("n")).sum shouldBe 1L
-  }
 }

@@ -41,18 +41,6 @@ class ScaleSpec extends SparkSpec {
     out.foreach(_.getAs[Long]("cnt") shouldBe 2L)
   }
 
-  test("salted join equals the plain join on skewed data") {
-    // 90% of fact rows share one hot key
-    val fact = ((1 to 900).map(_ => 7L) ++ (1 to 100).map(_.toLong + 100))
-      .zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "payload")
-    val dim = Seq((7L, "hot"), (101L, "a"), (102L, "b")).toDF("k", "name")
-    val plain = fact.join(dim, Seq("k"))
-    val salted = Scale.saltedJoin(fact, dim, "k", saltFactor = 8)
-    salted.count() shouldBe plain.count()
-    salted.select("k", "payload", "name").orderBy("payload").collect() shouldBe
-      plain.select("k", "payload", "name").orderBy("payload").collect()
-  }
-
   test("zorderKey2: hand-computed interleave, quadrant cells, range guard") {
     import org.apache.spark.sql.functions.col
     // x=3 (bits 0,1 → even slots 0,2) = 5; y=5 (bits 0,2 → odd slots

@@ -188,61 +188,4 @@ class TimeSeriesSpec extends SparkSpec {
     flat.length shouldBe 1
     flat(0).isNullAt(flat(0).fieldIndex("r_e6")) shouldBe true
   }
-
-  test("holtSmooth: hand-traced integer fold, signed floors, residuals") {
-    val rows = Seq(("k", 1L, 10L), ("k", 2L, 20L), ("k", 3L, 30L),
-      ("n", 1L, 5L), ("n", 2L, -5L)).toDF("key", "day", "v")
-    val out = TimeSeries.holtSmooth(rows, Seq("key"), "day", "v",
-        alphaE6 = 500000L, betaE6 = 500000L)
-      .orderBy("key", "day").collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        r.getAs[Long]("level_e6"), r.getAs[Long]("trend_e6"),
-        if (r.isNullAt(r.fieldIndex("resid_e6"))) None
-        else Some(r.getAs[Long]("resid_e6"))))
-    // α = β = 0.5: l₂ = (0.5·20e6 + 0.5·10e6) = 15e6, b₂ = 0.5·5e6 =
-    // 2.5e6; l₃ = (0.5·30e6 + 0.5·17.5e6) = 23.75e6, b₃ = 0.5·8.75e6 +
-    // 0.5·2.5e6 = 5.625e6 — floors exact at every step here
-    out.toSeq shouldBe Seq(
-      ("k", 1L, 10000000L, 0L, None),
-      ("k", 2L, 15000000L, 2500000L, Some(10000000L)),
-      ("k", 3L, 23750000L, 5625000L, Some(12500000L)),
-      ("n", 1L, 5000000L, 0L, None),
-      ("n", 2L, 0L, -2500000L, Some(-10000000L)))
-    // β = 1: the trend IS the level delta — signed path
-    val neg = TimeSeries.holtSmooth(
-        Seq(("n", 1L, 5L), ("n", 2L, -5L)).toDF("key", "day", "v"),
-        Seq("key"), "day", "v", 500000L, 1000000L)
-      .orderBy("day").collect()
-    neg(1).getAs[Long]("level_e6") shouldBe 0L
-    neg(1).getAs[Long]("trend_e6") shouldBe -5000000L
-    an[IllegalArgumentException] should be thrownBy
-      TimeSeries.holtSmooth(rows, Seq("key"), "day", "v", 0L, 0L)
-    // input gate: |x| > 2e6 raises in-plan
-    an[Exception] should be thrownBy
-      TimeSeries.holtSmooth(Seq(("k", 1L, 2000001L)).toDF("key", "day", "v"),
-        Seq("key"), "day", "v", 500000L, 0L).collect()
-  }
-
-  test("holtSmooth: per-step state guard raises before products overflow") {
-    // the underdamped α = 0.01, β = 1 recursion pumped by bang-bang
-    // ±2e6 input at its resonant phase — every observation IN contract
-    // (|x| ≤ 2e6), yet |l|+|b| passes 6e12 by observation 100 (and,
-    // unguarded, would keep pumping toward the β·(l'−l) product limit).
-    // The old doc's "|l| ≤ max|x|·1e6 by convexity" claim is exactly
-    // what this input refutes; the state guard raises instead.
-    val signs = "-" + "+" * 54 + "-" * 22 + "+" * 23
-    signs.length shouldBe 100
-    val rows = signs.zipWithIndex.map { case (c, i) =>
-      ("k", i.toLong, if (c == '+') 2000000L else -2000000L)
-    }.toDF("key", "day", "v")
-    an[Exception] should be thrownBy
-      TimeSeries.holtSmooth(rows, Seq("key"), "day", "v",
-        alphaE6 = 10000L, betaE6 = 1000000L).collect()
-    // the same chain truncated before the threshold still computes
-    val shorter = signs.take(90).zipWithIndex.map { case (c, i) =>
-      ("k", i.toLong, if (c == '+') 2000000L else -2000000L)
-    }.toDF("key", "day", "v")
-    TimeSeries.holtSmooth(shorter, Seq("key"), "day", "v",
-      10000L, 1000000L).count() shouldBe 90L
-  }
 }

@@ -2,9 +2,18 @@ package graft.quality
 
 import graft.SparkSpec
 import graft.config._
+import org.apache.spark.sql.DataFrame
 
 class ChecksSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The spec's checks and expectations as `Orchestrator.run` computes
+    * them: its [[Checks.profilePlan]] read off one fused aggregate row. */
+  private def profile(df: DataFrame, spec: QualitySpec)
+      : (Seq[Checks.CheckResult], Seq[Checks.ExpectationResult]) = {
+    val p = Checks.profilePlan(df, spec)
+    p.read(Checks.aggregate(df, p.aggs).head())
+  }
 
   private def dirty = Seq(
     (Some(1.0), Some("click"), 5),
@@ -13,8 +22,8 @@ class ChecksSpec extends SparkSpec {
     (Some(200.0), Some("bogus"), 7))
     .toDF("value", "etype", "qty")
 
-  test("run() fuses all checks into one pass and reports per-check counts") {
-    val results = Checks.run(dirty, QualitySpec(
+  test("profilePlan fuses all checks into one pass and reports per-check counts") {
+    val (results, _) = profile(dirty, QualitySpec(
       nullCheckColumns = Seq("value", "etype", "ghost"),
       positiveColumns = Seq("qty"),
       rangeChecks = Seq(RangeCheck("value", Some(0.0), Some(100.0))),
@@ -60,7 +69,7 @@ class ChecksSpec extends SparkSpec {
 
   test("zero-row input reports 0 failures, not NPE") {
     val empty = dirty.where("qty > 1000")
-    val results = Checks.run(empty, QualitySpec(nullCheckColumns = Seq("value")))
+    val (results, _) = profile(empty, QualitySpec(nullCheckColumns = Seq("value")))
     results.head.failedCount shouldBe 0L
     results.head.passed shouldBe true
   }
@@ -97,10 +106,10 @@ class ChecksSpec extends SparkSpec {
         ExpectationSpec("row_count_between", lo = 1, hi = 10),
         ExpectationSpec("unique_count_between", "etype", 1, 2),
         ExpectationSpec("mean_between", "ghost", 0, 1))) // missing col: skipped
-    val (checks, exps) = Checks.profile(dirty, spec)
+    val (checks, exps) = profile(dirty, spec)
 
-    // check results identical to run()
-    checks shouldBe Checks.run(dirty, spec)
+    checks.map(c => (c.check, c.column, c.failedCount)) shouldBe
+      Seq(("null_check", "value", 1L), ("positive_values", "qty", 2L))
     // expectation results identical to the standalone Q5-Q7 functions
     exps should have length 3
     exps(0) shouldBe ChecksTwins.meanBetween(dirty, "qty", 0.0, 10.0)
@@ -109,14 +118,14 @@ class ChecksSpec extends SparkSpec {
   }
 
   test("profile throws on an unknown expectation kind instead of skipping it") {
-    val e = the[IllegalArgumentException] thrownBy Checks.profile(dirty,
+    val e = the[IllegalArgumentException] thrownBy Checks.profilePlan(dirty,
       QualitySpec(expectations = Seq(ExpectationSpec("mean_betwen", "qty", 0, 1))))
     e.getMessage should include("unknown expectation kind")
   }
 
   test("profile on empty input: counts are 0 and mean fails closed (NaN)") {
     val empty = dirty.where("qty > 1000")
-    val (checks, exps) = Checks.profile(empty, QualitySpec(
+    val (checks, exps) = profile(empty, QualitySpec(
       nullCheckColumns = Seq("value"),
       expectations = Seq(
         ExpectationSpec("mean_between", "qty", 0.0, 10.0),
@@ -133,7 +142,7 @@ class ChecksSpec extends SparkSpec {
     Checks.regexMatchCounts(df, Seq(RegexCheck("code", "^[a-y]{2}-[0-9]$")))
       .head().getLong(0) shouldBe 1L // zz-9 fails; the null is not counted
     // the spec path fuses regex checks into the same single-pass aggregate
-    val res = Checks.run(df, QualitySpec(
+    val (res, _) = profile(df, QualitySpec(
       regexChecks = Seq(RegexCheck("code", "^[a-y]{2}-[0-9]$"),
         RegexCheck("missing_col", ".*"))))
     res.map(c => (c.check, c.column, c.failedCount)) shouldBe

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Standalone Q5-Q7 expectations, one action each: the reference the
-  * specs pin [[Checks.profile]]'s fused expectation slots against. */
+  * specs pin [[Checks.profilePlan]]'s fused expectation slots against. */
 object ChecksTwins {
 
   /** Q5 — mean within bounds. Exact decimal accumulation so the observed

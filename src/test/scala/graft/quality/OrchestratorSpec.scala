@@ -88,7 +88,8 @@ class OrchestratorSpec extends SparkSpec {
   test("rule checks, expectations and the row count share one aggregate") {
     val rules = spec.copy(expectations =
       Seq(ExpectationSpec("row_count_between", lo = 1, hi = 10)))
-    val (_, profileJobs) = JobLog(spark)(Checks.profile(dirty, rules))
+    val (_, profileJobs) = JobLog(spark)(
+      Checks.aggregate(dirty, Checks.profilePlan(dirty, rules).aggs).head())
     val (r, passJobs) = JobLog(spark)(Orchestrator.run(dirty, rules))
     r.get.rows shouldBe 5
     r.get.expectationResults.map(_.observed) shouldBe Seq(5.0)

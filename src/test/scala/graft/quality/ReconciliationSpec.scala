@@ -5,15 +5,6 @@ import graft.SparkSpec
 class ReconciliationSpec extends SparkSpec {
   import spark.implicits._
 
-  test("completeness diffs per-column non-null rates") {
-    val s2 = Seq((Some(1.0), 1), (None, 2)).toDF("v", "i")
-    val t2 = Seq((Some(1.0), 1), (Some(2.0), 2)).toDF("v", "i")
-    val r = Reconciliation.completeness(s2, t2, Seq("v"), tolerancePct = 10.0)
-    r.head.srcValue shouldBe 50.0
-    r.head.tgtValue shouldBe 100.0
-    r.head.withinTolerance shouldBe false
-  }
-
   test("snapshotDiff classifies added/removed/changed with null-safe compare") {
     val prev = Seq(
       (1L, Some(10.0), "A"),  // unchanged
