@@ -34,180 +34,78 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_dot takes exactly 2 arguments")
-        FloatVecDot(children.head, children(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "minhash_sigs takes (array<bigint>, numHashes literal)")
-        val k = children(1) match {
-          case e if e.foldable => e.eval(null).toString.toInt
-          case _ => throw new IllegalArgumentException(
-            "minhash_sigs numHashes must be a literal")
-        }
-        MinHashSigs(children.head, k)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash32 takes 1 argument")
-        SimHash32(children.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("quantize_stats"),
-      new ExpressionInfo(classOf[Int8QuantStats].getName, "quantize_stats"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "quantize_stats takes 1 argument")
-        Int8QuantStats(children.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Text].getName, "simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash64 takes 1 argument")
-        SimHash64Text(children.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "bpe_token_count takes 1 argument")
-        BpeTokenCount(children.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("weighted_ks"),
-      new ExpressionInfo(classOf[WeightedKs].getName, "weighted_ks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "weighted_ks takes 2 arguments")
-        WeightedKs(children.head, children(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("ws_token_count"),
-      new ExpressionInfo(classOf[WsTokenCount].getName, "ws_token_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "ws_token_count takes 1 argument")
-        WsTokenCount(children.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "bloom_might_contain takes (str, filter-bytes literal)")
-        val bytes = children(1) match {
-          case e if e.foldable && e.dataType ==
-              org.apache.spark.sql.types.BinaryType =>
-            e.eval(null).asInstanceOf[Array[Byte]]
-          case _ => throw new IllegalArgumentException(
-            "bloom_might_contain filter must be a binary literal")
-        }
-        BloomContains(children.head, bytes)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("vec_lsh_bucket"),
-      new ExpressionInfo(classOf[VecLshBucket].getName, "vec_lsh_bucket"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "vec_lsh_bucket takes (vec, numPlanes literal, dim literal)")
-        VecLshBucket(children.head, litInt(children(1), "numPlanes"),
-          litInt(children(2), "dim"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("vec_nearest_centroid"),
-      new ExpressionInfo(classOf[VecNearestCentroid].getName, "vec_nearest_centroid"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "vec_nearest_centroid takes (vec, centroids literal)")
-        val (flat, k, dim) = litCentroids(children(1))
-        VecNearestCentroid(children.head, flat, k, dim)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("vec_top_centroids"),
-      new ExpressionInfo(classOf[VecTopCentroids].getName, "vec_top_centroids"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "vec_top_centroids takes (vec, centroids literal, nProbe literal)")
-        val (flat, k, dim) = litCentroids(children(1))
-        VecTopCentroids(children.head, flat, k, dim,
-          litInt(children(2), "nProbe"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("dup_gram_frac_e6"),
-      new ExpressionInfo(classOf[DupGramFracE6].getName, "dup_gram_frac_e6"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "dup_gram_frac_e6 takes (text, n literal)")
-        DupGramFracE6(children.head, litInt(children(1), "n"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("topk_longs"),
-      new ExpressionInfo(classOf[TopKLongs].getName, "topk_longs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "topk_longs takes (integral column, k literal)")
-        TopKLongs(children.head, litInt(children(1), "k"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "kmv_sketch"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "kmv_sketch takes (integral column, k literal)")
-        KmvSketch(children.head, litInt(children(1), "k"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("kmv_values"),
-      new ExpressionInfo(classOf[KmvValues].getName, "kmv_values"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "kmv_values takes (integral hash column, integral value column, k literal)")
-        KmvValues(children(0), children(1), litInt(children(2), "k"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "nfc_normalize takes 1 argument")
-        NfcNormalize(children.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fps"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "winnow_fps takes (text, shingleSize literal, window literal)")
-        WinnowFingerprints(children.head, litInt(children(1), "shingleSize"),
-          litInt(children(2), "window"))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "sorted_intersect_count takes exactly 2 arguments")
-        SortedIntersectCount(children.head, children(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "shingle_hashes takes (text, shingleSize literal)")
-        val n = children(1) match {
-          case e if e.foldable => e.eval(null).toString.toInt
-          case _ => throw new IllegalArgumentException(
-            "shingle_hashes shingleSize must be a literal")
-        }
-        ShingleHashes(children.head, n)
-      }))
+    /** Register SQL function `name`, built by `build` from exactly `arity`
+      * arguments; `usage` completes the arity error "<name> takes …". */
+    def register(name: String, cls: Class[_ <: Expression], arity: Int,
+        usage: String)(build: Seq[Expression] => Expression): Unit =
+      extensions.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity, s"$name takes $usage")
+          build(children)
+        }))
+
+    register("vec_dot", classOf[FloatVecDot], 2, "exactly 2 arguments")(c =>
+      FloatVecDot(c(0), c(1)))
+    register("minhash_sigs", classOf[MinHashSigs], 2,
+      "(array<bigint>, numHashes literal)")(c =>
+      MinHashSigs(c(0), litInt(c(1), "minhash_sigs numHashes")))
+    register("simhash32", classOf[SimHash32], 1, "1 argument")(c =>
+      SimHash32(c(0)))
+    register("quantize_stats", classOf[Int8QuantStats], 1, "1 argument")(c =>
+      Int8QuantStats(c(0)))
+    register("simhash64", classOf[SimHash64Text], 1, "1 argument")(c =>
+      SimHash64Text(c(0)))
+    register("bpe_token_count", classOf[BpeTokenCount], 1, "1 argument")(c =>
+      BpeTokenCount(c(0)))
+    register("weighted_ks", classOf[WeightedKs], 2, "2 arguments")(c =>
+      WeightedKs(c(0), c(1)))
+    register("ws_token_count", classOf[WsTokenCount], 1, "1 argument")(c =>
+      WsTokenCount(c(0)))
+    register("bloom_might_contain", classOf[BloomContains], 2,
+      "(str, filter-bytes literal)") { c =>
+      val bytes = c(1) match {
+        case e if e.foldable && e.dataType ==
+            org.apache.spark.sql.types.BinaryType =>
+          e.eval(null).asInstanceOf[Array[Byte]]
+        case _ => throw new IllegalArgumentException(
+          "bloom_might_contain filter must be a binary literal")
+      }
+      BloomContains(c(0), bytes)
+    }
+    register("vec_lsh_bucket", classOf[VecLshBucket], 3,
+      "(vec, numPlanes literal, dim literal)")(c =>
+      VecLshBucket(c(0), litInt(c(1), "numPlanes"), litInt(c(2), "dim")))
+    register("vec_nearest_centroid", classOf[VecNearestCentroid], 2,
+      "(vec, centroids literal)") { c =>
+      val (flat, k, dim) = litCentroids(c(1))
+      VecNearestCentroid(c(0), flat, k, dim)
+    }
+    register("vec_top_centroids", classOf[VecTopCentroids], 3,
+      "(vec, centroids literal, nProbe literal)") { c =>
+      val (flat, k, dim) = litCentroids(c(1))
+      VecTopCentroids(c(0), flat, k, dim, litInt(c(2), "nProbe"))
+    }
+    register("dup_gram_frac_e6", classOf[DupGramFracE6], 2,
+      "(text, n literal)")(c => DupGramFracE6(c(0), litInt(c(1), "n")))
+    register("topk_longs", classOf[TopKLongs], 2,
+      "(integral column, k literal)")(c => TopKLongs(c(0), litInt(c(1), "k")))
+    register("kmv_sketch", classOf[KmvSketch], 2,
+      "(integral column, k literal)")(c => KmvSketch(c(0), litInt(c(1), "k")))
+    register("kmv_values", classOf[KmvValues], 3,
+      "(integral hash column, integral value column, k literal)")(c =>
+      KmvValues(c(0), c(1), litInt(c(2), "k")))
+    register("nfc_normalize", classOf[NfcNormalize], 1, "1 argument")(c =>
+      NfcNormalize(c(0)))
+    register("winnow_fps", classOf[WinnowFingerprints], 3,
+      "(text, shingleSize literal, window literal)")(c =>
+      WinnowFingerprints(c(0), litInt(c(1), "shingleSize"),
+        litInt(c(2), "window")))
+    register("sorted_intersect_count", classOf[SortedIntersectCount], 2,
+      "exactly 2 arguments")(c => SortedIntersectCount(c(0), c(1)))
+    register("shingle_hashes", classOf[ShingleHashes], 2,
+      "(text, shingleSize literal)")(c =>
+      ShingleHashes(c(0), litInt(c(1), "shingle_hashes shingleSize")))
   }
 }

@@ -59,7 +59,8 @@ final case class RegexCheck(column: String, pattern: String)
 /** One PII scrubbing rule (curation.pii[]): substrings of `column` matching
   * `pattern` are replaced by `replacement`. Rules apply in sequence, so a
   * later rule on the same column sees the earlier rule's output. */
-final case class PiiRule(column: String, pattern: String, replacement: String)
+final case class PiiRule(column: String, pattern: String,
+    replacement: String = "[REDACTED]")
 
 object PiiRule {
   /** Named baseline patterns for `curation.pii[].preset` (standard published

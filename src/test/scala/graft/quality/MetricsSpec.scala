@@ -12,8 +12,6 @@ class MetricsSpec extends org.scalatest.funsuite.AnyFunSuite
     Metrics.accuracy(10000, 2) shouldBe 98.0 // 2 anomalies × 100 rows
     Metrics.accuracy(100, 50) shouldBe 50.0 // affected >= total → 50 (metrics.py:250)
     Metrics.accuracy(1000, 6) shouldBe 50.0 // 60% rate would score 40 → floored at 50
-    Metrics.timeliness(1.0, 24.0) shouldBe 100.0
-    Metrics.timeliness(30.0, 24.0) shouldBe 40.0
   }
 
   test("overall filters zero scores out of the weighted average (reference quirk)") {
