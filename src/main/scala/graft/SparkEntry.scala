@@ -40,6 +40,21 @@ object SparkEntry {
   private def dsum(c: String, scale: Int = 2): String =
     s"cast(sum(cast($c as decimal(18,$scale))) as double)"
 
+  /** The basket co-occurrence graph of the graph queries: lineitem part
+    * pairs over order baskets of at most 20 items, kept when they share at
+    * least 2 baskets — (item_a, item_b, n_baskets). */
+  private def basketEdges(s: SparkSession, dir: String): DataFrame =
+    Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
+      "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L)
+
+  /** The seed set of the basket-graph queries: every node of `edges` whose
+    * id is divisible by `mod`. */
+  private def basketSeeds(edges: DataFrame, mod: Int): DataFrame =
+    edges.select(col("item_a").as("node"))
+      .unionAll(edges.select(col("item_b").as("node")))
+      .distinct()
+      .filter(col("node") % mod === 0)
+
   /** The q04 revenue mart model — shared with q53, which re-aggregates the
     * mart this model builds through the same engine (A11). */
   private lazy val revenueStatsModel = GoldModel(
@@ -1164,9 +1179,7 @@ object SparkEntry {
     // capped, presence-based) with a count floor — the frequent-itemset
     // candidate generator. Per-key join fan-out bounded by the cap.
     "q150_basket_pairs" -> ((s, dir) =>
-      Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L)
-        .orderBy("item_a", "item_b")),
+      basketEdges(s, dir).orderBy("item_a", "item_b")),
 
     // Packing efficiency: q44's greedy shard packing rolled up per shard —
     // bins used vs the ceil(total/budget) floor, mean fill in micro-units.
@@ -1301,9 +1314,7 @@ object SparkEntry {
     // by O(√m) out-degree, never the hub's raw degree. Oracle replays the
     // edge build + the closing 3-way join quadratically.
     "q161_triangles" -> ((s, dir) =>
-      graft.ops.Graphs.triangleCounts(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.triangleCounts(basketEdges(s, dir),
         "item_a", "item_b")
         .orderBy("node")),
 
@@ -1571,13 +1582,8 @@ object SparkEntry {
     // perspective of" those items; q187's machinery with a per-node
     // teleport vector, oracle-unrolled.
     "q202_pagerank_personalized" -> ((s, dir) => {
-      val edges = Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L)
-        .localCheckpoint()
-      val seeds = edges.select(col("item_a").as("node"))
-        .unionAll(edges.select(col("item_b").as("node")))
-        .distinct()
-        .filter(col("node") % 5 === 0)
+      val edges = basketEdges(s, dir).localCheckpoint()
+      val seeds = basketSeeds(edges, 5)
         .select(col("node"), lit(1L).as("w"))
       graft.ops.Graphs.pageRankDirected(edges, "item_a", "item_b",
         iters = 5, personalization = Some(seeds))
@@ -1613,13 +1619,8 @@ object SparkEntry {
     // first-reach ≡ min over all bounded walks, so the hash compare
     // proves the frontier algebra, not just row counts.
     "q206_bfs_distances" -> ((s, dir) => {
-      val edges = Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L)
-        .localCheckpoint()
-      val seeds = edges.select(col("item_a").as("node"))
-        .unionAll(edges.select(col("item_b").as("node")))
-        .distinct()
-        .filter(col("node") % 7 === 0)
+      val edges = basketEdges(s, dir).localCheckpoint()
+      val seeds = basketSeeds(edges, 7)
       graft.ops.Graphs.bfsDistances(edges, "item_a", "item_b",
         seeds, "node", maxHops = 3)
         .orderBy("node")
@@ -1665,9 +1666,7 @@ object SparkEntry {
     // authorities — both asymmetries live. 3 rounds of the e9
     // nested-floor-division fixed point, oracle-unrolled.
     "q210_hits" -> ((s, dir) =>
-      graft.ops.Graphs.hits(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.hits(basketEdges(s, dir),
         "item_a", "item_b", iters = 3)
         .orderBy("node")),
 
@@ -1856,14 +1855,10 @@ object SparkEntry {
     // total cost from the %7 seed set within 3 hops — frontier
     // Bellman–Ford, oracle = min over all ≤3-edge walks (recursive CTE).
     "q223_shortest_paths" -> ((s, dir) => {
-      val edges = Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L)
+      val edges = basketEdges(s, dir)
         .withColumn("w", expr("1000000L div n_baskets"))
         .localCheckpoint()
-      val seeds = edges.select(col("item_a").as("node"))
-        .unionAll(edges.select(col("item_b").as("node")))
-        .distinct()
-        .filter(col("node") % 7 === 0)
+      val seeds = basketSeeds(edges, 7)
       graft.ops.Graphs.shortestPathsBounded(edges, "item_a", "item_b",
         "w", seeds, "node", maxHops = 3)
         .orderBy("node")
@@ -1889,9 +1884,7 @@ object SparkEntry {
 
     // join-for-join.
     "q201_hash_walks" -> ((s, dir) =>
-      graft.ops.Graphs.hashWalks(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.hashWalks(basketEdges(s, dir),
         "item_a", "item_b", steps = 3, seed = 7L)
         .orderBy("start", "step")),
 
@@ -1901,9 +1894,7 @@ object SparkEntry {
     // item community. Oracle unrolls the rounds; the per-node argmax
     // replays as max over {'c': cnt, 'g': -label} structs.
     "q189_communities" -> ((s, dir) =>
-      graft.ops.Graphs.labelPropagation(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.labelPropagation(basketEdges(s, dir),
         "item_a", "item_b", iters = 4)
         .orderBy("node")),
 
@@ -1913,9 +1904,7 @@ object SparkEntry {
     // exercised on real mass every round; same e9 integer fixed point,
     // oracle unrolls the recurrence with the dangling aggregate inlined.
     "q187_pagerank_directed" -> ((s, dir) =>
-      graft.ops.Graphs.pageRankDirected(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.pageRankDirected(basketEdges(s, dir),
         "item_a", "item_b", iters = 5)
         .orderBy("node")),
 
@@ -2022,9 +2011,7 @@ object SparkEntry {
     // basket co-occurrence counts — same exact fixed-point integer
     // arithmetic as q171, weighted-share numerators.
     "q178_pagerank_weighted" -> ((s, dir) =>
-      graft.ops.Graphs.pageRankWeighted(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.pageRankWeighted(basketEdges(s, dir),
         "item_a", "item_b", "n_baskets", iters = 4)
         .orderBy("node")),
 
@@ -3291,9 +3278,7 @@ object SparkEntry {
     // bit-identical on any engine/partitioning (a double PageRank's sum
     // order drifts). 5 fixed rounds; the oracle unrolls them.
     "q171_pagerank" -> ((s, dir) =>
-      graft.ops.Graphs.pageRank(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.pageRank(basketEdges(s, dir),
         "item_a", "item_b", iters = 5)
         .orderBy("node")),
 
@@ -3302,9 +3287,7 @@ object SparkEntry {
     // exactly 8 peels (idempotent past the fixpoint, so parity holds
     // whichever side converges first).
     "q172_kcore" -> ((s, dir) =>
-      graft.ops.Graphs.kCore(
-        Baskets.basketPairs(Tables.load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasketSize = 20, minCount = 2L),
+      graft.ops.Graphs.kCore(basketEdges(s, dir),
         "item_a", "item_b", k = 3, maxRounds = 8)
         .orderBy("node")),
 

@@ -31,12 +31,13 @@ import org.apache.spark.sql.functions._
 object Fuzzy {
 
   /** (id, s, k) with one row per deletion-neighborhood key of s.
-    * fanOut (r21): a single-file input plans as ONE scan task, and because
-    * the candidate join's small side broadcasts, the ENTIRE pipeline —
+    * fanOut: a single-file input plans as ONE scan task, and because the
+    * candidate join's small side broadcasts, the ENTIRE pipeline —
     * explode, hot-block probe, join, levenshtein verify, distinct partial
-    * — fuses into that one task (measured: 4.4 s of q157's 7.2 s on one
-    * core of 32). The conditional repartition spreads the per-row work
-    * cluster-wide and is the identity on any already-parallel input. */
+    * — would fuse into that one task (measured: 4.4 s of q157's 7.2 s on
+    * one core of 32). The conditional repartition spreads the per-row
+    * work cluster-wide and is the identity on any already-parallel
+    * input. */
   private def delKeys(df: DataFrame, idCol: String, strCol: String): DataFrame =
     Scale.fanOut(
       df.select(col(idCol).cast("long").as("id"), col(strCol).as("s")))
@@ -59,82 +60,73 @@ object Fuzzy {
           "t -> transform(sequence(0, length(t)), " +
           "j -> concat(substring(t, 1, j), substring(t, j + 2)))))"))))
 
-  /** All unordered pairs (id_a < id_b) of rows whose `strCol` values are
-    * within Levenshtein distance 1, with the distance. */
-  def editDistance1Join(df: DataFrame, idCol: String, strCol: String,
-      maxBlockSize: Int = 1000): DataFrame = {
-    // localCheckpoint (r21): the exploded key table feeds THREE subtrees
-    // (the hot-block count, and both self-join sides) — without cutting
-    // lineage the explode + array_distinct pipeline runs three times
-    // (measured ~2/3 of the query's CPU); checkpointed it runs once.
-    // LAZY (r22): materializes inside the hot-block count job instead of
-    // an extra construction-time job. Storage footprint: the FULL
-    // (len+1)-key neighborhood pins in executor MEMORY_AND_DISK for the
-    // query's lifetime, and executor loss is unrecoverable (truncated
-    // lineage) — the measured trade for not running the explode 3×.
-    val keyed = delKeys(df, idCol, strCol).localCheckpoint(eager = false)
-    val capped =
-      if (maxBlockSize > 0) {
-        val hot = keyed.groupBy("k").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxBlockSize).select("k")
-        keyed.join(broadcast(hot), Seq("k"), "left_anti")
-      } else keyed
-    // verify BEFORE the distinct: the bounded 3-arg levenshtein (DP
-    // early-exits/bands past the threshold) runs map-side on every
-    // candidate occurrence — a pair sharing j deletion keys is verified
-    // j times — so the distinct's shuffle carries only surviving
-    // (id, id, dist) triples instead of every candidate occurrence with
-    // both strings aboard. Measured (SCALE.md r20): shuffle 9.5 → 6.4 MB
-    // at sf0.1 and 97.3 → 66.4 MB at sf1~ (−33%), wall 11.0 → 9.9 s at
-    // sf1~ — the re-verification is cheaper than shipping the strings.
-    // -1 = over threshold.
+  /** Drops, from each of `sides`, every deletion key held by more than
+    * `maxBlockSize` rows across all sides combined (a key hot on either
+    * side floods the join the same way) — one broadcast anti-join per
+    * side. `maxBlockSize <= 0` returns the sides unchanged. */
+  private def dropHotBlocks(maxBlockSize: Int,
+      sides: DataFrame*): Seq[DataFrame] =
+    if (maxBlockSize <= 0) sides
+    else {
+      val hot = sides.map(_.select("k")).reduce(_ unionAll _)
+        .groupBy("k").agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > maxBlockSize).select("k")
+      sides.map(_.join(broadcast(hot), Seq("k"), "left_anti"))
+    }
+
+  /** The self-join kernel of [[editDistance1Join]] and
+    * [[editDistance2Join]] over a deletion-key frame (id, s, k): all
+    * unordered pairs (id_a < id_b) sharing a key whose strings are within
+    * Levenshtein distance `maxDist`.
+    *
+    * The key frame is checkpointed lazily: it feeds the hot-block count
+    * and both join sides, so the explode runs once, materialized inside
+    * the hot-block count job. The cost is storage — every key of every
+    * row stays in executor MEMORY_AND_DISK for the query's lifetime
+    * (~len²/2 keys per row at ed≤2), and executor loss is unrecoverable
+    * (truncated lineage).
+    *
+    * The bounded 3-arg `levenshtein` (it early-exits past the bound, -1
+    * = over) verifies every candidate occurrence BEFORE the distinct, so
+    * the distinct's shuffle carries only surviving (id, id, dist) triples
+    * instead of every candidate with both strings aboard; a pair sharing
+    * j keys is verified j times, which measured cheaper than shipping
+    * the strings (SCALE.md). */
+  private def selfJoin(keys: DataFrame, maxDist: Int,
+      maxBlockSize: Int): DataFrame = {
+    val Seq(capped) =
+      dropHotBlocks(maxBlockSize, keys.localCheckpoint(eager = false))
     capped.as("a").join(capped.as("b"),
         col("a.k") === col("b.k") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        levenshtein(col("a.s"), col("b.s"), 1).cast("long").as("dist"))
+        levenshtein(col("a.s"), col("b.s"), maxDist).cast("long").as("dist"))
       .filter(col("dist") >= 0)
       .distinct()
   }
+
+  /** All unordered pairs (id_a < id_b) of rows whose `strCol` values are
+    * within Levenshtein distance 1, with the distance: [[selfJoin]] over
+    * the (len+1)-key [[delKeys]] neighborhoods. */
+  def editDistance1Join(df: DataFrame, idCol: String, strCol: String,
+      maxBlockSize: Int = 1000): DataFrame =
+    selfJoin(delKeys(df, idCol, strCol), 1, maxBlockSize)
 
   /** [[editDistance1Join]] widened to Levenshtein distance ≤ 2 — the
     * fat-finger tier real name/title data needs (two typos, a swapped
     * pair of characters, one typo + one truncation). Same FastSS
     * argument one level deeper: ed(s,t) ≤ 2 ⇒ the ≤2-deletion
-    * neighborhoods of s and t intersect, so the ~len²/2-key explode +
-    * one equi-join finds every true pair and the bounded 3-arg
-    * `levenshtein(_, _, 2)` discards the blocking's false positives.
-    * The oracle is again the full quadratic join — a green hash proves
-    * zero pairs lost to blocking at this depth too.
+    * neighborhoods of s and t intersect, so [[selfJoin]] over the
+    * ~len²/2-key [[delKeys2]] explode finds every true pair and the
+    * bounded `levenshtein(_, _, 2)` discards the blocking's false
+    * positives. The oracle is again the full quadratic join — a green
+    * hash proves zero pairs lost to blocking at this depth too.
     *
     * Costs ~len/2× more exploded keys and a denser candidate set than
     * the ed≤1 form — the price of the wider radius, still nowhere near
     * quadratic. Same silent in-plan hot-block cap. */
   def editDistance2Join(df: DataFrame, idCol: String, strCol: String,
-      maxBlockSize: Int = 1000): DataFrame = {
-    // same three-consumer lazy checkpoint as editDistance1Join — the
-    // ≤2-deletion explode is ~len/2× heavier per row, so the saving is
-    // proportionally larger, and so is the pinned footprint: ~len²/2 keys
-    // PER ROW live in executor storage for the query's lifetime. Callers
-    // running ed≤2 on long strings at scale should budget storage memory
-    // accordingly (or pre-truncate the key strings upstream).
-    val keyed = delKeys2(df, idCol, strCol).localCheckpoint(eager = false)
-    val capped =
-      if (maxBlockSize > 0) {
-        val hot = keyed.groupBy("k").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxBlockSize).select("k")
-        keyed.join(broadcast(hot), Seq("k"), "left_anti")
-      } else keyed
-    // same verify-before-distinct shape as [[editDistance1Join]] (the
-    // measured r20 shuffle cut); the ~len²/2-key explode makes the
-    // per-occurrence re-verification multiplicity higher here, but the
-    // avoided string shipping is bigger in the same proportion
-    capped.as("a").join(capped.as("b"),
-        col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        levenshtein(col("a.s"), col("b.s"), 2).cast("long").as("dist"))
-      .filter(col("dist") >= 0)
-      .distinct()
-  }
+      maxBlockSize: Int = 1000): DataFrame =
+    selfJoin(delKeys2(df, idCol, strCol), 2, maxBlockSize)
 
   /** Cross-TABLE record linkage: (left_id, right_id, dist) for every pair
     * within Levenshtein distance 1 — match a dirty fact-side string column
@@ -142,23 +134,14 @@ object Fuzzy {
     * the |L|×|R| cross product. Same deletion-neighborhood blocking and
     * the same completeness argument as [[editDistance1Join]] (the
     * substitution/indel/equality cases never relied on self-joining); the
-    * hot-block cap applies to the COMBINED per-key frequency — a key hot
-    * on either side floods the join the same way. */
+    * hot-block cap ([[dropHotBlocks]]) applies to the COMBINED per-key
+    * frequency, and candidates are verified before the distinct, as in
+    * [[selfJoin]]. */
   def editDistance1JoinBetween(left: DataFrame, leftId: String,
       leftStr: String, right: DataFrame, rightId: String, rightStr: String,
       maxBlockSize: Int = 1000): DataFrame = {
-    val lk = delKeys(left, leftId, leftStr)
-    val rk = delKeys(right, rightId, rightStr)
-    val hot =
-      if (maxBlockSize > 0)
-        lk.select("k").unionAll(rk.select("k"))
-          .groupBy("k").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxBlockSize).select("k")
-      else lk.select("k").limit(0)
-    val lc = lk.join(broadcast(hot), Seq("k"), "left_anti")
-    val rc = rk.join(broadcast(hot), Seq("k"), "left_anti")
-    // verify-before-distinct (the measured r20 shuffle cut): only
-    // surviving (left_id, right_id, dist) triples reach the shuffle
+    val Seq(lc, rc) = dropHotBlocks(maxBlockSize,
+      delKeys(left, leftId, leftStr), delKeys(right, rightId, rightStr))
     lc.as("a").join(rc.as("b"), col("a.k") === col("b.k"))
       .select(col("a.id").as("left_id"), col("b.id").as("right_id"),
         levenshtein(col("a.s"), col("b.s"), 1).cast("long").as("dist"))

@@ -32,18 +32,12 @@ object Graphs {
     * self-loops are removed first. Output: (node, n_triangles), nodes in
     * no triangle omitted. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // canonical undirected edge set: a < b, deduped, no self-loops.
     // localCheckpoint (the dupClusters pattern): the edge set is referenced
     // by the degree count, the orientation join, and the wedge-closing
     // membership join — without cutting lineage here, Catalyst would
     // replay the caller's whole edge-derivation pipeline (e.g. q150's
     // basket-pair build) once per reference.
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    val canon = undirected(edges, srcCol, dstCol).localCheckpoint()
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -75,23 +69,90 @@ object Graphs {
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
 
+  /** The canonical undirected edge set: (a, b) longs with a < b, self-loops
+    * dropped. Unweighted, duplicate and reversed edges collapse to one;
+    * with `weightCol`, only positive weights count and duplicates merge by
+    * summing them into `w`. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String] = None): DataFrame = {
+    val ends = Seq(least(col(srcCol), col(dstCol)).cast("long").as("a"),
+      greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+    weightCol match {
+      case None =>
+        edges.select(ends: _*).filter(col("a") =!= col("b")).distinct()
+      case Some(w) =>
+        edges.select(ends :+ col(w).cast("long").as("w"): _*)
+          .filter(col("a") =!= col("b") && col("w") > 0)
+          .groupBy("a", "b").agg(sum(col("w")).as("w"))
+    }
+  }
+
+  /** The directed edge set: (src, dst) longs, self-loops dropped,
+    * duplicates collapsed, checkpointed (every caller reads it more than
+    * once). */
+  private def directed(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+
+  /** Every (a, b, …) row in both directions, as (src, dst, …). A row-local
+    * explode, so the aggregate that built the rows (and the caller's edge
+    * derivation under it) runs once; a union of the two directions would
+    * run it once per branch — ReusedExchange shares the shuffle files,
+    * not the reduce. */
+  private def bothWays(e: DataFrame): DataFrame = {
+    val rest = e.columns.toSeq.filterNot(Set("a", "b")).map(col)
+    def dir(from: String, to: String) =
+      struct(col(from).as("src") +: col(to).as("dst") +: rest: _*)
+    e.select(explode(array(dir("a", "b"), dir("b", "a"))).as("_e"))
+      .select("_e.*")
+  }
+
   /** Symmetric (both-direction) edge list with self-loops dropped and
-    * duplicates removed — the shared preamble of the iterative ops.
-    * Both directions are emitted by a row-local 2-element explode of the
-    * canonical edge (r22): the previous `canon ∪ canon.swapped` union ran
-    * the distinct's final aggregate — and with it the caller's whole
-    * edge-derivation reduce (e.g. q150's basket-pair count) — once per
-    * branch; ReusedExchange shares the shuffle files, not the reduce. */
+    * duplicates removed — the shared preamble of the iterative ops. */
   private def symmetric(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
+    bothWays(undirected(edges, srcCol, dstCol))
+
+  /** The undirected rank loop of [[pageRank]] and [[pageRankWeighted]],
+    * over a canonical (a, b, w) edge table:
+    *
+    * r_{t+1}(v) = (15·(SCALE div N)) div 100
+    *            + (85 · Σ_{u~v} (r_t(u)·w_uv div W_u)) div 100
+    *
+    * with W_u = Σ weights at u. The weighted degree rides ON the
+    * checkpointed symmetric edges (joined once, before the loop), and
+    * symmetry gives every node an in-edge, so a round is ONE join of the
+    * rank table onto those edges + ONE grouped sum, and `inflow` is never
+    * null. Each round is checkpointed lazily, so round N never replans
+    * rounds 1..N−1. */
+  private def undirectedRank(canon: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    val sym = bothWays(canon).localCheckpoint()
+    val wdeg = sym.groupBy(col("src").as("node"))
+      .agg(sum(col("w")).as("wdeg"))
+    val symDeg = sym
+      .join(wdeg.withColumnRenamed("node", "src"), "src")
+      .localCheckpoint()
+    val scale = 1000000000L
+    val n = wdeg.count()
+    if (n == 0) // no edges -> no nodes -> empty ranking, not a div-by-zero
+      return wdeg.select(col("node"), lit(0L).as("rank_e9"))
+    val init = scale / n
+    val base = (15L * init) / 100L
+    var ranks = wdeg.select(col("node"), lit(init).as("rank_e9"))
+    (1 to iters).foreach { _ =>
+      ranks = symDeg
+        .join(ranks.withColumnRenamed("node", "src"), "src")
+        .select(col("dst").as("node"),
+          expr("rank_e9 * w div wdeg").as("share"))
+        .groupBy("node").agg(sum(col("share")).as("inflow"))
+        .select(col("node"),
+          (lit(base) + expr("85L * inflow div 100")).as("rank_e9"))
+        .localCheckpoint(eager = false)
+    }
+    ranks
+  }
 
   /** PageRank over an UNDIRECTED edge list in exact fixed-point integer
     * arithmetic — node importance for co-occurrence graphs (which items /
@@ -108,97 +169,27 @@ object Graphs {
     * e-9 per round) — fine for ranking, which only needs ORDER. No
     * dangling nodes by construction (symmetric edges ⇒ deg ≥ 1).
     *
-    * Scale shape per round (r21): ONE join of the rank table onto the
-    * degree-annotated edge list + ONE grouped sum — the degree join and
-    * the node-list backfill join the pre-r21 loop also paid per round
-    * are gone: deg rides ON the checkpointed edges (joined once, before
-    * the loop), and symmetry guarantees every node has an in-edge, so
-    * the grouped sum already covers the full node set and `inflow` is
-    * never null. localCheckpoint cuts lineage so round N never replans
-    * rounds 1..N−1 (the dupClusters posture). Fixed `iters` rounds:
-    * deterministic, and an oracle can unroll them.
+    * [[undirectedRank]] over the distinct edges at weight 1
+    * (r·1 div deg ≡ r div deg): per round one keyed join of the rank
+    * table onto the degree-annotated edges + one grouped sum. Fixed
+    * `iters` rounds: deterministic, and an oracle can unroll them.
     * Output: (node, rank_e9). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 10): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val sym = symmetric(edges, srcCol, dstCol).localCheckpoint()
-    val deg = sym.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    // (src, dst, deg(src)) — the loop's static side, annotated ONCE
-    val symDeg = sym
-      .join(deg.withColumnRenamed("node", "src"), "src")
-      .localCheckpoint()
-    val scale = 1000000000L
-    val n = deg.count()
-    if (n == 0) // no edges -> no nodes -> empty ranking, not a div-by-zero
-      return deg.select(col("node"), lit(0L).as("rank_e9"))
-    val init = scale / n
-    val base = (15L * init) / 100L
-    var ranks = deg.select(col("node"), lit(init).as("rank_e9"))
-    (1 to iters).foreach { _ =>
-      ranks = symDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("rank_e9 div deg").as("share"))
-        .groupBy("node").agg(sum(col("share")).as("inflow"))
-        .select(col("node"),
-          (lit(base) + expr("85L * inflow div 100")).as("rank_e9"))
-        .localCheckpoint(eager = false)
-    }
-    ranks
-  }
+      iters: Int = 10): DataFrame =
+    undirectedRank(undirected(edges, srcCol, dstCol).withColumn("w", lit(1L)),
+      iters)
 
   /** [[pageRank]] with EDGE WEIGHTS (co-occurrence counts, interaction
     * strengths): each node's rank splits across its neighbors in
     * proportion to edge weight — share(u→v) = r_u·w_uv div W_u, with
     * W_u = Σ weights at u — in the same exact fixed-point integer
     * arithmetic (weights must be positive integers; duplicate input
-    * edges merge by summing weight). Unit weights reduce to [[pageRank]]
-    * exactly (spec-pinned). */
+    * edges merge by summing weight). [[undirectedRank]] over the
+    * weight-merged edges, so unit weights reduce to [[pageRank]] exactly
+    * (spec-pinned) and the per-round shape is the same. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, iters: Int = 10): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("a") =!= col("b") && col("w") > 0)
-      .groupBy("a", "b").agg(sum(col("w")).as("w"))
-    // row-local direction doubling (the `symmetric` r22 shape): the old
-    // two-branch union ran the weight-merge aggregate once per direction
-    val sym = canon
-      .select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst"), col("w")),
-        struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"),
-        col("_e.w").as("w"))
-      .localCheckpoint()
-    val wdeg = sym.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("wdeg"))
-    // (src, dst, w, wdeg(src)) — annotated ONCE (the pageRank r21 shape)
-    val symDeg = sym
-      .join(wdeg.withColumnRenamed("node", "src"), "src")
-      .localCheckpoint()
-    val scale = 1000000000L
-    val n = wdeg.count()
-    if (n == 0)
-      return wdeg.select(col("node"), lit(0L).as("rank_e9"))
-    val init = scale / n
-    val base = (15L * init) / 100L
-    var ranks = wdeg.select(col("node"), lit(init).as("rank_e9"))
-    (1 to iters).foreach { _ =>
-      // symmetry ⇒ every node is some edge's dst ⇒ inflow never null
-      ranks = symDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("rank_e9 * w div wdeg").as("share"))
-        .groupBy("node").agg(sum(col("share")).as("inflow"))
-        .select(col("node"),
-          (lit(base) + expr("85L * inflow div 100")).as("rank_e9"))
-        .localCheckpoint(eager = false)
-    }
-    ranks
-  }
+      weightCol: String, iters: Int = 10): DataFrame =
+    undirectedRank(undirected(edges, srcCol, dstCol, Some(weightCol)), iters)
 
   /** PageRank over a DIRECTED edge list with dangling-node mass
     * redistribution and an optional personalization vector — the
@@ -228,19 +219,14 @@ object Graphs {
   def pageRankDirected(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, personalization: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+    val e = directed(edges, srcCol, dstCol)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .distinct()
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     // (src, dst, outdeg(src)) — annotated ONCE, not joined per round
-    // (the pageRank r21 shape); every src has outdeg ≥ 1 by construction
+    // (the [[undirectedRank]] shape); every src has outdeg ≥ 1
     val eDeg = e
       .join(outdeg.withColumnRenamed("node", "src"), "src")
       .localCheckpoint()
@@ -445,20 +431,16 @@ object Graphs {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val e = directed(edges, srcCol, dstCol)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .distinct().localCheckpoint()
     val scale = 1000000000L
-    // SPARSE rounds (r21): scores are carried only for nodes where they
-    // can be nonzero (auth: nodes WITH in-edges; hub: nodes WITH
-    // out-edges) — a zero score joins into the next half-round's sum as
-    // nothing, so dropping the row is exact, and each half-round saves
-    // the full-node-list backfill join the pre-r21 loop paid. The L1
-    // total is unchanged (zeros add nothing). Zero-fill happens ONCE, in
-    // the final assembly below.
+    // SPARSE rounds: scores are carried only for nodes where they can be
+    // nonzero (auth: nodes WITH in-edges; hub: nodes WITH out-edges) — a
+    // zero score joins into the next half-round's sum as nothing, so
+    // dropping the row is exact and no half-round needs a full-node-list
+    // backfill join. Zero-fill happens ONCE, in the final assembly below.
     def normalize(raw: DataFrame, out: String): DataFrame = {
       val t = raw.agg(sum("raw").as("t"))
       raw.crossJoin(broadcast(t))
@@ -484,21 +466,23 @@ object Graphs {
         coalesce(col("auth_e9"), lit(0L)).as("auth_e9"))
   }
 
-  /** Hop-bounded WEIGHTED shortest paths from a seed set — [[bfsDistances]]
-    * with a cost model (edge weights = dissimilarity, latency, toll):
-    * min total weight over paths of ≤ `maxHops` edges, i.e. exactly
-    * `maxHops` rounds of Bellman–Ford relaxation, in the FRONTIER form
-    * (only nodes whose cost improved last round re-expand — on a
+  /** Hop-bounded WEIGHTED shortest paths from a seed set — the
+    * relaxation loop of this family ([[bfsDistances]] is it at unit
+    * weight): min total weight over paths of ≤ `maxHops` edges, i.e.
+    * exactly `maxHops` rounds of Bellman–Ford relaxation, in the FRONTIER
+    * form (only nodes whose cost improved last round re-expand — on a
     * saturating graph later rounds touch a shrinking set, and the loop
     * early-stops when nothing improves). Exact long costs, so results
     * hash-compare; weights must be ≥ 0 (raise_error in-plan — a negative
     * weight under a hop bound silently stops meaning "shortest").
+    * Parallel edges keep the cheapest; `directed` follows src→dst only,
+    * the default reads the edge list as undirected.
     *
     * Per round: one keyed equi-join (frontier × adjacency) + a per-dst
     * min + a join against the settled cost table keeping strict
     * improvements; the settled table is checkpointed so round N never
     * replays rounds 1..N−1. Round count is the hop bound — the caller's
-    * radius, not the graph diameter. */
+    * radius, not the graph diameter. Output: (node, cost). */
   def shortestPathsBounded(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, sources: DataFrame,
       sourceCol: String, maxHops: Int,
@@ -509,14 +493,12 @@ object Graphs {
         col(weightCol).cast("string"))))
       .otherwise(col(weightCol).cast("long"))
     val oneWay = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), checkedW.as("w"))
-      .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(min("w").as("w")) // parallel edges: cheapest
-    val adj = (if (directed) oneWay
-      else oneWay.unionAll(oneWay.select(col("dst").as("src"),
-        col("src").as("dst"), col("w"))))
-      .localCheckpoint()
+      .select(col(srcCol).cast("long").as("a"),
+        col(dstCol).cast("long").as("b"), checkedW.as("w"))
+      .filter(col("a") =!= col("b"))
+      .groupBy("a", "b").agg(min("w").as("w"))
+    val adj = (if (directed) oneWay.toDF("src", "dst", "w")
+      else bothWays(oneWay)).localCheckpoint()
     var dist = sources.select(col(sourceCol).cast("long").as("node"))
       .distinct()
       .select(col("node"), lit(0L).as("cost"))
@@ -553,14 +535,12 @@ object Graphs {
     * arbitrary edge tables). Exact small integers, so results
     * hash-compare on any engine or partitioning.
     *
-    * FRONTIER form, not dense relaxation: round r joins only the nodes
-    * FIRST reached at r−1 against the adjacency, anti-joins the
-    * already-settled set, and stops early when a frontier empties. Per
-    * round that is one keyed equi-join (frontier × edges, frontier
-    * shrinks as the graph saturates) + one anti-join onto the settled
-    * table — never a |V|×|V| surface, never a driver-side collect; the
-    * settled set is checkpointed so round N's plan does not replay
-    * rounds 1..N−1 (the pageRank posture). Hop-bounded BFS rounds are
+    * [[shortestPathsBounded]] at unit weight, `cost` read as `dist`: with
+    * every edge costing 1, a settled node never improves, so each round's
+    * frontier is exactly the nodes FIRST reached that round, and the loop
+    * stops early when a frontier empties. Per round one keyed equi-join
+    * (frontier × edges) + a join onto the checkpointed settled table —
+    * never a |V|×|V| surface, never a driver-side collect. Rounds are
     * linear in `maxHops`; for unbounded all-pairs reachability use the
     * path-doubling closure (`Lineage.closure`), which is logarithmic.
     *
@@ -570,35 +550,8 @@ object Graphs {
     * contract, reachability is what's being measured. */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, sourceCol: String, maxHops: Int,
-      directed: Boolean = false): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val adj = (if (directed)
-        edges.select(col(srcCol).cast("long").as("src"),
-            col(dstCol).cast("long").as("dst"))
-          .filter(col("src") =!= col("dst")).distinct()
-      else symmetric(edges, srcCol, dstCol))
-      .localCheckpoint()
-    var dist = sources.select(col(sourceCol).cast("long").as("node"))
-      .distinct()
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var frontier = dist.select("node")
-    var r = 1
-    var exhausted = false
-    while (r <= maxHops && !exhausted) {
-      val next = adj
-        .join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(r.toLong).as("dist"))
-        .localCheckpoint() // the round's one action; also the stop probe
-      if (next.isEmpty) exhausted = true
-      else {
-        dist = dist.unionAll(next).localCheckpoint(eager = false)
-        frontier = next.select("node")
-      }
-      r += 1
-    }
-    dist
-  }
+      directed: Boolean = false): DataFrame =
+    shortestPathsBounded(edges.withColumn("__hop", lit(1L)), srcCol, dstCol,
+      "__hop", sources, sourceCol, maxHops, directed)
+      .withColumnRenamed("cost", "dist")
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -299,6 +299,49 @@ object Sessions {
         sum(col("_e") - col("_s")).as("covered"))
   }
 
+  /** The strictly-after frontier chain of [[funnelSteps]],
+    * [[funnelStepsBy]] and [[funnelLatency]], one frontier per step.
+    * Stage 1 is each (key, segment)'s earliest `steps.head` stamp, as
+    * (key, __by, _at); stage i keeps the keys with a step-i event strictly
+    * after their stage-(i−1) stamp, as (key, __by, _at = the earliest such
+    * stamp, _pat = the stage-(i−1) stamp). Stamps are (t, i) structs on
+    * the (ts, tie) total order. Stages 2..k are checkpointed lazily: the
+    * first job that reads one — the caller's per-stage tally, or the next
+    * stage's join — materializes it once, so stage i reads stage i−1's
+    * blocks instead of re-running its joins, and work grows linearly in
+    * the number of steps. Stage 1 is one grouped scan and stays a plan,
+    * so stage 2 fuses it into its join (under a constant segment it is
+    * already partitioned by the join key) instead of re-shuffling a
+    * checkpoint of it; a caller that tallies stage 1 scans it twice. */
+  private def funnelChain(events: DataFrame, keyCol: String,
+      tsUsCol: String, tieCol: String, typeCol: String, steps: Seq[String],
+      segment: Column): Seq[DataFrame] = {
+    val stamp = struct(col(tsUsCol).cast("long").as("t"),
+      col(tieCol).cast("long").as("i"))
+    val first = events.filter(col(typeCol) === steps.head)
+      .groupBy(col(keyCol), segment.as("__by"))
+      .agg(min(stamp).as("_at"))
+    steps.drop(1).scanLeft(first) { (frontier, step) =>
+      events.filter(col(typeCol) === step)
+        .select(col(keyCol), stamp.as("_st"))
+        .join(frontier, keyCol)
+        .filter(col("_st") > col("_at"))
+        .groupBy(col(keyCol), col("__by"))
+        .agg(min(col("_st")).as("_at"), min(col("_at")).as("_pat"))
+        .localCheckpoint(eager = false)
+    }
+  }
+
+  /** (stage, step, n_keys, conv_from_prev_e6) rows from per-stage key
+    * counts: exact-integer stage-over-stage conversion, stage 1 against
+    * itself, 0 after an empty stage. */
+  private def stageRows(steps: Seq[String],
+      counts: Seq[Long]): Seq[(Long, String, Long, Long)] =
+    steps.zip(counts).zip(counts.head +: counts).zipWithIndex.map {
+      case (((step, n), prev), i) =>
+        (i + 1L, step, n, if (prev == 0L) 0L else n * 1000000L / prev)
+    }
+
   /** Funnel STAGE LATENCY: for each stage transition of the q176-style
     * progressive-min frontier, exact integer stats of the time between
     * the previous stage's earliest completion and this one's — "how long
@@ -307,37 +350,22 @@ object Sessions {
     * floor-mean latency in µs (mean null when nobody converted). Exact
     * integers end to end — no percentile engine divergence to manage.
     *
-    * Scale shape: the same k bounded frontier joins as [[funnelSteps]]
-    * (the frontier only shrinks), each stage adding one grouped min that
-    * carries the PREVIOUS stamp alongside; per-stage stats are 1-row
-    * aggregates (bounded driver collect, the funnelSteps posture). */
+    * Scale shape: the [[funnelChain]] of [[funnelSteps]] — k bounded
+    * frontier joins, the frontier only shrinks — each stage tallied by
+    * one 1-row aggregate (a bounded driver collect). */
   def funnelLatency(events: DataFrame, keyCol: String, tsUsCol: String,
       tieCol: String, typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.size >= 2, "funnelLatency needs at least two steps")
     val spark = events.sparkSession
     import spark.implicits._
-    val stamp = struct(col(tsUsCol).cast("long").as("t"),
-      col(tieCol).cast("long").as("i"))
-    var frontier = events.filter(col(typeCol) === steps.head)
-      .groupBy(col(keyCol)).agg(min(stamp).as("_at"))
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, Long, Long, Long)]
-    var stage = 2L
-    steps.drop(1).foreach { step =>
-      val next = events.filter(col(typeCol) === step)
-        .join(frontier, keyCol)
-        .filter(stamp > col("_at"))
-        .groupBy(col(keyCol))
-        .agg(min(stamp).as("_nat"), min(col("_at")).as("_pat"))
-        .localCheckpoint() // feeds this stage's stats AND the next frontier
-      val lat = col("_nat.t") - col("_pat.t")
-      val r = next.agg(count(lit(1)),
-        coalesce(sum(lat), lit(0L)), coalesce(max(lat), lit(0L))).collect()(0)
-      out += ((stage, step, r.getLong(0), r.getLong(1), r.getLong(2)))
-      frontier = next.select(col(keyCol), col("_nat").as("_at"))
-      stage += 1
-    }
-    out.toSeq
+    val lat = col("_at.t") - col("_pat.t")
+    val stages = funnelChain(events, keyCol, tsUsCol, tieCol, typeCol,
+      steps, lit(0L))
+    steps.zip(stages).zipWithIndex.drop(1)
+      .map { case ((step, f), i) =>
+        val r = f.agg(count(lit(1)), coalesce(sum(lat), lit(0L)),
+          coalesce(max(lat), lit(0L))).collect()(0)
+        (i + 1L, step, r.getLong(0), r.getLong(1), r.getLong(2)) }
       .toDF("stage", "step", "n_converted", "sum_latency_us",
         "max_latency_us")
       .withColumn("mean_latency_us",
@@ -356,48 +384,33 @@ object Sessions {
     * — counts of keys reaching each stage and the exact-integer
     * stage-over-stage conversion. Stage 1's conversion is vs itself (1.0).
     *
-    * Scale shape: stage i is one filtered scan of the step-i events
-    * joined to the (keys-completed-so-far)-sized frontier on the key,
-    * then a keyed min — k bounded rounds, no per-key sequence
-    * materialization, no window over row data. The frontier only
-    * shrinks, so later stages cost less, and each round's join is
-    * broadcast-able once the funnel narrows. */
+    * Scale shape: the [[funnelChain]] — stage i is one filtered scan of
+    * the step-i events joined to the (keys-completed-so-far)-sized
+    * frontier on the key, then a keyed min and one count — k bounded
+    * rounds, no per-key sequence materialization, no window over row
+    * data. The frontier only shrinks, so later stages cost less, and each
+    * round's join is broadcast-able once the funnel narrows. */
   def funnelSteps(events: DataFrame, keyCol: String, tsUsCol: String,
       tieCol: String, typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnelSteps needs at least one step")
     val spark = events.sparkSession
     import spark.implicits._
-    val stamp = struct(col(tsUsCol).cast("long"), col(tieCol).cast("long"))
-    // frontier: (key, _at = earliest completion stamp of the last stage)
-    var frontier = events.filter(col(typeCol) === steps.head)
-      .groupBy(col(keyCol)).agg(min(stamp).as("_at"))
-    var counts = List(frontier.count())
-    steps.drop(1).foreach { step =>
-      frontier = events.filter(col(typeCol) === step)
-        .join(frontier, keyCol)
-        .filter(stamp > col("_at"))
-        .groupBy(col(keyCol)).agg(min(stamp).as("_at"))
-      counts = frontier.count() :: counts
-    }
-    val rows = steps.zip(counts.reverse).zipWithIndex.map {
-      case ((step, n), i) =>
-        val prev = if (i == 0) n else counts.reverse(i - 1)
-        (i + 1L, step, n, if (prev == 0) 0L else n * 1000000L / prev)
-    }
-    rows.toDF("stage", "step", "n_keys", "conv_from_prev_e6")
+    val counts = funnelChain(events, keyCol, tsUsCol, tieCol, typeCol, steps,
+      lit(0L)).map(_.count())
+    stageRows(steps, counts)
+      .toDF("stage", "step", "n_keys", "conv_from_prev_e6")
   }
 
   /** [[funnelSteps]] split by a per-key SEGMENT (experiment variant,
-    * acquisition channel, plan tier): the same strictly-ordered frontier
-    * chain, one funnel per segment value, in ONE pass over the data per
-    * stage — the A/B-test funnel readout (which stage does the treatment
-    * actually move?). `byCol` must be a long-typed attribute CONSTANT
-    * per key (an md5-bucket variant, a cohort id); it rides the frontier
-    * from stage 1, so later stages never re-derive it. Segments that die
-    * at a stage report n_keys = 0 rows for every later stage (a missing
-    * row would read as "not measured", not "nobody converted").
-    * Per-stage tallies are |segments|-sized driver summaries (the
-    * funnelSteps counts, one per segment — bounded, the k-seeds
+    * acquisition channel, plan tier): the same [[funnelChain]], one
+    * funnel per segment value, in ONE pass over the data per stage — the
+    * A/B-test funnel readout (which stage does the treatment actually
+    * move?). `byCol` must be a long-typed attribute CONSTANT per key (an
+    * md5-bucket variant, a cohort id); it rides the frontier from stage
+    * 1, so later stages never re-derive it. Segments that die at a stage
+    * report n_keys = 0 rows for every later stage (a missing row would
+    * read as "not measured", not "nobody converted"). Per-stage tallies
+    * are |segments|-sized driver summaries (bounded, the k-seeds
     * posture); everything row-scaled stays distributed. */
   def funnelStepsBy(events: DataFrame, keyCol: String, tsUsCol: String,
       tieCol: String, typeCol: String, steps: Seq[String],
@@ -405,7 +418,6 @@ object Sessions {
     require(steps.nonEmpty, "funnelStepsBy needs at least one step")
     val spark = events.sparkSession
     import spark.implicits._
-    val stamp = struct(col(tsUsCol).cast("long"), col(tieCol).cast("long"))
     // A null (or long-uncastable) segment would flow into the driver-side
     // tally as a null group key and die in an opaque NPE there — raise a
     // DESCRIPTIVE error in-plan at the stage-1 frontier instead (later
@@ -416,32 +428,13 @@ object Sessions {
           "castable to long for value: "),
         coalesce(col(byCol).cast("string"), lit("NULL")))))
       .otherwise(col(byCol).cast("long"))
-    var frontier = events.filter(col(typeCol) === steps.head)
-      .groupBy(col(keyCol), byLong.as("__by"))
-      .agg(min(stamp).as("_at"))
-    def tally(f: DataFrame): Map[Long, Long] =
-      f.groupBy(col("__by")).agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    var tallies = List(tally(frontier))
-    steps.drop(1).foreach { step =>
-      frontier = events.filter(col(typeCol) === step)
-        .select(col(keyCol), stamp.as("_st"))
-        .join(frontier, keyCol)
-        .filter(col("_st") > col("_at"))
-        .groupBy(col(keyCol), col("__by"))
-        .agg(min(col("_st")).as("_at"))
-      tallies = tally(frontier) :: tallies
-    }
-    val byStage = tallies.reverse
-    val segments = byStage.head.keys.toSeq.sorted
+    val byStage = funnelChain(events, keyCol, tsUsCol, tieCol, typeCol,
+      steps, byLong).map(_.groupBy(col("__by")).agg(count(lit(1)))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val rows = for {
-      v <- segments
-      (step, i) <- steps.zipWithIndex
-    } yield {
-      val n = byStage(i).getOrElse(v, 0L)
-      val prev = if (i == 0) n else byStage(i - 1).getOrElse(v, 0L)
-      (v, i + 1L, step, n, if (prev == 0L) 0L else n * 1000000L / prev)
-    }
+      v <- byStage.head.keys.toSeq.sorted
+      (stage, step, n, conv) <- stageRows(steps, byStage.map(_.getOrElse(v, 0L)))
+    } yield (v, stage, step, n, conv)
     rows.toDF("segment", "stage", "step", "n_keys", "conv_from_prev_e6")
   }
 
@@ -495,12 +488,8 @@ object Sessions {
         .localCheckpoint()
       counts = valid.select("__k").distinct().count() :: counts
     }
-    val byStage = counts.reverse
-    val rows = steps.zip(byStage).zipWithIndex.map { case ((step, n), i) =>
-      val prev = if (i == 0) n else byStage(i - 1)
-      (i + 1L, step, n, if (prev == 0L) 0L else n * 1000000L / prev)
-    }
-    rows.toDF("stage", "step", "n_keys", "conv_from_prev_e6")
+    stageRows(steps, counts.reverse)
+      .toDF("stage", "step", "n_keys", "conv_from_prev_e6")
   }
 
   /** TIME-DECAY multi-touch attribution: the [[multiTouchAttribution]]

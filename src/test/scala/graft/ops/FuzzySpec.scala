@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.Join
 
 class FuzzySpec extends SparkSpec {
   import spark.implicits._
@@ -29,12 +31,20 @@ class FuzzySpec extends SparkSpec {
       (11L, "dogg4"), // one insertion from dog4
       (12L, "bird"))  // matches nothing
       .toDF("pid", "pname")
-    val out = Fuzzy.editDistance1JoinBetween(
-        probes, "pid", "pname", canon, "id", "name")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    out shouldBe Map(
-      (10L, 1L) -> 1L, (10L, 2L) -> 1L,
-      (11L, 3L) -> 1L)
+    // the default cap, and the cap off (0), which plans no anti-join
+    Seq(1000, 0).foreach { cap =>
+      val pairs = Fuzzy.editDistance1JoinBetween(
+        probes, "pid", "pname", canon, "id", "name", maxBlockSize = cap)
+      val out = pairs.collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      out shouldBe Map(
+        (10L, 1L) -> 1L, (10L, 2L) -> 1L,
+        (11L, 3L) -> 1L)
+      val antiJoins = pairs.queryExecution.logical.collect {
+        case j: Join if j.joinType == LeftAnti => j
+      }
+      antiJoins.size shouldBe (if (cap > 0) 2 else 0)
+    }
   }
 
   test("editDistance1Join: maxBlockSize drops hot blocks whole") {

@@ -74,4 +74,30 @@ class RandomizedPropertySpec extends SparkSpec {
     fast shouldBe brute.toMap
     fast.values.sum should be > 0L
   }
+
+  test("bfsDistances ≡ shortestPathsBounded at unit weight on random multigraphs") {
+    (1 to 3).foreach { _ =>
+      // drawn with replacement over 20 nodes, plus explicit duplicate,
+      // reversed and self-loop edges
+      val drawn = (1 to 40).map(_ =>
+        (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
+      val edges = drawn ++ drawn.take(8) ++ drawn.slice(8, 16).map(_.swap) ++
+        drawn.take(4).map { case (u, _) => (u, u) }
+      val df = edges.toDF("u", "v").withColumn("w", lit(1L))
+      // one seed absent from the graph
+      val seeds = (Seq(drawn.head._1, drawn(1)._2, 99L)).toDF("node")
+      Seq(false, true).foreach { directed =>
+        val bfs = Graphs.bfsDistances(df, "u", "v", seeds, "node",
+            maxHops = 3, directed = directed)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val unit = Graphs.shortestPathsBounded(df, "u", "v", "w", seeds,
+            "node", maxHops = 3, directed = directed)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        withClue(s"directed=$directed edges=$edges") {
+          bfs shouldBe unit
+          bfs.values.max should be > 0L // non-vacuous: some node was reached
+        }
+      }
+    }
+  }
 }

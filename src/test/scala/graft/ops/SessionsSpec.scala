@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 class SessionsSpec extends SparkSpec {
@@ -375,5 +376,55 @@ class SessionsSpec extends SparkSpec {
     an[Exception] should be thrownBy
       graft.ops.Sessions.funnelStepsBy(bad, "user_id", "ts_us",
         "event_id", "event_type", Seq("view"), "seg")
+  }
+
+  // the funnelSteps case's events plus a return view for user 1 (so a
+  // 4-step view → click → purchase → view funnel never empties) and a
+  // per-user segment
+  private def funnelEvents = Seq(
+    (1L, 10L, 1L, "view"), (1L, 20L, 2L, "click"), (1L, 30L, 3L, "purchase"),
+    (1L, 40L, 12L, "view"),
+    (2L, 10L, 4L, "view"), (2L, 30L, 5L, "click"), (2L, 20L, 6L, "purchase"),
+    (3L, 20L, 7L, "view"), (3L, 10L, 8L, "click"),
+    (4L, 10L, 9L, "view"), (4L, 10L, 10L, "click"), (4L, 11L, 11L, "purchase"))
+    .toDF("user_id", "ts_us", "event_id", "event_type")
+    .withColumn("seg", col("user_id") % 2L)
+
+  private val funnelPath = Seq("view", "click", "purchase", "view")
+
+  test("funnelSteps / funnelStepsBy: each extra step adds the same number of jobs") {
+    val ev = funnelEvents
+    val funnels = Seq[(String, Seq[String] => DataFrame)](
+      "funnelSteps" -> (Sessions.funnelSteps(ev, "user_id", "ts_us",
+        "event_id", "event_type", _)),
+      "funnelStepsBy" -> (Sessions.funnelStepsBy(ev, "user_id", "ts_us",
+        "event_id", "event_type", _, "seg")))
+    funnels.foreach { case (name, run) =>
+      val jobs = (2 to 4).map { n =>
+        val (out, started) = JobLog(spark)(run(funnelPath.take(n)))
+        out.get
+        started.size
+      }
+      info(s"$name jobs at 2, 3, 4 steps: $jobs")
+      // a stage that re-ran the joins of the stages before it would add
+      // more jobs than the stage before it did
+      withClue(s"$name jobs at 2, 3, 4 steps: $jobs") {
+        jobs(2) - jobs(1) shouldBe jobs(1) - jobs(0)
+      }
+    }
+  }
+
+  test("funnelLatency's n_converted is funnelSteps' n_keys at every stage >= 2") {
+    val ev = funnelEvents
+    val converted = Sessions.funnelLatency(ev, "user_id", "ts_us",
+        "event_id", "event_type", funnelPath)
+      .orderBy("stage").collect()
+      .map(r => r.getAs[Long]("stage") -> r.getAs[Long]("n_converted")).toSeq
+    val reached = Sessions.funnelSteps(ev, "user_id", "ts_us", "event_id",
+        "event_type", funnelPath)
+      .filter(col("stage") >= 2L).orderBy("stage").collect()
+      .map(r => r.getAs[Long]("stage") -> r.getAs[Long]("n_keys")).toSeq
+    converted shouldBe reached
+    converted.map(_._2) shouldBe Seq(3L, 2L, 1L)
   }
 }
