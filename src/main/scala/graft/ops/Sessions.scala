@@ -305,14 +305,11 @@ object Sessions {
     * (key, __by, _at); stage i keeps the keys with a step-i event strictly
     * after their stage-(i−1) stamp, as (key, __by, _at = the earliest such
     * stamp, _pat = the stage-(i−1) stamp). Stamps are (t, i) structs on
-    * the (ts, tie) total order. Stages 2..k are checkpointed lazily: the
-    * first job that reads one — the caller's per-stage tally, or the next
+    * the (ts, tie) total order. Every stage is checkpointed lazily: the
+    * first job that reads it — the caller's per-stage tally, or the next
     * stage's join — materializes it once, so stage i reads stage i−1's
     * blocks instead of re-running its joins, and work grows linearly in
-    * the number of steps. Stage 1 is one grouped scan and stays a plan,
-    * so stage 2 fuses it into its join (under a constant segment it is
-    * already partitioned by the join key) instead of re-shuffling a
-    * checkpoint of it; a caller that tallies stage 1 scans it twice. */
+    * the number of steps. */
   private def funnelChain(events: DataFrame, keyCol: String,
       tsUsCol: String, tieCol: String, typeCol: String, steps: Seq[String],
       segment: Column): Seq[DataFrame] = {
@@ -321,6 +318,7 @@ object Sessions {
     val first = events.filter(col(typeCol) === steps.head)
       .groupBy(col(keyCol), segment.as("__by"))
       .agg(min(stamp).as("_at"))
+      .localCheckpoint(eager = false)
     steps.drop(1).scanLeft(first) { (frontier, step) =>
       events.filter(col(typeCol) === step)
         .select(col(keyCol), stamp.as("_st"))
