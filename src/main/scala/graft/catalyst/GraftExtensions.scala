@@ -91,6 +91,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "(text, n literal)")(c => DupGramFracE6(c(0), litInt(c(1), "n")))
     register("topk_longs", classOf[TopKLongs], 2,
       "(integral column, k literal)")(c => TopKLongs(c(0), litInt(c(1), "k")))
+    register("bounded_collect", classOf[BoundedCollect], 2,
+      "(member column, cap literal)")(c =>
+      BoundedCollect(c(0), litInt(c(1), "cap"), distinct = false))
+    register("bounded_collect_distinct", classOf[BoundedCollect], 2,
+      "(member column, cap literal)")(c =>
+      BoundedCollect(c(0), litInt(c(1), "cap"), distinct = true))
     register("kmv_sketch", classOf[KmvSketch], 2,
       "(integral column, k literal)")(c => KmvSketch(c(0), litInt(c(1), "k")))
     register("kmv_values", classOf[KmvValues], 3,

@@ -212,9 +212,19 @@ object ConfigLoader {
     prev(b.length)
   }
 
-  /** Dedup keys that only some strategies read: set under any other
-    * strategy they would be silently ignored, so they fail instead. */
+  /** Dedup keys that only some strategies read (`Curation.applyDedup`):
+    * set under any other strategy they would be silently ignored, so they
+    * fail instead. */
   private val dedupKeysOnlyFor: Seq[(Set[String], Seq[String])] = Seq(
+    Set("ngram_jaccard", "minhash_lsh", "embedding_lsh", "semantic",
+      "winnow_jaccard", "keep_best") -> Seq("threshold"),
+    Set("ngram_jaccard", "minhash_lsh", "winnow", "winnow_jaccard",
+      "keep_best") -> Seq("ngram"),
+    Set("ngram_jaccard", "winnow", "winnow_jaccard", "keep_best") ->
+      Seq("max_shingle_freq"),
+    Set("minhash_lsh") -> Seq("num_hashes", "num_bands"),
+    Set("simhash") -> Seq("max_hamming"),
+    Set("embedding_lsh") -> Seq("num_planes", "dim"),
     Set("semantic") -> Seq("kmeans_k", "kmeans_iters"),
     Set("winnow", "winnow_jaccard") -> Seq("winnow_window", "min_shared_fingerprints"),
     Set("prefix") -> Seq("prefix_len", "max_bucket_size"),

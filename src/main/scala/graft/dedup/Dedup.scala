@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.Blocking
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -14,10 +15,12 @@ import org.apache.spark.sql.functions._
   * Scale notes:
   *  - MinHash signatures are computed ROW-LOCALLY (array_min over a
   *    transform), not via explode+groupBy — zero shuffle until the band join.
-  *  - The LSH candidate join shuffles only (band, bucket-key) pairs; bucket
-  *    keys are md5 strings, uniformly distributed, so the exchange is
-  *    balanced. Hot buckets (boilerplate docs) are the known LSH skew case;
-  *    cap them with `maxBucketSize` before the pair blow-up.
+  *  - Every candidate-pair operator blocks through `graft.ops.Blocking`:
+  *    one exchange builds the posting lists, a hot-key cap bounds each
+  *    list inside the aggregate, pairs explode in place. LSH bucket keys
+  *    are md5 strings, uniformly distributed, so the exchange is balanced;
+  *    hot buckets (boilerplate docs) are the known LSH skew case that
+  *    `maxBucketSize` caps before the pair blow-up.
   *  - Jaccard self-join explodes distinct shingles; frequency-capping drops
   *    stop-shingles that would otherwise produce O(df²) candidate pairs.
   */
@@ -119,10 +122,9 @@ object Dedup {
     *
     * Scale shape: one signature pass per side, the candidate join keyed on
     * (band, bucket) — linear shuffles in |batch| + |corpus|. The corpus
-    * state is derived per call: the capped LSH band buckets
-    * `(band_idx, bucket, ids)` and the shingle-hash verification sets
-    * `(corpus_id, _sh_c)`, which evaluates the corpus text scan twice (band
-    * pass + verification-set pass). The batch side's own two passes are
+    * state is derived per call: the capped LSH band posting lists and the
+    * shingle-hash verification sets ([[verifiedJaccard]]), which evaluates
+    * the corpus text scan twice (band pass + verification-set pass). The batch side's own two passes are
     * over the arriving batch only. `maxBucketSize` caps corpus-side bucket
     * membership (boilerplate guard) before the candidate explosion. */
   def fuzzyDedupeAgainstCorpus(
@@ -135,39 +137,19 @@ object Dedup {
       numHashes: Int = 8,
       numBands: Int = 4,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val buckets = minhashBands(corpus, idCol, textCol, numHashes, numBands,
-        shingleN)
-      .groupBy("band_idx", "bucket")
-      .agg(collect_list(col("doc_id")).as("ids"))
-    val corpusBuckets =
-      if (maxBucketSize == Int.MaxValue) buckets
-      else buckets.filter(size(col("ids")) <= maxBucketSize)
-    val corpusSets = corpus.select(col(idCol).as("corpus_id"),
-      call_function("shingle_hashes", col(textCol), lit(shingleN)).as("_sh_c"))
+    val corpusBuckets = Blocking.postings(
+      minhashBands(corpus, idCol, textCol, numHashes, numBands, shingleN),
+      Seq("band_idx", "bucket"), col("doc_id"), maxBucketSize)
     val newBands = minhashBands(newDf, idCol, textCol, numHashes, numBands,
       shingleN)
     val cands = newBands.join(corpusBuckets, Seq("band_idx", "bucket"))
-      .select(col("doc_id").as("new_id"), explode(col("ids")).as("corpus_id"))
+      .select(col("doc_id").as("id_a"), explode(col("members")).as("id_b"))
       .distinct() // a pair may agree on several bands; verify it once
-    // exact verification on the 32-bit shingle-hash sets (one compiled pass
-    // per side, same contract as lshJaccardPairs); candidates exist only for
-    // docs with >= 1 shingle, so the union denominator is never 0. Both
-    // sides sort ONCE per doc (below the join, so a corpus set appearing in
-    // many candidate pairs sorts once) and pairs verify with the count-only
-    // sorted-merge kernel — no per-pair hash set / result array.
-    val newSets = newDf.select(col(idCol).as("new_id"),
-      sort_array(call_function("shingle_hashes", col(textCol), lit(shingleN)))
-        .as("_sh_n"))
-    val dropped = cands
-      .join(newSets, "new_id")
-      .join(corpusSets.withColumn("_sh_c", sort_array(col("_sh_c"))),
-        "corpus_id")
-      .withColumn("_inter",
-        call_function("sorted_intersect_count", col("_sh_n"), col("_sh_c")))
-      .filter(col("_inter").cast("double") /
-        (size(col("_sh_n")) + size(col("_sh_c")) - col("_inter")).cast("double")
-        > threshold)
-      .select(col("new_id").as(idCol))
+    // candidates exist only for docs with >= 1 shingle, so the union
+    // denominator is never 0
+    val dropped = verifiedJaccard(cands, newDf, corpus, idCol, textCol,
+        shingleN, threshold)
+      .select(col("id_a").as(idCol))
       .distinct()
     newDf.join(dropped, Seq(idCol), "left_anti")
   }
@@ -220,12 +202,12 @@ object Dedup {
     * `prefixLen` are excluded by contract (too short to assert truncation
     * on; route them through exact dedup).
     *
-    * Scale shape: one shuffle on the prefix key; bucket size is bounded
-    * by how many docs open identically — boilerplate openings can make a
-    * hot bucket, so `maxBucketSize` drops buckets past the cap (the
-    * jaccardPairs knob; capped-out buckets are REPORTED dropped by the
-    * loud contract below, not silently skipped). Verification is
-    * row-local on the joined pair.
+    * Scale shape: one shuffle on the prefix key (the `Blocking` posting
+    * lists, members sorted by length so each pair arrives child-first);
+    * bucket size is bounded by how many docs open identically —
+    * boilerplate openings can make a hot bucket, so `maxBucketSize` drops
+    * buckets past the cap (the jaccardPairs knob). Verification is
+    * row-local on the exploded pair.
     *
     * Output: (child_id, parent_id, child_len, parent_len) — feed distinct
     * child ids to an anti-join to keep longest versions (chains a<b<c
@@ -234,27 +216,18 @@ object Dedup {
       prefixLen: Int = 32, maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(prefixLen >= 1, s"prefixLen must be >= 1, got $prefixLen")
     require(maxBucketSize >= 2, s"maxBucketSize must be >= 2, got $maxBucketSize")
-    val base = df.select(col(idCol).as("_id"), col(textCol).as("_txt"))
+    val docs = df.select(col(idCol).as("_id"), col(textCol).as("_txt"))
       .filter(col("_txt").isNotNull && length(col("_txt")) >= prefixLen)
       .withColumn("_pfx", md5(substring(col("_txt"), 1, prefixLen)))
-    val sized =
-      if (maxBucketSize == Int.MaxValue) base
-      else {
-        val ok = base.groupBy("_pfx").agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucketSize).select("_pfx")
-        base.join(ok, "_pfx")
-      }
-    val a = sized.select(col("_pfx"), col("_id").as("child_id"),
-      col("_txt").as("_txt_a"), length(col("_txt")).as("child_len"))
-    val b = sized.select(col("_pfx"), col("_id").as("parent_id"),
-      col("_txt").as("_txt_b"), length(col("_txt")).as("parent_len"))
-    a.join(b, Seq("_pfx"))
-      .filter(col("child_len") < col("parent_len"))
-      .filter(expr("substring(_txt_b, 1, child_len) = _txt_a"))
-      .select(col("child_id").cast("long").as("child_id"),
-        col("parent_id").cast("long").as("parent_id"),
-        col("child_len").cast("long").as("child_len"),
-        col("parent_len").cast("long").as("parent_len"))
+    val doc = struct(length(col("_txt")).as("len"), col("_id").as("id"),
+      col("_txt").as("txt"))
+    Blocking.pairs(Blocking.postings(docs, Seq("_pfx"), doc, maxBucketSize))
+      .filter(col("id_a.len") < col("id_b.len"))
+      .filter(expr("substring(id_b.txt, 1, id_a.len) = id_a.txt"))
+      .select(col("id_a.id").cast("long").as("child_id"),
+        col("id_b.id").cast("long").as("parent_id"),
+        col("id_a.len").cast("long").as("child_len"),
+        col("id_b.len").cast("long").as("parent_len"))
   }
 
   /** Drop every doc that is a strict prefix of a longer doc — keep the
@@ -375,23 +348,6 @@ object Dedup {
       .drop("_mlist")
   }
 
-  /** Expand sorted per-bucket member lists into (a < b) pairs — the
-    * inverted-index pair-generation shape shared by Jaccard and LSH:
-    * ONE scan builds the index, ONE shuffle groups it, pairs explode inside
-    * each bucket. A self-join would recompute the (interpreted,
-    * non-exchange-reused) shingle/signature pass once per side.
-    *
-    * Two chained explodes (posexplode + slice + explode) rather than a
-    * nested `transform(...struct...)` lambda: explode/slice whole-stage-
-    * codegen, higher-order lambdas don't. */
-  private def bucketPairs(buckets: DataFrame, memberCol: String): DataFrame =
-    buckets.select(col(memberCol).as("_ids"))
-      .select(col("_ids"), posexplode(col("_ids")))
-      .toDF("_ids", "_i", "id_a")
-      // 0-based pos _i pairs with 1-based positions _i+2 .. end
-      .select(col("id_a"),
-        explode(slice(col("_ids"), col("_i") + lit(2), size(col("_ids")))).as("id_b"))
-
   /** Exact pairwise n-gram Jaccard over candidate pairs that share at least
     * one shingle. Returns (id_a, id_b, inter, size_a, size_b, jaccard) with
     * id_a < id_b. `maxShingleFreq` drops shingles appearing in more than
@@ -418,26 +374,20 @@ object Dedup {
         call_function("shingle_hashes", col(textCol), lit(n)).as("sh"))
       .select(col("doc_id"), size(col("sh")).cast("long").as("set_size"),
         explode(col("sh")).as("shingle"))
-    // one shuffle builds the inverted index; the frequency cap (skew guard)
-    // is a size() filter on the posting list — no second freq pass. Postings
-    // sort by (doc_id, set_size) struct order ≡ doc_id order (ids unique).
-    val index = sh.groupBy("shingle")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("set_size"))))
-        .as("ids"))
-    val cappedIndex =
-      if (maxShingleFreq == Int.MaxValue) index
-      else index.filter(size(col("ids")) <= maxShingleFreq)
-    bucketPairs(cappedIndex, "ids")
+    // postings sort by (doc_id, set_size) struct order ≡ doc_id order
+    Blocking.pairs(Blocking.postings(sh, Seq("shingle"),
+        struct(col("doc_id"), col("set_size")), maxShingleFreq))
       .select(
         col("id_a.doc_id").as("id_a"), col("id_a.set_size").as("size_a"),
         col("id_b.doc_id").as("id_b"), col("id_b.set_size").as("size_b"))
       .groupBy("id_a", "id_b", "size_a", "size_b")
       .agg(count(lit(1)).as("inter"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("size_a"), col("size_b"),
-        (col("inter").cast("double") /
-          (col("size_a") + col("size_b") - col("inter")).cast("double"))
-          .as("jaccard"))
+      .select(col("id_a"), col("id_b"), col("inter"), col("size_a"),
+        col("size_b"), jaccard)
   }
+
+  private val jaccard: Column = (col("inter").cast("double") /
+    (col("size_a") + col("size_b") - col("inter")).cast("double")).as("jaccard")
 
   /** Asymmetric near-CONTAINMENT pairs: containment(A in B) = |A∩B| / |A| —
     * the signal symmetric Jaccard MISSES when a short document is swallowed
@@ -528,15 +478,8 @@ object Dedup {
       shingleN: Int = 1,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val long = minhashBands(df, idCol, textCol, numHashes, numBands, shingleN)
-    // one shuffle groups each (band, bucket); the size cap is a filter on
-    // the member list; pairs explode in place (no self-join, so the md5
-    // signature pass runs once, not once per join side).
-    val buckets = long.groupBy("band_idx", "bucket")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-    val capped =
-      if (maxBucketSize == Int.MaxValue) buckets
-      else buckets.filter(size(col("ids")) <= maxBucketSize)
-    bucketPairs(capped, "ids").distinct()
+    Blocking.pairs(Blocking.postings(long, Seq("band_idx", "bucket"),
+      col("doc_id"), maxBucketSize)).distinct()
   }
 
   /** 32-bit token hashes of a text column (one md5 pass). */
@@ -562,27 +505,15 @@ object Dedup {
     * replan rounds 1..N−1. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 16): DataFrame = {
     val edges = pairs.select(col("id_a"), col("id_b"))
-    // LAZY checkpoints (r22): both pre-loop frames materialize inside round
-    // 1's single count action instead of running one eager job each — two
-    // fewer driver jobs per dupClusters call, same truncated lineage (the
-    // per-round job floor is the measured cost of the 13 iterative
-    // consumers at sf0.1; VERDICT_r21 item 5)
-    //
-    // Symmetrization is ONE pass (r22): normalize each edge to its
-    // undirected (lo, hi) form, distinct THAT, and emit both directions
-    // with a row-local 2-element explode. The old
-    // `edges ∪ edges.swapped → distinct` ran the caller's ENTIRE pair
-    // pipeline's final aggregate once per union branch (ReusedExchange
-    // only covers the exchange, not the reduce — measured: q107/q152's
-    // pair-count stage read 2×20 MB and burned 2.3 s CPU, exactly double
-    // the single-branch cost) and shuffled 2|E| directed rows into the
-    // distinct where |E| undirected rows carry the same information.
-    // Set equality: {(a,b),(b,a) | (a,b) ∈ E} ≡ {(lo,hi),(hi,lo) |
-    // {lo,hi} ∈ normalize(E)}; array_distinct keeps a self-loop's two
-    // identical directions as one row, matching the old distinct — the
-    // duplicate-edge multiplication the distinct guards against cannot
-    // re-enter (the explode emits exactly the two directions of each
-    // DISTINCT undirected edge).
+    // LAZY checkpoints: both pre-loop frames materialize inside round 1's
+    // single count action — two fewer driver jobs per call, same truncated
+    // lineage. Symmetrization is ONE pass: normalize each edge to its
+    // undirected (lo, hi) form, distinct that, and emit both directions with
+    // a row-local 2-element explode. `edges ∪ edges.swapped → distinct` ran
+    // the caller's whole pair pipeline once per union branch (measured on
+    // q107/q152: twice the pair-count stage's 20 MB read and 2.3 s CPU) and
+    // shuffled 2|E| rows where |E| carry the same information.
+    // array_distinct keeps a self-loop's two identical directions as one row.
     val sym = edges
       .select(least(col("id_a"), col("id_b")).as("_lo"),
         greatest(col("id_a"), col("id_b")).as("_hi"))
@@ -665,12 +596,9 @@ object Dedup {
       .select(col(idCol).cast("long").as("id"),
         explode(call_function("winnow_fps", col(textCol), lit(k), lit(w)))
           .as("fp"))
-    val hot = fps.groupBy("fp").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxFingerprintFreq).select("fp")
-    val capped = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-    capped.as("a").join(capped.as("b"),
-        col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    Blocking.pairs(Blocking.postings(fps, Seq("fp"), col("id"),
+        maxFingerprintFreq))
+      .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
@@ -697,33 +625,35 @@ object Dedup {
       n: Int, threshold: Double, w: Int = 4,
       maxFingerprintFreq: Int = 100, minShared: Long = 1L): DataFrame = {
     val cands = winnowPairs(df, idCol, textCol, n, w, maxFingerprintFreq,
-      minShared).select("id_a", "id_b")
-    // NOTE (r18, measured): restricting this projection to candidate docs
-    // via a semi-join on the candidate id set was tried and REVERTED —
-    // computing the id set re-runs the posting pipeline (+11 MB shuffle,
-    // +1 s at sf1~ even with the ids broadcast), while the "second md5
-    // pass" it would save isn't one: AQE broadcasts the small pair side
-    // into these joins, so `sets` streams the corpus exactly once with no
-    // verification-set shuffle, and on dup-heavy corpora every doc is a
-    // candidate anyway (sf0.1: 5000/5000 docs in 334k candidate pairs).
-    // sets are SORTED once per doc (array order is dropped by the verify
-    // anyway) so each candidate pair verifies with the count-only
-    // sorted-merge kernel — size(array_intersect) built a per-PAIR hash
-    // set plus a result array that size() immediately discarded, the
-    // dominant measured CPU of the winnow family (OPTIMIZATION_r22 §1)
-    val sets = df.select(col(idCol).as("_sid"),
+      minShared)
+    verifiedJaccard(cands, df, df, idCol, textCol, n, threshold)
+  }
+
+  /** The exact-Jaccard verification of candidate (id_a, id_b) pairs — a
+    * doc of `dfA` against one of `dfB` — shared by [[winnowJaccardPairs]],
+    * [[lshJaccardPairs]] and [[fuzzyDedupeAgainstCorpus]]: (id_a, id_b,
+    * inter, size_a, size_b, jaccard) for pairs whose n-gram Jaccard over
+    * the docs' 32-bit shingle-hash sets exceeds `threshold`.
+    *
+    * Sets are SORTED once per doc so each pair verifies with the count-only
+    * sorted-merge kernel (size(array_intersect) built a per-pair hash set,
+    * the winnow family's dominant CPU — OPTIMIZATION_r22 §1). Restricting
+    * `sets` to candidate docs by a semi-join measured slower (r18: the id
+    * set re-runs the posting pipeline, +1 s at sf1~), while AQE broadcasts
+    * the small pair side into these joins, so `sets` streams the corpus
+    * once with no shuffle. */
+  private def verifiedJaccard(cands: DataFrame, dfA: DataFrame, dfB: DataFrame,
+      idCol: String, textCol: String, n: Int, threshold: Double): DataFrame = {
+    def sets(df: DataFrame, side: String) = df.select(col(idCol).as(s"id_$side"),
       sort_array(call_function("shingle_hashes", col(textCol), lit(n)))
-        .as("_sh"))
-    cands
-      .join(sets.select(col("_sid").as("id_a"), col("_sh").as("_sh_a")), "id_a")
-      .join(sets.select(col("_sid").as("id_b"), col("_sh").as("_sh_b")), "id_b")
+        .as(s"_sh_$side"))
+    cands.join(sets(dfA, "a"), "id_a").join(sets(dfB, "b"), "id_b")
       .select(col("id_a"), col("id_b"),
         call_function("sorted_intersect_count", col("_sh_a"), col("_sh_b"))
           .as("inter"),
         size(col("_sh_a")).cast("long").as("size_a"),
         size(col("_sh_b")).cast("long").as("size_b"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("size_a") + col("size_b") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") > threshold)
   }
 
@@ -807,22 +737,7 @@ object Dedup {
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val cands = lshCandidates(df, idCol, textCol, numHashes, numBands, n,
       maxBucketSize)
-    // per-doc sort + count-only sorted-merge verify (same rationale and
-    // spec-pinned equivalence as winnowJaccardPairs above)
-    val sets = df.select(col(idCol).as("_sid"),
-      sort_array(call_function("shingle_hashes", col(textCol), lit(n)))
-        .as("_sh"))
-    cands
-      .join(sets.select(col("_sid").as("id_a"), col("_sh").as("_sh_a")), "id_a")
-      .join(sets.select(col("_sid").as("id_b"), col("_sh").as("_sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        call_function("sorted_intersect_count", col("_sh_a"), col("_sh_b"))
-          .as("inter"),
-        size(col("_sh_a")).cast("long").as("size_a"),
-        size(col("_sh_b")).cast("long").as("size_b"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("size_a") + col("size_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") > threshold)
+    verifiedJaccard(cands, df, df, idCol, textCol, n, threshold)
   }
 
   /** Cross-source duplication report: near-dup clusters annotated with how
@@ -964,9 +879,9 @@ object Dedup {
         call_function("simhash32", col("_th")).as("sig"))
 
   /** Band-blocked hamming pairs over a (id, sig) table with `sigBits`-bit
-    * signatures: maxHamming+1 contiguous bit bands, bucket-join on
-    * (band index, band bits), exact hamming filter. The pigeonhole core
-    * shared by the 32- and 64-bit simhash paths. */
+    * signatures: maxHamming+1 contiguous bit bands, uncapped `Blocking`
+    * posting lists on (band index, band bits), exact hamming filter. The
+    * pigeonhole core shared by the 32- and 64-bit simhash paths. */
   private def bandedHammingPairs(sigs: DataFrame, sigBits: Int,
       maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < sigBits,
@@ -980,11 +895,11 @@ object Dedup {
         shiftrightunsigned(col("sig"), lo).bitwiseAND(lit(mask))
           .as("band_bits"))
     }
-    val postings = sigs
-      .select(explode(array(bands: _*)).as("bk"),
-        struct(col("id"), col("sig")).as("m"))
-      .groupBy("bk").agg(sort_array(collect_list(col("m"))).as("ids"))
-    bucketPairs(postings, "ids")
+    val postings = Blocking.postings(
+      sigs.select(explode(array(bands: _*)).as("bk"),
+        struct(col("id"), col("sig")).as("m")),
+      Seq("bk"), col("m"), Int.MaxValue)
+    Blocking.pairs(postings)
       .select(col("id_a.id").as("id_a"), col("id_a.sig").as("sig_a"),
         col("id_b.id").as("id_b"), col("id_b.sig").as("sig_b"))
       .distinct() // a pair may agree on several bands
@@ -1001,7 +916,14 @@ object Dedup {
     * its (band index, band bits) and pairing only within buckets finds every
     * qualifying pair — identical output to the quadratic scan (spec-asserted),
     * shuffle keyed on (band, bits) instead of a cartesian join. Sigs ride in
-    * the posting structs so the hamming filter needs no join-back. */
+    * the posting structs so the hamming filter needs no join-back.
+    *
+    * Buckets are UNCAPPED (a cap would drop true pairs), and bounded only by
+    * the band width: a band of b bits has at most 2^b buckets, so once N
+    * sigs far outnumber them, candidate pairs per band grow like
+    * N²/2^(b+1) even with evenly filled buckets. Here (radius 3 → 8-bit
+    * bands) that is 256 buckets per band — q38's blocking stops pruning
+    * past a few thousand docs; prefer [[simHashPairs64]] at scale. */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame =
     bandedHammingPairs(simHashSigs(df, idCol, textCol), 32, maxHamming)
@@ -1010,7 +932,8 @@ object Dedup {
     * ≥ 9 bits out to radius 6, so the bucket join keeps pruning at the radii
     * where 32-bit bands (≤ 8 bits past radius 3) degenerate. Prefer this for
     * real near-dup radii; the 32-bit form matches the reference-width
-    * fingerprint. */
+    * fingerprint. The same uncapped N²/2^(b+1) bound applies per band: at
+    * radius 6 (q47) the 7 bands are 9–10 bits, at most 1,024 buckets each. */
   def simHashPairs64(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val sigs = df.select(col(idCol).as("id"),

@@ -24,37 +24,28 @@ object Baskets {
     * baskets are countable by the caller via a size profile; nothing is
     * silently truncated mid-basket.
     *
-    * Scale shape (r21): ONE basket-keyed set aggregate → row-local pair
-    * explode bounded by `maxBasketSize`² → a partial-aggregating pair
-    * count — TWO exchanges total. The previous form (distinct → size
-    * count → membership join → self-equi-join) carried the same rows
-    * through five exchanges to produce the identical pair multiset; the
-    * distinct, the size filter, and the within-basket pairing are all
-    * expressible on the collected per-basket item set (dedup = set
-    * semantics, cap = one `size` filter, pairs = sorted-array slice
-    * explode, so `item_a < item_b` holds by construction). Memory bound:
-    * each basket's DISTINCT item set materializes once in the aggregate
-    * buffer before the cap filter — bounded by the largest single basket,
-    * not the corpus (the jaccardPairs posting-list posture; the object-
-    * hash aggregate falls back to sort-based merging under pressure).
-    * `minCount` floors the hapax-pair tail before the result leaves the
-    * aggregate. */
+    * Scale shape: the `Blocking` kernel — ONE basket-keyed distinct
+    * collect (dedup = set semantics; the cap stops each buffer at
+    * maxBasketSize + 1 items per task, so a giant basket costs
+    * O(maxBasketSize), never its item set) → row-local pair explode
+    * bounded by `maxBasketSize`² (item_a < item_b by construction) → a
+    * partial-aggregating pair count: TWO exchanges. `minCount` floors the
+    * hapax-pair tail before the result leaves the aggregate. */
   def basketPairs(df: DataFrame, basketCol: String, itemCol: String,
       maxBasketSize: Int, minCount: Long = 1L): DataFrame = {
     require(maxBasketSize >= 2, s"maxBasketSize must be >= 2, got $maxBasketSize")
-    pairsFromArrays(basketArrays(df, basketCol, itemCol, maxBasketSize))
-      .groupBy("item_a", "item_b")
-      .agg(count(lit(1)).as("n_baskets"))
-      .filter(col("n_baskets") >= minCount)
+    pairCounts(basketArrays(df, basketCol, itemCol, maxBasketSize),
+      "n_baskets", minCount)
   }
 
-  /** Per-basket SORTED distinct item arrays surviving the size cap —
-    * shared by [[basketPairs]] / [[itemCosine]] / [[associationRules]] so
-    * pair counts and item counts are always measured over the SAME basket
-    * population. One basket-keyed shuffle; dedup within a basket is the
-    * set aggregate itself. */
+  /** Per-basket SORTED distinct item arrays (`basket`, `members`)
+    * surviving the size cap — shared by [[basketPairs]] / [[itemCosine]] /
+    * [[associationRules]] so pair counts and item counts are always
+    * measured over the SAME basket population. One basket-keyed shuffle
+    * (the `Blocking` postings); dedup within a basket is the distinct
+    * collect itself. */
   private def basketArrays(df: DataFrame, basketCol: String, itemCol: String,
-      maxBasketSize: Int): DataFrame =
+      maxBasketSize: Int): DataFrame = Blocking.postings(
     df.select(col(basketCol).as("basket"), col(itemCol).as("item"))
       // nulls carry no co-occurrence signal and are dropped up front. NOTE
       // this is part of the operator's SEMANTICS, not a neutral cleanup
@@ -64,26 +55,23 @@ object Baskets {
       // all-null baskets no longer count toward associationRules' N
       // denominator — where the pre-r21 membership-join form counted them
       // toward both while still emitting no null pairs.
-      .filter(col("basket").isNotNull && col("item").isNotNull)
-      .groupBy("basket")
-      .agg(sort_array(collect_set(col("item"))).as("items"))
-      .filter(size(col("items")) <= maxBasketSize)
+      .filter(col("basket").isNotNull && col("item").isNotNull),
+    Seq("basket"), col("item"), maxBasketSize, distinct = true)
 
-  /** Row-local unordered-pair explode over the sorted item arrays:
-    * position i pairs with every later position, so item_a < item_b by
-    * construction (the bucketPairs slice pattern — no self-join). */
-  private def pairsFromArrays(arrays: DataFrame): DataFrame =
-    arrays.select(col("items"), posexplode(col("items")))
-      .toDF("items", "_i", "item_a")
-      .select(col("item_a"),
-        explode(slice(col("items"), col("_i") + lit(2), size(col("items"))))
-          .as("item_b"))
+  /** Per-pair basket counts (`item_a`, `item_b`, `name`) from the arrays
+    * frame, floored at `minCount` before the result leaves the aggregate. */
+  private def pairCounts(arrays: DataFrame, name: String,
+      minCount: Long): DataFrame =
+    Blocking.pairs(arrays)
+      .groupBy(col("id_a").as("item_a"), col("id_b").as("item_b"))
+      .agg(count(lit(1)).as(name))
+      .filter(col(name) >= minCount)
 
   /** The exploded (basket, item) rows of the capped population — the
     * item-count side of [[itemCosine]] / [[associationRules]], row-local
     * from the arrays frame. */
   private def keptFromArrays(arrays: DataFrame): DataFrame =
-    arrays.select(col("basket"), explode(col("items")).as("item"))
+    arrays.select(col("basket"), explode(col("members")).as("item"))
 
   /** Co-visitation cosine ("items also bought"): each co-occurring pair
     * scored by n_ab / √(n_a·n_b) — raw co-counts favor globally popular
@@ -100,10 +88,7 @@ object Baskets {
     require(maxBasketSize >= 2, s"maxBasketSize must be >= 2, got $maxBasketSize")
     val arrays = basketArrays(df, basketCol, itemCol, maxBasketSize)
       .localCheckpoint() // feeds the pair build AND the count frame
-    val pairs = pairsFromArrays(arrays)
-      .groupBy("item_a", "item_b")
-      .agg(count(lit(1)).as("n_baskets"))
-      .filter(col("n_baskets") >= minCount)
+    val pairs = pairCounts(arrays, "n_baskets", minCount)
     val cnt = keptFromArrays(arrays)
       .groupBy("item").agg(count(lit(1)).as("n"))
     pairs
@@ -144,10 +129,7 @@ object Baskets {
     require(maxBasketSize >= 2, s"maxBasketSize must be >= 2, got $maxBasketSize")
     val arrays = basketArrays(df, basketCol, itemCol, maxBasketSize)
       .localCheckpoint() // feeds pairs, item counts, and the N frame
-    val pairs = pairsFromArrays(arrays)
-      .groupBy("item_a", "item_b")
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= minCount)
+    val pairs = pairCounts(arrays, "n_ab", minCount)
     val directed = pairs.select(col("item_a").as("antecedent"),
         col("item_b").as("consequent"), col("n_ab"))
       .unionAll(pairs.select(col("item_b").as("antecedent"),

@@ -20,50 +20,42 @@ import org.apache.spark.sql.functions._
   * the oracle for this operator is the full quadratic join, so a green
   * hash-compare proves no pair escapes the blocking.
   *
-  * Scale shape: ~(avg_len+1)·n exploded keys, one keyed shuffle, per-key
-  * fan-out bounded by block size. Like every LSH-style blocker in this
-  * repo, hot keys are the failure mode — `maxBlockSize` drops pathological
-  * blocks (e.g. the ""-key block of all 1-char strings) WHOLE. The drop is
-  * silent in the join plan itself (an anti-join; forcing a count there
-  * would bolt an extra action onto every call), and a dropped block can
-  * hide true pairs. `maxBlockSize <= 0` disables the cap entirely.
+  * Scale shape: ~(avg_len+1)·n exploded keys, one keyed shuffle (the
+  * `Blocking` posting lists), per-key fan-out bounded by block size. Like
+  * every LSH-style blocker in this repo, hot keys are the failure mode —
+  * `maxBlockSize` drops pathological blocks (e.g. the ""-key block of all
+  * 1-char strings) WHOLE, inside the posting aggregate. The drop is silent
+  * (forcing a count would bolt an extra action onto every call), and a
+  * dropped block can hide true pairs. `maxBlockSize <= 0` disables the cap
+  * entirely.
   */
 object Fuzzy {
 
-  /** (id, s, k) with one row per deletion-neighborhood key of s.
-    * fanOut: a single-file input plans as ONE scan task, and because the
-    * candidate join's small side broadcasts, the ENTIRE pipeline —
-    * explode, hot-block probe, join, levenshtein verify, distinct partial
-    * — would fuse into that one task (measured: 4.4 s of q157's 7.2 s on
+  /** (id, s, k) with one row per ≤`depth`-deletion-neighborhood key of s:
+    * every string reachable by deleting up to `depth` (1 or 2) characters,
+    * deduped — len+1 keys per row at depth 1, ≈ 1 + len + len²/2 at depth
+    * 2 (the depth-1 transform applied to its own output, flattened).
+    * fanOut: a single-file input plans as ONE scan task, and the explode
+    * and the posting aggregate's partial side would fuse into that one
+    * task (measured on the earlier join form: 4.4 s of q157's 7.2 s on
     * one core of 32). The conditional repartition spreads the per-row
     * work cluster-wide and is the identity on any already-parallel
     * input. */
-  private def delKeys(df: DataFrame, idCol: String, strCol: String): DataFrame =
+  private def delKeys(df: DataFrame, idCol: String, strCol: String,
+      depth: Int = 1): DataFrame = {
+    // i = 0..len-1 deletes char i+1; i = len yields the string itself
+    def del1(v: String, i: String) = s"transform(sequence(0, length($v)), " +
+      s"$i -> concat(substring($v, 1, $i), substring($v, $i + 2)))"
+    val keys = if (depth == 1) del1("s", "i")
+      else s"flatten(transform(${del1("s", "i")}, t -> ${del1("t", "j")}))"
     Scale.fanOut(
       df.select(col(idCol).cast("long").as("id"), col(strCol).as("s")))
-      .withColumn("k", explode(array_distinct(expr(
-        // i = 0..len-1 deletes char i+1; i = len yields s itself.
-        "transform(sequence(0, length(s)), " +
-          "i -> concat(substring(s, 1, i), substring(s, i + 2)))"))))
+      .withColumn("k", explode(array_distinct(expr(keys))))
+  }
 
-  /** (id, s, k) with one row per ≤2-deletion-neighborhood key of s —
-    * the ed≤2 blocking set: every string reachable by deleting up to two
-    * characters (the del≤1 transform applied to its own output, then
-    * flattened and deduped). |keys| ≈ 1 + len + len²/2 per row. */
-  private def delKeys2(df: DataFrame, idCol: String, strCol: String): DataFrame =
-    Scale.fanOut(
-      df.select(col(idCol).cast("long").as("id"), col(strCol).as("s")))
-      .withColumn("k", explode(array_distinct(expr(
-        "flatten(transform(" +
-          "transform(sequence(0, length(s)), " +
-          "i -> concat(substring(s, 1, i), substring(s, i + 2))), " +
-          "t -> transform(sequence(0, length(t)), " +
-          "j -> concat(substring(t, 1, j), substring(t, j + 2)))))"))))
-
-  /** Drops, from each of `sides`, every deletion key held by more than
-    * `maxBlockSize` rows across all sides combined (a key hot on either
-    * side floods the join the same way) — one broadcast anti-join per
-    * side. `maxBlockSize <= 0` returns the sides unchanged. */
+  /** Drops from each of `sides` every deletion key held by more than
+    * `maxBlockSize` rows across all sides combined — one broadcast
+    * anti-join per side; `maxBlockSize <= 0` returns the sides unchanged. */
   private def dropHotBlocks(maxBlockSize: Int,
       sides: DataFrame*): Seq[DataFrame] =
     if (maxBlockSize <= 0) sides
@@ -77,14 +69,9 @@ object Fuzzy {
   /** The self-join kernel of [[editDistance1Join]] and
     * [[editDistance2Join]] over a deletion-key frame (id, s, k): all
     * unordered pairs (id_a < id_b) sharing a key whose strings are within
-    * Levenshtein distance `maxDist`.
-    *
-    * The key frame is checkpointed lazily: it feeds the hot-block count
-    * and both join sides, so the explode runs once, materialized inside
-    * the hot-block count job. The cost is storage — every key of every
-    * row stays in executor MEMORY_AND_DISK for the query's lifetime
-    * (~len²/2 keys per row at ed≤2), and executor loss is unrecoverable
-    * (truncated lineage).
+    * Levenshtein distance `maxDist` — the `Blocking` pairs of the capped
+    * per-key (id, s) posting lists, so the key explode runs once with no
+    * checkpoint, hot-block count or join.
     *
     * The bounded 3-arg `levenshtein` (it early-exits past the bound, -1
     * = over) verifies every candidate occurrence BEFORE the distinct, so
@@ -93,20 +80,18 @@ object Fuzzy {
     * j keys is verified j times, which measured cheaper than shipping
     * the strings (SCALE.md). */
   private def selfJoin(keys: DataFrame, maxDist: Int,
-      maxBlockSize: Int): DataFrame = {
-    val Seq(capped) =
-      dropHotBlocks(maxBlockSize, keys.localCheckpoint(eager = false))
-    capped.as("a").join(capped.as("b"),
-        col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        levenshtein(col("a.s"), col("b.s"), maxDist).cast("long").as("dist"))
-      .filter(col("dist") >= 0)
+      maxBlockSize: Int): DataFrame =
+    Blocking.pairs(Blocking.postings(keys, Seq("k"),
+        struct(col("id"), col("s")),
+        if (maxBlockSize <= 0) Int.MaxValue else maxBlockSize))
+      .select(col("id_a.id").as("id_a"), col("id_b.id").as("id_b"),
+        levenshtein(col("id_a.s"), col("id_b.s"), maxDist).cast("long").as("dist"))
+      .filter(col("id_a") < col("id_b") && col("dist") >= 0)
       .distinct()
-  }
 
   /** All unordered pairs (id_a < id_b) of rows whose `strCol` values are
     * within Levenshtein distance 1, with the distance: [[selfJoin]] over
-    * the (len+1)-key [[delKeys]] neighborhoods. */
+    * the (len+1)-key depth-1 [[delKeys]] neighborhoods. */
   def editDistance1Join(df: DataFrame, idCol: String, strCol: String,
       maxBlockSize: Int = 1000): DataFrame =
     selfJoin(delKeys(df, idCol, strCol), 1, maxBlockSize)
@@ -116,7 +101,7 @@ object Fuzzy {
     * pair of characters, one typo + one truncation). Same FastSS
     * argument one level deeper: ed(s,t) ≤ 2 ⇒ the ≤2-deletion
     * neighborhoods of s and t intersect, so [[selfJoin]] over the
-    * ~len²/2-key [[delKeys2]] explode finds every true pair and the
+    * ~len²/2-key depth-2 [[delKeys]] explode finds every true pair and the
     * bounded `levenshtein(_, _, 2)` discards the blocking's false
     * positives. The oracle is again the full quadratic join — a green
     * hash proves zero pairs lost to blocking at this depth too.
@@ -126,7 +111,7 @@ object Fuzzy {
     * quadratic. Same silent in-plan hot-block cap. */
   def editDistance2Join(df: DataFrame, idCol: String, strCol: String,
       maxBlockSize: Int = 1000): DataFrame =
-    selfJoin(delKeys2(df, idCol, strCol), 2, maxBlockSize)
+    selfJoin(delKeys(df, idCol, strCol, depth = 2), 2, maxBlockSize)
 
   /** Cross-TABLE record linkage: (left_id, right_id, dist) for every pair
     * within Levenshtein distance 1 — match a dirty fact-side string column
@@ -136,7 +121,8 @@ object Fuzzy {
     * substitution/indel/equality cases never relied on self-joining); the
     * hot-block cap ([[dropHotBlocks]]) applies to the COMBINED per-key
     * frequency, and candidates are verified before the distinct, as in
-    * [[selfJoin]]. */
+    * [[selfJoin]]. Kept a two-sided join, not `Blocking` posting lists:
+    * FuzzySpec pins this plan's two anti-joins. */
   def editDistance1JoinBetween(left: DataFrame, leftId: String,
       leftStr: String, right: DataFrame, rightId: String, rightStr: String,
       maxBlockSize: Int = 1000): DataFrame = {

@@ -117,6 +117,40 @@ class ConfigLoaderSpec extends AnyFunSuite with Matchers {
       |    content_column: text
       |""".stripMargin + keys.map(k => s"    $k\n").mkString
 
+  private def withStrategy(strategy: String, keys: String*): String =
+    withDedup(keys: _*).replace("strategy: minhash_lsh", s"strategy: $strategy")
+
+  // (key: value, a strategy that ignores it, every strategy that reads it
+  // in Curation.applyDedup)
+  Seq(
+    ("threshold: 0.9", "exact",
+      "embedding_lsh/keep_best/minhash_lsh/ngram_jaccard/semantic/winnow_jaccard"),
+    ("ngram: 4", "simhash", "keep_best/minhash_lsh/ngram_jaccard/winnow/winnow_jaccard"),
+    ("max_shingle_freq: 50", "minhash_lsh", "keep_best/ngram_jaccard/winnow/winnow_jaccard"),
+    ("num_hashes: 16", "ngram_jaccard", "minhash_lsh"),
+    ("num_bands: 8", "canonical", "minhash_lsh"),
+    ("max_hamming: 3", "minhash_lsh", "simhash"),
+    ("num_planes: 6", "semantic", "embedding_lsh"),
+    ("dim: 8", "prefix", "embedding_lsh")
+  ).foreach { case (kv, ignoring, readers) =>
+    val key = kv.takeWhile(_ != ':')
+    test(s"dedup $key fails under a strategy that ignores it, loads under each reader") {
+      error(withStrategy(ignoring, kv)) shouldBe
+        s"curation.dedup.$key: only applies to strategy $readers " +
+          s"(got strategy '$ignoring' — it would be silently ignored)"
+      for (reader <- readers.split("/")) withClue(s"$reader: ") {
+        // the keys a reader requires besides the one under test
+        val required = reader match {
+          case "keep_best" => Seq("score_column: s")
+          case "embedding_lsh" if key != "dim" => Seq("dim: 8")
+          case _ => Nil
+        }
+        ConfigLoader.parse(withStrategy(reader, kv +: required: _*),
+          env = Map.empty).curation.get.dedup.get.strategy shouldBe reader
+      }
+    }
+  }
+
   test("a non-number fails naming its key") {
     ConfigLoader.parse(withDedup("threshold: 0.9"), env = Map.empty)
       .curation.get.dedup.get.threshold shouldBe 0.9

@@ -31,6 +31,30 @@ class RandomizedPropertySpec extends SparkSpec {
     brute.size should be > 100 // non-vacuous: the alphabet makes pairs dense
   }
 
+  test("Blocking postings + pairs ≡ naive self-join under a count-then-filter cap") {
+    Seq(6, 12, Int.MaxValue).foreach { cap =>
+      // 12 small keys straddling the cap, one hot key, members drawn with
+      // repeats, and a key whose repeated member pairs twice
+      val rows = (1 to 80).map(_ => (rnd.nextInt(12), rnd.nextInt(8).toLong)) ++
+        (1 to 40).map(_ => (99, rnd.nextInt(30).toLong)) ++
+        Seq((50, 1L), (50, 1L), (50, 2L))
+      val df = rows.toDF("k", "m")
+      val kernel = Blocking.pairs(Blocking.postings(df, Seq("k"), col("m"), cap))
+        .as[(Long, Long)].collect().toSeq.sorted
+      val kept = df.groupBy("k").count().filter(col("count") <= cap).select("k")
+      val capped = df.join(kept, "k")
+      val naive = capped.as("a").join(capped.as("b"),
+          col("a.k") === col("b.k") && col("a.m") < col("b.m"))
+        .select(col("a.m"), col("b.m")).as[(Long, Long)].collect().toSeq.sorted
+      withClue(s"cap=$cap: ") {
+        kernel shouldBe naive
+        kernel.distinct.size should be < kernel.size // repeated members pair as the join does
+        if (cap != Int.MaxValue) kept.count() should be < 14L // some key dropped
+        kernel should not be empty
+      }
+    }
+  }
+
   test("skyline2D ≡ brute-force dominance on random points with heavy ties") {
     val pts = (1L to 300L).map(i =>
       (i, rnd.nextInt(8).toLong, rnd.nextInt(8).toLong))
