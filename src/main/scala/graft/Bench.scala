@@ -1,12 +1,15 @@
 package graft
 
+import graft.obs.Probe
+
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
   *
   * Each query is fully materialized via a `noop` sink (computes every output
   * column/row like a real write, without disk I/O or the column-pruning
   * shortcut a bare `count()` would allow). AQE is on — same posture as a
-  * production cluster run.
+  * production cluster run. Every timed run goes through `graft.obs.Probe`,
+  * whose job and stage counters land in BENCH_DETAIL.json's `counters`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -19,52 +22,32 @@ object Bench {
     // comparisons.
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => SparkEntry.selected(n) }
-    val warmT0 = System.nanoTime()
-    names.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    val warmupSec = (System.nanoTime() - warmT0) / 1e9
-    // Settle after the ~80 s warm-up pass: the JIT/codegen churn it creates
-    // leaves GC debt that otherwise lands inside whichever timed query runs
-    // next (r4/r5 showed 5-14x phantom regressions on unchanged code).
-    // Drop cached relations, force a full GC, and give the JVM a few
-    // seconds of quiet before any timed work.
-    def settle(sleepMs: Long): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-      Thread.sleep(sleepMs)
-    }
-    settle(8000L)
+    val warmupSec = Probe.measure(spark)(names.foreach { case (_, fn) =>
+      try Probe.noop(fn(spark, sfDir)) catch { case _: Throwable => () }
+    })._2.wallS
+    // Settle after the ~80 s warm-up pass: its JIT/codegen churn leaves GC
+    // debt that otherwise lands inside whichever timed query runs next
+    // (r4/r5 showed 5-14x phantom regressions on unchanged code).
+    Probe.settle(spark, 8000L)
     // Min over SPARK_GRAFT_REPS repetitions (default 3): single-shot
-    // timings on shared hardware swing ±50% with scheduler/GC noise; the
-    // minimum is the standard low-noise estimator of a query's true cost.
-    // Reps are INTERLEAVED — each rep is one full round-robin pass over all
-    // queries — so a transient stall (GC pause, scheduler preemption) can
-    // poison at most one rep of any given query, never all of them.
-    // Each timing is SETTLED (ScaleSmoke's posture: cache cleared + a short
-    // quiet gap before the clock starts): r12 showed min-of-5 UNsettled reps
-    // still carrying 5× per-query artifacts (q122 = 1.885 s in bench, 0.36 s
-    // settled in ScaleSmoke, all five bench reps slow) — debt from the
-    // PREVIOUS query (broadcast cleanup, cached-relation eviction, GC) lands
-    // in the next timing, and interleaving can't help because the
-    // round-robin neighbor is the same every rep.
+    // timings on shared hardware swing ±50%; the minimum is the standard
+    // low-noise estimator of a query's true cost. Reps are INTERLEAVED (one
+    // round-robin pass over all queries each), so a transient stall poisons
+    // at most one rep of a query. Each run is settled too (Probe.settle):
+    // debt from the PREVIOUS query (broadcast cleanup, cache eviction, GC)
+    // otherwise lands in the next timing, and interleaving can't help since
+    // the round-robin neighbor is the same every rep (r12: 5× artifacts in
+    // min-of-5 unsettled reps).
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val samples = scala.collection.mutable.Map.empty[String, Vector[(Double, Boolean)]]
-      .withDefaultValue(Vector.empty)
-    (1 to reps).foreach { rep =>
-      names.foreach { case (name, fn) =>
-        settle(300L)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed (rep $rep): ${e.getMessage}")
-            false
-          }
-        samples(name) = samples(name) :+ (((System.nanoTime() - t0) / 1e9, ok))
+    val samples = (1 to reps).flatMap { rep =>
+      names.map { case (name, fn) =>
+        Probe.settle(spark, 300L)
+        val (result, sample) = Probe.measure(spark)(Probe.noop(fn(spark, sfDir)))
+        result.failed.foreach(e =>
+          System.err.println(s"[bench] $name failed (rep $rep): ${e.getMessage}"))
+        name -> (result.isSuccess, sample)
       }
-    }
+    }.groupMap(_._1)(_._2)
     // Fixed-work calibration probe: a constant CPU-bound query, so judges
     // can normalize host-epoch drift (r13's 1.47× uniform inflation was
     // adjudicated as host noise from indirect evidence; this makes it
@@ -81,23 +64,24 @@ object Bench {
     // when BOTH families agree — a calibration artifact can no longer
     // flag an unchanged query.
     def calibOnce(): Double = {
-      settle(300L)
-      val t0 = System.nanoTime()
+      Probe.settle(spark, 300L)
       // id is reduced mod 1e9+7 BEFORE the Knuth multiply: at 5e9 rows
       // the raw product overflows BIGINT (ANSI aborts); the reduced
       // product peaks at ~2.7e18, safely inside
-      spark.range(0L, 5000000000L, 1L, spark.sparkContext.defaultParallelism)
-        .selectExpr(
-          "sum((((id % 1000000007) * 2654435761) ^ (id >> 7)) % 1000003) as s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      val (result, sample) = Probe.measure(spark)(Probe.noop(spark
+        .range(0L, 5000000000L, 1L, spark.sparkContext.defaultParallelism)
+        .selectExpr("sum((((id % 1000000007) * 2654435761) ^ (id >> 7)) % 1000003) as s")))
+      result.get
+      sample.wallS
     }
     val calibReps = math.max(5, reps)
     val calibs = (1 to calibReps).map(_ => calibOnce())
     val calibSec = calibs.sorted.apply(calibs.size / 2)
+    // each query's counters come from its min-time rep
     val results = names.map { case (name, _) =>
-      val times = samples(name)
-      (name, times.map(_._1).min, times.forall(_._2), times.map(_._1))
+      val runs = samples(name)
+      val best = runs.map(_._2).minBy(_.wallS)
+      (name, best.wallS, runs.forall(_._1), runs.map(_._2.wallS), best)
     }
     // Self-normalization against the PREVIOUS round: BENCH_DETAIL.json in
     // cwd is last round's committed detail (read before this run
@@ -111,10 +95,7 @@ object Bench {
       val f = new java.io.File("BENCH_DETAIL.json")
       if (!f.exists) None
       else try {
-        val txt = {
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.mkString finally src.close()
-        }
+        val txt = java.nio.file.Files.readString(f.toPath)
         // scope the pair scan to the "queries" OBJECT: the detail file
         // also carries ratio maps keyed by the same names, and an
         // unscoped scan's .toMap would keep THOSE values (last
@@ -143,7 +124,7 @@ object Bench {
     // alone false-positives on host-epoch shifts (r13), normalized alone
     // false-positives on calibration noise (r17).
     val rawRatios: Map[String, Double] = prevDetail.map { case (pq, _) =>
-      results.flatMap { case (name, v, ok, _) =>
+      results.flatMap { case (name, v, ok, _, _) =>
         pq.get(name).filter(p => p > 0.0 && ok).map(p => name -> v / p)
       }.toMap
     }.getOrElse(Map.empty)
@@ -179,22 +160,30 @@ object Bench {
         -math.max(r, rawRatios.getOrElse(n, 0.0)) }
     // Failed queries report -1 (not their elapsed time) and are listed in
     // "errors", so a run with failures can never read as a clean total.
-    val qs = results.map { case (k, v, ok, _) =>
+    val qs = results.map { case (k, v, ok, _, _) =>
       "\"" + k + "\":" + (if (ok) f"$v%.3f" else "-1") }.mkString("{", ",", "}")
     // every rep's time per query, so min-of-N can't silently mask a
     // regression between rounds
-    val ts = results.map { case (k, _, _, all) =>
+    val ts = results.map { case (k, _, _, all, _) =>
       "\"" + k + "\":" + all.map(t => f"$t%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val errors = results.collect { case (k, _, false, _) => "\"" + k + "\"" }
+    val errors = results.collect { case (k, _, false, _, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true, _) => v }.sum
+    val total = results.collect { case (_, v, true, _, _) => v }.sum
     // The per-query map outgrew the driver's bounded stdout-tail capture at
     // 185 queries (r13: parsed=null even with qNN-prefix keys — the exact
     // failure mode r8/r9 hit at 96 queries with full names). The map and
     // per-rep arrays now live in a FILE next to the harness cwd; stdout
     // carries only fixed-size contract fields (~160 bytes) that can never
     // outgrow the capture window.
+    // per-query layer counters of the min-time rep, after every other
+    // field so the "queries" scan above never meets a nested object
+    val counters = results.map { case (k, _, _, _, b) =>
+      s""""$k":{"jobs":${b.jobs.size},"stages":${b.stages.size},""" +
+        s""""tasks":${b.total(_.tasks)},"shuffle_read_bytes":${b.total(_.shuffleRead)},""" +
+        s""""shuffle_write_bytes":${b.total(_.shuffleWrite)},"spill_bytes":${b.total(_.spill)},""" +
+        f""""cpu_s":${b.total(_.cpuNs) / 1e9}%.3f}"""
+    }.mkString("{", ",", "}")
     val detailPath = new java.io.File("BENCH_DETAIL.json").getAbsolutePath
     val calibJson = calibs.map(t => f"$t%.3f").mkString("[", ",", "]")
     // full calib-normalized ratio map → the detail file; stdout carries
@@ -215,7 +204,7 @@ object Bench {
         val raw = rawRatios.getOrElse(k, 0.0)
         "\"" + k + ":" + f"$r%.2f" + "x calib/" + f"$raw%.2f" + "x raw\"" }
       .mkString("[", ",", "]")
-    val detail = f"""{"queries":$qs,"times":$ts,"errors":$errors,"warmup_sec":$warmupSec%.3f,"calib_version":2,"calib_sec":$calibSec%.3f,"calib_reps":$calibJson,"reps":$reps,"sf":"$sfDir","n_queries":${results.size},"median_ratio_vs_prev":$medianJson,"median_ratio_raw_vs_prev":$medianRawJson,"n_disputed_over_2x":${disputed.size},"disputed_over_2x":$disputedJson,"ratios_vs_prev":$ratioJson,"ratios_raw_vs_prev":$rawRatioJson}"""
+    val detail = f"""{"queries":$qs,"times":$ts,"errors":$errors,"warmup_sec":$warmupSec%.3f,"calib_version":2,"calib_sec":$calibSec%.3f,"calib_reps":$calibJson,"reps":$reps,"sf":"$sfDir","n_queries":${results.size},"median_ratio_vs_prev":$medianJson,"median_ratio_raw_vs_prev":$medianRawJson,"n_disputed_over_2x":${disputed.size},"disputed_over_2x":$disputedJson,"ratios_vs_prev":$ratioJson,"ratios_raw_vs_prev":$rawRatioJson,"counters":$counters}"""
     val w = new java.io.PrintWriter(detailPath, "UTF-8")
     try w.println(detail) finally w.close()
     System.err.println(detail)

@@ -1,10 +1,11 @@
 package graft
 
 import graft.dedup.Dedup
+import graft.obs.Probe
 import graft.tables.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.chaining._
 
 /** Diagnostic main behind SCALE.md: times the heavy curation queries at
   * sf0.01 / sf0.1 / a synthetic ~sf1 and reports wall-times plus total
@@ -308,13 +309,13 @@ object ScaleSmoke {
     val sf1Dir = "/tmp/graft_scale_sf1"
     synthSf1(spark, "/root/testdata/sf0.1", sf1Dir)
 
-    // total shuffle-write bytes per measured run, via stage metrics
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    // two settled, probed runs, min: run 1 doubles as JIT/codegen warm-up
+    // at this scale; shuffle MB is the run's total shuffle write
+    def best[T](body: => T): (Double, Double, T) = (1 to 2).map { _ =>
+      Probe.settle(spark, 300L)
+      val (result, sample) = Probe.measure(spark)(body)
+      (sample.wallS, sample.total(_.shuffleWrite) / 1e6, result.get)
+    }.minBy(_._1)
 
     // the numPlanes scale knob: at 10× the corpus, doubling the planes
     // (16 → 256 buckets) keeps per-bucket pair counts flat — measured as
@@ -369,17 +370,7 @@ object ScaleSmoke {
             .filter { case (n, _) => SparkEntry.selected(n) }
         else Nil)
       qs.foreach { case (name, fn) =>
-        // two runs, min: run 1 doubles as JIT/codegen warm-up at this scale
-        val (sec, mb) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          Thread.sleep(500) // let the listener drain the previous run
-          shuffleBytes.set(0L)
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500)
-          (sec, shuffleBytes.get() / 1e6)
-        }.minBy(_._1)
+        val (sec, mb, _) = best(Probe.noop(fn(spark, dir)))
         println(f"| $name | $label | $sec%.2f | $mb%.1f |")
       }
     }
@@ -399,20 +390,10 @@ object ScaleSmoke {
       .foreach { case (label, dir) =>
         SkewQueries.filter(SparkEntry.selected)
           .foreach { name =>
-          val fn = SparkEntry.queries(name)
-          val (sec, mb, splits) = (1 to 2).map { _ =>
-            spark.catalog.clearCache()
-            Thread.sleep(500)
-            shuffleBytes.set(0L)
-            val t0 = System.nanoTime()
-            val df = fn(spark, dir)
-            df.collect()
-            val sec = (System.nanoTime() - t0) / 1e9
-            Thread.sleep(500)
-            val plan = df.queryExecution.executedPlan.toString
-            (sec, shuffleBytes.get() / 1e6,
-              "skew=true".r.findAllIn(plan).length)
-          }.minBy(_._1)
+          val (sec, mb, df) =
+            best(SparkEntry.queries(name)(spark, dir).tap(_.collect()))
+          val splits = "skew=true".r
+            .findAllIn(df.queryExecution.executedPlan.toString).length
           println(f"| $name | $label | $sec%.2f | $mb%.1f | $splits |")
         }
       }

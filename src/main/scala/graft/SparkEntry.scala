@@ -718,11 +718,14 @@ object SparkEntry {
     }),
 
     // Incremental cardinality via mergeable HLL sketches: per-day sketches
-    // union-merged per event_type must estimate IDENTICALLY to a one-shot
-    // sketch (union is register-wise max — lossless for same lgK), and the
-    // estimate must sit within 5% of the exact distinct count. Estimates
-    // are engine-local (DataSketches), so the oracle compares the exact
-    // count and the two invariant booleans — the q41 bounds-check pattern.
+    // union-merged per event_type must estimate within the same 5% bound
+    // of a one-shot sketch, and the one-shot estimate within 5% of the
+    // exact distinct count. Not equality: the estimates agree exactly only
+    // while the sketch is in its exact small-cardinality mode (sf0.01);
+    // past it a union's estimator differs from the one-shot sketch's (at
+    // sf0.1: 1,488 merged vs 1,494 one-shot). Estimates are engine-local
+    // (DataSketches), so the oracle compares the exact count and the two
+    // invariant booleans — the q41 bounds-check pattern.
     "q114_cardinality_audit" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
       val daily = Sketches.distinctSketches(
@@ -733,7 +736,8 @@ object SparkEntry {
       Sketches.cardinalityAudit(ev, Seq("event_type"), "user_id")
         .join(merged, "event_type")
         .select(col("event_type"), col("n_exact"), col("within_tol"),
-          (col("n_merged") === col("n_est")).as("merge_exact"))
+          (abs(col("n_merged") - col("n_est")).cast("double") <=
+            lit(0.05) * col("n_est").cast("double")).as("merge_within_tol"))
         .orderBy("event_type")
     }),
 
@@ -8645,11 +8649,11 @@ object SparkEntry {
         |FROM st ORDER BY event_type""".stripMargin,
     // q114: the exact count hash-compares; the sketch estimate is
     // engine-local (DataSketches HLL), so its invariants — within 5% of
-    // exact, and merged-per-day ≡ one-shot — ride as oracle-TRUE booleans
-    // (the q41 bounds-check pattern).
+    // exact, and merged-per-day within 5% of one-shot — ride as
+    // oracle-TRUE booleans (the q41 bounds-check pattern).
     "q114_cardinality_audit" ->
       """SELECT event_type, count(DISTINCT user_id) AS n_exact,
-        | TRUE AS within_tol, TRUE AS merge_exact
+        | TRUE AS within_tol, TRUE AS merge_within_tol
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
     // q115: crosstab ≡ 20 conditional sums; absent (lang, source) cells
     // are NULL on both engines (sum over no rows / pivot over no rows).

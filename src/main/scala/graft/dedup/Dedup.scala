@@ -834,10 +834,10 @@ object Dedup {
     * follow the data.
     *
     * Scale shape: assignment is row-local against broadcast centroids; the
-    * pair join shuffles on the cluster id; within-cluster pairing is
-    * quadratic in CELL size — k is the knob (grow it with the corpus to
-    * hold cells flat, exactly like num_planes for LSH; the paper runs
-    * k≈corpus/10k). No all-pairs stage anywhere.
+    * pair join shuffles on the cluster id; within-cluster pairing
+    * (`Blocking.cosinePairs`) is quadratic in CELL size — k is the knob
+    * (grow it with the corpus to hold cells flat, exactly like num_planes
+    * for LSH; the paper runs k≈corpus/10k). No all-pairs stage anywhere.
     *
     * `threshold` compares the RAW double cosine, same boundary semantics
     * as [[removeNearDupesLsh]] / `Similarity.cosineDupes` — switching
@@ -858,16 +858,7 @@ object Dedup {
       .withColumn("nrm", Similarity.norm(col("vec")))
       .filter(col("nrm") > lit(0.0))
       .withColumn("cell", Similarity.ivfBucket(col("vec"), cents))
-    val a = bucketed.select(col("cell"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("nrm").as("norm_a"))
-    val b = bucketed.select(col("cell"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("nrm").as("norm_b"))
-    val pairs = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim",
-        Similarity.dot(col("vec_a"), col("vec_b"))
-          / (col("norm_a") * col("norm_b")))
-      .filter(col("sim") > lit(threshold))
+    val pairs = Blocking.cosinePairs(bucketed, "cell", threshold)
       .select("id_a", "id_b")
     removeNearDupes(df, idCol, dupClusters(pairs))
   }

@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   *    pairs as a self-join on `a < b` would. posexplode + slice + explode
   *    whole-stage-codegen (a higher-order lambda would not), and with no
   *    self-join the members' producer runs once, not once per side.
+  *  - [[cosinePairs]]: the dense-vector verify, a within-block self-join
+  *    (the block key is an LSH bucket or a k-means cell).
   */
 private[graft] object Blocking {
 
@@ -36,4 +38,20 @@ private[graft] object Blocking {
       .select(col("id_a"),
         explode(slice(col("_m"), col("_i") + lit(2), size(col("_m")))).as("id_b"))
       .filter(col("id_a") < col("id_b"))
+
+  /** (id_a, id_b, sim), id_a < id_b, cosine `sim` > `threshold`, over
+    * `blocked`'s (key, id, vec, nrm) rows sharing a `key`: an a/b self-join
+    * on the key, then the cosine filter. Quadratic in block size — a block
+    * of n members yields n(n-1)/2 candidates, and nothing caps it (a cap
+    * would drop true pairs): the blocking knob (LSH planes, k-means k) is
+    * what holds blocks small. */
+  def cosinePairs(blocked: DataFrame, key: String, threshold: Double): DataFrame = {
+    def side(s: String) = blocked.select(col(key), col("id").as(s"id_$s"),
+      col("vec").as(s"vec_$s"), col("nrm").as(s"norm_$s"))
+    side("a").join(side("b"), Seq(key))
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("sim", graft.similarity.Similarity.dot(col("vec_a"),
+        col("vec_b")) / (col("norm_a") * col("norm_b")))
+      .filter(col("sim") > lit(threshold))
+  }
 }

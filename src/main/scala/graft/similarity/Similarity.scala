@@ -887,7 +887,8 @@ object Similarity {
   /** LSH-bucketed approximate near-dup pairs: sign-hash each vector into a
     * bucket, then run the exact pair scan only within buckets. Recall is
     * tunable via numPlanes (fewer planes → bigger buckets → higher recall,
-    * more compute). */
+    * more compute): the within-bucket scan (`Blocking.cosinePairs`) is
+    * quadratic in bucket size. */
   def lshCosineDupes(
       df: DataFrame,
       idCol: String,
@@ -898,15 +899,7 @@ object Similarity {
     val bucketed = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("bucket", lshBucket(col("vec"), numPlanes, dim))
       .withColumn("nrm", norm(col("vec")))
-    val a = bucketed.select(col("bucket"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("nrm").as("norm_a"))
-    val b = bucketed.select(col("bucket"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("nrm").as("norm_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim",
-        dot(col("vec_a"), col("vec_b")) / (col("norm_a") * col("norm_b")))
-      .filter(col("sim") > lit(threshold))
+    graft.ops.Blocking.cosinePairs(bucketed, "bucket", threshold)
       .select(col("id_a"), col("id_b"),
         round(col("sim") * 1e6).cast("long").as("sim_e6"))
   }

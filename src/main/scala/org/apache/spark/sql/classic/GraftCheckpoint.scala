@@ -19,6 +19,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * because broadcast-join sizing of checkpointed iterative state depends on
   * them. Lives in this package for `Dataset.ofRows` access — no Spark
   * behavior is patched, a clean leaf is constructed via public constructors.
+  * `GraftCheckpointSpec` pins the bug on the shipped Spark: it fails once an
+  * upgrade fixes it, and this workaround can then go.
   */
 object GraftCheckpoint {
   /** `df` must be directly backed by a checkpoint's `LogicalRDD` (anything

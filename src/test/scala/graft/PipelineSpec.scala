@@ -107,14 +107,18 @@ class PipelineSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val sc = spark.sparkContext
     val StageTag = "graft.test.stage"
-    val (sinked, sinkedJobs) = JobLog(spark)(Pipeline.run(spark, cfg, docs,
+    def measure[T](body: => T): (scala.util.Try[T], Seq[java.util.Properties]) = {
+      val (result, sample) = graft.obs.Probe.measure(spark)(body)
+      (result, sample.jobs.map(_.properties))
+    }
+    val (sinked, sinkedJobs) = measure(Pipeline.run(spark, cfg, docs,
       goldSink = Some { (name, df) =>
         sc.setLocalProperty(StageTag, name)
         try df.write.mode("overwrite").parquet(s"$out/$name")
         finally sc.setLocalProperty(StageTag, null)
       }))
-    val (plain, plainJobs) = JobLog(spark)(Pipeline.run(spark, cfg, docs))
-    val (_, baseJobs) = JobLog(spark)(Pipeline.run(spark, cfg.copy(
+    val (plain, plainJobs) = measure(Pipeline.run(spark, cfg, docs))
+    val (_, baseJobs) = measure(Pipeline.run(spark, cfg.copy(
       gold = Nil, sessions = None, retrieval = None, features = None,
       split = None, layout = None), docs))
     // a job outside any SQL execution counts as an execution of its own

@@ -83,8 +83,9 @@ class ExamplesSpec extends SparkSpec {
   test("the events example's quality pass reads silver once") {
     val (config, bronze) = loadExample("examples/events_pipeline.yaml")
     val silver = graft.silver.Transform(config.silver)(bronze)
-    val (report, jobs) = graft.JobLog(spark)(
+    val (report, sample) = graft.obs.Probe.measure(spark)(
       graft.quality.Orchestrator.run(silver, config.quality))
+    val jobs = sample.jobs
     report.get shouldBe EventsReport
     // one fused global aggregate fills the cache, then the 8 grouped
     // families read it; re-scanning silver per family took 47 jobs

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{JobLog, SparkSpec}
+import graft.SparkSpec
+import graft.obs.Probe.measure
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -401,9 +402,9 @@ class SessionsSpec extends SparkSpec {
         "event_id", "event_type", _, "seg")))
     funnels.foreach { case (name, run) =>
       val jobs = (2 to 4).map { n =>
-        val (out, started) = JobLog(spark)(run(funnelPath.take(n)))
+        val (out, sample) = measure(spark)(run(funnelPath.take(n)))
         out.get
-        started.size
+        sample.jobs.size
       }
       info(s"$name jobs at 2, 3, 4 steps: $jobs")
       // a stage that re-ran the joins of the stages before it would add

@@ -1,6 +1,7 @@
 package graft.quality
 
-import graft.{JobLog, SparkSpec}
+import graft.SparkSpec
+import graft.obs.Probe.measure
 import graft.config._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
@@ -88,9 +89,10 @@ class OrchestratorSpec extends SparkSpec {
   test("rule checks, expectations and the row count share one aggregate") {
     val rules = spec.copy(expectations =
       Seq(ExpectationSpec("row_count_between", lo = 1, hi = 10)))
-    val (_, profileJobs) = JobLog(spark)(
+    val (_, profile) = measure(spark)(
       Checks.aggregate(dirty, Checks.profilePlan(dirty, rules).aggs).head())
-    val (r, passJobs) = JobLog(spark)(Orchestrator.run(dirty, rules))
+    val (r, pass) = measure(spark)(Orchestrator.run(dirty, rules))
+    val (profileJobs, passJobs) = (profile.jobs, pass.jobs)
     r.get.rows shouldBe 5
     r.get.expectationResults.map(_.observed) shouldBe Seq(5.0)
     passJobs.size shouldBe profileJobs.size
@@ -116,8 +118,9 @@ class OrchestratorSpec extends SparkSpec {
           ExpectationSpec.Kinds.toSeq.sorted.mkString(", ") + ")"))
     malformed.foreach { case (bad, message) =>
       val df = dirty
-      val (r, jobs) = JobLog(spark)(
+      val (r, sample) = measure(spark)(
         Orchestrator.run(df, bad, anomalyColumns = Seq("fare")))
+      val jobs = sample.jobs
       r.failed.get shouldBe an[IllegalArgumentException]
       r.failed.get.getMessage shouldBe message
       jobs.size shouldBe 0
@@ -155,13 +158,14 @@ class OrchestratorSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobGroup("quality-caller", "caller's job group")
     sc.setLocalProperty("graft.test.caller", "c1")
-    val (r, jobs) =
-      try JobLog(spark)(
+    val (r, sample) =
+      try measure(spark)(
         Orchestrator.run(dirty, grouped, anomalyColumns = Seq("fare")))
       finally {
         sc.clearJobGroup()
         sc.setLocalProperty("graft.test.caller", null)
       }
+    val jobs = sample.jobs.map(_.properties)
     r.get.checkResults.map(_.check) should contain allOf (
       "fd_check", "hhi_check")
     jobs should not be empty

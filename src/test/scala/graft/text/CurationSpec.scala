@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{JobLog, SparkSpec}
+import graft.SparkSpec
+import graft.obs.Probe.measure
 import graft.gold.AggregationEngine
 import graft.config.PiiRule
 
@@ -607,8 +608,8 @@ class CurationSpec extends SparkSpec {
       }
     }
     def withJobs[T](body: => T): (T, Int) = {
-      val (result, started) = JobLog(spark)(body)
-      (result.get, started.size)
+      val (result, sample) = measure(spark)(body)
+      (result.get, sample.jobs.size)
     }
     val gold = GoldModel("by_source", Seq("source"),
       Seq(Measure("docs", "count(1)")))
